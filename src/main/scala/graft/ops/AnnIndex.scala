@@ -798,47 +798,16 @@ object AnnIndex {
         bounds0 match {
           case None => Seq.empty
           case Some((tmin, tmax)) =>
-            // (file, id-min, id-max) per candidate file: driver-side
-            // footer reads for the common few-files wave (zero jobs —
-            // the same split Upsert's commit engine applies via
-            // DriverFooterMaxFiles), the distributed stats pass past it
+            // (file, id-min, id-max) per candidate file from the commit
+            // engine's footer fold (driver-side for a few-files wave,
+            // distributed past Upsert's bound); a file whose id stats
+            // fold to nothing has no row
+            val byRel = files.map(f => Upsert.relPath(codesDir, f) -> f).toMap
             val bounds: Seq[(String, Option[Long], Option[Long])] =
-              if (files.size <= Upsert.DriverFooterMaxFiles) {
-                import scala.jdk.CollectionConverters._
-                val conf = spark.sparkContext.hadoopConfiguration
-                files.map { f =>
-                  val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-                    org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                      new HPath(f), conf))
-                  try {
-                    var mn: Option[Long] = None; var mx: Option[Long] = None
-                    for (bg <- reader.getFooter.getBlocks.asScala;
-                         cc <- bg.getColumns.asScala
-                         if cc.getPath.toDotString == "id") {
-                      val st = Option(cc.getStatistics)
-                      st.map(_.minAsString).filter(_ != null).foreach { s =>
-                        val v = java.lang.Long.parseLong(s.trim)
-                        mn = Some(mn.fold(v)(math.min(_, v)))
-                      }
-                      st.map(_.maxAsString).filter(_ != null).foreach { s =>
-                        val v = java.lang.Long.parseLong(s.trim)
-                        mx = Some(mx.fold(v)(math.max(_, v)))
-                      }
-                    }
-                    (f, mn, mx)
-                  } finally reader.close()
+              Upsert.footerBounds(spark, files, Seq("id" -> LongType), codesDir)
+                .map { case (rel, _, mn, mx) =>
+                  (byRel(rel), Option(mn).map(_.toLong), Option(mx).map(_.toLong))
                 }
-              } else
-                Layout.parquetFileStatsFor(spark, files)
-                  .filter(col("column") === "id")
-                  .groupBy(col("file"))
-                  .agg(min(col("min_value").cast("long")).as("mn"),
-                    max(col("max_value").cast("long")).as("mx"))
-                  .collect()
-                  .map(r => (r.getString(0),
-                    if (r.isNullAt(1)) None else Some(r.getLong(1)),
-                    if (r.isNullAt(2)) None else Some(r.getLong(2))))
-                  .toSeq
             val statted = bounds.map(_._1).toSet
             // a file without typed id stats cannot be pruned — keep it
             bounds.filter { case (_, mn, mx) =>

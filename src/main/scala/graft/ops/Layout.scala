@@ -486,7 +486,6 @@ object Layout {
     * for the files it just wrote. */
   def parquetFileStatsFor(spark: SparkSession, files: Seq[String]): DataFrame = {
     import spark.implicits._
-    import org.apache.hadoop.fs.{Path => HPath}
     // The session's hadoopConfiguration must travel to the executors:
     // a bare `new Configuration()` would drop fs.s3a/hdfs settings and
     // credentials and break any non-local filesystem.
@@ -497,20 +496,29 @@ object Layout {
       import scala.jdk.CollectionConverters._
       val conf = serConf.value
       paths.flatMap { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new HPath(f), conf))
-        try {
-          reader.getFooter.getBlocks.asScala.zipWithIndex.flatMap { case (bg, gi) =>
-            bg.getColumns.asScala.map { cc =>
-              val st = Option(cc.getStatistics)
-              (f, gi, cc.getPath.toDotString,
-                st.map(_.minAsString).orNull, st.map(_.maxAsString).orNull,
-                cc.getValueCount, st.map(_.getNumNulls).getOrElse(-1L))
-            }
-          }.toList
-        } finally reader.close()
+        readFooter(conf, f).getBlocks.asScala.zipWithIndex.flatMap { case (bg, gi) =>
+          bg.getColumns.asScala.map { cc =>
+            val st = Option(cc.getStatistics)
+            (f, gi, cc.getPath.toDotString,
+              st.map(_.minAsString).orNull, st.map(_.maxAsString).orNull,
+              cc.getValueCount, st.map(_.getNumNulls).getOrElse(-1L))
+          }
+        }
       }
     }.toDF("file", "row_group", "column",
       "min_value", "max_value", "num_values", "null_count")
+  }
+
+  /** One parquet file's footer (row-group metadata and column stats;
+    * no data pages) — the single footer reader behind
+    * [[parquetFileStatsFor]] and the commit engine's bounds fold
+    * (`Upsert.footerBounds`). */
+  private[graft] def readFooter(
+      conf: org.apache.hadoop.conf.Configuration, file: String)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), conf))
+    try reader.getFooter finally reader.close()
   }
 }

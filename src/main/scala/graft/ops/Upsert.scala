@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 /** Copy-on-write MERGE verbs at FILE granularity — the core
   * maintenance loop of a lakehouse table (Delta/Iceberg `MERGE INTO` /
   * `DELETE`), built from this engine's own primitives:
-  * [[Layout.parquetFileStats]] supplies the per-file key min/max
-  * manifest, and only files whose key range intersects the
+  * [[footerBounds]] folds the per-file key min/max manifest out of
+  * parquet footers, and only files whose key range intersects the
   * update/delete key set are decoded and rewritten; every other file
   * is HARD-LINKED (local fs; an O(1) metadata op — the stand-in for a
   * production format's manifest reference) or byte-copied (no decode,
@@ -114,47 +114,40 @@ object Upsert {
     first
   }
 
-  /** Per-file key bounds aggregated from parquet FOOTERS (row-group
-    * stats; no data pages) in the key's NATIVE type — a text min of
-    * "9" vs "10" would invert numeric bounds — stored as text, keyed
-    * by snapshot-RELATIVE path (see [[relPath]]). A PARTITION column's
-    * value lives in the directory name, not in any footer, so when
-    * every file carries a `keyCol=` segment the bounds come from the
-    * path (mn = mx = the partition value; metadata-only, no footer
-    * read) — which is exactly partition pruning expressed as manifest
-    * rows. The single source of the manifest row shape ([[keyBounds]]'
-    * fallback, the commit engine's fresh-file rows, and
-    * [[writeManifestSidecar]] all build it here). */
-  private def footerBounds(
-      spark: SparkSession, files: Seq[String], keyCol: String,
-      keyType: DataType, root: String): DataFrame =
-    footerBoundsMulti(spark, files, Seq(keyCol -> keyType), root)
-
-  /** Past this many fresh files a commit's footer-bounds pass runs
-    * distributed ([[footerBoundsMulti]]); at or below it the driver
-    * reads the footers in-process ([[footerBoundsLocal]]) — metadata
-    * calls, no Spark job. A typical commit rewrites a handful of
-    * files (cost ∝ touched files is the engine's contract), so the
+  /** Past this many files a footer fold ([[footerBounds]]) runs
+    * distributed — one `mapPartitions` over the file list, collected;
+    * at or below it the driver reads the footers in-process —
+    * metadata calls, no Spark job. A typical commit rewrites a handful
+    * of files (cost ∝ touched files is the engine's contract), so the
     * common case pays zero jobs; a backfill that rewrites hundreds
     * still fans out. */
   private[graft] val DriverFooterMaxFiles = 32
 
-  /** Driver-side [[footerBoundsMulti]] for small fresh-file sets: the
-    * SAME footer statistics (same ParquetFileReader calls as
-    * [[Layout.parquetFileStatsFor]]), read in-process. Aggregation
-    * semantics mirror the distributed expressions exactly: per file,
-    * min/max over row-group stats cast through the key's native type
-    * (integral text parses width-independently; strings compare in
-    * UTF8String binary order — the order Spark's min/max uses), and a
-    * file with no non-null stats for a key gets NO row.
-    * FooterBoundsParitySpec pins local == distributed on a mixed
-    * fixture. */
-  private[graft] def footerBoundsLocal(
+  /** Per-file key bounds from parquet FOOTERS (row-group stats; no
+    * data pages) as driver-held (file, key, mn, mx) rows, keyed by
+    * snapshot-RELATIVE path (see [[relPath]]: it survives the
+    * link/copy into the next snapshot unchanged, and is scheme-proof)
+    * and stored as text that readers cast back to the key's native
+    * type (a text min of "9" vs "10" would invert numeric bounds) — the
+    * ONE footer fold behind every manifest row (the commit engine's
+    * source and fresh-file bounds, [[writeManifestSidecar]],
+    * [[writeStatsSidecar]], the change feed's DV leg) and
+    * [[AnnIndex]]'s id pruning. Each file's footer is read ONCE for
+    * all `keys` ([[foldFooter]]); the fold picks where the reads run
+    * ([[DriverFooterMaxFiles]]; `maxDriverFiles` lets a spec pin one
+    * placement against the other), and both placements run the same
+    * per-file code.
+    *
+    * A PARTITION column's value lives in the directory name, not in
+    * any footer, so when every file carries a `key=` segment the
+    * bounds come from the path (mn = mx = the partition value; no
+    * footer read) — exactly partition pruning expressed as manifest
+    * rows. */
+  private[graft] def footerBounds(
       spark: SparkSession, files: Seq[String],
-      keys: Seq[(String, DataType)], root: String)
+      keys: Seq[(String, DataType)], root: String,
+      maxDriverFiles: Int = DriverFooterMaxFiles)
       : Seq[(String, String, String, String)] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    import scala.jdk.CollectionConverters._
     val rels = files.map(f => (f, relPath(root, f)))
     val (pKeys, dKeys) = keys.partition { case (k, _) =>
       rels.nonEmpty &&
@@ -164,116 +157,89 @@ object Upsert {
       val v = partitionValueOf(rel, k).get
       (rel, k, v, v)
     }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val typeOf = dKeys.toMap
-    // (rel, key) -> (mn, mx) over row groups, nulls skipped like min()/max()
-    val acc = scala.collection.mutable.LinkedHashMap
-      .empty[(String, String), (Any, Any)]
-    def less(t: DataType, a: Any, b: Any): Boolean = t match {
-      case StringType =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.asInstanceOf[String])) < 0
-      case _ => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-    }
-    def cast(t: DataType, s: String): Any =
-      if (s == null) null
-      else t match {
-        case StringType => s
-        case _ => java.lang.Long.parseLong(s.trim) // integral widths share text
-      }
-    for ((f, rel) <- rels if dKeys.nonEmpty) {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new HPath(f), conf))
-      try {
-        for (bg <- reader.getFooter.getBlocks.asScala;
-             cc <- bg.getColumns.asScala) {
-          val name = cc.getPath.toDotString
-          typeOf.get(name).foreach { t =>
-            val st = Option(cc.getStatistics)
-            val mnV = cast(t, st.map(_.minAsString).orNull)
-            val mxV = cast(t, st.map(_.maxAsString).orNull)
-            val (mn0, mx0) = acc.getOrElse((rel, name), (null, null))
-            val mn1 =
-              if (mnV == null) mn0
-              else if (mn0 == null || less(t, mnV, mn0)) mnV else mn0
-            val mx1 =
-              if (mxV == null) mx0
-              else if (mx0 == null || less(t, mx0, mxV)) mxV else mx0
-            acc((rel, name)) = (mn1, mx1)
+    val dRows =
+      if (dKeys.isEmpty) Nil
+      else if (rels.size <= maxDriverFiles) {
+        val conf = spark.sparkContext.hadoopConfiguration
+        rels.flatMap { case (f, rel) => foldFooter(conf, f, rel, dKeys) }
+      } else {
+        // the session's hadoopConfiguration travels to the executors:
+        // a bare `new Configuration()` would drop fs.s3a/hdfs settings
+        val serConf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration)
+        val par = math.min(rels.size, spark.sparkContext.defaultParallelism)
+        spark.sparkContext.parallelize(rels, math.max(1, par))
+          .mapPartitions { it =>
+            val conf = serConf.value
+            it.flatMap { case (f, rel) => foldFooter(conf, f, rel, dKeys) }
           }
-        }
-      } finally reader.close()
-    }
-    val dRows = acc.toSeq.collect {
-      case ((rel, k), (mn, mx)) if mn != null || mx != null =>
-        (rel, k,
-          Option(mn).map(_.toString).orNull,
-          Option(mx).map(_.toString).orNull)
-    }
+          .collect().toSeq
+      }
     pRows ++ dRows
   }
 
-  /** [[footerBounds]] for SEVERAL key columns sharing ONE footer-stats
-    * pass — a composite-key commit must not re-read the identical
-    * fresh-file footers once per key. Partition-column keys resolve
-    * from the directory names (no read at all); the data-column keys
-    * aggregate out of a single [[Layout.parquetFileStatsFor]] frame via
-    * conditional min/max per key, then unpivot back to the manifest's
-    * (file, key, mn, mx) row shape. */
-  private[graft] def footerBoundsMulti(
-      spark: SparkSession, files: Seq[String],
-      keys: Seq[(String, DataType)], root: String): DataFrame = {
+  /** ONE file's footer folded for every data-column key: per key, the
+    * min/max over its row-group stats after the SQL string cast to the
+    * key's type ([[castStat]]), compared in that type's order (strings
+    * in UTF8String binary order — the order Spark's min/max uses), and
+    * rendered back as cast-to-string text. A key with no non-null
+    * folded stat in the file gets NO row: absent row = "no non-null
+    * value of this column in the file", so commit pruning treats the
+    * file as untouched (an evict key never equals NULL) and a
+    * comparison-predicate pruned read skips it (a comparison never
+    * matches NULL) — both correct. */
+  private def foldFooter(
+      conf: org.apache.hadoop.conf.Configuration, file: String, rel: String,
+      keys: Seq[(String, DataType)]): Seq[(String, String, String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val typeOf = keys.toMap
+    val lo = scala.collection.mutable.Map.empty[String, Comparable[Any]]
+    val hi = scala.collection.mutable.Map.empty[String, Comparable[Any]]
+    for (bg <- Layout.readFooter(conf, file).getBlocks.asScala;
+         cc <- bg.getColumns.asScala;
+         k = cc.getPath.toDotString;
+         t <- typeOf.get(k);
+         st <- Option(cc.getStatistics)) {
+      val mn = castStat(t, st.minAsString)
+      val mx = castStat(t, st.maxAsString)
+      if (mn != null && lo.get(k).forall(mn.compareTo(_) < 0)) lo(k) = mn
+      if (mx != null && hi.get(k).forall(mx.compareTo(_) > 0)) hi(k) = mx
+    }
+    keys.collect { case (k, _) if lo.contains(k) || hi.contains(k) =>
+      (rel, k, lo.get(k).map(_.toString).orNull, hi.get(k).map(_.toString).orNull)
+    }
+  }
+
+  /** Footer-stat text under Spark's SQL string cast to `t` (the
+    * `UTF8String` parsers the cast itself uses: trimmed, width-checked),
+    * NULL wherever that cast yields NULL — a garbled or mistyped stat
+    * degrades to "no bound" on either placement of the fold instead of
+    * throwing on one. Integral values widen to Long: the text a
+    * cast-to-string renders is width-independent. */
+  private def castStat(t: DataType, s: String): Comparable[Any] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    if (s == null) return null
+    val u = UTF8String.fromString(s)
+    val i = new UTF8String.IntWrapper
+    val l = new UTF8String.LongWrapper
+    val v: AnyRef = t match {
+      case StringType => u
+      case LongType => if (u.toLong(l)) Long.box(l.value) else null
+      case IntegerType => if (u.toInt(i)) Long.box(i.value.toLong) else null
+      case ShortType => if (u.toShort(i)) Long.box(i.value.toLong) else null
+      case ByteType => if (u.toByte(i)) Long.box(i.value.toLong) else null
+      case other => throw new IllegalArgumentException(
+        s"footer bounds: unsupported key type ${other.simpleString}")
+    }
+    v.asInstanceOf[Comparable[Any]]
+  }
+
+  /** [[footerBounds]] rows as the manifest's (file, key, mn, mx)
+    * frame — a driver-local relation, no job to build. */
+  private def boundsFrame(
+      spark: SparkSession, rows: Seq[(String, String, String, String)]): DataFrame = {
     import spark.implicits._
-    val rels = files.map(f => (f, relPath(root, f)))
-    val (pKeys, dKeys) = keys.partition { case (k, _) =>
-      rels.nonEmpty &&
-        rels.forall { case (_, rel) => partitionValueOf(rel, k).isDefined }
-    }
-    val pParts = pKeys.map { case (k, _) =>
-      rels.map { case (_, rel) =>
-        val v = partitionValueOf(rel, k).get
-        (rel, k, v, v)
-      }.toDF("file", "key", "mn", "mx")
-    }
-    val dParts =
-      if (dKeys.isEmpty) Nil
-      else {
-        val agg = Layout.parquetFileStatsFor(spark, files)
-          .filter(col("column").isin(dKeys.map(_._1): _*))
-          .join(broadcast(rels.toDF("file", "rel")), Seq("file"))
-          .groupBy(col("rel"))
-          .agg(
-            dKeys.head match { case (k, t) =>
-              min(when(col("column") === k, col("min_value").cast(t)))
-                .cast("string").as(s"mn_$k")
-            },
-            dKeys.flatMap { case (k, t) =>
-              val mnE = min(when(col("column") === k, col("min_value").cast(t)))
-                .cast("string").as(s"mn_$k")
-              val mxE = max(when(col("column") === k, col("max_value").cast(t)))
-                .cast("string").as(s"mx_$k")
-              if (k == dKeys.head._1) Seq(mxE) else Seq(mnE, mxE)
-            }: _*)
-        dKeys.map { case (k, _) =>
-          agg
-            // a file with NO footer stats rows for this column — absent
-            // from its files, or all-null so min AND max aggregate to
-            // null — gets NO manifest row (parity with the old per-key
-            // groupBy-after-filter shape). Absent row = "no non-null
-            // value of this column in the file": commit pruning treats
-            // the file as untouched (an evict key never equals NULL),
-            // and a comparison-predicate pruned read skips it (a
-            // comparison never matches NULL) — both correct
-            .filter(col(s"mn_$k").isNotNull || col(s"mx_$k").isNotNull)
-            .select(col("rel").as("file"), lit(k).as("key"),
-              col(s"mn_$k").as("mn"), col(s"mx_$k").as("mx"))
-        }
-      }
-    val parts = pParts ++ dParts
-    if (parts.isEmpty)
-      spark.emptyDataset[(String, String, String, String)]
-        .toDF("file", "key", "mn", "mx")
-    else parts.reduce(_ unionByName _)
+    rows.toDF("file", "key", "mn", "mx")
   }
 
   /** `_manifest/_keys.json`: the key columns the sidecar carries rows
@@ -367,30 +333,6 @@ object Upsert {
     }
   }
 
-  /** Per-file (file, key, mn, mx) bounds for `keyCol`, where `file` is
-    * the snapshot-RELATIVE path (the basename on a flat layout — so
-    * pre-existing basename-keyed sidecars remain valid; the
-    * partition-dir-qualified path on a Hive layout). Relative paths
-    * survive the link/copy into the next snapshot unchanged and are
-    * scheme-proof — full paths from a cached manifest vs a live
-    * listing can differ in `file:` prefixing and would silently
-    * mis-classify every file. Bounds are STORED as type-faithful text
-    * (what the footer stats already are) and compared after casting
-    * back to the key's native type, so integral AND string keys prune
-    * correctly — a long-only manifest silently classified every file
-    * of a string-keyed table as untouched. Source: the cached sidecar
-    * when one exists FOR THIS KEY ([[cachedBounds]]), else aggregated
-    * from the parquet footers. The sidecar is what keeps a commit's
-    * cost ∝ touched files instead of ∝ table file count — the same
-    * role a table format's checkpoint/manifest plays. */
-  private def keyBounds(
-      spark: SparkSession, tablePath: String, keyCol: String,
-      keyType: DataType, liveRels: () => Set[String] = null,
-      keysStamp: () => Option[Set[String]] = null): DataFrame =
-    cachedBounds(spark, tablePath, keyCol, liveRels, keysStamp).getOrElse(
-      footerBounds(spark, Layout.listDataFiles(spark, tablePath),
-        keyCol, keyType, tablePath))
-
   /** The key types the manifest can prune on: integral (footer stats
     * round-trip through text exactly) and string (parquet string stats
     * ARE the values; lexicographic min/max is the string ordering).
@@ -415,15 +357,13 @@ object Upsert {
       spark: SparkSession, snapshotDir: String, keyCol: String): Int = {
     val keyType = spark.read.parquet(snapshotDir).schema(keyCol).dataType
     requireSupportedKey(keyType, keyCol, "manifest stamp")
-    val bounds = footerBounds(spark,
-        Layout.listDataFiles(spark, snapshotDir), keyCol, keyType,
-        snapshotDir)
-      .cache()
-    val n = bounds.count().toInt
-    bounds.coalesce(1).write.mode("overwrite").parquet(manifestDir(snapshotDir))
-    bounds.unpersist()
+    val rows = footerBounds(spark,
+      Layout.listDataFiles(spark, snapshotDir), Seq(keyCol -> keyType),
+      snapshotDir)
+    boundsFrame(spark, rows)
+      .coalesce(1).write.mode("overwrite").parquet(manifestDir(snapshotDir))
     writeManifestKeys(spark, snapshotDir, Seq(keyCol))
-    n
+    rows.size
   }
 
   // -------------------------------------------------------------------
@@ -466,10 +406,9 @@ object Upsert {
       .filter { case (_, t) => isManifestKeyType(t) }
     val files = Layout.listDataFiles(spark, snapshotDir)
     require(files.nonEmpty, s"writeStatsSidecar: no .parquet files under $snapshotDir")
-    val bounds = footerBoundsMulti(spark, files, allKeys, snapshotDir).cache()
-    val n = bounds.count().toInt
-    bounds.coalesce(1).write.mode("overwrite").parquet(manifestDir(snapshotDir))
-    bounds.unpersist()
+    val rows = footerBounds(spark, files, allKeys, snapshotDir)
+    boundsFrame(spark, rows)
+      .coalesce(1).write.mode("overwrite").parquet(manifestDir(snapshotDir))
     writeManifestKeys(spark, snapshotDir, allKeys.map(_._1))
     // stamp the schema sidecar while we hold the resolved schema: a
     // stats-stamped table exists to be read through statsPrunedFiles/
@@ -477,7 +416,7 @@ object Upsert {
     // mergeSchema footer sweep — the exact cost the stamp eliminates
     if (readSchemaSidecar(snapshotDir).isEmpty)
       writeSchemaSidecar(snapshotDir, schema, atomic = true) // live dir
-    n
+    rows.size
   }
 
   /** Re-stamp a REWRITTEN layout's manifest from its source's stamped
@@ -616,7 +555,7 @@ object Upsert {
     * open, decided from the stamped `_manifest` bounds alone — ZERO
     * footer reads. Files without a manifest row for a checked column
     * hold no non-null value of it (the writers' invariant:
-    * [[footerBoundsMulti]] drops exactly those rows), which no
+    * [[footerBounds]] drops exactly those rows), which no
     * comparison predicate matches — skipped. Columns the predicate
     * constrains but the manifest doesn't stamp simply don't prune.
     *
@@ -659,7 +598,7 @@ object Upsert {
         }
     // files the manifest has NO row for under ANY key (vs "no row for
     // this key", which the writers' invariant defines as all-null — see
-    // footerBoundsMulti): the stamp pass never saw them, so their
+    // footerBounds): the stamp pass never saw them, so their
     // contents are unknown and skipping them would silently drop data.
     // Unreachable through the commit engine (every fresh file gets its
     // own footer pass), but a hand-added file degrades to
@@ -720,6 +659,17 @@ object Upsert {
         "only integral or string keys are supported — manifest pruning " +
         "compares footer min/max in the key's native type and other " +
         "types don't round-trip through footer-stat text")
+
+  /** [[requireSupportedKey]] for the predicate verbs' key columns in
+    * the live schema — checked at entry, before the matched-key scan
+    * and collect, rather than inside [[commit]] after them. A column
+    * the schema lacks is left to the scan's own analysis error. */
+  private def requireSupportedKeys(
+      schema: org.apache.spark.sql.types.StructType, keyCols: Seq[String]): Unit =
+    keyCols.foreach { k =>
+      schema.fields.find(_.name == k)
+        .foreach(f => requireSupportedKey(f.dataType, k, "table"))
+    }
 
   /** Clear a previous crashed run's leftovers from a claimed output
     * dir WITHOUT un-claiming it: children delete individually, the dir
@@ -912,6 +862,25 @@ object Upsert {
 
   private def dvDir(snapshot: String) = s"$snapshot/_dv"
 
+  /** The part files of `snapshot`'s committed `_dv` sidecar, or None
+    * when it carries none — the ONE deletion-vector probe (one exists
+    * call; the listing only when the `_SUCCESS` marker is there).
+    * Byte sums drive the read-side broadcast bound
+    * ([[DvBroadcastMaxBytes]]), footer row counts the commit's key
+    * count. */
+  private[graft] def dvFiles(
+      spark: SparkSession, snapshot: String)
+      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val dv = new HPath(dvDir(snapshot))
+    val fs = Fs.of(snapshot, spark)
+    if (!fs.exists(new HPath(dv, "_SUCCESS"))) None
+    else Some(fs.listStatus(dv).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    })
+  }
+
   /** Past this many accumulated DV keys the sidecar stops being a
     * sane broadcast/read-subtraction structure regardless of plan
     * choice — the caller is carrying a delete workload that should
@@ -1010,16 +979,15 @@ object Upsert {
   private def subtractDv(
       spark: SparkSession, tablePath: String, data: DataFrame,
       broadcastMaxBytes: Long = DvBroadcastMaxBytes): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val dv = new HPath(dvDir(tablePath))
-    val fs = dv.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(dv, "_SUCCESS"))) data
-    else {
-      val keys = spark.read.parquet(dv.toString)
-      val keyCol = keys.schema.fieldNames.head
-      val dvBytes = fs.listStatus(dv).filter(_.isFile).map(_.getLen).sum
-      val dvSide = if (dvBytes <= broadcastMaxBytes) broadcast(keys) else keys
-      data.join(dvSide, Seq(keyCol), "left_anti")
+    dvFiles(spark, tablePath) match {
+      case None => data
+      case Some(parts) =>
+        val keys = spark.read.parquet(dvDir(tablePath))
+        val keyCol = keys.schema.fieldNames.head
+        val dvSide =
+          if (parts.map(_.getLen).sum <= broadcastMaxBytes) broadcast(keys)
+          else keys
+        data.join(dvSide, Seq(keyCol), "left_anti")
     }
   }
 
@@ -1087,9 +1055,10 @@ object Upsert {
     *                  files
     * @param append    rows to add after eviction (the upsert payload);
     *                  None for a pure delete
-    * @param nKeysHint caller-known size of `evictKeys` (pre-distinct
-    *                  upper bound is fine) — drives the broadcast /
-    *                  shuffle anti-join decision without an extra job
+    * @param nKeysHint caller-known row count of `evictKeys` (before
+    *                  any distinct) — plus a folded DV's footer row
+    *                  count, it drives the localization and broadcast
+    *                  decisions without an extra job
     * @return (filesCopied, filesRewritten) */
   /** @param evictDistinct caller guarantees `evictKeys` already holds
     *   DISTINCT key tuples (the predicate verbs derive it via
@@ -1122,30 +1091,30 @@ object Upsert {
     require(all.nonEmpty, s"Upsert.commit: no .parquet files under $tablePath")
 
     // ---- deletion-vector fold (see scaladoc above) ----
-    val dvP = new HPath(dvDir(tablePath))
-    val dvFs = dvP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dvKeys: Option[DataFrame] =
-      if (!dvFs.exists(new HPath(dvP, "_SUCCESS"))) None
-      else {
-        val dvDf = spark.read.parquet(dvP.toString)
-        val dvCols = dvDf.schema.fieldNames.toSeq
-        require(dvCols == keyCols,
-          s"Upsert.commit: snapshot $tablePath carries a deletion vector " +
-            s"on '${dvCols.mkString(", ")}' but this commit merges on " +
-            s"'${keyCols.mkString(", ")}' — a commit can't fold a " +
-            "foreign-key DV; run Upsert.compactDeletes on the snapshot first")
-        Some(dvDf.select(keyCols.map(col): _*))
-      }
-    val dvBytes =
-      if (dvKeys.isEmpty) 0L
-      else dvFs.listStatus(dvP).filter(_.isFile).map(_.getLen).sum
+    val dvParts = dvFiles(spark, tablePath)
+    val dvKeys: Option[DataFrame] = dvParts.map { _ =>
+      val dvDf = spark.read.parquet(dvDir(tablePath))
+      val dvCols = dvDf.schema.fieldNames.toSeq
+      require(dvCols == keyCols,
+        s"Upsert.commit: snapshot $tablePath carries a deletion vector " +
+          s"on '${dvCols.mkString(", ")}' but this commit merges on " +
+          s"'${keyCols.mkString(", ")}' — a commit can't fold a " +
+          "foreign-key DV; run Upsert.compactDeletes on the snapshot first")
+      dvDf.select(keyCols.map(col): _*)
+    }
     val evictAll = dvKeys match {
       case Some(d) => evictKeys.select(keyCols.map(col): _*).unionByName(d)
       case None => evictKeys
     }
-    // DV key count estimated at 8 bytes/key from the sidecar size — an
-    // estimate is all the broadcast decision needs
-    val wantBroadcast = nKeysHint + dvBytes / 8 <= CommitBroadcastMaxKeys
+    // the evict set's exact row count: the batch plus the DV's footer
+    // row counts (metadata reads, only when a DV is carried) — it
+    // drives the localization ([[keySide]]) and broadcast decisions
+    val nKeys = nKeysHint + dvParts.fold(0L) { parts =>
+      import scala.jdk.CollectionConverters._
+      val conf = spark.sparkContext.hadoopConfiguration
+      parts.map(p => Layout.readFooter(conf, p.getPath.toString)
+        .getBlocks.asScala.map(_.getRowCount).sum).sum
+    }
 
     // The table's LOGICAL schema (sidecar, or one bootstrap sweep —
     // callers that already resolved it pass it through, sparing legacy
@@ -1177,15 +1146,40 @@ object Upsert {
     lazy val liveRels: Set[String] = all.map(f => relPath(tablePath, f)).toSet
 
     // the source's `_keys.json` stamp, read ONCE per commit and shared
-    // by lead-key pruning, the non-lead carries, and the stats-column
-    // carry below (each used to pay its own read — DevCommitOps)
+    // by every key's sidecar lookup below
     lazy val srcStamp: Option[Set[String]] = readManifestKeys(spark, tablePath)
 
-    // per-FILE key bounds of the LEADING key: cached sidecar manifest,
-    // or footer stats (row-group stats aggregated up; no data pages
-    // read either way)
-    val manifest = keyBounds(spark, tablePath, leadCol, leadType,
-      () => liveRels, () => srcStamp)
+    // STATS columns — stamped manifest keys beyond this commit's
+    // keyCols ([[writeStatsSidecar]]) — carry through like key bounds:
+    // linked files' rows ride verbatim, fresh files get their bounds
+    // in the same single footer pass, and the new stamp keeps them, so
+    // general data skipping survives any number of commits. A stamped
+    // column absent from the logical schema (dropped by a rewrite)
+    // falls out of the stamp here.
+    val extraKeys: Seq[(String, DataType)] =
+      srcStamp
+        .map(_ -- keyCols).getOrElse(Set.empty)
+        .toSeq.sorted
+        .flatMap(k => baseLogical.fields.find(_.name == k)
+          .map(f => k -> f.dataType))
+        .filter { case (_, t) => isManifestKeyType(t) }
+    // Per-FILE bounds of every key the new manifest carries (the
+    // commit's keys, leading first, then the stats columns): each
+    // resolves from the cached sidecar when it covers the key
+    // ([[cachedBounds]] — resolved ONCE per key: a legacy unstamped
+    // sidecar runs a probe job per call), and ALL misses share ONE
+    // footer fold over the source files, held on the driver (bootstrap
+    // price, paid once — never once per key). The leading key's rows
+    // drive pruning; all of them carry into the new manifest.
+    val srcKeys = keyCols.zip(keyTypes) ++ extraKeys
+    val cached = srcKeys.map { case (k, _) =>
+      cachedBounds(spark, tablePath, k, () => liveRels, () => srcStamp)
+    }
+    val missing = srcKeys.zip(cached).collect { case (kt, None) => kt }
+    val folded =
+      if (missing.isEmpty) Nil else footerBounds(spark, all, missing, tablePath)
+    val manifest = cached.head.getOrElse(
+      boundsFrame(spark, folded.filter(_._2 == leadCol)))
 
     // distinct key TUPLES, cast to native types, positionally renamed
     // __k0..__kN — pruning consults the leading component, eviction the
@@ -1199,27 +1193,12 @@ object Upsert {
       keyCols.zip(keyTypes).zipWithIndex.map { case ((k, t), i) =>
         col(k).cast(t).as(s"__k$i")
       }: _*)
-    val upKeysD =
-      if (evictDistinct && dvKeys.isEmpty && castIdentity) upKeys0
-      else upKeys0.distinct()
-    // Below the localization bound, land the distinct key tuples in a
-    // driver-local relation ONCE: the touched-file probe and the
-    // eviction anti-join are separate executions that would otherwise
-    // EACH re-run the distinct (and build their broadcast from a job);
-    // a local relation's broadcast builds driver-side with no job.
-    // Bounded by DriverLocalizeMaxKeys, NOT the broadcast bound —
-    // embedding multi-million-row local relations into several plans
-    // measured 2.5× slower at the 100× tier (see the val's scaladoc);
-    // past the bound the r15-shaped distributed plan runs unchanged.
-    // When the caller already passed a local key set (the predicate
-    // verbs), the collect below runs without any job at all.
-    val upKeys =
-      if (nKeysHint + dvBytes / 8 > DriverLocalizeMaxKeys) upKeysD
-      else {
-        val rows = upKeysD.collect()
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), upKeysD.schema)
-      }
+    // The touched-file probe and the eviction anti-join are separate
+    // executions over ONE key side ([[keySide]]). When the caller
+    // already passed a localized key set (the predicate verbs), its
+    // collect here runs without any job at all.
+    val upKeys = keySide(spark, upKeys0, nKeys,
+      isDistinct = evictDistinct && dvKeys.isEmpty && castIdentity)
 
     // a file is TOUCHED iff some evict tuple's LEADING component falls
     // inside its bounds — manifest is small (one row per file), so it
@@ -1300,14 +1279,15 @@ object Upsert {
         // broadcast while the key batch is provably small; a huge
         // MERGE batch anti-joins by shuffle instead of OOMing the
         // driver on the broadcast build
-        val keySide = if (wantBroadcast) broadcast(upKeys) else upKeys
+        val evictSide =
+          if (nKeys <= CommitBroadcastMaxKeys) broadcast(upKeys) else upKeys
         // FULL-tuple eviction: a row survives unless every key component
         // matches (a NULL component never equi-joins, so NULL-keyed rows
         // always survive — same semantics at any arity)
         val cond = keyCols.zip(keyTypes).zipWithIndex.map { case ((k, t), i) =>
           touchedRows(k).cast(t) === col(s"__k$i")
         }.reduce(_ && _)
-        Some(touchedRows.join(keySide, cond, "left_anti"))
+        Some(touchedRows.join(evictSide, cond, "left_anti"))
       }
     // The append lands in FRESH parquet files whose physical types
     // must match the logical schema — a batch whose `v` is int on a
@@ -1371,62 +1351,20 @@ object Upsert {
     // untouched list, which is table-sized; manifest rows are already
     // relative paths, so linked files carry over verbatim. The output
     // manifest carries bounds for EVERY key column (pruning uses the
-    // leading one, but a later commit may lead with another component).
-    // Non-leading bounds resolve from the cached sidecar when it covers
-    // them; ALL cache misses share one footer sweep (bootstrap price,
-    // paid once — and never once per key).
-    val nonLead = keyCols.zip(keyTypes).filter(_._1 != leadCol)
-    // STATS columns — stamped manifest keys beyond this commit's
-    // keyCols ([[writeStatsSidecar]]) — carry through like key bounds:
-    // linked files' rows ride verbatim, fresh files get their bounds
-    // in the same single footer pass, and the new stamp keeps them, so
-    // general data skipping survives any number of commits. A stamped
-    // column absent from the logical schema (dropped by a rewrite)
-    // falls out of the stamp here.
-    val extraKeys: Seq[(String, DataType)] =
-      srcStamp
-        .map(_ -- keyCols).getOrElse(Set.empty)
-        .toSeq.sorted
-        .flatMap(k => baseLogical.fields.find(_.name == k)
-          .map(f => k -> f.dataType))
-        .filter { case (_, t) => isManifestKeyType(t) }
-    // resolve each non-leading/extra key's cached sidecar ONCE — a
-    // legacy unstamped sidecar runs a probe job per cachedBounds call,
-    // and the old shape paid it twice per key (partition + get)
-    val resolvedCaches = (nonLead ++ extraKeys).map { case (k, t) =>
-      (k, t, cachedBounds(spark, tablePath, k, () => liveRels, () => srcStamp))
-    }
-    val missingKs = resolvedCaches.collect { case (k, t, None) => (k, t) }
-    val carriedAll = (
-      Seq(manifest) ++
-        resolvedCaches.collect { case (_, _, Some(df)) => df } ++
-        (if (missingKs.isEmpty) Nil
-         else Seq(footerBoundsMulti(spark, all, missingKs, tablePath)))
-    ).reduce(_ unionByName _)
+    // leading one, but a later commit may lead with another component)
+    // and every stats column — all resolved above.
+    val carriedAll =
+      (cached.flatten :+ boundsFrame(spark, folded)).reduce(_ unionByName _)
     val carried =
       if (touched.isEmpty) carriedAll
       else carriedAll.filter(!col("file").isin(touched.toSeq: _*))
     val freshFiles = Layout.listDataFiles(spark, outPath)
       .filterNot(f => untouchedRels.contains(relPath(outPath, f)))
-    // fresh-file bounds land on the DRIVER: in-process footer reads for
-    // the common few-files commit (no job), a distributed pass collected
-    // down for backfill-sized rewrites. Either way the rows feed the
-    // manifest write as a local relation AND the TxnInfo lead bounds
-    // without the old cache + second collect execution.
-    val freshKeySpec = keyCols.zip(keyTypes) ++ extraKeys
-    val freshRows: Seq[(String, String, String, String)] =
-      if (freshFiles.isEmpty) Nil
-      else if (freshFiles.size <= DriverFooterMaxFiles)
-        footerBoundsLocal(spark, freshFiles, freshKeySpec, outPath)
-      else footerBoundsMulti(spark, freshFiles, freshKeySpec, outPath)
-        .collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-        .toSeq
-    val fresh = {
-      import spark.implicits._
-      freshRows.toDF("file", "key", "mn", "mx")
-    }
-    carried.unionByName(fresh)
+    // fresh-file bounds land on the DRIVER (the fold's rows): they feed
+    // the manifest write as a local relation AND the TxnInfo lead
+    // bounds without a second footer pass
+    val freshRows = footerBounds(spark, freshFiles, srcKeys, outPath)
+    carried.unionByName(boundsFrame(spark, freshRows))
       .coalesce(1).write.mode("overwrite").parquet(manifestDir(outPath))
     writeManifestKeys(spark, outPath, keyCols ++ extraKeys.map(_._1),
       atomic = false) // pre-publish dir
@@ -1723,6 +1661,7 @@ object Upsert {
         s"updateWhere: SET names '$c' but the table's columns are " +
           schema.fieldNames.mkString(", "))
     }
+    requireSupportedKeys(schema, keyCols)
     val (nMatched, nNullKey, mnK, mxK, rangeStr, mkeys) =
       matchedStats(live, keyCols, predicate)
     try {
@@ -1737,7 +1676,7 @@ object Upsert {
           "rows_updated" -> 0L))
         return (c0, r0, 0L)
       }
-      val keys = localizedKeys(spark, mkeys, nMatched)
+      val keys = keySide(spark, mkeys, nMatched)
       // fresh scan for the payload side (joining `live` with a frame
       // derived from itself trips Spark's ambiguous-self-join lineage),
       // pre-filtered to the matched LEADING keys' RANGE: every evicted
@@ -1747,13 +1686,7 @@ object Upsert {
       val sets = assignments.toMap
       val payloadSrc = readWithDeletes(spark, tablePath)
         .filter(col(keyCols.head).between(lit(mnK), lit(mxK)))
-      // broadcast the matched keys while provably small — the same
-      // bound the commit engine applies to its eviction anti-join, so
-      // BOTH joins hash the one broadcast key set instead of the semi
-      // join shuffling the range-pruned payload scan
-      val keysJ =
-        if (nMatched <= DriverLocalizeMaxKeys) broadcast(keys) else keys
-      val payload = payloadSrc.join(keysJ, keyCols, "left_semi").select(
+      val payload = payloadSrc.join(keys, keyCols, "left_semi").select(
         schema.fields.map { f =>
           sets.get(f.name) match {
             case Some(e) =>
@@ -1848,28 +1781,27 @@ object Upsert {
     * not plan-embedding sanity.) */
   private[graft] val DriverLocalizeMaxKeys: Long = 100000L
 
-  /** Lift a small matched-key set into a DISTINCT driver-local
-    * relation. The predicate verbs consume the matched keys in THREE
+  /** The ONE key-localization decision: the key side of a verb's
+    * joins, from the exact row count `nKeys` of `keys` (the batch count
+    * plus a folded DV's footer row count). The keys feed several
     * separate executions (the touched-file probe, the rewrite's
-    * semi+anti joins, and DELETE's survivor count), and each execution
-    * re-runs the distinct aggregation — cache-fed but still an
-    * exchange plus AQE stage sub-jobs per execution — then collects it
-    * to the driver anyway to build its broadcast relation. Collecting
-    * ONCE (a cache-fed scan, no exchange), deduplicating on the driver
-    * (key types are integral or string only — structural equality IS
-    * SQL DISTINCT for them), and substituting a LocalRelation makes
-    * every downstream broadcast build driver-local (no job at all).
-    * Bounded by [[DriverLocalizeMaxKeys]]; past it the distributed
-    * distinct passes through untouched (broadcast/shuffle joins as
-    * before). */
-  private def localizedKeys(
-      spark: SparkSession, mkeys: DataFrame, nUpper: Long): DataFrame =
-    if (nUpper > DriverLocalizeMaxKeys) mkeys.distinct()
-    else {
-      val rows = mkeys.collect().map(_.toSeq).distinct
-        .map(org.apache.spark.sql.Row.fromSeq)
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), mkeys.schema)
+    * semi/anti joins, DELETE's survivor count), and each would re-run
+    * the distinct aggregation and then collect it anyway to build its
+    * broadcast relation. At or below [[DriverLocalizeMaxKeys]] the keys
+    * are collected ONCE, deduplicated on the driver (key types are
+    * integral or string only — structural equality IS SQL DISTINCT for
+    * them) and returned as a broadcast driver-local relation, whose
+    * broadcast builds with no job. Past it the frame stays distributed
+    * (distinct unless `isDistinct` says the caller guarantees it). */
+  private def keySide(
+      spark: SparkSession, keys: DataFrame, nKeys: Long,
+      isDistinct: Boolean = false): DataFrame =
+    if (nKeys > DriverLocalizeMaxKeys) {
+      if (isDistinct) keys else keys.distinct()
+    } else {
+      val rows = keys.collect().distinct
+      broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), keys.schema))
     }
 
   private def requireNoNullKeyMatches(
@@ -1906,6 +1838,7 @@ object Upsert {
       spark: SparkSession, tablePath: String, outPath: String,
       keyCols: Seq[String], predicate: Column): (Int, Int, Long) = {
     val live = readWithDeletes(spark, tablePath)
+    requireSupportedKeys(live.schema, keyCols)
     val (nMatched, nNullKey, mnK, mxK, rangeStr, mkeys) =
       matchedStats(live, keyCols, predicate)
     try {
@@ -1920,14 +1853,11 @@ object Upsert {
           "rows_deleted" -> 0L))
         return (c0, r0, 0L)
       }
-      val keys = localizedKeys(spark, mkeys, nMatched)
+      val keys = keySide(spark, mkeys, nMatched)
       // fresh scan pre-filtered to the matched key range; see updateWhere
-      // (incl. the broadcast bound on the semi join's key side)
       val payloadSrc = readWithDeletes(spark, tablePath)
         .filter(col(keyCols.head).between(lit(mnK), lit(mxK)))
-      val keysJ =
-        if (nMatched <= DriverLocalizeMaxKeys) broadcast(keys) else keys
-      val survivors = payloadSrc.join(keysJ, keyCols, "left_semi")
+      val survivors = payloadSrc.join(keys, keyCols, "left_semi")
         .filter(!coalesce(predicate, lit(false)))
       val nSurv = survivors.count()
       val (c, r) = commit(spark, tablePath, outPath,
@@ -2574,15 +2504,11 @@ object Upsert {
     //    DV-delete interval nets to nothing.
     // (keys, small?) — broadcast the join side while the sidecar is
     // small, shuffle past it: the same bound readWithDeletes applies
-    def dvKeysOf(v: Long): Option[(DataFrame, Boolean)] = {
-      import org.apache.hadoop.fs.{Path => HPath}
-      val d = new HPath(s"$tableDir/v$v/_dv")
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(new HPath(d, "_SUCCESS"))) {
-        val bytes = fs.listStatus(d).filter(_.isFile).map(_.getLen).sum
-        Some((spark.read.parquet(d.toString), bytes <= DvBroadcastMaxBytes))
-      } else None
-    }
+    def dvKeysOf(v: Long): Option[(DataFrame, Boolean)] =
+      dvFiles(spark, s"$tableDir/v$v").map { parts =>
+        (spark.read.parquet(dvDir(s"$tableDir/v$v")),
+          parts.map(_.getLen).sum <= DvBroadcastMaxBytes)
+      }
     def hint(df: DataFrame, small: Boolean): DataFrame =
       if (small) broadcast(df) else df
     val fromDv = dvKeysOf(fromVersion)
@@ -2609,7 +2535,8 @@ object Upsert {
           // footer-read the whole snapshot to then discard the rows
           val bounds = cachedBounds(spark, toRoot, kc, () => to.keySet)
             .map(_.filter(col("file").isin(sharedNames.toSeq: _*)))
-            .getOrElse(footerBounds(spark, sharedPaths, kc, kt, toRoot))
+            .getOrElse(boundsFrame(spark,
+              footerBounds(spark, sharedPaths, Seq(kc -> kt), toRoot)))
           val candidates = broadcast(bounds)
             .join(newKeys.select(col(kc).cast(kt).as("__k")).distinct(),
               col("__k").between(col("mn").cast(kt), col("mx").cast(kt)),

@@ -1004,11 +1004,8 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
     val sfs = graft.ops.Fs.of(snapshot, spark)
     def sidecar(name: String): Boolean =
       sfs.exists(new org.apache.hadoop.fs.Path(s"$snapshot/$name/_SUCCESS"))
-    val dvBytes = {
-      val d = new org.apache.hadoop.fs.Path(s"$snapshot/_dv")
-      if (!sfs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS"))) 0L
-      else sfs.listStatus(d).filter(_.isFile).map(_.getLen).sum
-    }
+    val dvBytes =
+      Upsert.dvFiles(spark, snapshot).fold(0L)(_.map(_.getLen).sum)
     val writer = graft.ops.Fs.readTextIfExists(sfs,
       new org.apache.hadoop.fs.Path(tableDir, "_WRITER")).map(_.trim)
     val info = Upsert.readCommitInfo(snapshot)

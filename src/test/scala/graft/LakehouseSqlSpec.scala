@@ -1205,4 +1205,33 @@ class LakehouseSqlSpec extends AnyFunSuite {
     }
     assert(bad.getMessage.contains("no column"), bad.getMessage)
   }
+
+  test("NaN and -0.0 keys: UPDATE, DELETE and MERGE refuse; CURRENT stays put") {
+    import spark.implicits._
+    val tbl = s"$base/floatkeys"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tbl))
+    Seq((Double.NaN, 1L), (-0.0, 2L), (0.0, 3L), (1.5, 4L))
+      .toDF("k", "v").write.parquet(s"$tbl/v0")
+    val w = new java.io.PrintWriter(s"$tbl/CURRENT", "UTF-8")
+    try w.print("v0") finally w.close()
+    spark.createDataFrame(Seq((Double.NaN, -1L), (-0.0, -2L)))
+      .toDF("k", "v").createOrReplaceTempView("lakesql_floatkeys")
+    def refuses(stmt: String): Unit = {
+      val e = intercept[IllegalArgumentException](spark.sql(stmt).collect())
+      assert(e.getMessage.contains("only integral or string keys"), e.getMessage)
+      assert(graft.streaming.Streams.currentSnapshot(tbl).get.endsWith("/v0"))
+      assert(Upsert.snapshotVersions(tbl) == Seq(0L))
+    }
+    refuses(s"UPDATE '$tbl' ON k SET v = 0 WHERE isnan(k) OR k = 0")
+    refuses(s"DELETE FROM '$tbl' ON k WHERE isnan(k) OR k = 0")
+    refuses(
+      s"""MERGE INTO '$tbl' USING (SELECT * FROM lakesql_floatkeys) ON k
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    // the predicate verbs refuse at entry, before the matched-key scan:
+    // a predicate that fails when evaluated is never reached
+    refuses(s"UPDATE '$tbl' ON k SET v = 0 WHERE raise_error('scanned') IS NULL")
+    refuses(s"DELETE FROM '$tbl' ON k WHERE raise_error('scanned') IS NULL")
+    assert(spark.read.parquet(s"$tbl/v0").count() == 4)
+  }
 }

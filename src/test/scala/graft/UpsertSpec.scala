@@ -1247,4 +1247,76 @@ class UpsertSpec extends AnyFunSuite {
     assert(got.count() == 100, "duplicate keys = the sidecar was trusted")
     assert(got.filter($"v" === -1L).count() == 5)
   }
+
+  test("exact DV count: a dense DV past DriverLocalizeMaxKeys takes the distributed side") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val tbl = s"$base/dvdense"; val noDv = s"$base/dvdense_nodv"
+    val outA = s"$base/dvdense_a"; val outB = s"$base/dvdense_b"
+    val outC = s"$base/dvdense_c"
+    Seq(tbl, noDv, outA, outB, outC).foreach(d =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))
+    val rows = spark.range(200000).select($"id".as("k"), ($"id" * 3).as("v"))
+    rows.repartitionByRange(8, $"k").sortWithinPartitions($"k")
+      .write.parquet(tbl)
+    // sorted long keys under the v2 writer delta-encode to far under 8
+    // bytes a key: the sidecar's byte size says "small", its row count
+    // says "past the localization bound"
+    val nDv = Upsert.DriverLocalizeMaxKeys + 50000
+    spark.range(nDv).select($"id".as("k")).coalesce(1)
+      .write.option("parquet.writer.version", "v2").parquet(s"$tbl/_dv")
+    val dvBytes = Upsert.dvFiles(spark, tbl).get.map(_.getLen).sum
+    val dvRows = spark.read.parquet(s"$tbl/_dv").count()
+    assert(dvRows > Upsert.DriverLocalizeMaxKeys, s"DV fixture holds $dvRows keys")
+    assert(dvBytes < 8 * Upsert.DriverLocalizeMaxKeys,
+      s"DV fixture is $dvBytes bytes — not dense enough to fool a bytes/8 estimate")
+    // the same table with the DV applied physically: the no-fold twin
+    rows.filter($"k" >= nDv).repartitionByRange(8, $"k")
+      .sortWithinPartitions($"k").write.parquet(noDv)
+    val batch = spark.range(190000, 200050).select($"id".as("k"), lit(-1L).as("v"))
+
+    // which side each commit took: the distributed key side scans the
+    // `_dv` sidecar inside a join plan (the touched probe and the
+    // eviction); the localized side scans it only in its one collect
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart =>
+            plans.add((s.description, s.physicalPlanDescription)); ()
+          case _ =>
+        }
+    }
+    // listener events arrive asynchronously but in order: once the
+    // sentinel's execution shows up, every commit execution has too
+    def dvJoinPlans(commit: => Unit): Int = {
+      import scala.jdk.CollectionConverters._
+      plans.clear()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        commit
+        spark.sparkContext.setJobDescription("dvdense-sentinel")
+        spark.range(1).count()
+        spark.sparkContext.setJobDescription(null)
+        val deadline = System.currentTimeMillis() + 30000
+        while (!plans.asScala.exists(_._1 == "dvdense-sentinel") &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      plans.asScala.count { case (_, p) => p.contains("/_dv]") && p.contains("Join") }
+    }
+    assert(dvJoinPlans(Upsert.upsertByKeys(spark, tbl, outA, batch, Seq("k"))) > 0,
+      "the dense DV's commit localized its key set")
+    Upsert.upsertByKeys(spark, noDv, outB, batch, Seq("k"))
+    val (a, b) = (spark.read.parquet(outA), spark.read.parquet(outB))
+    assert(a.count() == 200050 - nDv)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      "the DV-folding commit differs from the commit without a DV")
+    assert(Upsert.dvFiles(spark, outA).isEmpty, "a commit folds the DV away")
+
+    // control: a sparse DV under the bound localizes (no `_dv` join plan)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$tbl/_dv"))
+    spark.range(1000).select($"id".as("k")).write.parquet(s"$tbl/_dv")
+    assert(dvJoinPlans(Upsert.upsertByKeys(spark, tbl, outC, batch, Seq("k"))) == 0,
+      "a 1000-key DV commit kept its key set distributed")
+  }
 }
