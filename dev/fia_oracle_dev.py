@@ -2,7 +2,7 @@
 """Dev harness for building the q_fia_pipeline_oracle DuckDB SQL.
 
 Builds the oracle SQL stage by stage and compares each stage against the
-Spark dumps written by graft.DevFiaOracle. Exact-value compare, same
+Spark dumps written by graft.tools.FiaOracle. Exact-value compare, same
 canon as dev/check.py. Usage: python3 dev/fia_oracle_dev.py [stage]
 """
 import sys

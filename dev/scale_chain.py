@@ -91,7 +91,7 @@ def main(argv):
         "note": note,
         "method": (
             "Organic scale curve over the full suite: 1x -> 10x -> 100x tiers "
-            "from the same generator (DevSfGen). Tier runs are single-pass "
+            "from the same generator (graft.tools.SfGen). Tier runs are single-pass "
             "(SPARK_GRAFT_BENCH_PASSES=1) from one chain; every input recorded "
             "the artifact's commit, clean."),
     }

@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import LayerProfile.Stamps
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -11,6 +12,7 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val profile = LayerProfile.attach(spark.sparkContext)
     // Warm up the session (codegen, scheduler, parquet reader init) so
     // the first timed query doesn't absorb JVM/session startup. A full
     // all-queries warmup pass at sf0.001 was tried and is a net LOSS
@@ -109,52 +111,36 @@ object Bench {
         plans(name) = md5hex(sanitizePlan(canon)).take(12)
       } catch { case _: Throwable => () } // failure surfaces in the timed pass
     }
-    // Fold-proof action: `.count()` lets Catalyst prune every output
-    // column, so a projection-heavy query can "finish" in ms without
-    // computing its columns (q_substr_dedup timed 248 ms against a
-    // multi-second scale-probe cost — the timing measured file listing,
-    // not the operator). Hashing EVERY output column into one aggregate
-    // forces full evaluation of the real projection while returning one
-    // row to the driver; a query whose output types the hash can't take
-    // falls back to count() (analysis-checked, so the fallback decision
-    // costs no execution).
-    def forceEval(df: org.apache.spark.sql.DataFrame): Unit = {
-      import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
-      val forced =
-        try {
-          // bit_xor, not sum: ANSI mode (Spark 4 default) faults on
-          // long-sum overflow, and hash values overflow immediately
-          val f = df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-            .agg(expr("bit_xor(__h)"))
-          f.queryExecution.analyzed // throws if the hash can't analyze
-          Some(f)
-        } catch { case _: Throwable => None }
-      forced match {
-        case Some(f) => f.collect()
-        case None => df.count()
-      }
-      ()
-    }
     // pass-count override for the big scale tiers, where three passes
     // of a 10× suite cost more wall-clock than the noise they shed;
     // the driver's per-round runs keep the min-of-3 default
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    for (_ <- 1 to passes; (name, fn) <- ordered) {
+    // the layer profile of each query's fastest pass: the pass whose
+    // seconds the bench reports
+    final case class Best(pass: Int, stamps: Stamps, fsOps: Map[String, Long],
+        exchanges: Int, scans: Int)
+    val best = scala.collection.mutable.Map.empty[String, Best]
+    for (pass <- 1 to passes; (name, fn) <- ordered) {
       clearState()
-      val t0 = System.nanoTime()
-      val ok =
-        try { forceEval(fn(spark, sfDir)); true }
+      val run =
+        try Some(profile.pass(s"$name#$pass")(timedRun(fn(spark, sfDir))))
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             failed += name
-            false
+            None
         }
       // Failed passes are excluded from the min: a fast crash must not
       // masquerade as a fast query.
-      if (ok) {
-        val dt = (System.nanoTime() - t0) / 1e9
-        times(name) = math.min(times.getOrElse(name, Double.MaxValue), dt)
+      for (((stamps, forced), fsOps) <- run) {
+        val dt = stamps.seconds
+        if (dt < times.getOrElse(name, Double.MaxValue)) {
+          times(name) = dt
+          // node counts of the final plan, read after the timed region
+          val (exchanges, scans) =
+            LayerProfile.planCounts(forced.queryExecution.executedPlan)
+          best(name) = Best(pass, stamps, fsOps, exchanges, scans)
+        }
         // stderr progress (the timed JSON goes to stdout/file): on the
         // multi-hour scale tiers a silent run is indistinguishable from
         // a hung one
@@ -225,8 +211,57 @@ object Bench {
     println(Bench.compactLine(
       ordered.map(_._1).map(n => n -> (if (failed.contains(n)) None else times.get(n))),
       total, nFail, sfDir, outPath, plansPath, cpus.toInt))
+    // stop() drains the listener bus, so every pass's counters are final
     spark.stop()
+    // per-query layer profile: one record per timed query, then a
+    // trailer with the profile's own measured overhead
+    val layersPath = s"$outPath.layers"
+    try {
+      val w = new java.io.PrintWriter(layersPath, "UTF-8")
+      try {
+        for ((name, _) <- ordered if !failed.contains(name); b <- best.get(name))
+          w.println(LayerProfile.record(name, b.pass, b.stamps,
+            profile.counters(s"$name#${b.pass}"), b.fsOps, b.exchanges, b.scans))
+        w.println(s"""{"metric":"layers","commit":"$commit","sf":"$sfDir","cpus":${cpus.toInt},"total_s":$total,"overhead_s":${profile.overheadS}}""")
+      } finally w.close()
+    } catch { case e: Throwable => System.err.println(s"[bench] write $layersPath failed: ${e.getMessage}") }
     if (nFail > 0) sys.exit(1)
+  }
+
+  /** Fold-proof action over `df`: `.count()` lets Catalyst prune every
+    * output column, so a projection-heavy query can "finish" in ms
+    * without computing its columns (q_substr_dedup timed 248 ms against
+    * a multi-second scale-probe cost — the timing measured file listing,
+    * not the operator). Hashing EVERY output column into one aggregate
+    * forces full evaluation of the real projection while returning one
+    * row to the driver; a query whose output types the hash can't take
+    * falls back to the count aggregate (analysis-checked, so the
+    * fallback decision costs no execution). */
+  def forcedAction(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
+    try {
+      // bit_xor, not sum: ANSI mode (Spark 4 default) faults on
+      // long-sum overflow, and hash values overflow immediately
+      val f = df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
+        .agg(expr("bit_xor(__h)"))
+      f.queryExecution.analyzed // throws if the hash can't analyze
+      f
+    } catch { case _: Throwable => df.groupBy().count() }
+  }
+
+  /** The timed region of one pass: build the query, plan its forced
+    * action, run it. The stamps split the region into construction,
+    * planning and execution; the forced action is returned so its final
+    * plan can be read after the region. */
+  def timedRun(query: => DataFrame): (Stamps, DataFrame) = {
+    val t0 = System.nanoTime()
+    val df = query
+    val t1 = System.nanoTime()
+    val forced = forcedAction(df)
+    forced.queryExecution.executedPlan
+    val t2 = System.nanoTime()
+    forced.collect()
+    (Stamps(t0, t1, t2, System.nanoTime()), forced)
   }
 
   /** Build the final stdout line: `{"metric":"total","value":<sec>,"unit":"sec",

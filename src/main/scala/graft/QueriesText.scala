@@ -960,34 +960,29 @@ object QueriesText {
 
   // --- persisted MinHash dedup index (ops.Dedup.writeMinHashIndex /
   //     probeMinHashIndex): the production incremental-dedup shape —
-  //     index the standing corpus ONCE, probe every delivery. The gate
-  //     stages the history index per sf dir (marker embeds the source
-  //     parquet size, invalidated by testdata regeneration) and probes
-  //     the SAME batch split as q_incr_dedup, so the oracle is
-  //     identical by construction (the index is the persisted history
-  //     side of the same computation).
+  //     index the standing corpus ONCE, probe every delivery. Contract:
+  //     index once per run — the history index of an sf dir is built at
+  //     most once per JVM, in a directory this process creates and
+  //     removes at exit, so no state survives across runs and regenerated
+  //     testdata can never probe a stale index. Every later call (the
+  //     bench's timed passes, after its plan pass built it) only probes.
+  //     The probe takes the SAME batch split as q_incr_dedup, so the
+  //     oracle is identical by construction (the index is the persisted
+  //     history side of the same computation).
+  private val dedupIndexes =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
   private def dedupIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val base = s"/tmp/graft_dedupidx_${System.getProperty("user.name", "u")}_$h"
-    val marker = new java.io.File(s"$base/STAGED")
-    val token = s"$dir:${java.nio.file.Files.size(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))}"
-    val have =
-      if (marker.exists) {
-        val src = scala.io.Source.fromFile(marker)
-        try src.mkString.trim finally src.close()
-      } else ""
-    if (have != token) {
+    val index = dedupIndexes.computeIfAbsent(dir, _ => {
+      val base = java.nio.file.Files.createTempDirectory("graft_dedupidx").toFile
+      sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(base))
       Dedup.writeMinHashIndex(
         docs(s, dir).filter($"doc_id" < 400), "doc_id", "text",
         numPerms = 6, bandSize = 3, maxBucket = Some(100), s"$base/index")
-      new java.io.File(base).mkdirs()
-      val w = new java.io.PrintWriter(marker, "UTF-8")
-      try w.print(token) finally w.close()
-    }
-    Dedup.probeMinHashIndex(s, s"$base/index",
+      s"$base/index"
+    })
+    Dedup.probeMinHashIndex(s, index,
       docs(s, dir).filter($"doc_id" >= 400), "doc_id", "text", threshold = 0.8)
   }
 

@@ -233,7 +233,8 @@ object Nsvb {
     // DAG below runs twice per composed pipeline (one per mortality
     // variant), so analyzer passes are the driver-side cost here
     // (measured: construction, not execution, dominates the composed
-    // gates — DevOptPipe).
+    // gates — OPTIMIZATION_r15.md; Bench's layer profile records the
+    // construct_s / plan_s / exec_s split per query).
     val spcdNum = regexp_replace(col("SPCD"), "1_", "").cast(DoubleType)
     var d = fiadb
       .withColumns(Map(

@@ -17,9 +17,9 @@ object Pipeline {
     * ~60 sequential withColumn calls × 2 variants, and each call runs a
     * full analyzer pass over its input's logical plan — over the deep
     * kernel subtree that was ~6 s of driver-side analysis per
-    * composition (measured, DevPipelinePerf round-8: 10.6 s → 6.4 s
-    * end-to-end). Re-rooting puts a leaf under those chains so each
-    * pass walks a small tree. Unlike localCheckpoint (same win), the
+    * composition (docs/PLANS.md, round-8 pipeline driver-analysis fix:
+    * 10.6 s → 6.4 s end-to-end). Re-rooting puts a leaf under those
+    * chains so each pass walks a small tree. Unlike localCheckpoint (same win), the
     * backing RDD KEEPS its lineage — an executor loss recomputes
     * through the cache instead of failing the job, which is the
     * property that matters on a real cluster. Values are identical;

@@ -673,8 +673,8 @@ object AnnIndex {
     * holds none of `touched`'s ids. Returns `files` untouched when
     * the sidecar is absent/unreadable or the wave exceeds
     * [[BloomMaxProbeConf]]; a file without a filter row always
-    * survives. Package-private so the spec and dev probes can pin the
-    * prune directly. */
+    * survives. Package-private so the spec can pin the prune
+    * directly. */
   private[graft] def bloomPruneCodes(spark: SparkSession, path: String,
       files: Seq[String], touched: DataFrame): Seq[String] = {
     val cap = spark.conf.get(BloomMaxProbeConf, "100000").toInt

@@ -562,23 +562,25 @@ object Dedup {
     // removes the old corpus-TOKEN-scale path entirely: the posexplode
     // of every token, the (id, idx)-keyed distinct + anti-join
     // exchanges, the collect_list(struct) re-assembly shuffle, and the
-    // extra full docs scan for n_toks (guide §2.3/§2.4: 18 Exchanges /
-    // 8 corpus scans → 7 / 3, plans/r16/q_substr_dedup_before|after).
+    // extra full docs scan for n_toks (guide §2.3/§2.4: 9 Exchanges /
+    // 4 corpus scans → 7 / 3, counted as plan nodes on both sides of
+    // plans/r16/q_substr_dedup_before|after).
     val covSets = grams.join(dupH, Seq("h"))
       .select(col(idCol), explode(sequence(col("pos"), col("pos") + (n - 1))).as("idx"))
       .groupBy(col(idCol))
       .agg(collect_set(col("idx")).as("__cov"))
-    val keptIdx = array_except(
+    // NULL text keeps nothing under either ANSI setting: with ANSI off
+    // size(NULL) is -1, and sequence(0, -2) would "keep" three indexes
+    val noIdx = array().cast("array<int>")
+    val keptIdx = when(col("__toks").isNotNull, array_except(
       sequence(lit(0), size(col("__toks")) - 1),
-      coalesce(col("__cov"), array().cast("array<int>")))
+      coalesce(col("__cov"), noIdx))).otherwise(noIdx)
     toks.join(covSets, Seq(idCol), "left")
       .select(col(idCol), keptIdx.as("__kept"), col("__toks"))
       .select(col(idCol),
-        coalesce(
-          array_join(transform(col("__kept"),
-            i => element_at(col("__toks"), i + 1)), " "),
-          lit("")).as("dedup_text"),
-        coalesce(size(col("__kept")).cast("long"), lit(0L)).as("n_kept"),
+        array_join(transform(col("__kept"),
+          i => element_at(col("__toks"), i + 1)), " ").as("dedup_text"),
+        size(col("__kept")).cast("long").as("n_kept"),
         size(col("__toks")).as("n_toks"))
   }
 }

@@ -31,14 +31,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Fs {
 
-  /** Opt-in metadata-op audit (DevCommitOps): counts every FS
+  /** Opt-in metadata-op audit: counts every FS
     * round-trip issued THROUGH this substrate, keyed by
     * `op:artifact` (e.g. `create:_commitlog`, `rename:CURRENT`).
     * Since the lakehouse layer is required to route all small-file
     * metadata I/O through Fs (FsSubstrateSpec), this audits the
     * commit protocol's per-publish RPC cost — the number that, on a
     * real object store, IS the commit latency. Off by default; a
-    * single volatile read per op when disabled. */
+    * single volatile read per op when disabled. Bench's per-query
+    * layer profile records its deltas as `fs_ops`. */
   object Audit {
     @volatile private var on = false
     private val counts =
@@ -112,7 +113,8 @@ object Fs {
     * not the old exists → getFileStatus → open triple — this helper
     * sits under every CURRENT/sidecar/checkpoint resolution, so on an
     * object store the triple tripled the metadata RPCs of every read
-    * and every publish (DevCommitOps). A directory maps to None (the
+    * and every publish (docs/PLANS.md, round 13: commit-path metadata
+    * cost). A directory maps to None (the
     * old `isFile` contract); any other I/O failure on a regular file
     * still rethrows. */
   def readTextIfExists(fs: FileSystem, path: Path): Option[String] =
@@ -129,7 +131,7 @@ object Fs {
   /** Write `text` via tmp + rename (see durability notes above).
     * No explicit parent mkdirs: Hadoop's recursive `create` makes
     * missing parents itself — the old exists+mkdirs pair was one
-    * wasted round-trip per write (DevCommitOps). */
+    * wasted round-trip per write (docs/PLANS.md, round 13). */
   def writeTextAtomic(fs: FileSystem, path: Path, text: String): Unit = {
     val parent = path.getParent
     val tmp = new Path(parent, s".${path.getName}.tmp")
@@ -151,7 +153,8 @@ object Fs {
     * append + pointer swap) is the atomic visibility point, so the
     * tmp+rename dance buys nothing there and costs two extra FS
     * round-trips per file — on an object store, two extra RPCs per
-    * commit per sidecar (DevCommitOps measures the difference). Files
+    * commit per sidecar (docs/PLANS.md, round 13: 34 -> 16 ops per
+    * MERGE publish; Bench's `fs_ops` tracks it per query). Files
     * a concurrent reader may resolve (CURRENT, live-snapshot stamps)
     * must keep [[writeTextAtomic]]. Hadoop `create` makes parent
     * directories itself. */

@@ -802,7 +802,8 @@ object Upsert {
     *   a concurrent reader may resolve — [[writeStatsSidecar]]'s
     *   stamp-CURRENT path; every commit-build call site writes into a
     *   pre-publish dir where the publish is the visibility point and
-    *   the tmp+rename round-trips are pure overhead (DevCommitOps). */
+    *   the tmp+rename round-trips are pure overhead (docs/PLANS.md,
+    *   round 13: commit-path metadata cost). */
   private[graft] def writeSchemaSidecar(
       snapshotDir: String, schema: org.apache.spark.sql.types.StructType,
       atomic: Boolean = false): Unit = {
@@ -1485,27 +1486,31 @@ object Upsert {
     // materialization job costs more than it saves at small batch
     // sizes, while a lazy cache rides an action the verb pays anyway.
     val up = updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the count is the materializing action; the evict range rides it
-    // (min/max of the leading key, string-rendered — the commit engine's
-    // own range job becomes redundant; supported key types are integral
-    // or string, whose text rendering is width-independent, so the
-    // batch-typed min/max equals the engine's table-typed one)
-    val cnt = up.agg(count(lit(1)),
-      min(col(keyCols.head)).cast("string"),
-      max(col(keyCols.head)).cast("string")).head()
-    val nUp = cnt.getLong(0)
-    val range = if (cnt.isNullAt(1)) None
-                else Some((cnt.getString(1), cnt.getString(2)))
-    val (c, r) = commit(spark, tablePath, outPath,
-      evictKeys = up.select(keyCols.map(col): _*),
-      append = Some(up),
-      keyCols = keyCols, allowSchemaEvolution = allowSchemaEvolution,
-      nKeysHint = nUp, evictRangeHint = Some(range))
-    writeCommitInfo(outPath, "MERGE", Seq(
-      "files_copied" -> c.toLong, "files_rewritten" -> r.toLong,
-      "rows_merged" -> nUp))
-    up.unpersist(false)
-    (c, r, nUp)
+    try {
+      // the count is the materializing action; the evict range and the
+      // NULL-key count ride it (min/max of the leading key,
+      // string-rendered — the commit engine's own range job becomes
+      // redundant; supported key types are integral or string, whose
+      // text rendering is width-independent, so the batch-typed min/max
+      // equals the engine's table-typed one)
+      val cnt = up.agg(count(lit(1)),
+        min(col(keyCols.head)).cast("string"),
+        max(col(keyCols.head)).cast("string"),
+        nullKeyCount(keyCols)).head()
+      requireNoNullKeys("upsertByKeys", keyCols, cnt.getLong(3))
+      val nUp = cnt.getLong(0)
+      val range = if (cnt.isNullAt(1)) None
+                  else Some((cnt.getString(1), cnt.getString(2)))
+      val (c, r) = commit(spark, tablePath, outPath,
+        evictKeys = up.select(keyCols.map(col): _*),
+        append = Some(up),
+        keyCols = keyCols, allowSchemaEvolution = allowSchemaEvolution,
+        nKeysHint = nUp, evictRangeHint = Some(range))
+      writeCommitInfo(outPath, "MERGE", Seq(
+        "files_copied" -> c.toLong, "files_rewritten" -> r.toLong,
+        "rows_merged" -> nUp))
+      (c, r, nUp)
+    } finally up.unpersist(false)
   }
 
   /** Copy-on-write DELETE — the other MERGE verb, same engine: only
@@ -1530,22 +1535,26 @@ object Upsert {
     // anti-join otherwise each re-run its subtree (lazy persist; the
     // count is the materializing action)
     val ks = keys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // count = materializing action, evict range riding it (see upsertByKeys)
-    val cnt = ks.agg(count(lit(1)),
-      min(col(keyCols.head)).cast("string"),
-      max(col(keyCols.head)).cast("string")).head()
-    val n = cnt.getLong(0)
-    val range = if (cnt.isNullAt(1)) None
-                else Some((cnt.getString(1), cnt.getString(2)))
-    val (c, r) = commit(spark, tablePath, outPath,
-      evictKeys = ks.select(keyCols.map(col): _*), append = None,
-      keyCols = keyCols, allowSchemaEvolution = false, nKeysHint = n,
-      evictRangeHint = Some(range))
-    writeCommitInfo(outPath, "DELETE", Seq(
-      "files_copied" -> c.toLong, "files_rewritten" -> r.toLong,
-      "keys_requested" -> n))
-    ks.unpersist(false)
-    (c, r, n)
+    try {
+      // count = materializing action, evict range and NULL-key count
+      // riding it (see upsertByKeys)
+      val cnt = ks.agg(count(lit(1)),
+        min(col(keyCols.head)).cast("string"),
+        max(col(keyCols.head)).cast("string"),
+        nullKeyCount(keyCols)).head()
+      requireNoNullKeys("deleteByKeys", keyCols, cnt.getLong(3))
+      val n = cnt.getLong(0)
+      val range = if (cnt.isNullAt(1)) None
+                  else Some((cnt.getString(1), cnt.getString(2)))
+      val (c, r) = commit(spark, tablePath, outPath,
+        evictKeys = ks.select(keyCols.map(col): _*), append = None,
+        keyCols = keyCols, allowSchemaEvolution = false, nKeysHint = n,
+        evictRangeHint = Some(range))
+      writeCommitInfo(outPath, "DELETE", Seq(
+        "files_copied" -> c.toLong, "files_rewritten" -> r.toLong,
+        "keys_requested" -> n))
+      (c, r, n)
+    } finally ks.unpersist(false)
   }
 
   /** Apply a full CDC batch — upserts AND deletes — as ONE commit:
@@ -1576,26 +1585,30 @@ object Upsert {
     // `op =!= "d"` is 3-valued: a NULL op matches neither count,
     // exactly like the old filters.
     val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = b.agg(
-      count(when(col(opCol) =!= "d", 1)),
-      count(when(col(opCol) === "d", 1)),
-      // evict range over the WHOLE batch (deletes evict too), riding
-      // the same materializing agg — see upsertByKeys
-      min(col(keyCols.head)).cast("string"),
-      max(col(keyCols.head)).cast("string")).head()
-    val (nUp, nDel) = (cnt.getLong(0), cnt.getLong(1))
-    val range = if (cnt.isNullAt(2)) None
-                else Some((cnt.getString(2), cnt.getString(3)))
-    val upserts = b.filter(col(opCol) =!= "d").drop(opCol)
-    val (c, r) = commit(spark, tablePath, outPath,
-      evictKeys = b.select(keyCols.map(col): _*), append = Some(upserts),
-      keyCols = keyCols, allowSchemaEvolution = allowSchemaEvolution,
-      nKeysHint = nUp + nDel, evictRangeHint = Some(range))
-    writeCommitInfo(outPath, "CDC", Seq(
-      "files_copied" -> c.toLong, "files_rewritten" -> r.toLong,
-      "rows_upserted" -> nUp, "rows_deleted" -> nDel))
-    b.unpersist(false)
-    (c, r, nUp, nDel)
+    try {
+      val cnt = b.agg(
+        count(when(col(opCol) =!= "d", 1)),
+        count(when(col(opCol) === "d", 1)),
+        // evict range and NULL-key count over the WHOLE batch (deletes
+        // evict too), riding the same materializing agg — see
+        // upsertByKeys
+        min(col(keyCols.head)).cast("string"),
+        max(col(keyCols.head)).cast("string"),
+        nullKeyCount(keyCols)).head()
+      requireNoNullKeys("applyCdcBatchKeys", keyCols, cnt.getLong(4))
+      val (nUp, nDel) = (cnt.getLong(0), cnt.getLong(1))
+      val range = if (cnt.isNullAt(2)) None
+                  else Some((cnt.getString(2), cnt.getString(3)))
+      val upserts = b.filter(col(opCol) =!= "d").drop(opCol)
+      val (c, r) = commit(spark, tablePath, outPath,
+        evictKeys = b.select(keyCols.map(col): _*), append = Some(upserts),
+        keyCols = keyCols, allowSchemaEvolution = allowSchemaEvolution,
+        nKeysHint = nUp + nDel, evictRangeHint = Some(range))
+      writeCommitInfo(outPath, "CDC", Seq(
+        "files_copied" -> c.toLong, "files_rewritten" -> r.toLong,
+        "rows_upserted" -> nUp, "rows_deleted" -> nDel))
+      (c, r, nUp, nDel)
+    } finally b.unpersist(false)
   }
 
   /** Copy-on-write `UPDATE ... SET ... WHERE ...` — the predicate
@@ -1665,7 +1678,7 @@ object Upsert {
     val (nMatched, nNullKey, mnK, mxK, rangeStr, mkeys) =
       matchedStats(live, keyCols, predicate)
     try {
-      requireNoNullKeyMatches("updateWhere", keyCols, nNullKey)
+      requireNoNullKeys("updateWhere", keyCols, nNullKey)
       if (nMatched == 0) {
         val (c0, r0) = commit(spark, tablePath, outPath,
           evictKeys = live.select(keyCols.map(col): _*).limit(0), append = None,
@@ -1753,14 +1766,13 @@ object Upsert {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // min/max of the LEADING component (the range the payload scan
     // pre-filters on); a NULL in ANY component disqualifies the row
-    val anyNull = keyCols.map(col(_).isNull).reduce(_ || _)
     val lead = col(keyCols.head)
     // the string-rendered range rides the same job: it is EXACTLY the
     // TxnInfo evict range the commit engine used to re-aggregate (the
     // live view's key type IS the table's logical type, and the SQL
     // cast-to-string here matches the engine's rendering bit for bit)
     val r = mkeys.agg(
-      count(lit(1)), count(when(anyNull, 1)), min(lead), max(lead),
+      count(lit(1)), nullKeyCount(keyCols), min(lead), max(lead),
       min(lead).cast("string"), max(lead).cast("string")).head()
     val rangeStr =
       if (r.isNullAt(4)) None else Some((r.getString(4), r.getString(5)))
@@ -1804,13 +1816,20 @@ object Upsert {
         java.util.Arrays.asList(rows: _*), keys.schema))
     }
 
-  private def requireNoNullKeyMatches(
+  /** Refuse a verb whose rows (batch rows, or rows its predicate
+    * matches) carry a NULL key component: NULL never equi-joins, so the
+    * engine could neither evict nor address them. */
+  private def requireNoNullKeys(
       verb: String, keyCols: Seq[String], nNullKey: Long): Unit =
     require(nNullKey == 0,
-      s"$verb: the predicate matches $nNullKey row(s) with a NULL in " +
+      s"$verb: $nNullKey row(s) with a NULL in " +
         s"'${keyCols.mkString(", ")}' — the key-pruned COW engine " +
         "cannot address them (NULL never equi-joins); fill the key or " +
         "rewrite the table")
+
+  /** Rows with a NULL in any of `keyCols`, as an aggregate. */
+  private def nullKeyCount(keyCols: Seq[String]): Column =
+    count(when(keyCols.map(col(_).isNull).reduce(_ || _), 1))
 
   /** Copy-on-write `DELETE ... WHERE <predicate>` — the general form
     * of [[deleteByKey]] (which takes an explicit key set). Matched
@@ -1842,7 +1861,7 @@ object Upsert {
     val (nMatched, nNullKey, mnK, mxK, rangeStr, mkeys) =
       matchedStats(live, keyCols, predicate)
     try {
-      requireNoNullKeyMatches("deleteWhere", keyCols, nNullKey)
+      requireNoNullKeys("deleteWhere", keyCols, nNullKey)
       if (nMatched == 0) {
         val (c0, r0) = commit(spark, tablePath, outPath,
           evictKeys = live.select(keyCols.map(col): _*).limit(0), append = None,
@@ -2194,7 +2213,7 @@ object Upsert {
     // outside the protocol (the same class as hand-deleting a
     // snapshot dir under CURRENT). Accepting that documented edge
     // saves one FS round-trip on EVERY read's and publish's CURRENT
-    // resolution (DevCommitOps — the r13 op-count halving).
+    // resolution (the round-13 op-count halving, docs/PLANS.md).
     if (entries.nonEmpty) Some(entries.max)
     else commitLogCheckpoint(tableDir)
   }

@@ -416,12 +416,12 @@ object LakehouseSql {
     * fell; past the cap the publish aborts with the retry remedy —
     * rebuilding against fresh CURRENT is then cheaper than walking
     * (and the abort path's cost is bounded by construction).
-    * DevRebaseProbe measures commits/sec and walk lengths under
-    * contention. */
+    * `graft.tools.RebaseProbe` measures commits/sec and walk lengths
+    * under contention (docs/PLANS.md, round 13: rebase walk is capped). */
   private[graft] val MaxRebaseWalkConf = "spark.graft.occ.maxRebaseWalk"
 
   /** Rebase-walk telemetry, updated on every conflict adjudication —
-    * how DevRebaseProbe reports mean/max chain length without
+    * how `graft.tools.RebaseProbe` reports mean/max chain length without
     * touching the publish path's behavior. */
   private[graft] object RebaseStats {
     import java.util.concurrent.atomic.AtomicLong

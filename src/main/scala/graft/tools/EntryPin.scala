@@ -1,4 +1,5 @@
 package graft
+package tools
 
 import org.apache.spark.sql.functions._
 
@@ -6,7 +7,7 @@ import org.apache.spark.sql.functions._
   * (row count, CARBON_AG null/non-null split, xxhash64 checksum over the
   * keyed, 1e-6-rounded carbon output). Run after any deliberate NSVB /
   * annualize semantics change and update the spec with the new values. */
-object DevEntryPin {
+object EntryPin {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("WARN")

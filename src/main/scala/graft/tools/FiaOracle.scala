@@ -1,13 +1,14 @@
 package graft
+package tools
 
 import org.apache.spark.sql.functions._
 
 /** Dev-only: dump each stage of the composed FIA pipeline over the
   * materialized synthetic state, so the DuckDB oracle SQL for
   * `q_fia_pipeline_oracle` can be validated stage by stage.
-  * Usage: runMain graft.DevFiaOracle <sfDir> <outDir>
+  * Usage: runMain graft.tools.FiaOracle <sfDir> <outDir>
   */
-object DevFiaOracle {
+object FiaOracle {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/tmp/fia_oracle_stages"

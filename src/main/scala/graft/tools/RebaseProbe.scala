@@ -1,4 +1,5 @@
 package graft
+package tools
 
 import org.apache.spark.sql.functions._
 
@@ -13,8 +14,8 @@ import org.apache.spark.sql.functions._
   * (LakehouseSql.RebaseStats) — the evidence PLANS.md cites for the
   * walk cap (`spark.graft.occ.maxRebaseWalk`).
   *
-  * Run: sbt "runMain graft.DevRebaseProbe [writers] [commitsEach]" */
-object DevRebaseProbe {
+  * Run: sbt "runMain graft.tools.RebaseProbe [writers] [commitsEach]" */
+object RebaseProbe {
   def main(args: Array[String]): Unit = {
     val writers = args.headOption.map(_.toInt).getOrElse(8)
     val each = args.lift(1).map(_.toInt).getOrElse(6)

@@ -1,4 +1,5 @@
 package graft
+package tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,9 +23,9 @@ import org.apache.spark.sql.functions._
   * Fully deterministic (xxhash64 of ids — no Math.random), 32 output
   * splits per table so scan-side kernels parallelize (docs/PLANS.md
   * rule 1). Usage:
-  * {{{ runMain graft.DevSfGen /tmp/graft_sf1 10 }}}
+  * {{{ runMain graft.tools.SfGen /tmp/graft_sf1 10 }}}
   */
-object DevSfGen {
+object SfGen {
 
   private def h(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     abs(xxhash64(c))

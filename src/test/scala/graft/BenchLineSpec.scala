@@ -71,6 +71,60 @@ class BenchLineSpec extends AnyFunSuite {
     assert((parsed \\ "failed").values == 1L)
   }
 
+  test("layer profile records: split sums to the timed seconds; jobs, shuffle and FS ops attributed per pass") {
+    val spark = GraftSession.local(2)
+    val sc = spark.sparkContext
+    val profile = LayerProfile.attach(sc)
+    val dir = java.nio.file.Files.createTempDirectory("graft_layers").toFile
+    try {
+      def profiled(tag: String)(query: => org.apache.spark.sql.DataFrame) = {
+        val ((stamps, forced), fsOps) = profile.pass(tag)(Bench.timedRun(query))
+        val (ex, sc0) = LayerProfile.planCounts(forced.queryExecution.executedPlan)
+        (stamps, fsOps, ex, sc0)
+      }
+      def parsed(tag: String, r: (LayerProfile.Stamps, Map[String, Long], Int, Int)) = {
+        org.apache.spark.ListenerDrain(sc)
+        org.json4s.jackson.JsonMethods.parse(LayerProfile.record(
+          tag, 1, r._1, profile.counters(tag), r._2, r._3, r._4))
+      }
+      def long(j: org.json4s.JValue, f: String) = (j \ f).values.asInstanceOf[BigInt].toLong
+      def dbl(j: org.json4s.JValue, f: String) = (j \ f).values.asInstanceOf[Double]
+
+      val shuffle = parsed("q_shuffle#1", profiled("q_shuffle#1")(
+        spark.range(2000).selectExpr("id % 7 as k").groupBy("k").count()))
+      assert(math.abs(dbl(shuffle, "construct_s") + dbl(shuffle, "plan_s") +
+        dbl(shuffle, "exec_s") - dbl(shuffle, "seconds")) < 1e-6)
+      assert(long(shuffle, "jobs") >= 1 && long(shuffle, "stages") >= 2, shuffle)
+      assert(long(shuffle, "shuffle_write_bytes") > 0, shuffle)
+      assert(long(shuffle, "exchanges") >= 1, shuffle)
+      // every job names the action's caller, also the ones adaptive
+      // execution submits from its own threads
+      val sites = (shuffle \ "job_sites").values.asInstanceOf[List[String]]
+      assert(sites.size == long(shuffle, "jobs"))
+      assert(sites.forall(_.contains("Bench.scala")), sites)
+
+      // driver-only work: FS ops show, no Spark work is attributed
+      val fsTag = "q_fs#1"
+      val (_, fsOps) = profile.pass(fsTag)(graft.ops.Fs.writeTextAtomic(
+        graft.ops.Fs.of(dir.toString, spark),
+        new org.apache.hadoop.fs.Path(dir.toString, "CURRENT"), "v0"))
+      val driverOnly = parsed(fsTag,
+        (LayerProfile.Stamps(0, 0, 0, 0), fsOps, 0, 0))
+      assert(long(driverOnly, "jobs") == 0 && long(driverOnly, "tasks") == 0, driverOnly)
+      val ops = (driverOnly \ "fs_ops").values.asInstanceOf[Map[String, _]].keySet
+      assert(ops.exists(_.startsWith("create:")) && ops.exists(_.startsWith("rename:")), ops)
+
+      // the first pass's counters stay its own
+      assert(long(parsed("q_shuffle#1", (LayerProfile.Stamps(0, 0, 0, 0), Map.empty, 0, 0)),
+        "jobs") == long(shuffle, "jobs"))
+      assert(profile.overheadS >= 0)
+    } finally {
+      sc.removeSparkListener(profile)
+      graft.ops.Fs.Audit.disable()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(dir)
+    }
+  }
+
   test("truncation drops fastest queries and reports the omitted count") {
     // Force truncation with many long-named queries.
     val results = (1 to 500).map(i => f"q_synthetic_query_name_$i%03d" -> Some(i.toDouble))

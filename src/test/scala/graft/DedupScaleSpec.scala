@@ -160,6 +160,24 @@ class DedupScaleSpec extends AnyFunSuite {
       "within-doc repetition is duplication too")
   }
 
+  test("exact-substring dedup: a NULL-text doc keeps nothing under either ANSI setting") {
+    import spark.implicits._
+    val docs = Seq((1L, Option("a b c d a b c d")), (2L, Option.empty[String]))
+      .toDF("doc_id", "text")
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      for (ansi <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        val r = Dedup.removeDuplicateSpans(docs, "doc_id", "text", n = 4)
+          .filter($"doc_id" === 2L).collect()
+        assert(r.length == 1)
+        // with ANSI off, size(NULL) = -1 once made sequence(0, -2) keep 3
+        assert(r(0).getAs[Long]("n_kept") == 0L, s"ansi=$ansi")
+        assert(r(0).getAs[String]("dedup_text") == "", s"ansi=$ansi")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", prior)
+  }
+
   test("persisted index probe equals the inline computation bit-for-bit") {
     import spark.implicits._
     import graft.ops.Dedup

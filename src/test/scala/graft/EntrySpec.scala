@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * order-independent checksum over (tree_ID, YEAR, CARBON_AG@1e-6) — so
   * an NSVB or annualize regression cannot slip through as "still
   * returns rows". Deliberate semantics changes: re-run
-  * `graft.DevEntryPin` and update the pins. */
+  * `graft.tools.EntryPin` and update the pins. */
 class EntrySpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.local(4)

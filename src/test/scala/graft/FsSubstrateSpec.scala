@@ -42,7 +42,8 @@ class GraftMockFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   * latency-shaped object store, so a spec can assert the commit
   * protocol's wall-time is COUPLED to its op count — the regression
   * guard that keeps the publish path from quietly re-tripling RPCs
-  * (DevCommitOps counts ops; this proves the ops ARE the latency).
+  * (Bench's layer profile counts ops as `fs_ops`; this proves the ops
+  * ARE the latency).
   * Ops are tallied by issuing thread class: driver-side protocol ops
   * run sequentially (their sleeps ADD — wall-time floor), task-side
   * data ops overlap across executor threads (upper bound only). */
@@ -219,12 +220,13 @@ class FsSubstrateSpec extends AnyFunSuite {
       val (t0, d0, a0) = bases.minBy(_._1)
       // REGRESSION GUARD: the total RPC budget of one small MERGE
       // publish through the mock (driver protocol + task data I/O +
-      // Spark's own listings). DevCommitOps counts the Fs-substrate
-      // subset (16 metadata ops); this ceiling covers EVERYTHING the
+      // Spark's own listings). The Fs-substrate subset is 16 metadata
+      // ops (docs/PLANS.md, round 13; Bench's `fs_ops` on q_sql_merge
+      // tracks it); this ceiling covers EVERYTHING the
       // store would bill, so a future round that quietly re-triples
       // round-trips fails here instead of in production latency.
       // measured 94 on the r14 HEAD (16 of them Fs-substrate metadata
-      // ops — DevCommitOps; the rest are Spark's committer/listing
+      // ops; the rest are Spark's committer/listing
       // machinery); 140 = measured + ~50% headroom for Spark-version
       // drift, NOT for protocol growth
       assert(d0 <= 140, s"driver-side FS ops per MERGE publish grew to $d0")

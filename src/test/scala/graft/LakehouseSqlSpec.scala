@@ -1234,4 +1234,38 @@ class LakehouseSqlSpec extends AnyFunSuite {
     refuses(s"DELETE FROM '$tbl' ON k WHERE raise_error('scanned') IS NULL")
     assert(spark.read.parquet(s"$tbl/v0").count() == 4)
   }
+
+  test("NULL keys in a batch: MERGE, the key-set DELETE and CDC refuse; CURRENT stays put") {
+    import spark.implicits._
+    val tbl = s"$base/nullbatch"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tbl))
+    Seq((Option(1L), 10L), (Option.empty[Long], 20L))
+      .toDF("k", "v").write.parquet(s"$tbl/v0")
+    val w = new java.io.PrintWriter(s"$tbl/CURRENT", "UTF-8")
+    try w.print("v0") finally w.close()
+    // the stored NULL-keyed row upserted again: NULL never equi-joins,
+    // so the engine could not evict the stored copy and would hold two
+    Seq((Option.empty[Long], 21L), (Option(2L), 30L)).toDF("k", "v")
+      .createOrReplaceTempView("lakesql_nullbatch")
+    def unmoved(): Unit = {
+      assert(graft.streaming.Streams.currentSnapshot(tbl).get.endsWith("/v0"))
+      assert(Upsert.snapshotVersions(tbl) == Seq(0L))
+    }
+    val e1 = intercept[IllegalArgumentException](spark.sql(
+      s"""MERGE INTO '$tbl' USING (SELECT * FROM lakesql_nullbatch) ON k
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect())
+    assert(e1.getMessage.contains("1 row(s) with a NULL in 'k'"), e1.getMessage)
+    unmoved()
+    // the batch verbs refuse the same way when called directly
+    val cdc = Seq((Option.empty[Long], 0L, "d")).toDF("k", "v", "op")
+    val e2 = intercept[IllegalArgumentException](Upsert.applyCdcBatchKeys(
+      spark, s"$tbl/v0", s"$base/nullbatch_cdc", cdc, Seq("k"), "op"))
+    assert(e2.getMessage.contains("applyCdcBatchKeys"), e2.getMessage)
+    val e3 = intercept[IllegalArgumentException](Upsert.deleteByKeys(
+      spark, s"$tbl/v0", s"$base/nullbatch_del", cdc.select("k"), Seq("k")))
+    assert(e3.getMessage.contains("deleteByKeys"), e3.getMessage)
+    unmoved()
+    assert(spark.read.parquet(s"$tbl/v0").count() == 2)
+  }
 }

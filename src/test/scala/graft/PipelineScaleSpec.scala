@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in Bench — row counts, CARBON_AG null split, and an order-independent
   * checksum per variant, so a regression anywhere in the composed path
   * cannot slip through as "still returns rows" at scale. Deliberate
-  * semantics changes: re-run `graft.DevEntryPin`, update the pins.
+  * semantics changes: re-run `graft.tools.EntryPin`, update the pins.
   */
 class PipelineScaleSpec extends AnyFunSuite {
 
@@ -29,7 +29,7 @@ class PipelineScaleSpec extends AnyFunSuite {
   test("composed pipeline output is pinned per variant: counts, null split, checksum") {
     val results = graft.fia.Pipeline.run(spark,
       graft.fia.SyntheticState.tables(spark, 6000))
-    val pins = Map( // from graft.DevEntryPin
+    val pins = Map( // from graft.tools.EntryPin
       "midpt" -> (261619L, 52670L, -8551959680462182238L),
       "mortyr" -> (261619L, 52670L, -2999349178173450929L))
     for ((variant, (rows, nullCarbon, checksum)) <- pins) {
@@ -49,7 +49,7 @@ class PipelineScaleSpec extends AnyFunSuite {
   }
 
   test("bucketed-stage path (runBucketed) is value-identical to the in-memory path") {
-    // same pins as the in-memory test above (graft.DevEntryPin): the
+    // same pins as the in-memory test above (graft.tools.EntryPin): the
     // layout must be value-invisible — only the PLAN changes
     val results = graft.fia.Pipeline.runBucketed(spark,
       graft.fia.SyntheticState.tables(spark, 6000),
