@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
 
 /** Persisted IVF-PQ index: build once, probe many times.
   *
@@ -39,6 +40,8 @@ import org.apache.spark.sql.functions._
   * INDEX_OK marker is the visibility point.
   */
 object AnnIndex {
+
+  private implicit val jsonFormats: Formats = DefaultFormats
 
   /** In-memory handle to a (re)loaded index.
     * @param stamp the indexed SOURCE snapshot, when the index was
@@ -119,12 +122,9 @@ object AnnIndex {
     appendCodesBloom(spark, path,
       Layout.listDataFiles(spark, s"$path/codes.parquet"), rebuild = true)
     val qerr = Option(obs.get.getOrElse("qerr_mean", null)) // null on an empty corpus
-      .map(b => qerrJson(b.asInstanceOf[Double], None))
-    // through the Fs substrate (scheme-proof; FsSubstrateSpec's source
-    // gate forbids raw java.io writes in the ops layer)
-    Fs.writeTextAtomic(Fs.of(path),
-      new org.apache.hadoop.fs.Path(s"$path/INDEX_OK"),
-      markerText(cb, stamp, None, qerr))
+      .map(_.asInstanceOf[Double])
+    writeMarker(path, Marker(cb.length, cb(0).length, qerrBase = qerr)
+      .stampedAt(stamp, None))
   }
 
   /** Per-row PQ quantization error: the squared L2 between the row's
@@ -135,91 +135,54 @@ object AnnIndex {
   private def quantErr(cb: Array[Array[Array[Float]]]) =
     Similarity.adcDistance(col("embedding"), col("codes"), cb)
 
-  // locale-proof number rendering (Double.toString is locale-fixed)
-  private def qerrJson(base: Double, last: Option[(Double, Double)]): String =
-    s"""{"qerrBase":$base""" +
-      last.fold("") { case (l, r) => s""","qerrLast":$l,"qerrRatio":$r""" } + "}"
-
-  private def readMarkerDouble(path: String, field: String): Option[Double] =
-    Fs.readTextIfExists(Fs.of(path),
-        new org.apache.hadoop.fs.Path(s"$path/INDEX_OK"))
-      .flatMap(txt => (s""""$field":([-+0-9.eE]+)""").r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble))
-
-  /** The build-time corpus-mean quantization error, if recorded. */
-  def readQerrBase(path: String): Option[Double] =
-    readMarkerDouble(path, "qerrBase")
-
-  /** The last maintenance pass's delta-mean quantization error over
-    * the build-time baseline, if a pass recorded one — the
+  /** The INDEX_OK marker: the codebook shape, the source stamp
+    * (src, srcVersion, idCol) of an index built from a versioned
+    * table, how the stamp last `advance`d — "verified" (every
+    * intervening commit's effect was proved, via the source's change
+    * feed or the endpoint diff) or "assumed" (some intervening commit
+    * had no materialized feed, so the advance is the caller's
+    * assertion — recorded, not hidden); absent on a freshly built
+    * index — and the quantization-error record: `qerrBase`, the
+    * build-time corpus mean, and `qerrLast`/`qerrRatio`, the last
+    * maintenance pass's delta mean and its ratio to the base (the
     * distribution-drift signal: ~1 means updates quantize as well as
     * the corpus the artifacts were fitted on; a growing ratio means
-    * recall is degrading and a rebuild (artifact refit) is due. */
-  def readQerrRatio(path: String): Option[Double] =
-    readMarkerDouble(path, "qerrRatio")
+    * recall is degrading and a rebuild is due). A mutator rewrites
+    * the marker as a copy of the one it read, so the baseline
+    * survives every marker rewrite. */
+  private[graft] final case class Marker(
+      numSub: Int, codes: Int,
+      src: Option[String] = None, srcVersion: Option[Long] = None,
+      idCol: Option[String] = None, advance: Option[String] = None,
+      qerrBase: Option[Double] = None, qerrLast: Option[Double] = None,
+      qerrRatio: Option[Double] = None) {
+    def stamp: Option[(String, Long, String)] =
+      for (s <- src; v <- srcVersion; i <- idCol) yield (s, v, i)
+    def stampedAt(st: Option[(String, Long, String)], how: Option[String]): Marker =
+      copy(src = st.map(_._1), srcVersion = st.map(_._2), idCol = st.map(_._3),
+        advance = how)
+  }
 
-  // The stamp line is JSON; a table path (or id column) containing a
-  // quote or backslash must round-trip through it, or readStamp would
-  // silently return None and a stamped index would degrade to
-  // unstamped — the misleading "built from an ad-hoc corpus" refusal.
-  private def jesc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def junesc(s: String): String =
-    s.replaceAll("""\\(.)""", "$1")
-  // a JSON string body with escapes: runs of non-quote/non-backslash
-  // or backslash-escaped pairs
-  private val jstr = """((?:[^"\\]|\\.)*)"""
+  private def markerPath(path: String) = new org.apache.hadoop.fs.Path(s"$path/INDEX_OK")
 
-  private def markerText(
-      cb: Array[Array[Array[Float]]],
-      stamp: Option[(String, Long, String)],
-      advance: Option[String] = None,
-      qerr: Option[String] = None): String =
-    s"numSub=${cb.length} codes=${cb(0).length}" +
-      stamp.fold("") { case (tbl, v, idCol) =>
-        val adv = advance.fold("")(a => s""","advance":"$a"""")
-        s"""\n{"src":"${jesc(tbl)}","srcVersion":$v,"idCol":"${jesc(idCol)}"$adv}"""
-      } +
-      qerr.fold("")(q => s"\n$q")
+  /** Through the Fs substrate (scheme-proof; FsSubstrateSpec's source
+    * gate forbids raw java.io writes in the ops layer). */
+  private def writeMarker(path: String, m: Marker): Unit =
+    Fs.writeTextAtomic(Fs.of(path), markerPath(path), Fs.json(Extraction.decompose(m)))
 
-  /** The marker's quantization-error record, re-rendered for a
-    * mutator that rewrites the marker but did not measure (append,
-    * reconcile) — the baseline must survive every marker rewrite or
-    * the drift signal dies on the first maintenance pass. Read BEFORE
-    * the marker comes off. */
-  private def qerrCarry(path: String): Option[String] =
-    readQerrBase(path).map { b =>
-      val last = for {
-        l <- readMarkerDouble(path, "qerrLast")
-        r <- readMarkerDouble(path, "qerrRatio")
-      } yield (l, r)
-      qerrJson(b, last)
-    }
+  /** The index's marker, None when the index is missing or incomplete.
+    * Each verb reads it once. */
+  private[graft] def readMarker(path: String): Option[Marker] =
+    Fs.readJson(Fs.of(path), markerPath(path)).map(_.extract[Marker])
+
+  private def requireMarker(path: String, who: String): Marker =
+    readMarker(path).getOrElse(throw new IllegalArgumentException(
+      s"$who: $path has no INDEX_OK marker — missing or incomplete index"))
 
   /** The (tableDir, version, idCol) source stamp of a persisted
     * index, when it was built from a versioned table. */
   def readStamp(path: String): Option[(String, Long, String)] =
-    Fs.readTextIfExists(Fs.of(path),
-        new org.apache.hadoop.fs.Path(s"$path/INDEX_OK"))
-      .flatMap { txt =>
-        for {
-          src <- s""""src":"$jstr"""".r.findFirstMatchIn(txt).map(m => junesc(m.group(1)))
-          v <- """"srcVersion":(-?\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-          idc <- s""""idCol":"$jstr"""".r.findFirstMatchIn(txt).map(m => junesc(m.group(1)))
-        } yield (src, v, idc)
-      }
-
-  /** How the stamp last advanced: "verified" (every intervening
-    * commit's effect was proved insert-only and covered by the
-    * appended delta, via the source's change feed) or "assumed" (some
-    * intervening commit had no materialized feed, so the advance is
-    * the caller's assertion — recorded, not hidden). Absent on a
-    * freshly built index. */
-  def readStampAdvance(path: String): Option[String] =
-    Fs.readTextIfExists(Fs.of(path),
-        new org.apache.hadoop.fs.Path(s"$path/INDEX_OK"))
-      .flatMap(txt => """"advance":"(\w+)"""".r.findFirstMatchIn(txt)
-        .map(_.group(1)))
+    readMarker(path).flatMap(_.stamp)
 
   // Commit verbs whose row-set effect the index layer understands.
   // delete-shaped: rows only ever removed — the encoded corpus stays a
@@ -335,8 +298,8 @@ object AnnIndex {
       val w =
         if (snap(v))
           Upsert.readCommitInfo(s"$tbl/v$v").map(_._1)
-            .orElse(if (logged(v)) Upsert.readCommitLogVerb(tbl, v) else None)
-        else if (logged(v)) Upsert.readCommitLogVerb(tbl, v)
+            .orElse(if (logged(v)) Upsert.readCommitLogEntry(tbl, v).map(_.verb) else None)
+        else if (logged(v)) Upsert.readCommitLogEntry(tbl, v).map(_.verb)
         else None
       w.map(v -> _)
     }.toMap
@@ -381,10 +344,9 @@ object AnnIndex {
 
   private def appendLocked(delta: DataFrame, path: String,
       numRangePartitions: Int): Unit = {
-    require(Fs.of(path).exists(new org.apache.hadoop.fs.Path(s"$path/INDEX_OK")),
-      s"AnnIndex.append: $path has no INDEX_OK marker — build the index first")
+    val marker = requireMarker(path, "AnnIndex.append")
     val spark = delta.sparkSession
-    val idx = read(spark, path)
+    val idx = load(spark, path, marker)
     // Already-encoded adjudication (one index-bounded semi-join,
     // maintenance-time): a delta FULLY encoded already is a RETRY of
     // an append that landed its rows but crashed before the marker
@@ -496,10 +458,7 @@ object AnnIndex {
         rebuild = false)
     }
     advance.foreach { case (tbl, v, idCol, mode) =>
-      Fs.writeTextAtomic(Fs.of(path),
-        new org.apache.hadoop.fs.Path(s"$path/INDEX_OK"),
-        markerText(idx.codebook, Some((tbl, v, idCol)), Some(mode),
-          qerrCarry(path)))
+      writeMarker(path, marker.stampedAt(Some((tbl, v, idCol)), Some(mode)))
     }
   }
 
@@ -638,7 +597,7 @@ object AnnIndex {
     * @param touched one column `id`, DISTINCT (callers guarantee it —
     *   membership multiplicity is the dropped-row count)
     * @param newCodes (id, cell, codes) replacement encodings
-    * @param markerTxt INDEX_OK content to stamp after the swap
+    * @param marker INDEX_OK content to stamp after the swap
     * @return encoded rows dropped */
   private def bloomSidecar(path: String) = s"$path/codes_bloom.parquet"
 
@@ -746,7 +705,7 @@ object AnnIndex {
   private def rewriteCodesDelta(
       spark: SparkSession, path: String, touched: DataFrame,
       newCodes: Option[DataFrame], numRangePartitions: Int,
-      markerTxt: String): Long = {
+      marker: Marker): Long = {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val codesDir = s"$path/codes.parquet"
@@ -849,8 +808,7 @@ object AnnIndex {
     val pieces = kept.toSeq ++
       newCodes.map(_.select(col("id"), col("cell"), col("codes"))).toSeq
     val fs = Fs.of(path)
-    val marker = new HPath(s"$path/INDEX_OK")
-    fs.delete(marker, false) // unreadable during the swap — loud, not stale
+    fs.delete(markerPath(path), false) // unreadable during the swap — loud, not stale
     // land the replacement BESIDE the survivors (the read above is by
     // explicit file path, so appending into the same directory is
     // safe), then drop the hit files
@@ -866,7 +824,7 @@ object AnnIndex {
       Layout.listDataFiles(spark, codesDir).filterNot(before),
       rebuild = false)
     toRewrite.foreach(f => fs.delete(new HPath(f), false))
-    Fs.writeTextAtomic(fs, marker, markerTxt)
+    writeMarker(path, marker)
     tagged.foreach(_.unpersist(false))
     touchedChk.unpersist(false)
     dropped
@@ -896,7 +854,8 @@ object AnnIndex {
 
   private def reconcileLocked(spark: SparkSession, path: String,
       numRangePartitions: Int): Long = {
-    val idx = read(spark, path)
+    val marker = requireMarker(path, "AnnIndex.reconcile")
+    val idx = load(spark, path, marker)
     val (tbl, stamped, idCol) = idx.stamp.getOrElse(
       throw new IllegalStateException(
         s"AnnIndex.reconcile: index at $path carries no source stamp — " +
@@ -932,8 +891,7 @@ object AnnIndex {
     val dead = idx.encoded.select(col("id"))
       .join(live, Seq("id"), "left_anti").distinct()
     rewriteCodesDelta(spark, path, dead, None, numRangePartitions,
-      markerText(idx.codebook, Some((tbl, cur, idCol)), Some("verified"),
-        qerrCarry(path)))
+      marker.stampedAt(Some((tbl, cur, idCol)), Some("verified")))
   }
 
   /** Apply the source table's NET divergence since the stamp —
@@ -986,9 +944,8 @@ object AnnIndex {
     // once per micro-batch and most polls are no-ops — the up-to-date
     // exit must cost zero Spark jobs, not a codebook collect plus two
     // parquet reads
-    require(Fs.of(path).exists(new HPath(s"$path/INDEX_OK")),
-      s"AnnIndex: $path has no INDEX_OK marker — missing or incomplete index")
-    val (tbl, stamped, idCol) = readStamp(path).getOrElse(
+    val marker = requireMarker(path, "AnnIndex.applyCdf")
+    val (tbl, stamped, idCol) = marker.stamp.getOrElse(
       throw new IllegalStateException(
         s"AnnIndex.applyCdf: index at $path carries no source stamp — " +
           "nothing to diff against; rebuild with write(source = ...)"))
@@ -1008,7 +965,7 @@ object AnnIndex {
           "was RECLAIMED (vacuumed) — the divergence since the stamp " +
           "has no diff base and is unprovable. Remedy: rebuild with " +
           "AnnIndex.write")
-    val idx = read(spark, path)
+    val idx = load(spark, path, marker)
     // delivery-sized; localCheckpoint so the file-diff excepts run
     // once, not once per downstream use
     val feed = Upsert.changeDataFeed(spark, tbl, stamped, cur)
@@ -1054,29 +1011,25 @@ object AnnIndex {
     // ratio per pass is what makes that rebuild a data-driven decision;
     // setting [[MaxDriftConf]] turns it into a refusal (BEFORE any
     // file moves, so a refused pass leaves the index untouched).
-    val base = readQerrBase(path)
     val deltaQerr =
       Option(metrics.getOrElse("qerr_mean", null)).map(_.asInstanceOf[Double])
-    val qerrLine = base.map { b =>
-      val last = deltaQerr.filter(_ => b > 0).map(l => (l, l / b))
-      last.foreach { case (_, r) =>
-        val thr = spark.conf.get(MaxDriftConf, "").trim
-        if (thr.nonEmpty && r > thr.toDouble)
-          throw new IllegalStateException(
-            s"AnnIndex.applyCdf: the wave's mean quantization error is " +
-              s"${r}x the build-time baseline, past $MaxDriftConf=$thr — " +
-              "the embedding distribution has DRIFTED from the corpus the " +
-              "immutable centroids/codebook were fitted on, and applying " +
-              "the wave would silently degrade recall. Remedy: rebuild " +
-              "with AnnIndex.write (refits the artifacts), or raise the " +
-              "threshold if the drift is acceptable")
-      }
-      qerrJson(b, last)
+    val last = marker.qerrBase.filter(_ > 0).flatMap(b => deltaQerr.map(l => (l, l / b)))
+    last.foreach { case (_, r) =>
+      val thr = spark.conf.get(MaxDriftConf, "").trim
+      if (thr.nonEmpty && r > thr.toDouble)
+        throw new IllegalStateException(
+          s"AnnIndex.applyCdf: the wave's mean quantization error is " +
+            s"${r}x the build-time baseline, past $MaxDriftConf=$thr — " +
+            "the embedding distribution has DRIFTED from the corpus the " +
+            "immutable centroids/codebook were fitted on, and applying " +
+            "the wave would silently degrade recall. Remedy: rebuild " +
+            "with AnnIndex.write (refits the artifacts), or raise the " +
+            "threshold if the drift is acceptable")
     }
     val dropped = rewriteCodesDelta(spark, path, touched, Some(newCodes),
       numRangePartitions,
-      markerText(idx.codebook, Some((tbl, cur, idCol)), Some("verified"),
-        qerrLine))
+      marker.stampedAt(Some((tbl, cur, idCol)), Some("verified"))
+        .copy(qerrLast = last.map(_._1), qerrRatio = last.map(_._2)))
     newCodes.unpersist(false)
     feed.unpersist(false)
     (dropped, appended)
@@ -1090,8 +1043,8 @@ object AnnIndex {
     * racing an [[append]] could drop the appended files and a crash
     * mid-swap left a marker over a half-swapped corpus. This verb
     * takes the lock, removes the marker, re-clusters on (cell, id),
-    * swaps at file granularity, and re-stamps the marker TEXT
-    * VERBATIM — compaction is row-preserving, and preserving the
+    * swaps at file granularity, and re-stamps the marker exactly as
+    * read — compaction is row-preserving, and preserving the
     * recorded stamp AND advance means it can never launder an
     * `advance: assumed` into a fresh-looking index. Probes are
     * bit-identical before/after (spec-pinned); a crash mid-swap
@@ -1107,12 +1060,7 @@ object AnnIndex {
       numRangePartitions: Int): (Int, Int) = {
     import org.apache.hadoop.fs.{Path => HPath}
     val fs = Fs.of(path)
-    val marker = new HPath(s"$path/INDEX_OK")
-    // preserved verbatim: stamp, advance, and any later marker fields
-    val markerTxt = Fs.readTextIfExists(fs, marker).getOrElse(
-      throw new IllegalArgumentException(
-        s"AnnIndex.optimize: $path has no INDEX_OK marker — missing or " +
-          "incomplete index; build it first"))
+    val marker = requireMarker(path, "AnnIndex.optimize")
     val codesDir = s"$path/codes.parquet"
     val before = Layout.listDataFiles(spark, codesDir)
     // explicit file paths: appending the re-clustered rows into the
@@ -1121,7 +1069,7 @@ object AnnIndex {
       .select(col("id"), col("cell"), col("codes"))
       .repartitionByRange(numRangePartitions, col("cell"), col("id"))
       .sortWithinPartitions(col("cell"), col("id"))
-    fs.delete(marker, false) // unreadable during the swap — loud, not stale
+    fs.delete(markerPath(path), false) // unreadable during the swap — loud, not stale
     clustered.write.mode("append").parquet(codesDir)
     before.foreach(f => fs.delete(new HPath(f), false))
     val after = Layout.listDataFiles(spark, codesDir)
@@ -1129,15 +1077,16 @@ object AnnIndex {
     // and leave deleted files' rows behind; the rebuild here drops
     // them along with the files
     appendCodesBloom(spark, path, after, rebuild = true)
-    Fs.writeTextAtomic(fs, marker, markerTxt)
+    writeMarker(path, marker)
     (before.size, after.size)
   }
 
   /** Load the index artifacts; refuses a directory without the marker
     * (a crashed build must fail loudly, not probe a partial corpus). */
-  def read(spark: SparkSession, path: String): Index = {
-    require(Fs.of(path).exists(new org.apache.hadoop.fs.Path(s"$path/INDEX_OK")),
-      s"AnnIndex: $path has no INDEX_OK marker — missing or incomplete index")
+  def read(spark: SparkSession, path: String): Index =
+    load(spark, path, requireMarker(path, "AnnIndex"))
+
+  private def load(spark: SparkSession, path: String, marker: Marker): Index = {
     val cbRows = spark.read.parquet(s"$path/codebook.parquet")
       .select("subspace", "code", "vec")
       .collect()
@@ -1150,7 +1099,7 @@ object AnnIndex {
       spark.read.parquet(s"$path/centroids.parquet"),
       cb,
       spark.read.parquet(s"$path/codes.parquet"),
-      readStamp(path))
+      marker.stamp)
   }
 
   /** Probe a (re)loaded index: same contract as

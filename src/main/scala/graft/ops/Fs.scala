@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.json4s.JValue
+import org.json4s.jackson.JsonMethods
 
 /** Small-file metadata I/O for the lakehouse layer, routed through the
   * Hadoop [[FileSystem]] abstraction so the commit substrate works on
@@ -28,8 +30,38 @@ import org.apache.spark.sql.SparkSession
   *    (`FileSystem.create(path, overwrite = false)` — atomic on HDFS
   *    and local; object stores without atomic create need a locking
   *    layer, as Delta's S3 LogStore documents).
+  *
+  * The JSON metadata records, each written and read by one pair of
+  * functions through [[json]] and [[readJson]] (json4s; `_schema.json`
+  * is Spark's own `StructType.json`):
+  *
+  * {{{
+  * path (under the table or index dir)  fields                         writer / reader
+  * v<n>/_manifest/_keys.json            ["<key column>", ...]          Upsert.writeManifestKeys / readManifestKeys
+  * v<n>/_commitinfo                     operation, ts, <stat>: Long... Upsert.writeCommitInfo / readCommitInfo
+  * v<n>/_txn.json                       keys, kind, mn?, mx?, touched, Upsert.writeTxnInfo / readTxnInfo
+  *                                      fresh, fbFile, fbMn, fbMx
+  * _commitlog/<v>.json                  version, base, verb, ts        Upsert.writeCommitLogEntry / readCommitLogEntry
+  * _commitlog/_base.json                version, ts                    Upsert.truncateCommitLog / commitLogCheckpoint
+  * _cdf/_low_watermark.json             min_feed_version, ts           Upsert.reclaimMetadata / cdfLowWatermark
+  * _cdf_applied.json (mirror table)     applied, ts                    Streams.writeApplied / readApplied
+  * INDEX_OK (ANN index)                 numSub, codes, src?,           AnnIndex.writeMarker / readMarker
+  *                                      srcVersion?, idCol?, advance?,
+  *                                      qerrBase?, qerrLast?, qerrRatio?
+  * }}}
+  * `?` marks a field that is absent when it has no value.
   */
 object Fs {
+
+  /** A metadata record as text: compact JSON, fields in the order
+    * given, absent (`JNothing`) fields dropped. */
+  def json(v: JValue): String = JsonMethods.compact(JsonMethods.render(v))
+
+  /** The record at `path` parsed, None when it is absent. A present
+    * but unparseable record throws: it means corruption or a foreign
+    * writer, and no reader may silently drop it. */
+  def readJson(fs: FileSystem, path: Path): Option[JValue] =
+    readTextIfExists(fs, path).map(JsonMethods.parse(_))
 
   /** Opt-in metadata-op audit: counts every FS
     * round-trip issued THROUGH this substrate, keyed by

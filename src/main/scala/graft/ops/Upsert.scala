@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
+import org.json4s._
+import org.json4s.JsonDSL._
 
 /** Copy-on-write MERGE verbs at FILE granularity — the core
   * maintenance loop of a lakehouse table (Delta/Iceberg `MERGE INTO` /
@@ -28,6 +30,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * the caller swaps pointers, which is how lakehouse commits work).
   */
 object Upsert {
+
+  private implicit val jsonFormats: Formats = DefaultFormats
 
   /** Sidecar dir holding the cached per-file key-bounds manifest of a
     * snapshot. Underscore-prefixed, so Spark's data reads skip it. */
@@ -245,29 +249,21 @@ object Upsert {
   /** `_manifest/_keys.json`: the key columns the sidecar carries rows
     * for, stamped by every manifest writer — a METADATA answer to "does
     * this sidecar cover key X", so the presence check below never runs
-    * a Spark job. Hand-rolled JSON string array (no deps), names
-    * escaped. */
-  private def writeManifestKeys(
+    * a Spark job. A JSON array of key-column names. */
+  private[graft] def writeManifestKeys(
       spark: SparkSession, snapshotDir: String, keys: Seq[String],
       atomic: Boolean = true): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val p = new HPath(s"${manifestDir(snapshotDir)}/_keys.json")
     val write = if (atomic) Fs.writeTextAtomic _ else Fs.createText _
-    write(Fs.of(snapshotDir, spark), p,
-      keys.distinct.map(k => "\"" + esc(k) + "\"").mkString("[", ",", "]"))
+    write(Fs.of(snapshotDir, spark), p, Fs.json(keys.distinct))
   }
 
-  private val jsonStringRe = """"((?:[^"\\]|\\.)*)"""".r
-
-  private def readManifestKeys(
+  private[graft] def readManifestKeys(
       spark: SparkSession, snapshotDir: String): Option[Set[String]] = {
     import org.apache.hadoop.fs.{Path => HPath}
     val p = new HPath(s"${manifestDir(snapshotDir)}/_keys.json")
-    Fs.readTextIfExists(Fs.of(snapshotDir, spark), p).map { txt =>
-      jsonStringRe.findAllMatchIn(txt)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSet
-    }
+    Fs.readJson(Fs.of(snapshotDir, spark), p).map(_.extract[Set[String]])
   }
 
   /** The cached `_manifest` bounds rows for `keyCol`, when the sidecar
@@ -1910,23 +1906,14 @@ object Upsert {
   def writeCommitInfo(
       snapshotDir: String, operation: String,
       stats: Seq[(String, Long)] = Nil): Unit = {
-    require(operation.forall(c => c != '"' && c != '\\' && c >= ' '),
-      s"writeCommitInfo: operation must be a plain verb name, got '$operation'")
-    require(stats.forall(_._1.forall(c => c != '"' && c != '\\' && c >= ' ')),
-      "writeCommitInfo: stat names must be plain identifiers")
-    val sb = new StringBuilder
-    sb.append("{\"operation\":\"").append(operation)
-      .append("\",\"ts\":").append(System.currentTimeMillis())
-    for ((k, v) <- stats) sb.append(",\"").append(k).append("\":").append(v)
-    sb.append("}")
+    val doc = JObject(("operation" -> JString(operation)) ::
+      ("ts" -> JLong(System.currentTimeMillis())) ::
+      stats.map { case (k, v) => k -> JLong(v) }.toList)
     import org.apache.hadoop.fs.{Path => HPath}
     // pre-publish snapshot dir: publish is the visibility point
     Fs.createText(Fs.of(snapshotDir),
-      new HPath(snapshotDir, "_commitinfo"), sb.toString)
+      new HPath(snapshotDir, "_commitinfo"), Fs.json(doc))
   }
-
-  private val commitInfoRe =
-    """\{"operation":"([^"]*)","ts":(\d+)(.*)\}""".r
 
   /** Read back a snapshot's `_commitinfo`: (operation, epoch millis,
     * stats). None when the snapshot predates the audit trail; a
@@ -1935,17 +1922,13 @@ object Upsert {
   def readCommitInfo(snapshotDir: String)
       : Option[(String, Long, Seq[(String, Long)])] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    Fs.readTextIfExists(Fs.of(snapshotDir),
-        new HPath(snapshotDir, "_commitinfo"))
-      .map(_.trim)
+    Fs.readJson(Fs.of(snapshotDir), new HPath(snapshotDir, "_commitinfo"))
       .map {
-        case commitInfoRe(op, ts, rest) =>
-          val statRe = """"([^"]+)":(-?\d+)""".r
-          (op, ts.toLong,
-            statRe.findAllMatchIn(rest)
-              .map(m => m.group(1) -> m.group(2).toLong).toSeq)
-        case txt => throw new IllegalStateException(
-          s"unparseable _commitinfo under $snapshotDir: ${txt.take(200)}")
+        case JObject(("operation", JString(op)) :: ("ts", JInt(ts)) :: stats)
+            if stats.forall(_._2.isInstanceOf[JInt]) =>
+          (op, ts.toLong, stats.map(f => f._1 -> f._2.extract[Long]))
+        case doc => throw new IllegalStateException(
+          s"unparseable _commitinfo under $snapshotDir: ${Fs.json(doc).take(200)}")
       }
   }
 
@@ -1984,63 +1967,19 @@ object Upsert {
       touched: Set[String], fresh: Seq[String],
       freshBounds: Seq[(String, String, String)])
 
-  private def jsonEsc(s: String) =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def jsonUnesc(s: String) =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-  private def jsonArr(xs: Seq[String]): String =
-    xs.map(x => "\"" + jsonEsc(x) + "\"").mkString("[", ",", "]")
-
-  /** The `"name":[...]` string-array field of a flat JSON object —
-    * scans to the matching bracket respecting string escapes (file
-    * names may contain brackets). None when the field is absent. */
-  private def jsonArrField(txt: String, name: String): Option[Seq[String]] = {
-    val tag = "\"" + name + "\":["
-    val i = txt.indexOf(tag)
-    if (i < 0) None
-    else {
-      var j = i + tag.length
-      var inStr = false; var esc = false
-      val sb = new StringBuilder
-      var done = false
-      while (!done && j < txt.length) {
-        val c = txt.charAt(j)
-        if (esc) { sb.append(c); esc = false }
-        else if (inStr && c == '\\') { sb.append(c); esc = true }
-        else if (c == '"') { sb.append(c); inStr = !inStr }
-        else if (!inStr && c == ']') done = true
-        else sb.append(c)
-        j += 1
-      }
-      Some(jsonStringRe.findAllMatchIn(sb.toString)
-        .map(m => jsonUnesc(m.group(1))).toSeq)
-    }
-  }
-
-  private def jsonStrField(txt: String, name: String): Option[String] = {
-    val re = ("\"" + java.util.regex.Pattern.quote(name) +
-      "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    re.findFirstMatchIn(txt).map(m => jsonUnesc(m.group(1)))
-  }
-
   private def txnPath(snapshot: String) = s"$snapshot/_txn.json"
 
   private[graft] def writeTxnInfo(snapshotDir: String, t: TxnInfo): Unit = {
-    val sb = new StringBuilder
-    sb.append("{\"keys\":").append(jsonArr(t.keys))
-      .append(",\"kind\":\"").append(t.kind).append("\"")
-    t.mn.foreach(v => sb.append(",\"mn\":\"").append(jsonEsc(v)).append("\""))
-    t.mx.foreach(v => sb.append(",\"mx\":\"").append(jsonEsc(v)).append("\""))
-    sb.append(",\"touched\":").append(jsonArr(t.touched.toSeq.sorted))
-      .append(",\"fresh\":").append(jsonArr(t.fresh.sorted))
-      .append(",\"fbFile\":").append(jsonArr(t.freshBounds.map(_._1)))
-      .append(",\"fbMn\":").append(jsonArr(t.freshBounds.map(_._2)))
-      .append(",\"fbMx\":").append(jsonArr(t.freshBounds.map(_._3)))
-      .append("}")
+    val doc = ("keys" -> t.keys) ~ ("kind" -> t.kind) ~
+      ("mn" -> t.mn) ~ ("mx" -> t.mx) ~
+      ("touched" -> t.touched.toSeq.sorted) ~ ("fresh" -> t.fresh.sorted) ~
+      ("fbFile" -> t.freshBounds.map(_._1)) ~
+      ("fbMn" -> t.freshBounds.map(_._2)) ~
+      ("fbMx" -> t.freshBounds.map(_._3))
     import org.apache.hadoop.fs.{Path => HPath}
     // pre-publish snapshot dir: publish is the visibility point
     Fs.createText(Fs.of(snapshotDir),
-      new HPath(txnPath(snapshotDir)), sb.toString)
+      new HPath(txnPath(snapshotDir)), Fs.json(doc))
   }
 
   /** None when the snapshot was not written by the commit engine
@@ -2049,19 +1988,18 @@ object Upsert {
     * and refuses to rebase across them. */
   private[graft] def readTxnInfo(snapshotDir: String): Option[TxnInfo] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    Fs.readTextIfExists(Fs.of(snapshotDir), new HPath(txnPath(snapshotDir)))
-      .map { txt =>
-        val files = jsonArrField(txt, "fbFile").getOrElse(Nil)
-        val mns = jsonArrField(txt, "fbMn").getOrElse(Nil)
-        val mxs = jsonArrField(txt, "fbMx").getOrElse(Nil)
+    Fs.readJson(Fs.of(snapshotDir), new HPath(txnPath(snapshotDir)))
+      .map { doc =>
+        def strs(name: String) = (doc \ name).extractOpt[Seq[String]].getOrElse(Nil)
+        val (files, mns, mxs) = (strs("fbFile"), strs("fbMn"), strs("fbMx"))
         require(files.length == mns.length && files.length == mxs.length,
           s"corrupt _txn.json under $snapshotDir (ragged fresh-bounds arrays)")
         TxnInfo(
-          keys = jsonArrField(txt, "keys").getOrElse(Nil),
-          kind = jsonStrField(txt, "kind").getOrElse("long"),
-          mn = jsonStrField(txt, "mn"), mx = jsonStrField(txt, "mx"),
-          touched = jsonArrField(txt, "touched").getOrElse(Nil).toSet,
-          fresh = jsonArrField(txt, "fresh").getOrElse(Nil),
+          keys = strs("keys"),
+          kind = (doc \ "kind").extractOpt[String].getOrElse("long"),
+          mn = (doc \ "mn").extractOpt[String], mx = (doc \ "mx").extractOpt[String],
+          touched = strs("touched").toSet,
+          fresh = strs("fresh"),
           freshBounds = files.lazyZip(mns).lazyZip(mxs).toSeq)
       }
   }
@@ -2079,15 +2017,13 @@ object Upsert {
   private[graft] def writeCommitLogEntry(
       tableDir: String, version: Long, base: Long, verb: String): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
-    require(verb.forall(c => c != '"' && c != '\\' && c >= ' '),
-      s"writeCommitLogEntry: plain verb name required, got '$verb'")
     commitLogCheckpoint(tableDir).foreach(cp => require(version > cp,
       s"commit log of $tableDir is truncated through v$cp — v$version " +
         "was already published (and since reclaimed); publishing it " +
         "again is a protocol bug"))
     val p = new HPath(s"${commitLogDir(tableDir)}/$version.json")
-    val txt = s"""{"version":$version,"base":$base,"verb":"$verb"""" +
-      s""","ts":${System.currentTimeMillis()}}"""
+    val txt = Fs.json(Extraction.decompose(
+      CommitLogEntry(version, base, verb, System.currentTimeMillis())))
     require(Fs.createExclusive(Fs.of(tableDir), p, txt),
       s"commit log already holds an entry for v$version under $tableDir — " +
         "the version was already published")
@@ -2098,10 +2034,8 @@ object Upsert {
     * that were never truncated. */
   private[graft] def commitLogCheckpoint(tableDir: String): Option[Long] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    Fs.readTextIfExists(Fs.of(tableDir),
-        new HPath(s"${commitLogDir(tableDir)}/_base.json"))
-      .flatMap(txt => """"version":(-?\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong))
+    Fs.readJson(Fs.of(tableDir), new HPath(s"${commitLogDir(tableDir)}/_base.json"))
+      .map(doc => (doc \ "version").extract[Long])
   }
 
   /** Reclaim commit-log entries for versions below `belowVersion` —
@@ -2135,7 +2069,7 @@ object Upsert {
     if (entries.nonEmpty) {
       val cp = math.max(entries.max, commitLogCheckpoint(tableDir).getOrElse(Long.MinValue))
       Fs.writeTextAtomic(fs, new HPath(s"${commitLogDir(tableDir)}/_base.json"),
-        s"""{"version":$cp,"ts":${System.currentTimeMillis()}}""")
+        Fs.json(("version" -> cp) ~ ("ts" -> System.currentTimeMillis())))
       entries.foreach(v =>
         fs.delete(new HPath(s"${commitLogDir(tableDir)}/$v.json"), false))
     }
@@ -2153,39 +2087,21 @@ object Upsert {
       .map(_.stripSuffix(".json").toLong).toSet
   }
 
-  /** The published chain's base pointer for `version`, if logged. */
-  private[graft] def readCommitLogBase(
-      tableDir: String, version: Long): Option[Long] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    Fs.readTextIfExists(Fs.of(tableDir),
-        new HPath(s"${commitLogDir(tableDir)}/$version.json"))
-      .flatMap(txt => """"base":(-?\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong))
-  }
+  /** One published version's commit-log entry: its base (the
+    * published chain's back pointer), the verb (DESCRIBE HISTORY's
+    * fallback when a snapshot carries no `_commitinfo`) and the
+    * PUBLISH timestamp — a durable, copy-stable signal
+    * ([[versionAsOfTimestamp]] prefers it over directory mtime, which
+    * resets on any cp/rsync/restore of the table). */
+  private[graft] final case class CommitLogEntry(
+      version: Long, base: Long, verb: String, ts: Long)
 
-  /** The PUBLISH timestamp the commit log recorded for `version`, if
-    * logged — a durable, copy-stable signal ([[versionAsOfTimestamp]]
-    * prefers it over directory mtime, which resets on any cp/rsync/
-    * restore of the table). */
-  private[graft] def readCommitLogTs(
-      tableDir: String, version: Long): Option[Long] = {
+  /** The commit-log entry of `version`, if logged. */
+  private[graft] def readCommitLogEntry(
+      tableDir: String, version: Long): Option[CommitLogEntry] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    Fs.readTextIfExists(Fs.of(tableDir),
-        new HPath(s"${commitLogDir(tableDir)}/$version.json"))
-      .flatMap(txt => """"ts":(-?\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong))
-  }
-
-  /** The verb the commit log recorded for `version`, if logged —
-    * DESCRIBE HISTORY's fallback when a snapshot carries no
-    * `_commitinfo`. */
-  private[graft] def readCommitLogVerb(
-      tableDir: String, version: Long): Option[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    Fs.readTextIfExists(Fs.of(tableDir),
-        new HPath(s"${commitLogDir(tableDir)}/$version.json"))
-      .flatMap(txt => """"verb":"([^"]*)"""".r.findFirstMatchIn(txt)
-        .map(_.group(1)))
+    Fs.readJson(Fs.of(tableDir), new HPath(s"${commitLogDir(tableDir)}/$version.json"))
+      .map(_.extract[CommitLogEntry])
   }
 
   /** Highest version the commit log records as published. Entries for
@@ -2315,16 +2231,24 @@ object Upsert {
     readTxnInfo(loserDir).foreach(writeTxnInfo(outDir, _))
   }
 
-  /** Commit timestamp of `v<version>`: the `_commitinfo` stamp when
-    * present, else the commit-log entry's publish timestamp (durable
-    * across copies/restores, unlike mtime), else the version
-    * directory's modification time (the best available signal for
-    * pre-audit-trail snapshots — same fallback Delta applies when
-    * commitInfo timestamps are absent). */
+  /** (operation, commit timestamp) of `v<version>`: the `_commitinfo`
+    * stamp when present, else the commit-log entry's verb and publish
+    * timestamp (durable across copies/restores, unlike mtime), else no
+    * operation and the version directory's modification time (the
+    * best available signal for pre-audit-trail snapshots — same
+    * fallback Delta applies when commitInfo timestamps are absent).
+    * Opens each record at most once. */
+  private[graft] def commitStamp(tableDir: String, version: Long): (Option[String], Long) = {
+    val info = readCommitInfo(s"$tableDir/v$version")
+    lazy val logged = readCommitLogEntry(tableDir, version)
+    (info.map(_._1).orElse(logged.map(_.verb)),
+      info.map(_._2).orElse(logged.map(_.ts))
+        .getOrElse(dirMtime(s"$tableDir/v$version")))
+  }
+
+  /** Commit timestamp of `v<version>` (see [[commitStamp]]). */
   def commitTimestamp(tableDir: String, version: Long): Long =
-    readCommitInfo(s"$tableDir/v$version").map(_._2)
-      .orElse(readCommitLogTs(tableDir, version))
-      .getOrElse(dirMtime(s"$tableDir/v$version"))
+    commitStamp(tableDir, version)._2
 
   /** TIMESTAMP AS OF resolution: the newest COMPLETE version whose
     * commit timestamp is <= `tsMillis`.
@@ -2350,7 +2274,7 @@ object Upsert {
     // resolves identically before and after the copy, and a LOGGED
     // version is by construction complete (the entry is written after
     // the build, at publish)
-    val logTs = versions.map(v => v -> readCommitLogTs(tableDir, v)).toMap
+    val logTs = versions.map(v => v -> readCommitLogEntry(tableDir, v).map(_.ts)).toMap
     val oldestStamp = info.collect { case (v, Some(_)) => v }
       .minOption
     val current = currentVersion(tableDir)
@@ -2747,7 +2671,7 @@ object Upsert {
       val wm = if (survive.nonEmpty) survive.min
                else drop.map(_.getName.drop(1).toLong).max + 1
       Fs.writeTextAtomic(fs, new HPath(s"$tableDir/_cdf/_low_watermark.json"),
-        s"""{"min_feed_version":$wm,"ts":${System.currentTimeMillis()}}""")
+        Fs.json(("min_feed_version" -> wm) ~ ("ts" -> System.currentTimeMillis())))
       drop.foreach(fs.delete(_, true))
     }
     truncateCommitLog(tableDir, oldestKept)
@@ -2758,10 +2682,8 @@ object Upsert {
     * None = no feed version was ever reclaimed. */
   def cdfLowWatermark(tableDir: String): Option[Long] = {
     import org.apache.hadoop.fs.{Path => HPath}
-    Fs.readTextIfExists(Fs.of(tableDir),
-        new HPath(s"$tableDir/_cdf/_low_watermark.json"))
-      .flatMap(txt => """"min_feed_version":(-?\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong))
+    Fs.readJson(Fs.of(tableDir), new HPath(s"$tableDir/_cdf/_low_watermark.json"))
+      .map(doc => (doc \ "min_feed_version").extract[Long])
   }
 
   /** Time-based retention ([[vacuum]]'s count-based twin — the shape

@@ -461,7 +461,7 @@ object LakehouseSql {
           s"commit's base $baseCurrent (walk capped by $MaxRebaseWalkConf) " +
           "— rebuilding against the current snapshot is cheaper than " +
           "walking the chain")
-      Upsert.readCommitLogBase(tablePath, v) match {
+      Upsert.readCommitLogEntry(tablePath, v).map(_.base) match {
         case Some(b) if b < v && b >= baseV => winners += v; v = b
         case Some(b) =>
           return Left(s"commit chain of v$v points outside " +
@@ -478,13 +478,10 @@ object LakehouseSql {
     val L = Upsert.readTxnInfo(loserDir).getOrElse(
       return Left("this commit wrote no _txn sidecar (whole-table verb)"))
     val fs = Fs.of(tablePath)
-    def hasDv(d: String): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$d/_dv/_SUCCESS"))
-    if (hasDv(nowDir) || hasDv(loserDir))
+    val spark = org.apache.spark.sql.SparkSession.active
+    if (Upsert.dvFiles(spark, nowDir).isDefined || Upsert.dvFiles(spark, loserDir).isDefined)
       return Left("a deletion vector is in play — fold it first")
-    def schemaTxt(d: String): Option[String] =
-      Fs.readTextIfExists(fs, new org.apache.hadoop.fs.Path(s"$d/_schema.json"))
-    if (schemaTxt(nowDir) != schemaTxt(loserDir))
+    if (Upsert.readSchemaSidecar(nowDir) != Upsert.readSchemaSidecar(loserDir))
       return Left("concurrent schema change")
     def le(a: String, b: String): Boolean =
       if (L.kind == "long") a.toLong <= b.toLong else a <= b
@@ -528,7 +525,7 @@ object LakehouseSql {
     // CURRENT stays monotonic) and relink — no Spark job re-run
     val rebased = claimNextVersion(tablePath)
     try {
-      Upsert.rebaseRelink(org.apache.spark.sql.SparkSession.active,
+      Upsert.rebaseRelink(spark,
         nowDir, loserDir, s"$tablePath/v$rebased", L.touched, L.fresh.toSet)
       Right(rebased)
     } catch {
@@ -859,8 +856,7 @@ case class GraftOptimizeCommand(
       // refuse with the fold named. Checked INSIDE the claim against
       // the RESOLVED src (a pre-claim check races a concurrent
       // deleteByKeyDV publish); withCow discards the claim on refusal.
-      require(!graft.ops.Fs.of(src, spark).exists(
-          new org.apache.hadoop.fs.Path(s"$src/_dv/_SUCCESS")),
+      require(Upsert.dvFiles(spark, src).isEmpty,
         s"OPTIMIZE: '$src' carries a deletion-vector sidecar — run " +
           "Upsert.compactDeletes first (it deletes AND compacts)")
       val (i, o, b) =
@@ -951,14 +947,12 @@ case class GraftHistoryCommand(tableDirRef: String) extends LeafRunnableCommand 
       // a claimed-but-unpublished version legitimately lists zero files
       val files = Layout.listDataFiles(spark, s"$tableDir/v$v")
       val bytes = Layout.totalBytes(spark, files)
-      val info = Upsert.readCommitInfo(s"$tableDir/v$v")
       // no _commitinfo (foreign/pre-audit snapshot): the commit-log
       // entry still knows the verb and the publish timestamp — a
       // copied table's history reads the same as the original's
-      Row(v, files.size.toLong, bytes, cur.contains(s"v$v"),
-        info.map(_._1).orElse(Upsert.readCommitLogVerb(tableDir, v)).orNull,
-        new java.sql.Timestamp(info.map(_._2).getOrElse(
-          Upsert.commitTimestamp(tableDir, v))))
+      val (op, ts) = Upsert.commitStamp(tableDir, v)
+      Row(v, files.size.toLong, bytes, cur.contains(s"v$v"), op.orNull,
+        new java.sql.Timestamp(ts))
     }
   }
 }
@@ -1016,7 +1010,7 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
       if (versioned) Upsert.snapshotVersions(tableDir).size.toLong else 0L,
       files.size.toLong, bytes,
       sidecar("_manifest"), sidecar("_bloom"),
-      sfs.exists(new org.apache.hadoop.fs.Path(s"$snapshot/_schema.json")),
+      Upsert.readSchemaSidecar(snapshot).isDefined,
       dvBytes,
       writer.orNull,
       info.map(_._1).orNull,
@@ -1042,29 +1036,16 @@ case class GraftRestoreCommand(
     require(versions.contains(version),
       s"RESTORE: snapshot v$version not found under $tableDir " +
         s"(have: ${versions.mkString(",")}) — vacuumed or never written")
-    val base = graft.streaming.Streams.currentSnapshot(tableDir)
-      .map(_.split('/').last)
-      .getOrElse(throw new IllegalArgumentException(
-        s"RESTORE: '$tableDir' has no CURRENT pointer — not a versioned table"))
+    require(graft.streaming.Streams.currentSnapshot(tableDir).isDefined,
+      s"RESTORE: '$tableDir' has no CURRENT pointer — not a versioned table")
     // same claim + CAS-publish protocol as the COW verbs: a concurrent
     // commit between reading CURRENT and publishing the restore refuses
-    LakehouseSql.requireNotStreamOwned(tableDir, "RESTORE")
-    val next = LakehouseSql.claimNextVersion(tableDir)
-    val n =
-      try {
-        val n0 = Upsert.cloneSnapshot(
-          spark, s"$tableDir/v$version", s"$tableDir/v$next")
-        Upsert.writeCommitInfo(s"$tableDir/v$next", "RESTORE", Seq(
-          "restored_version" -> version, "files_linked" -> n0.toLong))
-        n0
-      } catch { case e: Throwable =>
-        // same contract as withCow: an in-process failure discards
-        // the claim instead of leaving a half-built snapshot
-        graft.ops.Fs.of(tableDir, spark).delete(
-          new org.apache.hadoop.fs.Path(s"$tableDir/v$next"), true)
-        throw e
-      }
-    LakehouseSql.publishOrAbort(tableDir, base, next, "RESTORE")
+    val (next, n) = LakehouseSql.withCow(tableDir, None, "RESTORE") { (_, out) =>
+      val n = Upsert.cloneSnapshot(spark, s"$tableDir/v$version", out)
+      Upsert.writeCommitInfo(out, "RESTORE", Seq(
+        "restored_version" -> version, "files_linked" -> n.toLong))
+      (new org.apache.hadoop.fs.Path(out).getName.drop(1).toLong, n)
+    }
     Seq(Row(version, next, n.toLong))
   }
 }

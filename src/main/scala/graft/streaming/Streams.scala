@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 import graft.fia.Interp
+import org.json4s._
 
 /** Structured Streaming surface (SURVEY §2.9).
   *
@@ -16,6 +17,8 @@ import graft.fia.Interp
   * annual series is recomputed from its accumulated survey state.
   */
 object Streams {
+
+  private implicit val jsonFormats: Formats = DefaultFormats
 
   /** Watermarked tumbling-window counts per event type.
     *
@@ -371,17 +374,12 @@ object Streams {
         // arrive as an unbroken prefix extension of what was applied.
         // The applied mark is read ONCE per batch and reused for the
         // post-commit stamp below.
-        val appliedPath = new org.apache.hadoop.fs.Path(tableDir, "_cdf_applied.json")
         val srcSpan: Option[(Long, Long)] = srcVersionCol.flatMap { c =>
           val r = batch.agg(min(col(c)), max(col(c))).collect()(0)
           if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
         }
         val applied: Option[Long] =
-          if (srcVersionCol.isEmpty) None
-          else graft.ops.Fs.readTextIfExists(
-              graft.ops.Fs.of(tableDir, spark), appliedPath)
-            .flatMap(t => """"applied":(-?\d+)""".r.findFirstMatchIn(t)
-              .map(_.group(1).toLong))
+          if (srcVersionCol.isEmpty) None else readApplied(spark, tableDir)
         srcSpan.foreach { case (mn, _) =>
           applied.foreach { a =>
             val harm: Option[String] =
@@ -467,12 +465,23 @@ object Streams {
         // applied high-water AFTER the swap: a replayed batch re-stamps
         // the same (monotone max) value — idempotent like the commit
         srcSpan.foreach { case (_, mx) =>
-          val prev = applied.getOrElse(Long.MinValue)
-          graft.ops.Fs.writeTextAtomic(ofs, appliedPath,
-            s"""{"applied":${math.max(prev, mx)},"ts":${System.currentTimeMillis()}}""")
+          writeApplied(spark, tableDir, math.max(applied.getOrElse(Long.MinValue), mx))
         }
       }
       .start()
+
+  /** `_cdf_applied.json`: the highest source version a mirror table
+    * has applied, stamped after each commit by [[upsertSinkKeys]]. */
+  private[graft] def writeApplied(spark: SparkSession, tableDir: String, v: Long): Unit =
+    graft.ops.Fs.writeTextAtomic(graft.ops.Fs.of(tableDir, spark), appliedPath(tableDir),
+      graft.ops.Fs.json(JObject("applied" -> JLong(v), "ts" -> JLong(System.currentTimeMillis()))))
+
+  private[graft] def readApplied(spark: SparkSession, tableDir: String): Option[Long] =
+    graft.ops.Fs.readJson(graft.ops.Fs.of(tableDir, spark), appliedPath(tableDir))
+      .map(doc => (doc \ "applied").extract[Long])
+
+  private def appliedPath(tableDir: String) =
+    new org.apache.hadoop.fs.Path(tableDir, "_cdf_applied.json")
 
   /** Adjudicate a delivered-version gap against the SOURCE table's
     * ground truth — the feed listing, the commit log, and the vacuum
@@ -533,7 +542,7 @@ object Streams {
           rowCheck += g
         // no parquet files at all: zero-change commit, nothing missed
       } else if (snapVs.contains(g) ||
-          graft.ops.Upsert.readCommitLogBase(srcTableDir, g).isDefined)
+          graft.ops.Upsert.readCommitLogEntry(srcTableDir, g).isDefined)
         metaHarm(g) = s"v$g was published but its feed was never " +
           "materialized (the producer stopped calling materializeCdf?)"
       // else: claimed-but-never-published number (OCC rebase discard)
@@ -663,11 +672,7 @@ object Streams {
     // FRESH mirror cannot attach to a feed whose history was already
     // partially reclaimed (it would build from a torn prefix).
     graft.ops.Upsert.cdfLowWatermark(srcTableDir).foreach { wm =>
-      val applied = graft.ops.Fs.readTextIfExists(
-          graft.ops.Fs.of(dstTableDir, spark),
-          new org.apache.hadoop.fs.Path(dstTableDir, "_cdf_applied.json"))
-        .flatMap(t => """"applied":(-?\d+)""".r.findFirstMatchIn(t)
-          .map(_.group(1).toLong))
+      val applied = readApplied(spark, dstTableDir)
       require(applied.exists(_ + 1 >= wm),
         s"mirrorFromCdf: $srcTableDir's change feed is truncated below " +
           s"v$wm (vacuum), and this mirror has " +
@@ -742,7 +747,7 @@ object Streams {
         // surface the drift signal per pass (applyCdf refuses past
         // spark.graft.ann.maxDriftRatio when the caller set it; the
         // log line is the "watch it trend" half of the telemetry)
-        graft.ops.AnnIndex.readQerrRatio(indexPath).foreach(r =>
+        graft.ops.AnnIndex.readMarker(indexPath).flatMap(_.qerrRatio).foreach(r =>
           org.slf4j.LoggerFactory.getLogger(getClass).info(
             s"annIndexMaintainer batch $batchId: quantization drift " +
               s"ratio $r vs build baseline at $indexPath"))

@@ -231,7 +231,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // SECOND evidence trail must still name the MERGE
     graft.ops.Fs.of(tbl, spark)
       .delete(new org.apache.hadoop.fs.Path(s"$tbl/v1"), true)
-    assert(graft.ops.Upsert.readCommitLogVerb(tbl, 1L).contains("MERGE"))
+    assert(graft.ops.Upsert.readCommitLogEntry(tbl, 1L).map(_.verb).contains("MERGE"))
     val e = intercept[IllegalStateException](
       AnnIndex.topKLive(spark, idxDir, queries, 3, 2))
     assert(e.getMessage.contains("MERGE"), e.getMessage)
@@ -286,7 +286,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // the COMPLETE delta verifies and advances, and says so
     AnnIndex.append(fresh, idxDir)
     assert(AnnIndex.readStamp(idxDir).contains((tbl, 1L, "id")))
-    assert(AnnIndex.readStampAdvance(idxDir).contains("verified"))
+    assert(AnnIndex.readMarker(idxDir).flatMap(_.advance).contains("verified"))
     assert(AnnIndex.topKLive(spark, idxDir, queries, 3, 2).count() > 0)
 
     // retrying the SAME append is IDEMPOTENT: the rows already landed
@@ -343,7 +343,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // the caller's assertion, but the marker RECORDS that
     AnnIndex.append(fresh, idxDir)
     assert(AnnIndex.readStamp(idxDir).contains((tbl, 1L, "id")))
-    assert(AnnIndex.readStampAdvance(idxDir).contains("assumed"))
+    assert(AnnIndex.readMarker(idxDir).flatMap(_.advance).contains("assumed"))
 
     // a DELETE in the gap refuses regardless of feeds: append cannot
     // remove encodings — the remedy is topKLive's reconcile or rebuild
@@ -442,7 +442,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // stamp advanced to CURRENT, recorded as verified — every later
     // probe takes the stamp==cur fast path (no per-probe semi-join)
     assert(AnnIndex.readStamp(idxDir).contains((tbl, 1L, "id")))
-    assert(AnnIndex.readStampAdvance(idxDir).contains("verified"))
+    assert(AnnIndex.readMarker(idxDir).flatMap(_.advance).contains("verified"))
     assert(AnnIndex.read(spark, idxDir).encoded
       .filter($"id" >= 40 && $"id" % 3 === 1).count() == 0)
     // the materialized index answers exactly like the surviving-rows
@@ -508,7 +508,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(appended == nUpd + 3,
       s"appended $appended, want re-encoded $nUpd + 3 merged inserts")
     assert(AnnIndex.readStamp(idxDir).contains((tbl, 3L, "id")))
-    assert(AnnIndex.readStampAdvance(idxDir).contains("verified"))
+    assert(AnnIndex.readMarker(idxDir).flatMap(_.advance).contains("verified"))
 
     // fast path now; answers exactly like a rebuild over CURRENT with
     // the same immutable artifacts
@@ -803,7 +803,7 @@ class AnnIndexSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
     AnnIndex.write(corpus, cents, cb, idxDir, source = Some((tbl, "id")))
     // the build records the corpus-mean quantization error as baseline
-    val b0 = AnnIndex.readQerrBase(idxDir)
+    val b0 = AnnIndex.readMarker(idxDir).flatMap(_.qerrBase)
     assert(b0.exists(_ > 0), s"no quantization baseline recorded: $b0")
 
     spark.conf.set(AnnIndex.MaxDriftConf, "10.0")
@@ -815,9 +815,9 @@ class AnnIndexSpec extends AnyFunSuite {
         "transform(embedding, x -> x * CAST(1.001 AS FLOAT)) " +
         "WHERE id >= 40 AND id % 9 = 1").collect()
       AnnIndex.applyCdf(spark, idxDir)
-      val r1 = AnnIndex.readQerrRatio(idxDir)
+      val r1 = AnnIndex.readMarker(idxDir).flatMap(_.qerrRatio)
       assert(r1.exists(r => r > 0 && r < 10.0), s"in-distribution ratio: $r1")
-      assert(AnnIndex.readQerrBase(idxDir) == b0,
+      assert(AnnIndex.readMarker(idxDir).flatMap(_.qerrBase) == b0,
         "the baseline must survive the marker rewrite")
 
       // planted distribution shift: scale the vectors x100 — squared
@@ -835,8 +835,8 @@ class AnnIndexSpec extends AnyFunSuite {
       // threshold unset: the same wave applies and RECORDS the drift
       spark.conf.unset(AnnIndex.MaxDriftConf)
       AnnIndex.applyCdf(spark, idxDir)
-      assert(AnnIndex.readQerrRatio(idxDir).exists(_ > 10.0))
-      assert(AnnIndex.readQerrBase(idxDir) == b0)
+      assert(AnnIndex.readMarker(idxDir).flatMap(_.qerrRatio).exists(_ > 10.0))
+      assert(AnnIndex.readMarker(idxDir).flatMap(_.qerrBase) == b0)
     } finally spark.conf.unset(AnnIndex.MaxDriftConf)
   }
 

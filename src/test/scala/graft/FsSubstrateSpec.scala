@@ -151,7 +151,7 @@ class FsSubstrateSpec extends AnyFunSuite {
     // exactly these rename-refuses-existing filesystems)
     assert(new java.io.File(s"$tblLocal/_commitlog/1.json").isFile,
       "commit-log entry must land where the scheme stores bytes")
-    assert(Upsert.readCommitLogBase(tbl, 1L).contains(0L))
+    assert(Upsert.readCommitLogEntry(tbl, 1L).map(_.base).contains(0L))
     // pointer gone mid-swap: the log still resolves the table, reads
     // stay correct, all through the Hadoop API
     val curPtr = new java.io.File(s"$tblLocal/CURRENT")

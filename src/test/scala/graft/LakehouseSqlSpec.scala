@@ -931,7 +931,7 @@ class LakehouseSqlSpec extends AnyFunSuite {
     }
     graft.ops.Fs.writeTextAtomic(graft.ops.Fs.of(tbl, spark),
       new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v2")
-    val cut = Upsert.readCommitLogTs(tbl, 1L).get
+    val cut = Upsert.readCommitLogEntry(tbl, 1L).get.ts
     assert(Upsert.versionAsOfTimestamp(tbl, cut) == 1L)
 
     // copy the whole table — every directory mtime resets to NOW, the

@@ -1010,7 +1010,7 @@ class StreamingSpec extends AnyFunSuite {
       mq.processAllAvailable()
     } finally mq.stop()
     assert(graft.ops.AnnIndex.readStamp(idx).contains((tbl, 2L, "id")))
-    assert(graft.ops.AnnIndex.readStampAdvance(idx).contains("verified"))
+    assert(graft.ops.AnnIndex.readMarker(idx).flatMap(_.advance).contains("verified"))
 
     // probes ride the stamp==CURRENT fast path and answer exactly like
     // a rebuild over the table's current state with the same artifacts
