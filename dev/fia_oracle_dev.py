@@ -3,14 +3,21 @@
 
 Builds the oracle SQL stage by stage and compares each stage against the
 Spark dumps written by graft.tools.FiaOracle. Exact-value compare, same
-canon as dev/check.py. Usage: python3 dev/fia_oracle_dev.py [stage]
+canon as dev/check.py.
+
+Usage: python3 dev/fia_oracle_dev.py <input dir> [stage] [stages dir]
+
+<input dir> is the raw-table dir FiaOracle prints as "[dev] input: ...";
+[stages dir] is the <outDir> it was given (default /tmp/fia_oracle_stages).
 """
 import sys
 import duckdb
 import pandas as pd
 
-IN = "/tmp/graft_fia_oracle_input"
-ST = "/tmp/fia_oracle_stages"
+if len(sys.argv) < 2:
+    sys.exit(__doc__)
+IN = sys.argv[1]
+ST = sys.argv[3] if len(sys.argv) > 3 else "/tmp/fia_oracle_stages"
 REF = "/root/repo/src/main/resources/graft/refdata"
 
 # ---------------------------------------------------------------- tidy
@@ -110,7 +117,7 @@ def compare(name, sql, dump, cols=None):
 
 
 if __name__ == "__main__":
-    stage = sys.argv[1] if len(sys.argv) > 1 else "tidy"
+    stage = sys.argv[2] if len(sys.argv) > 2 else "tidy"
     if stage == "tidy":
         compare("tidy", SQL_TIDY, "tidy")
 

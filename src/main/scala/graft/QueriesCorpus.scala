@@ -632,23 +632,12 @@ object QueriesCorpus {
 
   // --- parquet footer-stats manifest (ops.Layout.parquetFileStats):
   //     the data-skipping primitive — per-row-group min/max/null counts
-  //     read from footers only, no data scan. The gate copies the
-  //     orders table to a staging path DERIVED FROM THE SF DIR (so
-  //     concurrent verify/bench runs at different scale factors never
-  //     clobber each other's bytes mid-query) and pins the int64
-  //     columns' stats exactly against DuckDB's parquet_metadata() on
-  //     the same footer. The oracle SQL needs the literal path; Verify
-  //     dumps oracleSql AFTER the queries run, so the gate records the
-  //     path it actually staged and the (def) SQL embeds it at dump
-  //     time — always in sync, no fixed shared location.
-  private def stagingPath(dir: String): java.nio.file.Path = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    java.nio.file.Paths.get(
-      s"/tmp/graft_stats_${System.getProperty("user.name", "u")}_$h")
-  }
-  @volatile private var stagedFile: String = _
-
+  //     read from footers only, no data scan. The gate copies one
+  //     orders file into a fixture and pins the int64 columns' stats
+  //     exactly against DuckDB's parquet_metadata() on the same footer.
+  //     The oracle SQL needs the literal path; Verify dumps oracleSql
+  //     AFTER the queries run, so the (def) SQL embeds the path the
+  //     gate staged (Fixtures.staged).
   private def fileStats(s: SparkSession, dir: String): DataFrame = {
     val src0 = java.nio.file.Paths.get(s"$dir/orders.parquet")
     // a directory-shaped table (multi-file scale tiers) stages ONE part
@@ -664,17 +653,11 @@ object QueriesCorpus {
           .toSeq.sortBy(_.toString).head
         finally ls.close()
       }
-    val dst = stagingPath(dir)
-    java.nio.file.Files.createDirectories(dst)
-    val out = dst.resolve("orders.parquet")
-    // skip-if-present (size match): identical-bytes re-stage is a no-op,
-    // so a second run over the same sf dir cannot truncate mid-read
-    if (!java.nio.file.Files.exists(out) ||
-        java.nio.file.Files.size(out) != java.nio.file.Files.size(src))
-      java.nio.file.Files.copy(src, out,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    stagedFile = out.toString
-    graft.ops.Layout.parquetFileStats(s, out.toString)
+    val out = Fixtures.once(s, dir, "file_stats") { p =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
+      java.nio.file.Files.copy(src, java.nio.file.Paths.get(p, "orders.parquet"))
+    }
+    graft.ops.Layout.parquetFileStats(s, s"$out/orders.parquet")
       .filter(col("column").isin("o_orderkey", "o_custkey"))
       .select(col("column"), col("row_group").cast("int").as("row_group"),
         col("min_value").cast("long").as("min_v"),
@@ -683,8 +666,7 @@ object QueriesCorpus {
   }
 
   private def fileStatsSql = {
-    val p = Option(stagedFile).getOrElse(
-      stagingPath("unstaged").resolve("orders.parquet").toString)
+    val p = Fixtures.staged("file_stats") + "/orders.parquet"
     s"""SELECT path_in_schema AS column, CAST(row_group_id AS INT) AS row_group,
        |  CAST(stats_min_value AS BIGINT) AS min_v,
        |  CAST(stats_max_value AS BIGINT) AS max_v,
@@ -698,98 +680,66 @@ object QueriesCorpus {
   //     tables land hash-bucketed on the join key, so the join consumes
   //     the on-disk layout as its distribution — no Exchange on either
   //     side (plan-asserted in LayoutSpec). The gate stages the
-  //     bucketed tables per sf dir (skip-if-registered within the
-  //     session; overwrite-safe across sessions) and aggregates the
-  //     joined result; the oracle joins the ORIGINAL parquet, so the
-  //     bucketing layer must be value-invisible.
-  private def bktBase(dir: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    s"/tmp/graft_bkt_${System.getProperty("user.name", "u")}_$h"
-  }
-
-  private val bktRegistered = scala.collection.mutable.Set.empty[String]
-
-  /** Staging guard for gates that copy/transform a testdata table into
-    * /tmp: the marker embeds the SOURCE parquet's byte size, so a
-    * driver testdata regeneration (same path, new bytes — the exact
-    * failure class of round 6) invalidates the staged copy instead of
-    * silently serving stale data against a fresh oracle. Returns true
-    * when staging must (re)run; the caller writes the marker via
-    * [[writeStageMarker]] AFTER a successful stage. */
-  private def needsStaging(marker: java.io.File, dir: String, srcTable: String): Boolean = {
-    val want = stageToken(dir, srcTable)
-    val have =
-      if (marker.exists) {
-        val s = scala.io.Source.fromFile(marker)
-        try s.mkString.trim finally s.close()
-      } else ""
-    have != want
-  }
-
-  private def stageToken(dir: String, srcTable: String): String = {
-    val p = java.nio.file.Paths.get(s"$dir/$srcTable.parquet")
-    // directory-shaped tables (multi-file scale tiers) token on the SUM
-    // of file sizes — Files.size of a directory is the constant dirent
-    // size, which would serve stale staged bytes across regenerations
-    val sz =
-      if (!java.nio.file.Files.isDirectory(p)) java.nio.file.Files.size(p)
-      else {
-        import scala.jdk.CollectionConverters._
-        val ls = java.nio.file.Files.list(p)
-        try ls.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size(_)).sum
-        finally ls.close()
-      }
-    s"$dir:$srcTable:$sz"
-  }
-
-  /** Stage `seed` as a fresh versioned table (v0 + CURRENT) — through
-    * the Fs substrate: the bench harness must not be a sanctioned
-    * java.io bypass of the invariant FsSubstrateSpec's source gate
-    * guards (raw pointer writes were exactly the checksum-shadow
-    * failure class of round 11). */
-  private def stageVersionedFromSeed(
-      s: SparkSession, seed: String, tbl: String): Unit = {
-    val fs = graft.ops.Fs.of(tbl, s)
-    fs.delete(new org.apache.hadoop.fs.Path(tbl), true)
-    graft.ops.Upsert.cloneSnapshot(s, seed, s"$tbl/v0")
-    graft.ops.Fs.writeTextAtomic(fs,
-      new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
-  }
-
-  private def writeStageMarker(marker: java.io.File, dir: String, srcTable: String): Unit = {
-    marker.getParentFile.mkdirs()
-    val w = new java.io.PrintWriter(marker, "UTF-8")
-    try w.print(stageToken(dir, srcTable)) finally w.close()
-  }
-
+  //     bucketed tables once per JVM (re-registered for a session whose
+  //     catalog lacks them) and aggregates the joined result; the
+  //     oracle joins the ORIGINAL parquet, so the bucketing layer must
+  //     be value-invisible.
   private def ensureBucketed(s: SparkSession, dir: String): (String, String) = {
-    val base = bktBase(dir)
-    val h = base.substring(base.lastIndexOf('_') + 1)
-    val (to, tc) = (s"graft_bkt_orders_$h", s"graft_bkt_customer_$h")
-    // same byte-size staleness token as every other staged gate: a
-    // testdata regeneration (same path, new bytes) must rewrite the
-    // bucketed tables, not serve a stale layout against a fresh oracle
-    val marker = new java.io.File(s"$base/_stage_marker")
-    def stale = needsStaging(marker, dir, "orders") ||
-      needsStaging(new java.io.File(s"$base/_stage_marker_c"), dir, "customer")
-    bktRegistered.synchronized {
-      if (!bktRegistered.contains(base) || !s.catalog.tableExists(to) || stale) {
-        graft.ops.Layout.writeBucketed(
-          Tables.orders(s, dir), to, s"$base/orders",
-          "o_custkey", 8, Some("o_orderkey"))
-        graft.ops.Layout.writeBucketed(
-          Tables.customer(s, dir), tc, s"$base/customer",
-          "c_custkey", 8)
-        writeStageMarker(marker, dir, "orders")
-        writeStageMarker(new java.io.File(s"$base/_stage_marker_c"), dir, "customer")
-        bktRegistered += base
-      }
+    def tables(base: String) = {
+      val h = new java.io.File(base).getParentFile.getName
+      (s"graft_bkt_orders_$h", s"graft_bkt_customer_$h")
     }
-    (to, tc)
+    def write(base: String): Unit = {
+      val (to, tc) = tables(base)
+      graft.ops.Layout.writeBucketed(
+        Tables.orders(s, dir), to, s"$base/orders",
+        "o_custkey", 8, Some("o_orderkey"))
+      graft.ops.Layout.writeBucketed(
+        Tables.customer(s, dir), tc, s"$base/customer",
+        "c_custkey", 8)
+    }
+    val base = Fixtures.once(s, dir, "bucketed")(write)
+    if (!s.catalog.tableExists(tables(base)._1)) write(base)
+    tables(base)
   }
+
+  /** The orders seed most gates over orders share, built once per JVM:
+    * 16 files, range-clustered on o_orderkey (tight disjoint key ranges,
+    * the layout the commit verbs are fast against) or, unclustered,
+    * round-robin (overlapping ranges, min/max pruning dead). No gate
+    * writes into it: each takes its own hard-linked clone
+    * ([[ordersClone]], `Fixtures.versioned`). */
+  private def ordersSeed(s: SparkSession, dir: String, clustered: Boolean = true): String =
+    Fixtures.once(s, dir, if (clustered) "orders_range" else "orders_rr") { p =>
+      val o = Tables.orders(s, dir)
+      (if (clustered) o.repartitionByRange(16, col("o_orderkey"))
+          .sortWithinPartitions(col("o_orderkey"))
+       else o.repartition(16)).write.parquet(p)
+    }
+
+  /** The gate's fixture dir, holding its own clone of [[ordersSeed]] at
+    * `<dir>/<at>`, so no gate's sidecar writes are visible to another. */
+  private def ordersClone(s: SparkSession, dir: String, gate: String,
+      at: String = "table", clustered: Boolean = true): String = {
+    val seed = ordersSeed(s, dir, clustered)
+    Fixtures.once(s, dir, gate)(b =>
+      graft.ops.Upsert.cloneSnapshot(s, seed, s"$b/$at"))
+  }
+
+  /** The q_upsert delivery over `orders`: keys ≤ max/8 with doubled
+    * price, plus the 500 highest keys shifted by 1e9 with status 'N'.
+    * Shared by q_upsert, q_sql_merge, q_sql_merge_named, q_cdf and
+    * q_sql_cdf, which all answer to the same oracle. */
+  private def upsertDelivery(orders: DataFrame, cut: Long): DataFrame =
+    orders.filter(col("o_orderkey") <= cut)
+      .withColumn("o_totalprice", col("o_totalprice") * 2)
+      .unionByName(
+        orders.orderBy(col("o_orderkey").desc).limit(500)
+          .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
+          .withColumn("o_orderstatus", lit("N")))
+
+  private def maxKeyEighth(df: DataFrame, key: String): Long =
+    df.agg(max(col(key))).collect()(0).getLong(0) / 8
 
   private def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
     val (to, tc) = ensureBucketed(s, dir)
@@ -810,18 +760,13 @@ object QueriesCorpus {
   //     shatter of lineitem is compacted back to ~targetBytes outputs
   //     with a shuffle-free coalesce; the gate aggregates the COMPACTED
   //     copy while the oracle aggregates the original table — compaction
-  //     must be value-invisible. The shatter is staged once per sf dir
-  //     (marker-guarded); the compaction itself runs every time because
-  //     it IS the operator under test.
+  //     must be value-invisible. The shatter is staged once per JVM;
+  //     the compaction itself runs every time because it IS the
+  //     operator under test.
   private def compact(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_compact"
+    val base = Fixtures.once(s, dir, "compact")(b =>
+      Tables.lineitem(s, dir).repartition(64).write.parquet(s"$b/shatter"))
     val in = s"$base/shatter"; val out = s"$base/compacted"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "lineitem")) {
-      Tables.lineitem(s, dir).repartition(64)
-        .write.mode("overwrite").parquet(in)
-      writeStageMarker(marker, dir, "lineitem")
-    }
     val (nIn, nOut, bytes) =
       graft.ops.Layout.compactSmallFiles(s, in, out, targetBytes = 8L << 20)
     require(nIn == 64 && nOut < nIn,
@@ -841,33 +786,15 @@ object QueriesCorpus {
   //     key-clustered parquet table, file-granular — the footer-stats
   //     manifest prunes the rewrite to files whose key range intersects
   //     the update batch; everything else is byte-copied. The table is
-  //     staged once per sf dir as a FLAT range-clustered layout (16
-  //     files with tight disjoint key ranges — the layout upserts are
-  //     fast against); the update batch is a contiguous key slice
-  //     (keys ≤ max/8, doubled price) plus 500 brand-new keys, so only
-  //     the low-key files rewrite and the rest byte-copy — and the
-  //     whole merge is expressible as plain SQL over the original
-  //     table for the oracle. The upsert runs every time — it IS the
-  //     operator under test.
+  //     a clone of the range-clustered orders seed; the update batch
+  //     (upsertDelivery) is a contiguous key slice plus 500 brand-new
+  //     keys, so only the low-key files rewrite and the rest byte-copy
+  //     — and the whole merge is expressible as plain SQL over the
+  //     original table for the oracle. The upsert runs every time — it
+  //     IS the operator under test.
   private def upsert(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_upsert"
-    val tbl = s"$base/table"; val out = s"$base/out"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(tbl)
-      writeStageMarker(marker, dir, "orders")
-    }
-    val orders = s.read.parquet(tbl)
-    val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
-    val updates = orders.filter(col("o_orderkey") <= cut)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-      .unionByName(
-        orders.orderBy(col("o_orderkey").desc).limit(500)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
-          .withColumn("o_orderstatus", lit("N")))
+    val (tbl, out, cut) = stagedOrdersRange(s, dir, "upsert")
+    val updates = upsertDelivery(s.read.parquet(tbl), cut)
     val (nCopied, nRewritten, _) =
       graft.ops.Upsert.upsertByKey(s, tbl, out, updates, "o_orderkey")
     require(nRewritten > 0 && nCopied > 0,
@@ -891,17 +818,13 @@ object QueriesCorpus {
   //     skipping never drops a matching row. The commit carry of the
   //     stamp is pinned in UpsertSpec.
   private def statsPrune(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_statsprune"
-    val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
+    val tbl = Fixtures.once(s, dir, "statsprune") { t =>
       Tables.orders(s, dir)
         .repartitionByRange(16, col("o_custkey"))
         .sortWithinPartitions(col("o_custkey"))
-        .write.mode("overwrite").parquet(tbl)
-      graft.ops.Upsert.writeManifestSidecar(s, tbl, "o_orderkey")
-      graft.ops.Upsert.writeStatsSidecar(s, tbl, Seq("o_custkey"))
-      writeStageMarker(marker, dir, "orders")
+        .write.parquet(t)
+      graft.ops.Upsert.writeManifestSidecar(s, t, "o_orderkey")
+      graft.ops.Upsert.writeStatsSidecar(s, t, Seq("o_custkey"))
     }
     val pred = col("o_custkey").between(lit(100L), lit(400L))
     val (cands, total) = graft.ops.Upsert.statsPrunedFiles(s, tbl, pred)
@@ -950,11 +873,8 @@ object QueriesCorpus {
   //     the new tuples append into files whose leading bounds already
   //     cover them.
   private def stagedLineitemComposite(
-      s: SparkSession, dir: String, tag: String): (String, Long) = {
-    val base = bktBase(dir) + tag
-    val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "lineitem")) {
+      s: SparkSession, dir: String, gate: String): (String, String, Long) = {
+    val seed = Fixtures.once(s, dir, "lineitem_composite") { p =>
       Tables.lineitem(s, dir)
         .groupBy(col("l_orderkey"), col("l_linenumber"))
         .agg(max(col("l_quantity")).as("l_quantity"),
@@ -962,12 +882,12 @@ object QueriesCorpus {
           max(col("l_returnflag")).as("l_returnflag"))
         .repartitionByRange(16, col("l_orderkey"), col("l_linenumber"))
         .sortWithinPartitions(col("l_orderkey"), col("l_linenumber"))
-        .write.mode("overwrite").parquet(tbl)
-      writeStageMarker(marker, dir, "lineitem")
+        .write.parquet(p)
     }
-    val cut = s.read.parquet(tbl)
-      .agg(max(col("l_orderkey"))).collect()(0).getLong(0) / 8
-    (tbl, cut)
+    val base = Fixtures.once(s, dir, gate)(b =>
+      graft.ops.Upsert.cloneSnapshot(s, seed, s"$b/table"))
+    (s"$base/table", s"$base/out",
+      maxKeyEighth(s.read.parquet(s"$base/table"), "l_orderkey"))
   }
 
   private def compositeUpdates(
@@ -983,8 +903,7 @@ object QueriesCorpus {
   }
 
   private def upsertComposite(s: SparkSession, dir: String): DataFrame = {
-    val (tbl, cut) = stagedLineitemComposite(s, dir, "_upsertcomp")
-    val out = bktBase(dir) + "_upsertcomp/out"
+    val (tbl, out, cut) = stagedLineitemComposite(s, dir, "upsertcomp")
     val (nCopied, nRewritten, _) = graft.ops.Upsert.upsertByKeys(
       s, tbl, out, compositeUpdates(s, tbl, cut),
       Seq("l_orderkey", "l_linenumber"))
@@ -1034,18 +953,14 @@ object QueriesCorpus {
   //     low-key slice and appends 300 rows into a brand-new partition;
   //     only the touched partition's low files may rewrite (asserted).
   private def upsertPartitioned(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_upsertpart"
-    val tbl = s"$base/table"; val out = s"$base/out"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
+    val base = Fixtures.once(s, dir, "upsertpart")(b =>
       Tables.orders(s, dir)
         .repartitionByRange(16, col("o_orderkey"))
         .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(tbl)
-      writeStageMarker(marker, dir, "orders")
-    }
+        .write.partitionBy("o_orderstatus").parquet(s"$b/table"))
+    val tbl = s"$base/table"; val out = s"$base/out"
     val orders = s.read.parquet(tbl)
-    val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
+    val cut = maxKeyEighth(orders, "o_orderkey")
     val updates = orders
       .filter(col("o_orderstatus") === "F" && col("o_orderkey") <= cut)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
@@ -1097,8 +1012,7 @@ object QueriesCorpus {
   //     text — shares its oracle, so the statement must land the
   //     identical snapshot.
   private def sqlMergeComposite(s: SparkSession, dir: String): DataFrame = {
-    val (tbl, cut) = stagedLineitemComposite(s, dir, "_sqlmergecomp")
-    val out = bktBase(dir) + "_sqlmergecomp/out"
+    val (tbl, out, cut) = stagedLineitemComposite(s, dir, "sqlmergecomp")
     compositeUpdates(s, tbl, cut)
       .createOrReplaceTempView("sqlmergecomp_updates")
     val stats = s.sql(
@@ -1122,15 +1036,8 @@ object QueriesCorpus {
   //     shares q_upsert's oracle. The update batch rides a temp view so
   //     the USING subquery exercises the delegate parser inside ours.
   private def sqlMerge(s: SparkSession, dir: String): DataFrame = {
-    val (tbl, cut) = stagedOrdersRange(s, dir, "_sqlmerge")
-    val out = bktBase(dir) + "_sqlmerge/out"
-    val orders = s.read.parquet(tbl)
-    orders.filter(col("o_orderkey") <= cut)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-      .unionByName(
-        orders.orderBy(col("o_orderkey").desc).limit(500)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
-          .withColumn("o_orderstatus", lit("N")))
+    val (tbl, out, cut) = stagedOrdersRange(s, dir, "sqlmerge")
+    upsertDelivery(s.read.parquet(tbl), cut)
       .createOrReplaceTempView("sqlmerge_updates")
     val stats = s.sql(
       s"""MERGE INTO '$tbl' USING (SELECT * FROM sqlmerge_updates)
@@ -1151,15 +1058,8 @@ object QueriesCorpus {
   //     of the raw path — shares q_upsert's oracle, so name resolution
   //     must be value-invisible.
   private def sqlMergeNamed(s: SparkSession, dir: String): DataFrame = {
-    val (tbl, cut) = stagedOrdersRange(s, dir, "_sqlmergenamed")
-    val out = bktBase(dir) + "_sqlmergenamed/out"
-    val orders = s.read.parquet(tbl)
-    orders.filter(col("o_orderkey") <= cut)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-      .unionByName(
-        orders.orderBy(col("o_orderkey").desc).limit(500)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
-          .withColumn("o_orderstatus", lit("N")))
+    val (tbl, out, cut) = stagedOrdersRange(s, dir, "sqlmergenamed")
+    upsertDelivery(s.read.parquet(tbl), cut)
       .createOrReplaceTempView("sqlmergenamed_updates")
     s.sql(s"CREATE GRAFT TABLE merge_src AT '$tbl'")
     val stats = s.sql(
@@ -1179,8 +1079,7 @@ object QueriesCorpus {
   // --- SQL DELETE: q_delete's slice delete, expressed as the DELETE
   //     FROM statement, sharing q_delete's oracle.
   private def sqlDelete(s: SparkSession, dir: String): DataFrame = {
-    val (tbl, cut) = stagedOrdersRange(s, dir, "_sqldelete")
-    val out = bktBase(dir) + "_sqldelete/out"
+    val (tbl, out, cut) = stagedOrdersRange(s, dir, "sqldelete")
     val stats = s.sql(
       s"""DELETE FROM '$tbl'
          |WHERE o_orderkey IN
@@ -1194,25 +1093,6 @@ object QueriesCorpus {
         Queries.dsum(col("o_totalprice"), 2).as("sum_price"))
   }
 
-  // The versioned-verb gates MUTATE their table (each run appends
-  // commits), so the TABLE is rebuilt fresh per run — but the parquet
-  // SEED is immutable and marker-cached: rebuild = hard-linked clone
-  // (O(files) metadata ops), not a re-sort of orders.
-  private def stageVersionedOrders(
-      s: SparkSession, dir: String, base: String): String = {
-    val seed = s"$base/seed"; val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/SEED_STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(seed)
-      writeStageMarker(marker, dir, "orders")
-    }
-    stageVersionedFromSeed(s, seed, tbl)
-    tbl
-  }
-
   // --- SQL RESTORE / DESCRIBE HISTORY (plans.LakehouseSql): stage
   //     orders as a VERSIONED table (v0 + CURRENT), MERGE a mutation
   //     batch (commits v1, swaps CURRENT), then RESTORE TO VERSION 0 —
@@ -1221,10 +1101,11 @@ object QueriesCorpus {
   //     post-restore CURRENT snapshot against the PRISTINE orders
   //     oracle, so it passes only if the restore truly reverted the
   //     mutations; DESCRIBE HISTORY invariants are require()d inline.
-  //     Table rebuilt per run from the cached seed (stageVersionedOrders).
+  //     The versioned-verb gates MUTATE their table (each call appends
+  //     commits), so the table is a fresh hard-linked clone of the
+  //     orders seed on every call.
   private def sqlRestore(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_sqlrestore"
-    val tbl = stageVersionedOrders(s, dir, base)
+    val tbl = Fixtures.versioned(s, dir, "sqlrestore", ordersSeed(s, dir))
     val orders = s.read.parquet(s"$tbl/v0")
     val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 4
     orders.filter(col("o_orderkey") <= cut)
@@ -1266,8 +1147,7 @@ object QueriesCorpus {
   //     bypasses the mutations that CURRENT carries (require()d
   //     different inline).
   private def sqlTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_sqltt"
-    val tbl = stageVersionedOrders(s, dir, base)
+    val tbl = Fixtures.versioned(s, dir, "sqltt", ordersSeed(s, dir))
     val orders = s.read.parquet(s"$tbl/v0")
     val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 4
     orders.filter(col("o_orderkey") <= cut)
@@ -1297,16 +1177,8 @@ object QueriesCorpus {
   //     no row (oracle: the pristine orders aggregate). VACUUM RETAIN
   //     1 then reclaims v0 — layout maintenance end-to-end in SQL.
   private def sqlOptimize(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_sqlopt"
-    val seed = s"$base/seed"; val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/SEED_STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir).repartition(16)
-        .write.mode("overwrite").parquet(seed)
-      writeStageMarker(marker, dir, "orders")
-    }
-    stageVersionedFromSeed(s, seed, tbl)
-
+    val tbl = Fixtures.versioned(s, dir, "sqlopt",
+      ordersSeed(s, dir, clustered = false))
     val opt = s.sql(s"OPTIMIZE '$tbl' BY o_orderkey TARGET 64 MB").collect()(0)
     require(opt.getLong(0) == 16 && opt.getLong(1) < 16,
       s"optimize must compact the fragmented layout: $opt")
@@ -1333,8 +1205,7 @@ object QueriesCorpus {
   //     invariants (entries reclaimed, checkpoint advanced, resolution
   //     intact) are require()d inline.
   private def vacuumLog(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_vaclog"
-    val tbl = stageVersionedOrders(s, dir, base)
+    val tbl = Fixtures.versioned(s, dir, "vaclog", ordersSeed(s, dir))
     val orders = s.read.parquet(s"$tbl/v0")
     val mx = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0)
     (1 to 3).foreach { i =>
@@ -1390,23 +1261,10 @@ object QueriesCorpus {
   //     if conversion preserved every row AND the versioned delete
   //     removed exactly the requested slice.
   private def sqlConvert(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_sqlconv"
-    val seed = s"$base/seed"; val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/SEED_STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(seed)
-      writeStageMarker(marker, dir, "orders")
-    }
-    locally { // fresh table dir, through the Fs substrate
-      val fs = graft.ops.Fs.of(tbl, s)
-      fs.delete(new org.apache.hadoop.fs.Path(tbl), true); ()
-    }
+    val seed = ordersClone(s, dir, "sqlconv", at = "seed") + "/seed"
+    val tbl = Fixtures.fresh(s, dir, "sqlconv_table")
     s.sql(s"CONVERT '$seed' TO VERSIONED '$tbl'").collect()
-    val cut = s.read.parquet(seed)
-      .agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
+    val cut = maxKeyEighth(s.read.parquet(seed), "o_orderkey")
     val stats = s.sql(
       s"""DELETE FROM '$tbl'
          |WHERE o_orderkey IN
@@ -1431,14 +1289,7 @@ object QueriesCorpus {
   //     regardless of which files the bloom read (false positives read
   //     bytes, never change answers).
   private def bloomPrune(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_bloom"
-    val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir).repartition(16)
-        .write.mode("overwrite").parquet(tbl)
-      writeStageMarker(marker, dir, "orders")
-    }
+    val tbl = ordersClone(s, dir, "bloom", clustered = false) + "/table"
     val keys = Tables.orders(s, dir)
       .filter(col("o_orderkey") % 1009 === 0)
       .select(col("o_orderkey")).collect().map(_.getLong(0)).toSeq
@@ -1462,16 +1313,8 @@ object QueriesCorpus {
   //     commits, then the merge-on-read result is oracled against the
   //     plain filtered table.
   private def dvDelete(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_dv"
+    val base = ordersClone(s, dir, "dv", at = "chain/v0")
     val v0 = s"$base/chain/v0"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(v0)
-      writeStageMarker(marker, dir, "orders")
-    }
     val orders = s.read.parquet(v0)
     graft.ops.Upsert.deleteByKeyDV(s, v0, s"$base/chain/v1",
       orders.filter(col("o_orderkey") % 997 === 0).select("o_orderkey"),
@@ -1566,19 +1409,14 @@ object QueriesCorpus {
   //     point lookups exactly, across untouched, rewritten, and
   //     appended files).
   private def bloomCarry(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_bloomcarry"
-    val v0 = s"$base/chain/v0"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(v0)
-      graft.ops.Layout.writeBloomSidecar(s, v0, "o_orderkey")
-      writeStageMarker(marker, dir, "orders")
+    val seed = ordersSeed(s, dir)
+    val base = Fixtures.once(s, dir, "bloomcarry") { b =>
+      graft.ops.Upsert.cloneSnapshot(s, seed, s"$b/chain/v0")
+      graft.ops.Layout.writeBloomSidecar(s, s"$b/chain/v0", "o_orderkey")
     }
+    val v0 = s"$base/chain/v0"
     val orders = s.read.parquet(v0)
-    val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
+    val cut = maxKeyEighth(orders, "o_orderkey")
     val updates = orders.filter(col("o_orderkey") <= cut)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
       .unionByName(
@@ -1618,26 +1456,8 @@ object QueriesCorpus {
   //     (after images), deletes = the old versions of the updated keys
   //     (the appended 500 have no before image).
   private def cdf(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_cdf"
-    val v0 = s"$base/chain/v0"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(v0)
-      writeStageMarker(marker, dir, "orders")
-    }
-    val orders = s.read.parquet(v0)
-    val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
-    val updates = orders.filter(col("o_orderkey") <= cut)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-      .unionByName(
-        orders.orderBy(col("o_orderkey").desc).limit(500)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
-          .withColumn("o_orderstatus", lit("N")))
-    graft.ops.Upsert.upsertByKey(s, v0, s"$base/chain/v1", updates, "o_orderkey")
-    graft.ops.Upsert.changeDataFeed(s, s"$base/chain", 0L, 1L)
+    val chain = cdfChain(s, dir, "cdf")
+    graft.ops.Upsert.changeDataFeed(s, chain, 0L, 1L)
       .select(col("o_orderkey"), col("o_totalprice"), col("_change_type"))
   }
 
@@ -1645,28 +1465,20 @@ object QueriesCorpus {
   //     through `SELECT ... FROM graft_cdf(dir, 0, 1)` — plain SQL is
   //     enough to subscribe a CDC consumer. Shares q_cdf's oracle.
   private def sqlCdf(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_sqlcdf"
-    val v0 = s"$base/chain/v0"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(v0)
-      writeStageMarker(marker, dir, "orders")
-    }
-    val orders = s.read.parquet(v0)
-    val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
-    val updates = orders.filter(col("o_orderkey") <= cut)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-      .unionByName(
-        orders.orderBy(col("o_orderkey").desc).limit(500)
-          .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
-          .withColumn("o_orderstatus", lit("N")))
-    graft.ops.Upsert.upsertByKey(s, v0, s"$base/chain/v1", updates, "o_orderkey")
+    val chain = cdfChain(s, dir, "sqlcdf")
     s.sql(
       s"""SELECT o_orderkey, o_totalprice, _change_type
-         |FROM graft_cdf('$base/chain', 0, 1)""".stripMargin)
+         |FROM graft_cdf('$chain', 0, 1)""".stripMargin)
+  }
+
+  /** The gate's v0 → v1 chain: a clone of the orders seed as v0, the
+    * q_upsert delivery committed as v1. Returns the chain dir. */
+  private def cdfChain(s: SparkSession, dir: String, gate: String): String = {
+    val chain = ordersClone(s, dir, gate, at = "chain/v0") + "/chain"
+    val orders = s.read.parquet(s"$chain/v0")
+    graft.ops.Upsert.upsertByKey(s, s"$chain/v0", s"$chain/v1",
+      upsertDelivery(orders, maxKeyEighth(orders, "o_orderkey")), "o_orderkey")
+    chain
   }
 
   private val cdfSql =
@@ -1765,19 +1577,9 @@ object QueriesCorpus {
   //     and the surviving aggregate must equal plain SQL over the
   //     original minus the slice.
   private def delete(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_delete"
-    val tbl = s"$base/table"; val out = s"$base/out"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(tbl)
-      writeStageMarker(marker, dir, "orders")
-    }
-    val orders = s.read.parquet(tbl)
-    val cut = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
-    val keys = orders.filter(col("o_orderkey") <= cut).select(col("o_orderkey"))
+    val (tbl, out, cut) = stagedOrdersRange(s, dir, "delete")
+    val keys = s.read.parquet(tbl)
+      .filter(col("o_orderkey") <= cut).select(col("o_orderkey"))
     val (nCopied, nRewritten, _) =
       graft.ops.Upsert.deleteByKey(s, tbl, out, keys, "o_orderkey")
     require(nRewritten > 0 && nCopied > 0,
@@ -1795,25 +1597,15 @@ object QueriesCorpus {
       |WHERE o_orderkey > (SELECT max(o_orderkey) / 8 FROM orders)
       |GROUP BY o_orderstatus""".stripMargin
 
-  /** Stage a range-clustered orders snapshot for a SQL-verb gate
-    * (once per testdata generation, marker-guarded) and return
-    * (tablePath, max(o_orderkey)/8) — the shared setup of the
-    * MERGE/DELETE/UPDATE statement gates. */
+  /** (table, out, max(o_orderkey)/8) for a commit-verb gate: its clone
+    * of the range-clustered orders seed, and where the verb writes its
+    * result snapshot — the shared setup of the MERGE/DELETE/UPDATE
+    * gates. */
   private def stagedOrdersRange(
-      s: SparkSession, dir: String, suffix: String): (String, Long) = {
-    val base = bktBase(dir) + suffix
-    val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey"))
-        .write.mode("overwrite").parquet(tbl)
-      writeStageMarker(marker, dir, "orders")
-    }
-    val cut = s.read.parquet(tbl)
-      .agg(max(col("o_orderkey"))).collect()(0).getLong(0) / 8
-    (tbl, cut)
+      s: SparkSession, dir: String, gate: String): (String, String, Long) = {
+    val base = ordersClone(s, dir, gate)
+    (s"$base/table", s"$base/out",
+      maxKeyEighth(s.read.parquet(s"$base/table"), "o_orderkey"))
   }
 
   // --- SQL UPDATE (plans.LakehouseSql.GraftUpdateCommand): the
@@ -1823,8 +1615,7 @@ object QueriesCorpus {
   //     function call (the top-level splitter's real-world case) and
   //     the oracle re-derives the whole updated table in DuckDB.
   private def sqlUpdate(s: SparkSession, dir: String): DataFrame = {
-    val (tbl, cut) = stagedOrdersRange(s, dir, "_sqlupdate")
-    val out = bktBase(dir) + "_sqlupdate/out"
+    val (tbl, out, cut) = stagedOrdersRange(s, dir, "sqlupdate")
     val stats = s.sql(
       s"""UPDATE '$tbl' ON o_orderkey
          |SET o_totalprice = o_totalprice * 2 + 10,
@@ -1859,8 +1650,7 @@ object QueriesCorpus {
   // --- SQL predicate DELETE (GraftDeleteWhereCommand): general WHERE,
   //     keys bounded to the low files by the range predicate.
   private def sqlDeleteWhere(s: SparkSession, dir: String): DataFrame = {
-    val (tbl, cut) = stagedOrdersRange(s, dir, "_sqldelw")
-    val out = bktBase(dir) + "_sqldelw/out"
+    val (tbl, out, cut) = stagedOrdersRange(s, dir, "sqldelw")
     val stats = s.sql(
       s"""DELETE FROM '$tbl' ON o_orderkey
          |WHERE o_orderkey <= $cut AND o_orderstatus <> 'F'
@@ -1887,14 +1677,8 @@ object QueriesCorpus {
   //     maintenance pass that revives pruning); data must be
   //     value-invisible, so the oracle aggregates the original table.
   private def optimize(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_optimize"
+    val base = ordersClone(s, dir, "optimize", at = "in", clustered = false)
     val in = s"$base/in"; val out = s"$base/out"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "orders")) {
-      Tables.orders(s, dir).repartition(16)
-        .write.mode("overwrite").parquet(in)
-      writeStageMarker(marker, dir, "orders")
-    }
     val (nIn, nOut, _) = graft.ops.Layout.optimizeTable(
       s, in, out, "o_orderkey", targetBytes = 4L << 20)
     require(nIn == 16 && nOut >= 1, s"optimize shape unexpected: $nIn -> $nOut")
@@ -1916,14 +1700,8 @@ object QueriesCorpus {
   //     and prunes fact partitions before scanning them (spec-asserted
   //     in LayoutSpec; the gate pins values against the plain join).
   private def dpp(s: SparkSession, dir: String): DataFrame = {
-    val base = bktBase(dir) + "_dpp"
-    val tbl = s"$base/table"
-    val marker = new java.io.File(s"$base/STAGED")
-    if (needsStaging(marker, dir, "customer")) {
-      Tables.customer(s, dir)
-        .write.mode("overwrite").partitionBy("c_nationkey").parquet(tbl)
-      writeStageMarker(marker, dir, "customer")
-    }
+    val tbl = Fixtures.once(s, dir, "dpp")(
+      Tables.customer(s, dir).write.partitionBy("c_nationkey").parquet(_))
     val fact = s.read.parquet(tbl)
     val dim = Tables.nation(s, dir)
       .filter(col("n_name").isin("NATION_1", "NATION_3", "NATION_5"))

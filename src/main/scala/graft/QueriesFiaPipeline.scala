@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.fia.{RefData, SyntheticState}
+import graft.fia.{Incremental, Pipeline, RefData, SyntheticState}
 
 /** `q_fia_pipeline_oracle` — the COMPOSED reference workload
   * (tidy → expand → interpolate → adjust-mortality ×2 variants → NSVB
   * estimate → id split) gated against an INDEPENDENT DuckDB
   * re-implementation of every stage, chained into one SQL pipeline over
-  * the SAME parquet input ([[SyntheticState.materialize]] writes the raw
-  * tables; both engines read those files).
+  * the SAME parquet input ([[materialize]] writes the raw tables; both
+  * engines read those files).
   *
   * This is the independent check a self-pinned gate cannot provide
   * (round-5 verdict item #2): rows + schema + value hash over all 49
@@ -35,11 +35,52 @@ import graft.fia.{RefData, SyntheticState}
 object QueriesFiaPipeline {
 
   private val ref = "/root/repo/src/main/resources/graft/refdata"
-  // a def, not a val: the staged-input path is tier-keyed and follows
-  // the tier the queries actually ran (see SyntheticState
-  // .currentOracleInputDir) — freezing it at object init would pin the
-  // oracle SQL to the default tier regardless of the Verify SF
-  private def in = SyntheticState.currentOracleInputDir
+  // a def, not a val: the oracle SQL reads the input the gates staged
+  // for the sf dir they ran on (Verify dumps the SQL after its gates ran)
+  private def in = Fixtures.staged("fia_input")
+
+  // ---- fixtures --------------------------------------------------------
+
+  private val rawNames = Seq("PLOT", "PLOTGEOM", "COND", "TREE")
+
+  /** The raw synthetic tables for `sfDir`'s tier
+    * ([[SyntheticState.nPlotsFor]]), staged once per JVM. The DuckDB
+    * oracle reads the same files, so both engines consume identical
+    * bytes. Returns the directory. */
+  def materialize(spark: SparkSession, sfDir: String): String =
+    Fixtures.once(spark, sfDir, "fia_input") { p =>
+      SyntheticState.tables(spark, SyntheticState.nPlotsFor(sfDir))
+        .foreach { case (t, df) => df.write.parquet(s"$p/$t") }
+    }
+
+  /** The [[materialize]]d raw tables, read back. */
+  def stagedRaw(spark: SparkSession, sfDir: String): Map[String, DataFrame] = {
+    val base = materialize(spark, sfDir)
+    rawNames.map(t => t -> spark.read.parquet(s"$base/$t")).toMap
+  }
+
+  /** Both mortality variants of the composed pipeline over the staged
+    * input, unioned with a `variant` discriminator — through the
+    * PRODUCTION scale path ([[Pipeline.runBucketed]], its bucketed stage
+    * rewritten on every call): the oracle pins the bucketed-stage plan,
+    * while PipelineScaleSpec pins the in-memory [[Pipeline.run]] variant
+    * against the same checksums. */
+  def pipelineBothVariantsFromParquet(spark: SparkSession, sfDir: String): DataFrame = {
+    val results = Pipeline.runBucketed(spark, stagedRaw(spark, sfDir),
+      Fixtures.fresh(spark, sfDir, "fia_annual_stage"))
+    results("midpt").withColumn("variant", lit("midpt"))
+      .unionByName(results("mortyr").withColumn("variant", lit("mortyr")))
+  }
+
+  /** The OLD OUTPUT for `sfDir`'s tier — `bothVariants` over the old
+    * side of [[Incremental.splitDelivery]], the state a real deployment
+    * already has on disk before a delivery arrives — staged once per
+    * JVM. Returns the directory. */
+  def materializeOldOutput(spark: SparkSession, sfDir: String): String =
+    Fixtures.once(spark, sfDir, "fia_old_output") { p =>
+      val (old, _) = Incremental.splitDelivery(stagedRaw(spark, sfDir))
+      Incremental.bothVariants(spark, old).write.parquet(p)
+    }
 
   // ---- Spark side ------------------------------------------------------
 
@@ -48,7 +89,7 @@ object QueriesFiaPipeline {
       lit(null)).otherwise(floor(c * 1000.0)).cast(LongType)
 
   def fiaPipelineOracle(s: SparkSession, dir: String): DataFrame = {
-    val both = SyntheticState.pipelineBothVariantsFromParquet(s, dir)
+    val both = pipelineBothVariantsFromParquet(s, dir)
     both
       .withColumn("drybio_milli", milli(col("DRYBIO_AG")))
       .withColumn("carbon_milli", milli(col("CARBON_AG")))
@@ -58,20 +99,16 @@ object QueriesFiaPipeline {
   /** `q_fia_incremental` — CDC maintenance of the composed output
     * ([[graft.fia.Incremental]]): a deterministic "delivery" (~4% new
     * plots + ~5% plots gaining a survey — `Incremental.splitDelivery`'s
-    * pmod 25/20 predicates, splitTag `v2:new25:upd20`) is merged into the
-    * materialized old output (anti-join stale plots + recompute only
-    * dirty raw rows). Because the pipeline is plot-local, the merged
-    * result must equal the FULL recompute bit-for-bit — so the oracle
-    * is the SAME full-pipeline DuckDB SQL as `q_fia_pipeline_oracle`:
+    * pmod 25/20 predicates) is merged into the materialized old
+    * output (anti-join stale plots + recompute only dirty raw rows).
+    * Because the pipeline is plot-local, the merged result must equal
+    * the FULL recompute bit-for-bit — so the oracle is the SAME
+    * full-pipeline DuckDB SQL as `q_fia_pipeline_oracle`:
     * the strongest possible check that incremental maintenance loses
     * nothing and staleness is fully evicted. */
   def fiaIncremental(s: SparkSession, dir: String): DataFrame = {
-    import graft.fia.Incremental
-    val base = SyntheticState.materialize(s, dir)
-    val full = Seq("PLOT", "PLOTGEOM", "COND", "TREE")
-      .map(t => t -> s.read.parquet(s"$base/$t")).toMap
-    val oldDir = Incremental.materializeOldOutput(s, dir)
-    val oldOut = s.read.parquet(s"$oldDir/out")
+    val full = stagedRaw(s, dir)
+    val oldOut = s.read.parquet(materializeOldOutput(s, dir))
     val (_, batch) = Incremental.splitDelivery(full)
     val merged = Incremental.merge(s, oldOut, full, Incremental.dirtyPlotIds(batch))
     merged

@@ -20,8 +20,6 @@ import graft.ops.{Multimodal, Similarity}
   */
 object QueriesMedia {
 
-  val featuresDir = "/tmp/graft_media_features"
-
   // --- deterministic payload synthesis (real encoders) -----------------
 
   /** PCM-16 mono WAV through the JDK encoder. */
@@ -84,9 +82,9 @@ object QueriesMedia {
   }
 
   /** Decode both modalities with the REAL codec paths, 64-dim features
-    * each, write to [[featuresDir]], and read back — the oracle consumes
+    * each, write to a fresh fixture, and read back — the oracle consumes
     * the same parquet. */
-  private def materializeFeatures(s: SparkSession): DataFrame = {
+  private def materializeFeatures(s: SparkSession, dir: String): DataFrame = {
     val c = corpus(s)
     val audio = Multimodal.extractAudioFeatures(
       c.filter(col("doc_id") < 100), "doc_id", "content", dims = 64)
@@ -94,16 +92,17 @@ object QueriesMedia {
     val image = Multimodal.extractFeatures(
       c.filter(col("doc_id") >= 100), "doc_id", "content", dims = 64)
       .select(col("doc_id").as("id"), col("features").as("embedding"))
-    audio.unionByName(image).coalesce(1)
-      .write.mode("overwrite").parquet(featuresDir)
-    s.read.parquet(featuresDir)
+    val features = Fixtures.fresh(s, dir, "media_features")
+    audio.unionByName(image).coalesce(1).write.parquet(features)
+    s.read.parquet(features)
   }
 
   private def mediaNearDup(s: SparkSession, dir: String): DataFrame =
     Similarity.cosineNearDupPairs(
-      materializeFeatures(s), thresholdQ = 9500L, numPlanes = 4)
+      materializeFeatures(s, dir), thresholdQ = 9500L, numPlanes = 4)
 
-  private val mediaNearDupSql: String = {
+  // a def: the SQL names the features fixture the gate staged
+  private def mediaNearDupSql: String = {
     val planes = Similarity.hyperplane(4, 64)
     val bucketExpr = (v: String) =>
       planes.zipWithIndex.map { case (plane, p) =>
@@ -113,7 +112,7 @@ object QueriesMedia {
     s"""WITH b AS (
        |  SELECT id, embedding, ${bucketExpr("embedding")} AS bucket,
        |    sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-       |  FROM read_parquet('$featuresDir/*.parquet')),
+       |  FROM read_parquet('${Fixtures.staged("media_features")}/*.parquet')),
        |p AS (
        |  SELECT l.id AS i, r.id AS j,
        |    CAST(floor(
@@ -124,8 +123,8 @@ object QueriesMedia {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_media_neardup" -> ((s, _) => mediaNearDup(s, "")))
+    "q_media_neardup" -> (mediaNearDup _))
 
-  val oracles: Map[String, String] = Map(
+  def oracles: Map[String, String] = Map(
     "q_media_neardup" -> mediaNearDupSql)
 }

@@ -960,28 +960,19 @@ object QueriesText {
 
   // --- persisted MinHash dedup index (ops.Dedup.writeMinHashIndex /
   //     probeMinHashIndex): the production incremental-dedup shape —
-  //     index the standing corpus ONCE, probe every delivery. Contract:
-  //     index once per run — the history index of an sf dir is built at
-  //     most once per JVM, in a directory this process creates and
-  //     removes at exit, so no state survives across runs and regenerated
-  //     testdata can never probe a stale index. Every later call (the
-  //     bench's timed passes, after its plan pass built it) only probes.
-  //     The probe takes the SAME batch split as q_incr_dedup, so the
-  //     oracle is identical by construction (the index is the persisted
-  //     history side of the same computation).
-  private val dedupIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  //     index the standing corpus ONCE, probe every delivery. The
+  //     history index of an sf dir is a Fixtures.once fixture: built at
+  //     most once per JVM, so every later call (the bench's timed
+  //     passes, after its plan pass built it) only probes. The probe
+  //     takes the SAME batch split as q_incr_dedup, so the oracle is
+  //     identical by construction (the index is the persisted history
+  //     side of the same computation).
   private def dedupIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val index = dedupIndexes.computeIfAbsent(dir, _ => {
-      val base = java.nio.file.Files.createTempDirectory("graft_dedupidx").toFile
-      sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(base))
+    val index = Fixtures.once(s, dir, "dedup_index")(
       Dedup.writeMinHashIndex(
         docs(s, dir).filter($"doc_id" < 400), "doc_id", "text",
-        numPerms = 6, bandSize = 3, maxBucket = Some(100), s"$base/index")
-      s"$base/index"
-    })
+        numPerms = 6, bandSize = 3, maxBucket = Some(100), _))
     Dedup.probeMinHashIndex(s, index,
       docs(s, dir).filter($"doc_id" >= 400), "doc_id", "text", threshold = 0.8)
   }

@@ -14,6 +14,15 @@ object QueriesVector {
 
   private def emb(s: SparkSession, dir: String): DataFrame = Tables.embeddings(s, dir)
 
+  /** (table, index path) for an ANN gate that commits into its own
+    * table: a fresh versioned table whose v0 clones the `(id, embedding)`
+    * corpus, staged once per JVM, and an empty index path. */
+  private def annTable(s: SparkSession, dir: String, gate: String): (String, String) = {
+    val corpus = Fixtures.once(s, dir, "ann_corpus")(
+      emb(s, dir).select(col("vec_id").as("id"), col("embedding")).write.parquet(_))
+    (Fixtures.versioned(s, dir, gate, corpus), Fixtures.fresh(s, dir, s"${gate}_index"))
+  }
+
   // --- brute-force exact cosine top-5 for the first 5 vectors
   private def cosineTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -464,17 +473,15 @@ object QueriesVector {
   //     100 TB workflow builds the index once and probes many times;
   //     this gate proves the round-trip returns results a DuckDB replay
   //     of the INLINE fit reproduces — i.e. persistence is lossless.
-  //     The index is rebuilt every run (cheap at gate scale) so a stale
-  //     artifact can never mask a drifted corpus.
+  //     The index is rebuilt on every call, into a fresh path (cheap at
+  //     gate scale), so a stale artifact can never mask a drifted corpus.
   private def annPersist(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
     val corpus = e.select($"vec_id".as("id"), $"embedding")
     val cents = e.filter($"vec_id" < 8).select($"vec_id".as("cid"), $"embedding")
     val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 8, codes = 8)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val path = s"/tmp/graft_ann_index_${System.getProperty("user.name", "u")}_$h"
+    val path = Fixtures.fresh(s, dir, "ann_index")
     graft.ops.AnnIndex.write(corpus, cents, cb, path)
     graft.ops.AnnIndex.topK(
       e.filter($"vec_id" >= 10 && $"vec_id" < 30).select($"vec_id".as("qid"), $"embedding"),
@@ -497,9 +504,7 @@ object QueriesVector {
       .select($"vec_id".as("id"), $"embedding")
     val cents = e.filter($"vec_id" < 8).select($"vec_id".as("cid"), $"embedding")
     val cb = Similarity.pqCodebook(base, "id", "embedding", numSub = 8, codes = 8)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val path = s"/tmp/graft_ann_append_${System.getProperty("user.name", "u")}_$h"
+    val path = Fixtures.fresh(s, dir, "ann_append")
     graft.ops.AnnIndex.write(base, cents, cb, path)
     graft.ops.AnnIndex.append(delta, path)
     graft.ops.AnnIndex.topK(
@@ -519,16 +524,7 @@ object QueriesVector {
   private def annDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val base = s"/tmp/graft_ann_delete_${System.getProperty("user.name", "u")}_$h"
-    val tbl = s"$base/table"; val path = s"$base/index"
-    // fresh per run: the gate commits a DELETE to its table
-    val fs = graft.ops.Fs.of(base, s)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    e.select($"vec_id".as("id"), $"embedding").write.parquet(s"$tbl/v0")
-    graft.ops.Fs.writeTextAtomic(fs,
-      new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
+    val (tbl, path) = annTable(s, dir, "ann_delete")
     val corpus = s.read.parquet(s"$tbl/v0")
     val cents = e.filter($"vec_id" < 8).select($"vec_id".as("cid"), $"embedding")
     val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 8, codes = 8)
@@ -554,15 +550,7 @@ object QueriesVector {
   private def annReconcile(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val base = s"/tmp/graft_ann_reconcile_${System.getProperty("user.name", "u")}_$h"
-    val tbl = s"$base/table"; val path = s"$base/index"
-    val fs = graft.ops.Fs.of(base, s)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    e.select($"vec_id".as("id"), $"embedding").write.parquet(s"$tbl/v0")
-    graft.ops.Fs.writeTextAtomic(fs,
-      new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
+    val (tbl, path) = annTable(s, dir, "ann_reconcile")
     val corpus = s.read.parquet(s"$tbl/v0")
     val cents = e.filter($"vec_id" < 8).select($"vec_id".as("cid"), $"embedding")
     val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 8, codes = 8)
@@ -594,15 +582,7 @@ object QueriesVector {
   private def annUpdate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val base = s"/tmp/graft_ann_update_${System.getProperty("user.name", "u")}_$h"
-    val tbl = s"$base/table"; val path = s"$base/index"
-    val fs = graft.ops.Fs.of(base, s)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    e.select($"vec_id".as("id"), $"embedding").write.parquet(s"$tbl/v0")
-    graft.ops.Fs.writeTextAtomic(fs,
-      new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
+    val (tbl, path) = annTable(s, dir, "ann_update")
     val corpus = s.read.parquet(s"$tbl/v0")
     val cents = e.filter($"vec_id" < 8).select($"vec_id".as("cid"), $"embedding")
     val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 8, codes = 8)
@@ -641,15 +621,7 @@ object QueriesVector {
   private def annStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val base = s"/tmp/graft_ann_stream_${System.getProperty("user.name", "u")}_$h"
-    val tbl = s"$base/table"; val path = s"$base/index"
-    val fs = graft.ops.Fs.of(base, s)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    e.select($"vec_id".as("id"), $"embedding").write.parquet(s"$tbl/v0")
-    graft.ops.Fs.writeTextAtomic(fs,
-      new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
+    val (tbl, path) = annTable(s, dir, "ann_stream")
     graft.ops.Upsert.materializeCdf(s, tbl, 0L)
     val corpus = s.read.parquet(s"$tbl/v0")
     val cents = e.filter($"vec_id" < 8).select($"vec_id".as("cid"), $"embedding")
@@ -657,7 +629,7 @@ object QueriesVector {
     graft.ops.AnnIndex.write(corpus, cents, cb, path,
       source = Some((tbl, "id")))
     val mq = graft.streaming.Streams.annIndexMaintainer(
-      s, tbl, path, s"$base/ck")
+      s, tbl, path, Fixtures.fresh(s, dir, "ann_stream_ck"))
     try {
       mq.processAllAvailable() // v0's own feed: stamp==CURRENT, no-op
       s.sql(s"UPDATE '$tbl' ON id SET embedding = " +
@@ -696,9 +668,7 @@ object QueriesVector {
     val corpus = e.select($"vec_id".as("id"), $"embedding")
     val cents = e.filter($"vec_id" < 8).select($"vec_id".as("cid"), $"embedding")
     val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 8, codes = 8)
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val path = s"/tmp/graft_ann_filtered_${System.getProperty("user.name", "u")}_$h"
+    val path = Fixtures.fresh(s, dir, "ann_filtered")
     graft.ops.AnnIndex.write(corpus, cents, cb, path)
     // the metadata predicate: the allow-listed ids, pushed pre-ranking
     val keep = corpus.filter($"id" % 3 =!= 1).select($"id")

@@ -101,13 +101,6 @@ object Incremental {
   // is the operator's reason to exist.
   // -------------------------------------------------------------------
 
-  /** Tags the delivery-split definition. MUST change when the
-    * predicates below change: the old-output staging marker embeds it,
-    * so a stale materialization under a different split can never be
-    * merged against the new split's dirty set (their plot coverages
-    * would not be complementary). */
-  private val splitTag = "v2:new25:upd20"
-
   private def newPlotPred = pmod(xxhash64(plotKey(), lit("incr_new")), lit(25L)) === 0
   private def updPlotPred =
     !newPlotPred && pmod(xxhash64(plotKey(), lit("incr_upd")), lit(20L)) === 0
@@ -142,46 +135,5 @@ object Incremental {
       "TREE" -> side(fullRaw("TREE"), inBatch = true),
       "PLOTGEOM" -> pgSide(fullRaw("PLOTGEOM"), batchP))
     (old, batch)
-  }
-
-  /** Where the gate materializes the OLD OUTPUT for a tier (the state a
-    * real deployment already has on disk before a delivery arrives).
-    * Built once per tier (marker-guarded like
-    * [[SyntheticState.materialize]]); per-run cost is a parquet read. */
-  // tier-keyed for the same reason as SyntheticState.oracleInputDirFor:
-  // alternating scale factors in one process (Verify sf0.01, Bench
-  // sf0.1) must not re-stage over each other every run
-  def oldOutputDirFor(n: Int): String = s"/tmp/graft_fia_incr_oldout_p$n"
-
-  /** Materialize `bothVariants(pipeline(old snapshot))` for `sfDir`'s
-    * tier (skip when the marker matches) and return the directory. */
-  def materializeOldOutput(spark: SparkSession, sfDir: String): String = {
-    val n = SyntheticState.nPlotsFor(sfDir)
-    val oldOutputDir = oldOutputDirFor(n)
-    val dir = new java.io.File(oldOutputDir)
-    val marker = new java.io.File(dir, "NPLOTS")
-    // invalidated by tier, split-definition, or generator change; a
-    // PIPELINE semantics change also stales this dir — bump splitTag
-    // alongside such changes (the oracle turns red either way, but a
-    // fresh materialization keeps the red pointing at the real cause)
-    val want = s"$n:$splitTag:${SyntheticState.genVersion}"
-    val have =
-      if (marker.exists) {
-        val src = scala.io.Source.fromFile(marker)
-        try src.mkString.trim finally src.close()
-      } else ""
-    if (have != want) {
-      if (marker.exists) marker.delete()
-      val base = SyntheticState.materialize(spark, sfDir)
-      val full = Seq("PLOT", "PLOTGEOM", "COND", "TREE")
-        .map(t => t -> spark.read.parquet(s"$base/$t")).toMap
-      val (old, _) = splitDelivery(full)
-      bothVariants(spark, old)
-        .write.mode("overwrite").parquet(s"$oldOutputDir/out")
-      dir.mkdirs()
-      val w = new java.io.PrintWriter(marker, "UTF-8")
-      try w.print(want) finally w.close()
-    }
-    oldOutputDir
   }
 }

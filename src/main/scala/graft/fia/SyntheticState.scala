@@ -146,78 +146,4 @@ object SyntheticState {
     if (sfDir.endsWith("sf0.1")) 6000
     else if (sfDir.endsWith("sf0.01")) 2000
     else 600
-
-  /** The composed workload, both mortality variants unioned with a
-    * `variant` discriminator — what `Pipeline.run` + the partitioned
-    * write produce, minus the sink. */
-  def pipelineBothVariants(spark: SparkSession, sfDir: String): DataFrame = {
-    val results = Pipeline.run(spark, tables(spark, nPlotsFor(sfDir)))
-    results("midpt").withColumn("variant", lit("midpt"))
-      .unionByName(results("mortyr").withColumn("variant", lit("mortyr")))
-  }
-
-  /** Where [[materialize]] writes the raw tables for a given tier. The
-    * DuckDB oracle for the composed pipeline reads the SAME parquet
-    * files, so both engines consume identical bytes. Keyed by nPlots so
-    * runs at DIFFERENT scale factors never clobber each other's staged
-    * bytes: a Bench run at sf0.1 between a Verify at sf0.01 and its
-    * DuckDB replay used to re-stage the one fixed dir and turn the
-    * already-dumped oracle SQL red. */
-  def oracleInputDirFor(n: Int): String = s"/tmp/graft_fia_oracle_input_p$n"
-
-  /** The tier dir the oracle SQL reads. Follows the tier LAST
-    * materialized in-process: Verify materializes while running the
-    * queries, then dumps `oracleSql`, so the dump points at the tier it
-    * actually ran. Defaults to sf0.01's tier — the driver's verify SF —
-    * for a dump taken without running the queries first. */
-  @volatile var currentOracleInputDir: String =
-    oracleInputDirFor(nPlotsFor("sf0.01"))
-
-  /** Write the raw synthetic tables for `sfDir`'s tier to
-    * [[oracleInputDir]] (skipped when the tier is already there — a
-    * marker file records nPlots) and return the directory. */
-  /** Generator version. MUST be bumped whenever [[tables]]' output
-    * changes for a given nPlots: the marker embeds it, so a code change
-    * invalidates any previously materialized input instead of leaving
-    * the oracle reading bytes from the old generator (the same
-    * staleness class as a driver testdata regeneration). */
-  val genVersion = "g1"
-
-  def materialize(spark: SparkSession, sfDir: String): String = {
-    val n = nPlotsFor(sfDir)
-    val tierDir = oracleInputDirFor(n)
-    val dir = new java.io.File(tierDir)
-    val marker = new java.io.File(dir, "NPLOTS")
-    val want = s"$n:$genVersion"
-    val have =
-      if (marker.exists) {
-        val src = scala.io.Source.fromFile(marker); try src.mkString.trim finally src.close()
-      } else ""
-    if (have != want) {
-      if (marker.exists) marker.delete() // stale tier/generator: invalidate first
-      tables(spark, n).foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$tierDir/$name")
-      }
-      dir.mkdirs()
-      val w = new java.io.PrintWriter(marker, "UTF-8")
-      try w.print(want) finally w.close()
-    }
-    currentOracleInputDir = tierDir
-    tierDir
-  }
-
-  /** [[pipelineBothVariants]], but through the parquet round-trip that
-    * the DuckDB oracle also reads — via the PRODUCTION scale path
-    * ([[Pipeline.runBucketed]]): the oracle pins the bucketed-stage
-    * plan, while PipelineScaleSpec pins the in-memory [[Pipeline.run]]
-    * variant against the same checksums. The stage is rewritten on
-    * every call (overwrite), so it can never serve a stale tier. */
-  def pipelineBothVariantsFromParquet(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = materialize(spark, sfDir)
-    val ts = Seq("PLOT", "PLOTGEOM", "COND", "TREE")
-      .map(n => n -> spark.read.parquet(s"$base/$n")).toMap
-    val results = Pipeline.runBucketed(spark, ts, s"$base/annual_stage")
-    results("midpt").withColumn("variant", lit("midpt"))
-      .unionByName(results("mortyr").withColumn("variant", lit("mortyr")))
-  }
 }

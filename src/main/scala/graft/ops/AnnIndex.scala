@@ -220,12 +220,13 @@ object AnnIndex {
     * the membership scan, never a wrong answer — but it COMPOUNDS
     * over the wave: a non-holder file survives a K-id probe with
     * probability ≈ K·p, so the per-key rate p must be sized for the
-    * maintainer's batch size, not for a point lookup. Defaults
-    * (4 KB / 7 hashes) give p ≈ 6e-4 at ~2k rows/file — a 16-id
-    * micro-batch keeps ~1% of non-holders, a 500-id wave ~26% (still
-    * a 4× scan cut; raise bits for bigger waves). */
-  private[graft] val BloomBitsConf = "spark.graft.ann.bloomBits"
-  private[graft] val BloomHashesConf = "spark.graft.ann.bloomHashes"
+    * maintainer's batch size, not for a point lookup. 4 KB / 7
+    * hashes give p ≈ 6e-4 at ~2k rows/file — a 16-id micro-batch
+    * keeps ~1% of non-holders, a 500-id wave ~26% (still a 4× scan
+    * cut; raise the bits for bigger waves). Each sidecar row records
+    * the bits and hashes it was built with. */
+  private val BloomBits = 1 << 15
+  private val BloomHashes = 7
 
   /** Probe-size cap for the Bloom path: testing the filters needs the
     * touched ids' hashes on the driver, so a wave larger than this
@@ -618,11 +619,9 @@ object AnnIndex {
           new org.apache.hadoop.fs.Path(bloomSidecar(path)), true)
       return
     }
-    val bits = spark.conf.get(BloomBitsConf, (1 << 15).toString).toInt
-    val hashes = spark.conf.get(BloomHashesConf, "7").toInt
-    val rows = Layout.bloomManifestFor(spark, freshFiles, "id", bits, hashes)
+    val rows = Layout.bloomManifestFor(spark, freshFiles, "id", BloomBits, BloomHashes)
       .select(substring_index(col("file"), "/", -1).as("file"),
-        lit(bits).as("bits"), lit(hashes).as("hashes"), col("bloom"))
+        lit(BloomBits).as("bits"), lit(BloomHashes).as("hashes"), col("bloom"))
     val mode = if (rebuild) "overwrite" else "append"
     rows.coalesce(1).write.mode(mode).parquet(bloomSidecar(path))
   }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Dev-only: dump each stage of the composed FIA pipeline over the
   * materialized synthetic state, so the DuckDB oracle SQL for
-  * `q_fia_pipeline_oracle` can be validated stage by stage.
+  * `q_fia_pipeline_oracle` can be validated stage by stage. Prints the
+  * staged input dir, which `dev/fia_oracle_dev.py` takes as its input.
   * Usage: runMain graft.tools.FiaOracle <sfDir> <outDir>
   */
 object FiaOracle {
@@ -16,9 +17,8 @@ object FiaOracle {
     spark.sparkContext.setLogLevel("WARN")
     import graft.fia._
 
-    val base = SyntheticState.materialize(spark, sfDir)
-    val ts = Seq("PLOT", "PLOTGEOM", "COND", "TREE")
-      .map(n => n -> spark.read.parquet(s"$base/$n")).toMap
+    println(s"[dev] input: ${QueriesFiaPipeline.materialize(spark, sfDir)}")
+    val ts = QueriesFiaPipeline.stagedRaw(spark, sfDir)
 
     val tidy = Tidy.fiaTidy(ts)
     tidy.write.mode("overwrite").parquet(s"$out/tidy")
