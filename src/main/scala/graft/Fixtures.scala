@@ -18,7 +18,11 @@ import graft.ops.{Fs, Upsert}
   *
   * Nothing is deleted at exit: the DuckDB compare reads some fixtures
   * after the JVM that staged them is gone ([[staged]]), and the next
-  * JVM wipes them before it reads them. */
+  * JVM wipes them before it reads them.
+  *
+  * One JVM at a time stages under an sf dir: the first wipe takes a
+  * lock on `<root>/<md5(sfDir)>/.lock` until the JVM exits, and a
+  * second JVM fails fast, naming the holder's pid. */
 object Fixtures {
 
   private val root = s"/tmp/graft_fixtures_${System.getProperty("user.name", "u")}"
@@ -29,11 +33,31 @@ object Fixtures {
     s"$root/$h/$name"
   }
 
+  private val held = new ConcurrentHashMap[String, java.nio.channels.FileLock]()
+
+  /** This JVM's lock on an sf dir's fixture root `d`: taken on first
+    * use, released by the OS when the process exits. */
+  private[graft] def claim(d: String): Unit =
+    held.computeIfAbsent(d, { _ =>
+      import java.nio.file.{Files, Paths, StandardOpenOption => O}
+      val f = Files.createDirectories(Paths.get(d)).resolve(".lock")
+      val ch = java.nio.channels.FileChannel.open(f, O.CREATE, O.READ, O.WRITE)
+      val lock = ch.tryLock()
+      if (lock == null) {
+        ch.close()
+        throw new IllegalStateException(s"fixtures under $d are held by pid " +
+          s"${Files.readString(f).trim} ($f); a second JVM would wipe them")
+      }
+      ch.truncate(0).write(java.nio.ByteBuffer.wrap(ProcessHandle.current().pid().toString.getBytes))
+      lock
+    })
+
   private val locks = new ConcurrentHashMap[String, AnyRef]()
   private val built = ConcurrentHashMap.newKeySet[String]()
   private val latest = new ConcurrentHashMap[String, String]()
 
   private def wipe(spark: SparkSession, name: String, p: String): String = {
+    claim(new java.io.File(p).getParent)
     Fs.of(p, spark).delete(new Path(p), true)
     latest.put(name, p)
     p

@@ -1280,8 +1280,8 @@ object QueriesCorpus {
         Queries.dsum(col("o_totalprice"), 2).as("sum_price"))
   }
 
-  // --- bloom-manifest point-lookup pruning (ops.Layout.bloomManifest /
-  //     readBloomPruned): the staged copy is UNCLUSTERED (round-robin),
+  // --- bloom point-lookup pruning (ops.Bloom.writeSidecar /
+  //     readPruned): the staged copy is UNCLUSTERED (round-robin),
   //     so min/max stats prune nothing — the per-file bloom still skips
   //     most files for a point-key set. Probe keys are every 1009th
   //     orderkey (deterministic, oracle-expressible); the gate returns
@@ -1293,9 +1293,8 @@ object QueriesCorpus {
     val keys = Tables.orders(s, dir)
       .filter(col("o_orderkey") % 1009 === 0)
       .select(col("o_orderkey")).collect().map(_.getLong(0)).toSeq
-    val manifest = graft.ops.Layout.bloomManifest(s, tbl, "o_orderkey")
-    val (data, nFiles, nHit) = graft.ops.Layout.readBloomPruned(
-      s, manifest, "o_orderkey", keys)
+    graft.ops.Bloom.writeSidecar(s, tbl, "o_orderkey")
+    val (data, nFiles, nHit) = graft.ops.Bloom.readPruned(s, tbl, "o_orderkey", keys)
     require(nFiles == 16 && nHit <= nFiles,
       s"bloom prune shape unexpected: $nHit of $nFiles files")
     data.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -1400,7 +1399,7 @@ object QueriesCorpus {
       |  FROM c)
       |WHERE rn = 1""".stripMargin
 
-  // --- incremental Bloom maintenance (Layout.writeBloomSidecar +
+  // --- incremental Bloom maintenance (Bloom.writeSidecar +
   //     Upsert commit carry): build the point-lookup index ONCE on v0,
   //     commit a delivery, probe the v1 snapshot through the CARRIED
   //     sidecar — linked files kept their filter words, only the files
@@ -1412,7 +1411,7 @@ object QueriesCorpus {
     val seed = ordersSeed(s, dir)
     val base = Fixtures.once(s, dir, "bloomcarry") { b =>
       graft.ops.Upsert.cloneSnapshot(s, seed, s"$b/chain/v0")
-      graft.ops.Layout.writeBloomSidecar(s, s"$b/chain/v0", "o_orderkey")
+      graft.ops.Bloom.writeSidecar(s, s"$b/chain/v0", "o_orderkey")
     }
     val v0 = s"$base/chain/v0"
     val orders = s.read.parquet(v0)
@@ -1428,8 +1427,7 @@ object QueriesCorpus {
     val keys = s.read.parquet(v1)
       .filter(col("o_orderkey") % 1009 === 0)
       .select(col("o_orderkey")).collect().map(_.getLong(0)).toSeq
-    val (data, nFiles, nHit) = graft.ops.Layout.readBloomPrunedFromSidecar(
-      s, v1, "o_orderkey", keys)
+    val (data, nFiles, nHit) = graft.ops.Bloom.readPruned(s, v1, "o_orderkey", keys)
     require(nHit <= nFiles, s"bloom carry shape unexpected: $nHit of $nFiles")
     data.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
   }

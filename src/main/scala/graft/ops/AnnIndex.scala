@@ -119,8 +119,7 @@ object AnnIndex {
     enc.unpersist(false)
     // per-file id Bloom sidecar: what makes the maintenance layer's
     // candidate selection metadata-only (see [[rewriteCodesDelta]])
-    appendCodesBloom(spark, path,
-      Layout.listDataFiles(spark, s"$path/codes.parquet"), rebuild = true)
+    Bloom.writeCodes(spark, path, since = None)
     val qerr = Option(obs.get.getOrElse("qerr_mean", null)) // null on an empty corpus
       .map(_.asInstanceOf[Double])
     writeMarker(path, Marker(cb.length, cb(0).length, qerrBase = qerr)
@@ -211,28 +210,6 @@ object AnnIndex {
     * routinely quantize a little differently than the corpus mean and
     * the right threshold is workload-specific. */
   private[graft] val MaxDriftConf = "spark.graft.ann.maxDriftRatio"
-
-  /** Per-codes-file id Bloom sidecar parameters. The sidecar makes
-    * [[rewriteCodesDelta]]'s candidate selection metadata-only for
-    * the files it covers: a file whose filter says "definitely no
-    * touched id here" is excluded without opening its footer or
-    * scanning its id column. A false positive costs one extra file in
-    * the membership scan, never a wrong answer — but it COMPOUNDS
-    * over the wave: a non-holder file survives a K-id probe with
-    * probability ≈ K·p, so the per-key rate p must be sized for the
-    * maintainer's batch size, not for a point lookup. 4 KB / 7
-    * hashes give p ≈ 6e-4 at ~2k rows/file — a 16-id micro-batch
-    * keeps ~1% of non-holders, a 500-id wave ~26% (still a 4× scan
-    * cut; raise the bits for bigger waves). Each sidecar row records
-    * the bits and hashes it was built with. */
-  private val BloomBits = 1 << 15
-  private val BloomHashes = 7
-
-  /** Probe-size cap for the Bloom path: testing the filters needs the
-    * touched ids' hashes on the driver, so a wave larger than this
-    * skips the Bloom prune (falls back to bounds + membership scan,
-    * which at that wave size would hit most files anyway). */
-  private[graft] val BloomMaxProbeConf = "spark.graft.ann.bloomMaxProbe"
 
   /** The staleness walks' metadata for the gap (stamped, cur], built
     * BATCHED — the [[graft.streaming.Streams.feedGapHarm]] shape: one
@@ -454,9 +431,7 @@ object AnnIndex {
         .repartitionByRange(numRangePartitions, col("cell"), col("id"))
         .sortWithinPartitions(col("cell"), col("id"))
         .write.mode("append").parquet(codesDir)
-      appendCodesBloom(spark, path,
-        Layout.listDataFiles(spark, codesDir).filterNot(before),
-        rebuild = false)
+      Bloom.writeCodes(spark, path, Some(before))
     }
     advance.foreach { case (tbl, v, idCol, mode) =>
       writeMarker(path, marker.stampedAt(Some((tbl, v, idCol)), Some(mode)))
@@ -556,6 +531,12 @@ object AnnIndex {
     if (allVerified) "verified" else "assumed"
   }
 
+  /** The Bloom prune behind [[rewriteCodesDelta]], the touched ids'
+    * probe collected under `cap`; package-private for the spec. */
+  private[graft] def bloomPruneCodes(spark: SparkSession, path: String,
+      files: Seq[String], touched: DataFrame, cap: Int = Bloom.MaxProbe): Seq[String] =
+    Bloom.pruneCodes(spark, path, files, Bloom.collectProbe(touched, "id", cap))
+
   /** FILE-GRANULAR codes rewrite — the maintenance kernel behind
     * [[reconcile]] and [[applyCdf]]: drop every `touched` id's old
     * encoding and land `newCodes`, rewriting ONLY the codes files that
@@ -573,7 +554,7 @@ object AnnIndex {
     *     metadata-only, works for ANY id type, and for a small wave
     *     cuts both later legs to the true hit set. Conservative
     *     everywhere: a file without a filter row, an unreadable
-    *     sidecar, or a wave past [[BloomMaxProbeConf]] just skips the
+    *     sidecar, or a wave past [[Bloom.MaxProbe]] ids just skips the
     *     prune (pre-sidecar indexes behave exactly as before);
     *   - bounds prune: one parallel FOOTER pass over the surviving
     *     files (KB per file) keeps only files whose typed id bounds
@@ -600,107 +581,6 @@ object AnnIndex {
     * @param newCodes (id, cell, codes) replacement encodings
     * @param marker INDEX_OK content to stamp after the swap
     * @return encoded rows dropped */
-  private def bloomSidecar(path: String) = s"$path/codes_bloom.parquet"
-
-  /** Append per-file id Bloom rows for `freshFiles` to the index's
-    * sidecar (`rebuild = true` replaces it wholesale — build and
-    * optimize, whose passes are corpus-bound anyway). Append-only on
-    * the maintenance paths so the cost is ∝ the files just written:
-    * rows for since-deleted basenames stay behind and are ignored at
-    * probe time (the probe intersects with the live listing), and
-    * [[optimize]]'s rebuild is the compaction point. Advisory by
-    * construction — a crash that loses this write only loses the
-    * prune, never correctness. */
-  private def appendCodesBloom(spark: SparkSession, path: String,
-      freshFiles: Seq[String], rebuild: Boolean): Unit = {
-    if (freshFiles.isEmpty) {
-      if (rebuild) // nothing to index — a stale sidecar must not survive
-        Fs.of(path).delete(
-          new org.apache.hadoop.fs.Path(bloomSidecar(path)), true)
-      return
-    }
-    val rows = Layout.bloomManifestFor(spark, freshFiles, "id", BloomBits, BloomHashes)
-      .select(substring_index(col("file"), "/", -1).as("file"),
-        lit(BloomBits).as("bits"), lit(BloomHashes).as("hashes"), col("bloom"))
-    val mode = if (rebuild) "overwrite" else "append"
-    rows.coalesce(1).write.mode(mode).parquet(bloomSidecar(path))
-  }
-
-  /** The Bloom prune behind [[rewriteCodesDelta]]: among `files`
-    * (full paths), drop every file whose sidecar filter proves it
-    * holds none of `touched`'s ids. Returns `files` untouched when
-    * the sidecar is absent/unreadable or the wave exceeds
-    * [[BloomMaxProbeConf]]; a file without a filter row always
-    * survives. Package-private so the spec can pin the prune
-    * directly. */
-  private[graft] def bloomPruneCodes(spark: SparkSession, path: String,
-      files: Seq[String], touched: DataFrame): Seq[String] = {
-    val cap = spark.conf.get(BloomMaxProbeConf, "100000").toInt
-    // ONE capped job replaces the old limit+count probe followed by a
-    // full probe-hash collect: limit(cap+1) bounds what reaches the
-    // driver, and an over-cap wave skips the prune exactly as before
-    val probeRows = probeHashes(touched).limit(cap + 1).collect()
-    if (probeRows.length > cap) return files
-    bloomPruneCodesProbe(spark, path, files,
-      probeRows.map(r => (r.getLong(0), r.getLong(1))))
-  }
-
-  /** The touched ids' sidecar probe hashes, as a Spark plan (same
-    * double [[Dedup.hash60]] as the builder — bit-identical md5
-    * arithmetic on both sides). */
-  private def probeHashes(touched: DataFrame): DataFrame =
-    touched.select(Dedup.hash60(col("id").cast("string")).as("h1"),
-      Dedup.hash60(concat(lit("b2:"), col("id").cast("string"))).as("h2"))
-
-  /** [[bloomPruneCodes]] from ALREADY-COLLECTED probe hashes — the
-    * maintenance path computes ids + hashes + bounds in one capped
-    * collect and feeds every leg from it. */
-  private def bloomPruneCodesProbe(spark: SparkSession, path: String,
-      files: Seq[String], probe: Array[(Long, Long)]): Seq[String] = {
-    val sidecarDf =
-      try {
-        val df = spark.read.parquet(bloomSidecar(path))
-          .select("file", "bits", "hashes", "bloom")
-        df.schema // an absent/corrupt sidecar must refuse HERE, not mid-job
-        df
-      } catch { case _: Throwable => return files }
-    // filter tests run DISTRIBUTED over the sidecar with the (capped,
-    // delivery-sized) probe hashes broadcast — the broadcast-Bloom-
-    // probe shape the runtime join prune already uses. The driver
-    // never holds the filter words (file-count × 4 KB — GBs at a
-    // production file count), only (basename, verdict) rows, the same
-    // order as the file listing being pruned.
-    val bc = spark.sparkContext.broadcast(probe)
-    val mayContain = udf { (bloom: Seq[Long], bits: Int, hashes: Int) =>
-      bc.value.exists { case (h1, h2) =>
-        (0 until hashes).forall { i =>
-          val p = java.lang.Math.floorMod(
-            h1 + i * java.lang.Math.floorMod(h2, bits.toLong), bits.toLong)
-          (bloom((p / 64).toInt) & (1L << (p % 64))) != 0
-        }
-      }
-    }
-    // a basename may carry at most one row (files are write-once and
-    // get one row in the same mutation) — but if a retried write ever
-    // left two, ANY row saying "may" keeps the file (conservative)
-    val may = scala.collection.mutable.Map.empty[String, Boolean]
-    val verdicts =
-      try sidecarDf
-        .select(col("file"),
-          mayContain(col("bloom"), col("bits"), col("hashes")).as("hit"))
-        .collect()
-      finally bc.unpersist(false)
-    verdicts.foreach { r =>
-      val f = r.getString(0)
-      may(f) = may.getOrElse(f, false) || r.getBoolean(1)
-    }
-    if (may.isEmpty) return files // an empty sidecar adjudicates nothing
-    files.filter { f =>
-      val base = f.substring(f.lastIndexOf('/') + 1)
-      may.getOrElse(base, true) // uncovered file: always a candidate
-    }
-  }
-
   private def rewriteCodesDelta(
       spark: SparkSession, path: String, touched: DataFrame,
       newCodes: Option[DataFrame], numRangePartitions: Int,
@@ -723,54 +603,38 @@ object AnnIndex {
     // ONE capped job collects (id, h1, h2): the Bloom probe hashes AND
     // the id bounds ride the same delivery-sized collect — previously
     // three separate jobs (cap probe, hash collect, min/max agg)
-    val cap = spark.conf.get(BloomMaxProbeConf, "100000").toInt
-    val probeRows = touchedChk
-      .select(col("id"),
-        Dedup.hash60(col("id").cast("string")).as("h1"),
-        Dedup.hash60(concat(lit("b2:"), col("id").cast("string"))).as("h2"))
-      .limit(cap + 1).collect()
-    val withinCap = probeRows.length <= cap
+    val probeRows = Bloom.collectProbe(touchedChk, "id")
     // Bloom first: one sidecar read can exclude most files before the
     // per-file footer pass even starts — on an object store that is
     // the difference between one RPC and one per file
-    val files =
-      if (!withinCap) allFiles
-      else bloomPruneCodesProbe(spark, path, allFiles,
-        probeRows.map(r => (r.getLong(1), r.getLong(2))))
+    val files = Bloom.pruneCodes(spark, path, allFiles, probeRows)
     val candidates: Seq[String] =
       if (!integralId) files
       else {
         // typed id bounds of the wave: driver-side off the capped
         // collect when it fit, one agg job past the cap (min/max over
         // non-null ids — identical to the old agg-with-cast)
-        val bounds0: Option[(Long, Long)] =
-          if (withinCap) {
-            val ids = probeRows.iterator.map(_.get(0))
+        val bounds0: Option[(Long, Long)] = probeRows match {
+          case Some(rows) =>
+            val ids = rows.iterator.map(_.get(0))
               .filter(_ != null).map(_.asInstanceOf[Number].longValue).toSeq
             if (ids.isEmpty) None else Some((ids.min, ids.max))
-          } else {
+          case None =>
             val r = touchedChk.agg(
               min(col("id")).cast("long"), max(col("id")).cast("long")).head()
             if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-          }
+        }
         bounds0 match {
           case None => Seq.empty
           case Some((tmin, tmax)) =>
             // (file, id-min, id-max) per candidate file from the commit
             // engine's footer fold (driver-side for a few-files wave,
-            // distributed past Upsert's bound); a file whose id stats
-            // fold to nothing has no row
+            // distributed past Upsert's bound); a file without a non-null
+            // id has no row, one with unknown id stats NULL bounds (kept)
             val byRel = files.map(f => Upsert.relPath(codesDir, f) -> f).toMap
-            val bounds: Seq[(String, Option[Long], Option[Long])] =
-              Upsert.footerBounds(spark, files, Seq("id" -> LongType), codesDir)
-                .map { case (rel, _, mn, mx) =>
-                  (byRel(rel), Option(mn).map(_.toLong), Option(mx).map(_.toLong))
-                }
-            val statted = bounds.map(_._1).toSet
-            // a file without typed id stats cannot be pruned — keep it
-            bounds.filter { case (_, mn, mx) =>
-              mn.isEmpty || mx.isEmpty || (mx.get >= tmin && mn.get <= tmax)
-            }.map(_._1) ++ files.filterNot(statted)
+            Upsert.footerBounds(spark, files, Seq("id" -> LongType), codesDir)
+              .collect { case (rel, _, mn, mx)
+                  if mn == null || (mx.toLong >= tmin && mn.toLong <= tmax) => byRel(rel) }
         }
       }
     // ONE column-pruned read of the candidate files serves BOTH the
@@ -818,10 +682,7 @@ object AnnIndex {
     // Bloom rows for the files just landed (∝ the delta, like the
     // rewrite itself); the deleted files' rows stay behind harmlessly
     // until optimize's sidecar rebuild
-    val before = allFiles.toSet
-    appendCodesBloom(spark, path,
-      Layout.listDataFiles(spark, codesDir).filterNot(before),
-      rebuild = false)
+    Bloom.writeCodes(spark, path, Some(allFiles.toSet))
     toRewrite.foreach(f => fs.delete(new HPath(f), false))
     writeMarker(path, marker)
     tagged.foreach(_.unpersist(false))
@@ -1075,7 +936,7 @@ object AnnIndex {
     // sidecar compaction point: maintenance passes append Bloom rows
     // and leave deleted files' rows behind; the rebuild here drops
     // them along with the files
-    appendCodesBloom(spark, path, after, rebuild = true)
+    Bloom.writeCodes(spark, path, since = None)
     writeMarker(path, marker)
     (before.size, after.size)
   }

@@ -211,153 +211,6 @@ object Layout {
     (files.size, written, total)
   }
 
-  /** Per-FILE Bloom filter over a key column — the data-skipping index
-    * for POINT lookups on columns the layout is NOT clustered by:
-    * row-group min/max (and the upsert manifest built from it) prune
-    * nothing when every file spans the whole key domain, but a Bloom
-    * bit-set per file still answers "definitely not here" for a key.
-    * This is the role of Delta's Bloom index / Iceberg's bloom column
-    * metrics, built from this engine's own pieces.
-    *
-    * Shape: ONE aggregation pass over (file, key) — `input_file_name`
-    * keys the groupBy, each key sets `numHashes` bits derived from two
-    * independent md5-based 60-bit hashes (Kirsch-Mitzenmacher double
-    * hashing: bit_i = h1 + i*h2 mod m), and the per-file OR of bit
-    * arrays is a `max` aggregate over positional flags — partial
-    * aggregation applies, the shuffle carries one m-bit array per
-    * (file, partition).
-    *
-    * @param bitsPerFile m — sized for the expected keys/file and the
-    *   target false-positive rate (m ≈ 1.44 · n · log2(1/p)) */
-  def bloomManifest(
-      spark: SparkSession, path: String, keyCol: String,
-      bitsPerFile: Int = 1 << 14, numHashes: Int = 5): DataFrame =
-    bloomOf(spark.read.parquet(path), keyCol, bitsPerFile, numHashes)
-
-  /** [[bloomManifest]] over an explicit file list — the incremental
-    * path: a COW commit carrying a Bloom sidecar only needs fresh
-    * filters for the files it just wrote. */
-  def bloomManifestFor(
-      spark: SparkSession, files: Seq[String], keyCol: String,
-      bitsPerFile: Int, numHashes: Int): DataFrame =
-    bloomOf(spark.read.parquet(files: _*), keyCol, bitsPerFile, numHashes)
-
-  private def bloomOf(
-      df: DataFrame, keyCol: String,
-      bitsPerFile: Int, numHashes: Int): DataFrame = {
-    val words = bitsPerFile / 64
-    val h1 = Dedup.hash60(col(keyCol).cast("string"))
-    val h2 = Dedup.hash60(concat(lit("b2:"), col(keyCol).cast("string")))
-    // bit positions for this key: h1 + i*h2 mod m
-    val bits = sequence(lit(0), lit(numHashes - 1)).cast("array<long>")
-    val positions = transform(bits,
-      i => pmod(h1 + i * pmod(h2, lit(bitsPerFile.toLong)), lit(bitsPerFile.toLong)))
-    // (file, word, bit) rows → two-stage partial aggregation. NOT one
-    // lambda-aggregate per word per row: an earlier shape evaluated
-    // `words` higher-order aggregates for every input row and cost 3.6 s
-    // on a 1.5M-row table; this shape is numHashes exploded rows per
-    // input row, partial-aggregated to ≤ files×words tiny pairs.
-    val perWord = df
-      .select(input_file_name().as("file"), explode(positions).as("p"))
-      .select(col("file"), shiftright(col("p"), 6).cast("int").as("w"),
-        expr("shiftleft(1L, cast(p % 64 AS INT))").as("bit"))
-      .groupBy(col("file"), col("w"))
-      .agg(expr("bit_or(bit)").as("bits"))
-    perWord
-      .groupBy("file")
-      .agg(map_from_entries(collect_list(struct(col("w"), col("bits")))).as("m"))
-      .select(col("file"),
-        expr(s"transform(sequence(0, ${words - 1}), " +
-          "i -> coalesce(element_at(m, cast(i AS INT)), 0L))").as("bloom"))
-  }
-
-  /** Read only the files whose Bloom filter MAY contain one of `keys`
-    * (plus the exact residual filter — Bloom false positives read a
-    * file for nothing but never corrupt the answer).
-    *
-    * @param manifest output of [[bloomManifest]] (collected driver-side:
-    *   one m-bit array per file, the same order of memory as any file
-    *   index) */
-  def readBloomPruned(
-      spark: SparkSession, manifest: DataFrame, keyCol: String,
-      keys: Seq[Long], bitsPerFile: Int = 1 << 14, numHashes: Int = 5)
-      : (DataFrame, Int, Int) = {
-    import spark.implicits._
-    val rows = manifest.collect().map { r =>
-      r.getString(0) -> r.getSeq[Long](1).toArray
-    }
-    // same double-hash as the builder, computed via a 1-row Spark plan
-    // so the md5 arithmetic is bit-identical to the aggregation side
-    val probe = spark.createDataset(keys).toDF("k")
-      .select(col("k"),
-        Dedup.hash60(col("k").cast("string")).as("h1"),
-        Dedup.hash60(concat(lit("b2:"), col("k").cast("string"))).as("h2"))
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-    def mayContain(bloom: Array[Long], h1: Long, h2: Long): Boolean =
-      (0 until numHashes).forall { i =>
-        val p = java.lang.Math.floorMod(
-          h1 + i * java.lang.Math.floorMod(h2, bitsPerFile.toLong), bitsPerFile.toLong)
-        (bloom((p / 64).toInt) & (1L << (p % 64))) != 0
-      }
-    val hit = rows.collect {
-      case (f, bloom) if probe.exists { case (h1, h2) => mayContain(bloom, h1, h2) } => f
-    }
-    val data =
-      if (hit.isEmpty)
-        spark.read.parquet(rows.head._1).limit(0) // empty, correct schema
-      else spark.read.parquet(hit.toIndexedSeq: _*)
-    (data.filter(col(keyCol).isin(keys: _*)), rows.length, hit.length)
-  }
-
-  /** Sidecar dir holding a snapshot's per-file Bloom filters. */
-  private[graft] def bloomSidecarDir(tablePath: String) = s"$tablePath/_bloom"
-
-  /** Materialize [[bloomManifest]] as a `_bloom` sidecar of the table,
-    * keyed by file BASENAME (same convention as the upsert `_manifest`:
-    * basenames survive the link/copy into the next snapshot, full paths
-    * don't) with the filter parameters stored alongside, so a probe
-    * can't silently hash with mismatched bits/numHashes.
-    * [[graft.ops.Upsert]] commits CARRY this sidecar forward — linked
-    * files keep their filter words verbatim, only freshly written files
-    * get an aggregation pass — so a point-lookup index on a 100 TB
-    * table costs one build, then ∝ touched files per commit. */
-  def writeBloomSidecar(
-      spark: SparkSession, tablePath: String, keyCol: String,
-      bitsPerFile: Int = 1 << 14, numHashes: Int = 5): Unit =
-    bloomManifest(spark, tablePath, keyCol, bitsPerFile, numHashes)
-      .select(substring_index(col("file"), "/", -1).as("file"),
-        lit(keyCol).as("key"), lit(bitsPerFile).as("bits"),
-        lit(numHashes).as("hashes"), col("bloom"))
-      .coalesce(1).write.mode("overwrite").parquet(bloomSidecarDir(tablePath))
-
-  /** [[readBloomPruned]] driven by the table's `_bloom` sidecar. Every
-    * data file must have a filter row — a drifted sidecar fails loudly
-    * instead of silently skipping a file the filter never saw. */
-  def readBloomPrunedFromSidecar(
-      spark: SparkSession, tablePath: String, keyCol: String,
-      keys: Seq[Long]): (DataFrame, Int, Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val sc = spark.read.parquet(bloomSidecarDir(tablePath))
-      .filter(col("key") === keyCol)
-      .select("file", "bits", "hashes", "bloom").collect()
-    require(sc.nonEmpty,
-      s"no Bloom sidecar rows for key '$keyCol' under $tablePath — " +
-        "build one with writeBloomSidecar")
-    val bits = sc.head.getInt(1); val hashes = sc.head.getInt(2)
-    val byName = listDataFiles(spark, tablePath)
-      .map(f => new HPath(f).getName -> f).toMap
-    val scNames = sc.map(_.getString(0)).toSet
-    require(byName.keySet == scNames,
-      s"Bloom sidecar drift under $tablePath: files without filters " +
-        s"${byName.keySet.diff(scNames).take(3)} / stale filter rows " +
-        s"${scNames.diff(byName.keySet).take(3)} — rebuild the sidecar")
-    import spark.implicits._
-    val manifest = spark.createDataset(
-      sc.toIndexedSeq.map(r => (byName(r.getString(0)), r.getSeq[Long](3))))
-      .toDF("file", "bloom")
-    readBloomPruned(spark, manifest, keyCol, keys, bits, hashes)
-  }
-
   /** Per-row-group, per-column footer statistics as a DataFrame — the
     * data-skipping MANIFEST for a parquet table: (file, row_group,
     * column, min_value, max_value, num_values, null_count). This is the

@@ -187,11 +187,12 @@ object Upsert {
     * key's type ([[castStat]]), compared in that type's order (strings
     * in UTF8String binary order — the order Spark's min/max uses), and
     * rendered back as cast-to-string text. A key with no non-null
-    * folded stat in the file gets NO row: absent row = "no non-null
+    * value in the file gets NO row: absent row = "no non-null
     * value of this column in the file", so commit pruning treats the
     * file as untouched (an evict key never equals NULL) and a
     * comparison-predicate pruned read skips it (a comparison never
-    * matches NULL) — both correct. */
+    * matches NULL) — both correct. Stats that are missing or do not
+    * cast make the bounds UNKNOWN: a (NULL, NULL) row, never pruned. */
   private def foldFooter(
       conf: org.apache.hadoop.conf.Configuration, file: String, rel: String,
       keys: Seq[(String, DataType)]): Seq[(String, String, String, String)] = {
@@ -199,20 +200,33 @@ object Upsert {
     val typeOf = keys.toMap
     val lo = scala.collection.mutable.Map.empty[String, Comparable[Any]]
     val hi = scala.collection.mutable.Map.empty[String, Comparable[Any]]
+    val unknown = scala.collection.mutable.Set.empty[String]
     for (bg <- Layout.readFooter(conf, file).getBlocks.asScala;
          cc <- bg.getColumns.asScala;
          k = cc.getPath.toDotString;
-         t <- typeOf.get(k);
-         st <- Option(cc.getStatistics)) {
-      val mn = castStat(t, st.minAsString)
-      val mx = castStat(t, st.maxAsString)
-      if (mn != null && lo.get(k).forall(mn.compareTo(_) < 0)) lo(k) = mn
-      if (mx != null && hi.get(k).forall(mx.compareTo(_) > 0)) hi(k) = mx
+         t <- typeOf.get(k)) {
+      val st = cc.getStatistics
+      if (st == null || st.isEmpty) unknown += k
+      else if (st.hasNonNullValue) { // an all-null chunk adds nothing
+        val mn = castStat(t, st.minAsString)
+        val mx = castStat(t, st.maxAsString)
+        if (mn == null || mx == null) unknown += k
+        else {
+          if (lo.get(k).forall(mn.compareTo(_) < 0)) lo(k) = mn
+          if (hi.get(k).forall(mx.compareTo(_) > 0)) hi(k) = mx
+        }
+      }
     }
-    keys.collect { case (k, _) if lo.contains(k) || hi.contains(k) =>
-      (rel, k, lo.get(k).map(_.toString).orNull, hi.get(k).map(_.toString).orNull)
+    keys.collect {
+      case (k, _) if unknown(k) => (rel, k, null, null)
+      case (k, _) if lo.contains(k) => (rel, k, lo(k).toString, hi(k).toString)
     }
   }
+
+  /** `k` inside a manifest row's `[mn, mx]` as `t`; NULL is unbounded. */
+  private def inBounds(k: Column, t: DataType): Column =
+    (col("mn").isNull || k >= col("mn").cast(t)) &&
+      (col("mx").isNull || k <= col("mx").cast(t))
 
   /** Footer-stat text under Spark's SQL string cast to `t` (the
     * `UTF8String` parsers the cast itself uses: trimmed, width-checked),
@@ -606,12 +620,9 @@ object Upsert {
       !manFiles.contains(rel) ||
         checks.forall { case (k, ok) =>
           byKey.getOrElse(k, Map.empty).get(rel) match {
-            case Some((mn, mx)) if mn != null && mx != null => ok(mn, mx)
-            // a PRESENT row with a null bound is unknown, not all-null
-            // (the writers admit `mn.isNotNull || mx.isNotNull` rows):
-            // degrade to scanning the file, never to skipping it — only
-            // the ABSENT-row case below carries the all-null invariant
-            case Some(_) => true
+            // a PRESENT row with NULL bounds is unknown, not all-null:
+            // scan the file (only an ABSENT row means all-null)
+            case Some((mn, mx)) => mn == null || mx == null || ok(mn, mx)
             case None => false
           }
         }
@@ -760,7 +771,7 @@ object Upsert {
     // and let a concurrent claimer grab the same number)
     clearLeftovers(ofs, out)
     linkOrCopyAll(spark, all, tablePath, outPath)
-    for (sc <- Seq("_manifest", "_bloom", "_dv")) {
+    for (sc <- Seq("_manifest", Bloom.TableDir, "_dv")) {
       val fs = sidecarFiles(spark, tablePath, sc)
       if (fs.nonEmpty) linkOrCopyAll(spark, fs, s"$tablePath/$sc", s"$outPath/$sc")
     }
@@ -912,7 +923,7 @@ object Upsert {
     val ofs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     clearLeftovers(ofs, out)
     linkOrCopyAll(spark, all, tablePath, outPath)
-    for (sc <- Seq("_manifest", "_bloom")) {
+    for (sc <- Seq("_manifest", Bloom.TableDir)) {
       val fs = sidecarFiles(spark, tablePath, sc)
       if (fs.nonEmpty) linkOrCopyAll(spark, fs, s"$tablePath/$sc", s"$outPath/$sc")
     }
@@ -1083,7 +1094,6 @@ object Upsert {
     require(keyCols.nonEmpty, "Upsert.commit: at least one key column")
     require(keyCols.distinct == keyCols,
       s"Upsert.commit: duplicate key columns in ${keyCols.mkString(", ")}")
-    val fs = new HPath(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val all = Layout.listDataFiles(spark, tablePath)
     require(all.nonEmpty, s"Upsert.commit: no .parquet files under $tablePath")
 
@@ -1214,7 +1224,7 @@ object Upsert {
           else upKeys.select(col("__k0")).distinct()
         broadcast(manifest)
           .join(leadKeys,
-            col("__k0").between(col("mn").cast(leadType), col("mx").cast(leadType)),
+            inBounds(col("__k0"), leadType),
             "left_semi")
           .select(col("file")).collect().map(_.getString(0)).toSet
       }
@@ -1372,8 +1382,7 @@ object Upsert {
     // (no extra footer pass, no extra job), and the evict-key range
     // rides the verbs' own aggregations (hint) or one agg here.
     val freshLead = freshRows.collect {
-      case (f, k, mn, mx) if k == leadCol && mn != null && mx != null =>
-        (f, mn, mx)
+      case (f, k, mn, mx) if k == leadCol => (f, mn, mx)
     }
     // the verbs pre-compute the range inside an aggregation they run
     // anyway; the engine's own job remains only for DV-widened sets
@@ -1397,45 +1406,10 @@ object Upsert {
       fresh = freshFiles.map(f => relPath(outPath, f)),
       freshBounds = freshLead))
 
-    // Bloom sidecar carry (Layout.writeBloomSidecar): when the source
-    // snapshot ships per-file Bloom filters FOR THIS KEY, maintain them
-    // the same way as the bounds manifest — linked files keep their
-    // filter words verbatim (their bytes didn't change), only freshly
-    // written files get an aggregation pass, with the filter params
-    // read from the carried sidecar so probe and build can't diverge.
-    // Other keys' filters are NOT carried: a fresh file without a
-    // filter row would silently false-negative, and the probe's
-    // completeness require would trip — absent sidecar = rebuild.
-    // (flat layouts only: the bloom sidecar convention is keyed by
-    // basename — Layout.writeBloomSidecar — and no partitioned table
-    // can carry one; absent sidecar = rebuild, per the probe contract)
-    val bloomIn = new HPath(Layout.bloomSidecarDir(tablePath))
-    if (partCols.isEmpty && fs.exists(new HPath(bloomIn, "_SUCCESS"))) {
-      val prevAll = spark.read.parquet(bloomIn.toString)
-      val perKey = keyCols.flatMap { k =>
-        val prevB = prevAll.filter(col("key") === k)
-        // presence probe and params in ONE capped job (was a
-        // limit+count then a separate head per key)
-        val p0 = prevB.select("bits", "hashes").limit(1).collect()
-        if (p0.isEmpty) None
-        else {
-          val (bBits, bHashes) = (p0(0).getInt(0), p0(0).getInt(1))
-          val carriedB =
-            if (touched.isEmpty) prevB
-            else prevB.filter(!col("file").isin(touched.toSeq: _*))
-          val freshB =
-            if (freshFiles.isEmpty) carriedB.limit(0)
-            else Layout.bloomManifestFor(spark, freshFiles, k, bBits, bHashes)
-              .select(substring_index(col("file"), "/", -1).as("file"),
-                lit(k).as("key"), lit(bBits).as("bits"),
-                lit(bHashes).as("hashes"), col("bloom"))
-          Some(carriedB.unionByName(freshB))
-        }
-      }
-      if (perKey.nonEmpty)
-        perKey.reduce(_ unionByName _).coalesce(1)
-          .write.mode("overwrite").parquet(Layout.bloomSidecarDir(outPath))
-    }
+    // Bloom carry, flat layouts only (basename-keyed), and only this
+    // commit's keys: another key's filters would miss the fresh files
+    if (partCols.isEmpty) Bloom.carry(spark, tablePath, outPath,
+      Bloom.params(spark, tablePath).filter { case (k, _) => keyCols.contains(k) }, touched, freshFiles)
 
     // Schema sidecar: output logical schema = input's plus any new
     // columns the append carried (allowSchemaEvolution unions them;
@@ -1960,7 +1934,8 @@ object Upsert {
     *                files' rel paths vanish from its output)
     * @param fresh   snapshot-relative paths the commit WROTE
     * @param freshBounds (file, mn, mx) lead-key bounds of fresh files
-    *                    that carry a non-null lead value */
+    *                    that carry a non-null lead value; NULL bounds
+    *                    are unknown (stats missing or uncastable) */
   private[graft] case class TxnInfo(
       keys: Seq[String], kind: String,
       mn: Option[String], mx: Option[String],
@@ -2192,37 +2167,12 @@ object Upsert {
         writeManifestKeys(spark, outDir, shared, atomic = false) // pre-publish
       case _ => ()
     }
-    // _bloom: same merge as the manifest when BOTH sides ship one and
-    // the filter params agree per shared key — linked files keep their
-    // filter words verbatim, the loser's fresh files bring theirs (the
-    // loser's own commit already aggregated them). The sidecar is
-    // basename-keyed and flat-layout-only, so the merge requires a
-    // flat rel-path set; anything unprovable falls back to NO carry
-    // (absent = rebuild, the probe contract) — never a silently
-    // incomplete filter. Before this, every rebase silently cost the
-    // next bloom probe a full rebuild.
-    val bloomOk =
-      curFs.exists(new HPath(s"${Layout.bloomSidecarDir(currentDir)}/_SUCCESS")) &&
-        curFs.exists(new HPath(s"${Layout.bloomSidecarDir(loserDir)}/_SUCCESS")) &&
-        (touchedL ++ freshL).forall(!_.contains('/'))
-    if (bloomOk) {
-      val cb = spark.read.parquet(Layout.bloomSidecarDir(currentDir))
-      val lb = spark.read.parquet(Layout.bloomSidecarDir(loserDir))
-      def params(df: org.apache.spark.sql.DataFrame) =
-        df.select("key", "bits", "hashes").distinct().collect()
-          .map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
-      val (cp, lp) = (params(cb), params(lb))
-      val shared = (cp.keySet & lp.keySet).filter(k => cp(k) == lp(k)).toSeq.sorted
-      if (shared.nonEmpty) {
-        val keep = cb.filter(col("key").isin(shared: _*))
-          .filter(if (touchedL.isEmpty) lit(true)
-                  else !col("file").isin(touchedL.toSeq: _*))
-        val freshRows = lb.filter(col("key").isin(shared: _*))
-          .filter(if (freshL.isEmpty) lit(false)
-                  else col("file").isin(freshL.toSeq: _*))
-        keep.unionByName(freshRows).coalesce(1)
-          .write.mode("overwrite").parquet(Layout.bloomSidecarDir(outDir))
-      }
+    // Bloom: keys both sides filter with equal params; fresh rows from the loser
+    if ((touchedL ++ freshL).forall(!_.contains('/'))) {
+      val cp = Bloom.params(spark, currentDir)
+      val lp = if (cp.isEmpty) cp else Bloom.params(spark, loserDir)
+      Bloom.carry(spark, currentDir, outDir, cp.filter { case (k, p) => lp.get(k).contains(p) },
+        touchedL, freshL.toSeq, builtIn = Some(loserDir))
     }
     readSchemaSidecar(loserDir).foreach(writeSchemaSidecar(outDir, _))
     readCommitInfo(loserDir).foreach { case (op, _, stats) =>
@@ -2482,7 +2432,7 @@ object Upsert {
               footerBounds(spark, sharedPaths, Seq(kc -> kt), toRoot)))
           val candidates = broadcast(bounds)
             .join(newKeys.select(col(kc).cast(kt).as("__k")).distinct(),
-              col("__k").between(col("mn").cast(kt), col("mx").cast(kt)),
+              inBounds(col("__k"), kt),
               "left_semi")
             .select(col("file")).collect().map(_.getString(0)).toSet
           val cand = sharedPaths.filter(f =>

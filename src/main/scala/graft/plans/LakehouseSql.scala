@@ -505,7 +505,8 @@ object LakehouseSql {
         (L.mn, L.mx) match {
           case (Some(lm), Some(lx)) =>
             val clash = try {
-              W.freshBounds.find { case (_, wm, wx) => le(wm, lx) && le(lm, wx) }
+              W.freshBounds.find { case (_, wm, wx) => // NULL: unknown bounds
+                wm == null || (le(wm, lx) && le(lm, wx)) }
             } catch {
               case _: NumberFormatException =>
                 return Left("unparseable key bounds in a _txn sidecar")
@@ -1009,7 +1010,7 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
         .orNull,
       if (versioned) Upsert.snapshotVersions(tableDir).size.toLong else 0L,
       files.size.toLong, bytes,
-      sidecar("_manifest"), sidecar("_bloom"),
+      sidecar("_manifest"), sidecar(graft.ops.Bloom.TableDir),
       Upsert.readSchemaSidecar(snapshot).isDefined,
       dvBytes,
       writer.orNull,

@@ -639,9 +639,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(basenames(holds41.toSeq).subsetOf(basenames(kept41)))
 
     // conservative fallbacks: oversized wave and missing sidecar prune nothing
-    spark.conf.set(AnnIndex.BloomMaxProbeConf, "1")
-    try assert(AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, absent) == codesFiles)
-    finally spark.conf.unset(AnnIndex.BloomMaxProbeConf)
+    assert(AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, absent, cap = 1) == codesFiles)
     graft.ops.Fs.of(idxDir, spark).delete(
       new org.apache.hadoop.fs.Path(s"$idxDir/codes_bloom.parquet"), true)
     assert(AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, absent) == codesFiles)

@@ -97,6 +97,34 @@ class FixturesSpec extends AnyFunSuite {
     }
   }
 
+  test("a second JVM on the same sf dir fails fast, naming the holder's pid") {
+    spark
+    withSfDir { sfDir =>
+      val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+      val child = new ProcessBuilder(javaBin, "-Xmx64m",
+          "-cp", System.getProperty("java.class.path"),
+          "graft.FixturesLockHolder", sfDir)
+        .redirectError(ProcessBuilder.Redirect.INHERIT).start()
+      try {
+        val out = new java.io.BufferedReader(
+          new java.io.InputStreamReader(child.getInputStream, "UTF-8"))
+        assert(out.readLine() == "held", "the child JVM did not take the lock")
+        val e = intercept[IllegalStateException] {
+          Fixtures.once(spark, sfDir, "x")(_ => fail("built under another JVM's lock"))
+        }
+        assert(e.getMessage.contains(s"pid ${child.pid()}"), e.getMessage)
+        intercept[IllegalStateException](Fixtures.fresh(spark, sfDir, "x"))
+      } finally {
+        child.destroy()
+        child.waitFor(30, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      // the OS drops the lock with its holder: this JVM now stages
+      var built = false
+      Fixtures.once(spark, sfDir, "x")(_ => built = true)
+      assert(built)
+    }
+  }
+
   test("source gate: gates stage only through Fixtures — no /tmp literal, no stage marker") {
     import scala.jdk.CollectionConverters._
     val st = Files.walk(Paths.get("src/main/scala"))
@@ -115,5 +143,16 @@ class FixturesSpec extends AnyFunSuite {
       }
     }
     assert(bad.isEmpty, s"staging outside graft.Fixtures:\n${bad.mkString("\n")}")
+  }
+}
+
+/** Child JVM for FixturesSpec: takes sf dir `args(0)`'s fixture lock, says
+  * "held", and keeps it until its stdin closes or it is killed. */
+object FixturesLockHolder {
+  def main(args: Array[String]): Unit = {
+    Fixtures.claim(new java.io.File(Fixtures.path(args(0), "x")).getParent)
+    println("held")
+    System.out.flush()
+    while (System.in.read() >= 0) ()
   }
 }

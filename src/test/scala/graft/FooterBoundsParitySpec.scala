@@ -61,7 +61,7 @@ class FooterBoundsParitySpec extends AnyFunSuite {
     // equality above — the invariant is PARITY, not a rendering
   }
 
-  test("malformed stats: a string column requested as a LongType key drops on both placements") {
+  test("malformed stats: a string column requested as a LongType key has unknown bounds on both placements") {
     import spark.implicits._
     val dir = s"$base/malformed"
     Seq((1L, "apple"), (2L, "pear"), (3L, "fig"), (4L, "kiwi"))
@@ -69,12 +69,15 @@ class FooterBoundsParitySpec extends AnyFunSuite {
       .repartition(2).write.mode("overwrite").parquet(dir)
     val files = graft.ops.Layout.listDataFiles(spark, dir)
     // the stats text of `s` does not parse as a long: the SQL cast
-    // yields NULL, so the fold has no bound for it — neither placement
-    // throws, and neither emits a row for the key
+    // yields NULL, so the fold cannot bound it — neither placement
+    // throws, and both emit an unknown-bounds (NULL, NULL) row per file
+    // (an absent row would read as "all NULL" and prune the file)
     val keys = Seq("k" -> LongType, "s" -> LongType)
     val (local, dist) = bothPlacements(files, keys, dir)
     assert(local == dist, s"local=$local\n dist=$dist")
-    assert(!local.exists(_._2 == "s"), s"unparseable stats produced rows: $local")
+    assert(local.filter(_._2 == "s") ==
+      files.map(f => (Upsert.relPath(dir, f), "s", null, null)).toSet,
+      s"unparseable stats must give unknown-bounds rows: $local")
     assert(local.count(_._2 == "k") == files.size, local.toString)
   }
 

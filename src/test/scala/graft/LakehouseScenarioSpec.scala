@@ -16,7 +16,7 @@ class LakehouseScenarioSpec extends AnyFunSuite {
 
   test("ingest → compact → commit chain → time travel → bloom lookup → vacuum") {
     import spark.implicits._
-    import graft.ops.{Layout, Upsert}
+    import graft.ops.{Bloom, Layout, Upsert}
     val base = "/tmp/graft_lakehouse_scenario"
     val raw = s"$base/raw"; val tbl = s"$base/table"
 
@@ -49,9 +49,9 @@ class LakehouseScenarioSpec extends AnyFunSuite {
       .filter($"k" === 200L).select("v").as[Long].head() == 200L % 1000)
 
     // 6. bloom point lookup on the live snapshot prunes and answers exactly
-    val manifest = Layout.bloomManifest(spark, s"$tbl/v2", "k")
-    val (hitData, nFiles, nHit) = Layout.readBloomPruned(
-      spark, manifest, "k", Seq(90050L))
+    Bloom.writeSidecar(spark, s"$tbl/v2", "k")
+    val (hitData, nFiles, nHit) = Bloom.readPruned(
+      spark, s"$tbl/v2", "k", Seq(90050L))
     assert(nHit < nFiles, s"bloom must prune: read $nHit of $nFiles")
     assert(hitData.select("v").as[Long].collect().toSeq == Seq(-2L))
 
@@ -61,8 +61,8 @@ class LakehouseScenarioSpec extends AnyFunSuite {
     try w.print("v2") finally w.close()
     assert(Upsert.vacuum(tbl, keep = 1) == Seq(0L, 1L))
     assert(spark.read.parquet(s"$tbl/v2").count() == 50100)
-    val (postVacuum, _, _) = Layout.readBloomPruned(
-      spark, manifest, "k", Seq(200L))
+    val (postVacuum, _, _) = Bloom.readPruned(
+      spark, s"$tbl/v2", "k", Seq(200L))
     assert(postVacuum.select("v").as[Long].collect().toSeq == Seq(-1L))
   }
 }

@@ -1049,7 +1049,7 @@ class LakehouseSqlSpec extends AnyFunSuite {
       .repartitionByRange(2, $"k").sortWithinPartitions($"k")
       .write.mode("overwrite").parquet(seed)
     spark.sql(s"CONVERT '$seed' TO VERSIONED '$tbl'").collect()
-    graft.ops.Layout.writeBloomSidecar(spark, s"$tbl/v0", "k")
+    graft.ops.Bloom.writeSidecar(spark, s"$tbl/v0", "k")
     // two writers on DISJOINT key ranges; B loses and rebases
     val a = LakehouseSql.claimNextVersion(tbl)
     val b = LakehouseSql.claimNextVersion(tbl)
@@ -1066,12 +1066,12 @@ class LakehouseSqlSpec extends AnyFunSuite {
     // the probe's own completeness require passes (every live file has
     // a filter row) and point lookups answer correctly on both the
     // winner's and the rebased loser's keys — no rebuild paid
-    val (hits, nFiles, nHit) = graft.ops.Layout.readBloomPrunedFromSidecar(
+    val (hits, nFiles, nHit) = graft.ops.Bloom.readPruned(
       spark, cur, "k", Seq(305L, 405L, 55L))
     assert(hits.count() == 3, "bloom-pruned lookup lost rows after rebase")
     assert(nHit < nFiles, s"filter must prune some files ($nHit/$nFiles)")
     // a key that exists nowhere probes empty through the carried filter
-    assert(graft.ops.Layout.readBloomPrunedFromSidecar(
+    assert(graft.ops.Bloom.readPruned(
       spark, cur, "k", Seq(999999L))._1.count() == 0)
   }
 

@@ -190,8 +190,8 @@ class LayoutSpec extends AnyFunSuite {
       .repartition(16) // round-robin
       .write.mode("overwrite").parquet(dir)
 
-    val manifest = graft.ops.Layout.bloomManifest(spark, dir, "k")
-    assert(manifest.count() == 16)
+    graft.ops.Bloom.writeSidecar(spark, dir, "k")
+    assert(spark.read.parquet(s"$dir/_bloom").count() == 16)
 
     // min/max CANNOT skip: every file's [mn, mx] contains the probe key
     val bounds = graft.ops.Layout.parquetFileStats(spark, dir)
@@ -205,8 +205,8 @@ class LayoutSpec extends AnyFunSuite {
       "fixture broken: min/max should be useless on a round-robin layout")
 
     // bloom prunes to a small fraction of files and the answer is exact
-    val (data, nFiles, nHit) = graft.ops.Layout.readBloomPruned(
-      spark, manifest, "k", Seq(probeKey))
+    val (data, nFiles, nHit) = graft.ops.Bloom.readPruned(
+      spark, dir, "k", Seq(probeKey))
     assert(nFiles == 16)
     assert(nHit < 8, s"bloom should prune most of 16 files, read $nHit")
     val got = data.collect()
@@ -214,8 +214,8 @@ class LayoutSpec extends AnyFunSuite {
       got(0).getLong(1) == probeKey * 7)
 
     // an absent key reads at most a false-positive file or two, finds nothing
-    val (miss, _, missHit) = graft.ops.Layout.readBloomPruned(
-      spark, manifest, "k", Seq(999999999L))
+    val (miss, _, missHit) = graft.ops.Bloom.readPruned(
+      spark, dir, "k", Seq(999999999L))
     assert(missHit <= 2, s"absent key should prune nearly everything, read $missHit")
     assert(miss.count() == 0)
   }

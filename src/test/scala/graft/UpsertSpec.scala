@@ -416,12 +416,12 @@ class UpsertSpec extends AnyFunSuite {
 
   test("Bloom sidecar carries across commits: linked files keep filter words VERBATIM") {
     import spark.implicits._
-    import graft.ops.Layout
+    import graft.ops.Bloom
     val tbl = s"$base/bloom0"; val out = s"$base/bloom1"
     spark.range(4000).select($"id".as("k"), $"id".as("v"))
       .repartitionByRange(4, $"k").sortWithinPartitions($"k")
       .write.mode("overwrite").parquet(tbl)
-    Layout.writeBloomSidecar(spark, tbl, "k", bitsPerFile = 1 << 12)
+    Bloom.writeSidecar(spark, tbl, "k", bitsPerFile = 1 << 12)
 
     // POISON PILL: flip one filter word of a file the commit will NOT
     // touch. If the carry recomputed filters instead of carrying bytes,
@@ -459,7 +459,7 @@ class UpsertSpec extends AnyFunSuite {
     // and the carried sidecar still answers point lookups correctly
     // (probe keys in fresh AND linked files)
     val (rows, nFiles, nHit) =
-      Layout.readBloomPrunedFromSidecar(spark, out, "k", Seq(150L, 3500L))
+      Bloom.readPruned(spark, out, "k", Seq(150L, 3500L))
     assert(nFiles == dataFiles.size && nHit <= nFiles)
     val got = rows.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((150L, -1L), (3500L, 3500L)))
