@@ -59,19 +59,6 @@ object QueriesFiaPipeline {
     rawNames.map(t => t -> spark.read.parquet(s"$base/$t")).toMap
   }
 
-  /** Both mortality variants of the composed pipeline over the staged
-    * input, unioned with a `variant` discriminator — through the
-    * PRODUCTION scale path ([[Pipeline.runBucketed]], its bucketed stage
-    * rewritten on every call): the oracle pins the bucketed-stage plan,
-    * while PipelineScaleSpec pins the in-memory [[Pipeline.run]] variant
-    * against the same checksums. */
-  def pipelineBothVariantsFromParquet(spark: SparkSession, sfDir: String): DataFrame = {
-    val results = Pipeline.runBucketed(spark, stagedRaw(spark, sfDir),
-      Fixtures.fresh(spark, sfDir, "fia_annual_stage"))
-    results("midpt").withColumn("variant", lit("midpt"))
-      .unionByName(results("mortyr").withColumn("variant", lit("mortyr")))
-  }
-
   /** The OLD OUTPUT for `sfDir`'s tier — `bothVariants` over the old
     * side of [[Incremental.splitDelivery]], the state a real deployment
     * already has on disk before a delivery arrives — staged once per
@@ -88,13 +75,13 @@ object QueriesFiaPipeline {
     when(isnan(c) || c === Double.PositiveInfinity || c === Double.NegativeInfinity,
       lit(null)).otherwise(floor(c * 1000.0)).cast(LongType)
 
-  def fiaPipelineOracle(s: SparkSession, dir: String): DataFrame = {
-    val both = pipelineBothVariantsFromParquet(s, dir)
-    both
+  /** Both mortality variants of the composed pipeline over the staged
+    * input: the one lazy frame that PipelineScaleSpec pins per variant. */
+  def fiaPipelineOracle(s: SparkSession, dir: String): DataFrame =
+    Incremental.bothVariants(s, stagedRaw(s, dir))
       .withColumn("drybio_milli", milli(col("DRYBIO_AG")))
       .withColumn("carbon_milli", milli(col("CARBON_AG")))
       .drop("DRYBIO_AG", "CARBON_AG")
-  }
 
   /** `q_fia_incremental` — CDC maintenance of the composed output
     * ([[graft.fia.Incremental]]): a deterministic "delivery" (~4% new

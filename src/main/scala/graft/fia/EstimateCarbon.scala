@@ -64,9 +64,8 @@ object EstimateCarbon {
     * empty plots) flow through the DAG harmlessly and
     * `when(guard, …)` nulls their outputs — exactly the rows the join
     * path left unmatched. Same values (composed DuckDB oracle + pinned
-    * checksums); the estimate stage is now pure projections + broadcast
-    * joins, so the bucketed layout's distribution survives from scan to
-    * sink with zero Exchange (PLANS.md round-9). */
+    * checksums); the estimate stage is pure projections + broadcast
+    * joins, with zero Exchange (PLANS.md round-9). */
   def estimateCarbon(spark: SparkSession, dataPrepped: DataFrame): DataFrame = {
     val medCr = RefData.medianCrProp(spark)
       .withColumn("SFTWD_HRDWD", when(col("hwd_yn") === "N", lit("S")).otherwise(lit("H")))

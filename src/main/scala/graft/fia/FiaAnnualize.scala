@@ -1,18 +1,21 @@
 package graft.fia
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Annualize, Fills}
+import graft.ops.Annualize
 
-/** `expand_data |> interpolate_data |> adjust_mortality`
-  * (`R/expand_data.R`, `R/interpolate_data.R`, `R/adjust_mortality.R`)
-  * — the annualization pipeline. The expand+interpolate pair runs as ONE
-  * [[graft.ops.Annualize]] kernel pass (one shuffle for all 14 columns);
-  * everything around it is DataFrame ops with broadcast reference joins.
-  */
+/** `expand_data |> interpolate_data |> adjust_mortality` as ONE group
+  * pass per `(plot_ID, tree_ID)`: the [[graft.ops.Annualize]] grid, then
+  * the FIA finish on the tree's rows (decode, dead/fallen rewrite, the
+  * mortyr variant's MORTYR rewrite). The rest is row-local. use_mortyr
+  * ("any MORTYR in the input") is global: the pass rewrites as if it held
+  * and keeps DECAYCD / STANDING_DEAD_CD's pre-fill values, and a scalar
+  * subquery over the pass output (re-reading its reused shuffle) picks.
+  * With no MORTYR no tree has a MORTYR_eff, so only the fill-up differs. */
 object FiaAnnualize {
+
+  val variants: Seq[String] = Seq("midpt", "mortyr")
 
   private val sentinelCols = Seq(
     "STATUSCD", "RECONCILECD", "DECAYCD", "STANDING_DEAD_CD",
@@ -20,88 +23,121 @@ object FiaAnnualize {
   private val linearCols = Seq("ACTUALHT", "DIA", "HT", "CULL", "CR", "CONDPROP_UNADJ")
   private val stepCols = Seq("PLT_CN") ++ sentinelCols
   private val fillCols = Seq("INTENSITY", "SPCD", "ECOSUBCD", "DESIGNCD", "PROP_BASIS", "MORTYR")
+  private val keyCols = Seq("plot_ID", "tree_ID")
+  // the columns the mortyr fill-up rewrites, and their pre-fill copies
+  private val filledUp = Seq("DECAYCD", "STANDING_DEAD_CD")
+  private val preFill = filledUp.map("__prefill_" + _)
 
-  /** expand + interpolate (sentinel round-trip inside; `interpolated`
-    * flag marks generated rows). */
-  def expandInterpolate(spark: SparkSession, dataTidy: DataFrame): DataFrame = {
-    // sentinel 999 in (R/expand_data.R:25-39): survey-year NAs must
-    // step-interpolate as real values; CULL NA -> 0 for linear interp
+  /** use_mortyr: any non-null MORTYR in `df`, as an uncorrelated scalar
+    * subquery (building a frame on it runs no job). */
+  def anyMortyr(df: DataFrame): Column =
+    coalesce(df.filter(col("MORTYR").isNotNull).select(lit(true)).limit(1).scalar(), lit(false))
+
+  /** Sentinel out (R/interpolate_data.R:62-68), CULL only for DIA >= 5,
+    * and the below-measurability rewrite (R/interpolate_data.R:92-110),
+    * in place; as in SQL, a rule fires only when its condition is TRUE. */
+  private def decoder(schema: StructType): Array[Any] => Unit = {
+    val sentinel = sentinelCols.filter(schema.fieldNames.contains).map(schema.fieldIndex).toArray
+    val Seq(dia, ht, aht, cull, spcd, status, sdc) =
+      Seq("DIA", "HT", "ACTUALHT", "CULL", "SPCD", "STATUSCD", "STANDING_DEAD_CD")
+        .map(schema.fieldIndex)
+    val jenkins = RefData.jenkinsBySpcd
+    v => {
+      sentinel.foreach(i => if (v(i) == 999) v(i) = null)
+      def lt(i: Int, c: Double) = v(i) != null && v(i).asInstanceOf[Double] < c
+      if (lt(dia, 5)) v(cull) = null
+      val deadFallen = Option(v(spcd)).flatMap(s => jenkins.get(s.asInstanceOf[Int])).exists(g =>
+        if (g < 10) lt(dia, 1) || lt(ht, 4.5) || lt(aht, 4.5)
+        else g == 10 && (lt(dia, 1) || lt(ht, 1) || lt(aht, 1)))
+      if (deadFallen) { v(status) = 2; v(sdc) = 0 }
+    }
+  }
+
+  /** `adjust_mortality(use_mortyr = TRUE)` (`R/adjust_mortality.R:24-129`)
+    * in place on one tree's rows in ascending YEAR: MORTYR_eff, first_dead,
+    * the STATUSCD case, then DECAYCD/STANDING_DEAD_CD filled up. */
+  private def mortality(schema: StructType): Array[Array[Any]] => Unit = {
+    val Seq(year, mortyr, status, decay, sdc) =
+      Seq("YEAR", "MORTYR", "STATUSCD", "DECAYCD", "STANDING_DEAD_CD").map(schema.fieldIndex)
+    rows => {
+      def yr(v: Array[Any]) = v(year).asInstanceOf[Int]
+      val eff = rows.filter(_(mortyr) != null).map { v =>
+        val m = v(mortyr).asInstanceOf[Int]
+        if (yr(v) == m && v(status) == 1) m + 1 else m
+      }.maxOption
+      val firstDead = rows.filter(_(status) == 2).map(yr).minOption
+      for (e <- eff; fd <- firstDead; v <- rows) {
+        if (e < fd && yr(v) >= e && yr(v) < fd) v(status) = 2
+        else if (e > fd && yr(v) < e && yr(v) >= fd) v(status) = 1
+      }
+      for (c <- Seq(decay, sdc)) {
+        var next: Any = null
+        rows.reverseIterator.foreach(v => if (v(c) != null) next = v(c) else v(c) = next)
+      }
+    }
+  }
+
+  /** `schema` plus pre-fill copies of DECAYCD / STANDING_DEAD_CD, and
+    * the function appending a row's values as those copies. */
+  private def withPreFill(schema: StructType): (StructType, Array[Any] => Array[Any]) = {
+    val idx = filledUp.map(schema.fieldIndex)
+    (StructType(schema.fields ++ filledUp.zip(preFill).map { case (c, p) => schema(c).copy(name = p) }),
+      v => v ++ idx.map(v(_)))
+  }
+
+  /** Where `useMortyr` fails, restore the pre-fill copies; drop them. */
+  private def chooseFill(df: DataFrame, useMortyr: Column): DataFrame =
+    df.withColumns(Map(filledUp.zip(preFill).map { case (c, p) =>
+      c -> when(useMortyr, col(c)).otherwise(col(p))
+    }: _*)).drop(preFill: _*)
+
+  /** Sentinel 999 in (R/expand_data.R:25-39: survey-year NAs step-
+    * interpolate as real values; CULL NA -> 0 for linear interp), the
+    * grid, the decode; with `variants`, both variants and pre-fill copies. */
+  private def groupPass(dataTidy: DataFrame, variants: Boolean): DataFrame = {
     val pre = sentinelCols.foldLeft(dataTidy) { (d, c) =>
       if (d.columns.contains(c))
         d.withColumn(c, when(col(c).isNull, lit(999)).otherwise(col(c)))
       else d
     }.withColumn("CULL", when(col("CULL").isNull, lit(0.0)).otherwise(col("CULL")))
-
-    val expanded = Annualize(
-      pre.withColumnRenamed("INVYR", "YEAR"),
-      Annualize.Config(
-        keyCols = Seq("plot_ID", "tree_ID"),
-        yearCol = "YEAR",
-        linearCols = linearCols.filter(pre.columns.contains),
-        stepCols = stepCols.filter(pre.columns.contains),
-        fillDownUpCols = fillCols.filter(pre.columns.contains)))
-
-    // sentinel out (R/interpolate_data.R:62-68); CULL only for DIA >= 5
-    val decoded = sentinelCols.foldLeft(expanded) { (d, c) =>
-      if (d.columns.contains(c))
-        d.withColumn(c, when(col(c) === 999, lit(null)).otherwise(col(c)))
-      else d
-    }.withColumn("CULL", when(col("DIA") < 5, lit(null)).otherwise(col("CULL")))
-
-    // TPA range join (equi on DESIGNCD + [min_DIA, max_DIA) residual;
-    // 30-row broadcast -> BroadcastHashJoin, no shuffle)
-    val rules = RefData.tpaRules(spark)
-    val withTpa = decoded.join(
-      broadcast(rules),
-      decoded("DESIGNCD") === rules("DESIGNCD") &&
-        decoded("DIA") >= rules("min_DIA") && decoded("DIA") < rules("max_DIA"),
-      "left")
-      .drop(rules("DESIGNCD")).drop("min_DIA", "max_DIA")
-
-    // below-measurability threshold rewrite (R/interpolate_data.R:92-110)
-    val refSp = RefData.refSpecies(spark)
-      .select(col("SPCD").cast(IntegerType).as("SPCD"), col("JENKINS_SPGRPCD"))
-    val withJk = withTpa.join(broadcast(refSp), Seq("SPCD"), "left")
-    val deadFallen =
-      (col("JENKINS_SPGRPCD") < 10 &&
-        (col("DIA") < 1 || col("HT") < 4.5 || col("ACTUALHT") < 4.5)) ||
-        (col("JENKINS_SPGRPCD") === 10 &&
-          (col("DIA") < 1 || col("HT") < 1 || col("ACTUALHT") < 1))
-    withJk
-      .withColumn("STATUSCD", when(deadFallen, lit(2)).otherwise(col("STATUSCD")))
-      .withColumn("STANDING_DEAD_CD", when(deadFallen, lit(0)).otherwise(col("STANDING_DEAD_CD")))
-      .drop("JENKINS_SPGRPCD")
+      .withColumnRenamed("INVYR", "YEAR")
+    val cfg = Annualize.Config(
+      keyCols = keyCols,
+      yearCol = "YEAR",
+      linearCols = linearCols.filter(pre.columns.contains),
+      stepCols = stepCols.filter(pre.columns.contains),
+      fillDownUpCols = fillCols.filter(pre.columns.contains))
+    val grid = pre.schema.add(cfg.flagCol, BooleanType, nullable = false)
+    val decode = decoder(grid)
+    val adjust = mortality(grid)
+    val (filled, copyFill) = withPreFill(grid)
+    val out = if (variants) filled.add("variant", StringType, nullable = false) else grid
+    Annualize.withFinish(pre, cfg, out) { rows =>
+      rows.foreach(decode)
+      if (!variants) rows.iterator
+      else {
+        val mortyr = rows.map(v => copyFill(v) :+ "mortyr")
+        adjust(mortyr)
+        rows.iterator.map(v => copyFill(v) :+ "midpt") ++ mortyr.iterator
+      }
+    }
   }
 
-  /** `adjust_mortality(use_mortyr)` (`R/adjust_mortality.R:24-129`). */
-  def adjustMortality(dataInterpolated: DataFrame, useMortyr: Boolean = true): DataFrame = {
-    val hasMortyr = useMortyr &&
-      !dataInterpolated.filter(col("MORTYR").isNotNull).isEmpty
+  /** TPA range join (30-row broadcast, equi on DESIGNCD + [min_DIA,
+    * max_DIA) residual); SPCD leads, as after the reference's species join. */
+  private def withTpa(spark: SparkSession, annual: DataFrame): DataFrame = {
+    val rules = RefData.tpaRules(spark)
+    val joined = annual.join(
+      broadcast(rules),
+      annual("DESIGNCD") === rules("DESIGNCD") &&
+        annual("DIA") >= rules("min_DIA") && annual("DIA") < rules("max_DIA"),
+      "left")
+      .drop(rules("DESIGNCD")).drop("min_DIA", "max_DIA")
+    joined.select((col("SPCD") +: joined.columns.filterNot(_ == "SPCD").map(col)): _*)
+  }
 
-    val w = Window.partitionBy(col("tree_ID"))
-    val df =
-      if (hasMortyr) {
-        dataInterpolated
-          .withColumn("MORTYR_eff",
-            when(col("YEAR") === col("MORTYR") && col("STATUSCD") === 1,
-              col("MORTYR") + 1).otherwise(col("MORTYR")))
-          .withColumn("MORTYR_eff", max(col("MORTYR_eff")).over(w))
-          .withColumn("first_dead",
-            min(when(col("STATUSCD") === 2, col("YEAR"))).over(w))
-          .withColumn("STATUSCD",
-            when(col("MORTYR_eff").isNull, col("STATUSCD"))
-              .when(col("MORTYR_eff") === col("first_dead"), col("STATUSCD"))
-              .when(col("MORTYR_eff") < col("first_dead") &&
-                col("YEAR") >= col("MORTYR_eff") && col("YEAR") < col("first_dead"), lit(2))
-              .when(col("MORTYR_eff") > col("first_dead") &&
-                col("YEAR") < col("MORTYR_eff") && col("YEAR") >= col("first_dead"), lit(1))
-              .otherwise(col("STATUSCD")))
-          .transform(d =>
-            Fills.fillUp(d, Seq("tree_ID"), Seq(col("YEAR")),
-              Seq("DECAYCD", "STANDING_DEAD_CD")))
-          .drop("first_dead", "MORTYR_eff")
-      } else dataInterpolated
-
+  /** `adjust_mortality`'s masking, row-local. */
+  private def mask(df: DataFrame): DataFrame = {
     val measured = Seq("DIA", "HT", "ACTUALHT", "CULL", "CR")
     // R %in% returns FALSE for NA (Spark isin yields null -> coalesce)
     val nonSampled =
@@ -128,6 +164,37 @@ object FiaAnnualize {
       .withColumns(Map(measured.map(c0 => c0 ->
         when(nonSampled, lit(null)).otherwise(col(c0))): _*))
   }
+
+  /** Both variants of `fia_annualize()` with a `variant` column, from
+    * one group pass; `mortyr` decides use_mortyr over the pass output. */
+  def bothVariants(
+      spark: SparkSession, dataTidy: DataFrame,
+      mortyr: DataFrame => Column = anyMortyr): DataFrame = {
+    val annual = groupPass(dataTidy, variants = true)
+    mask(withTpa(spark, chooseFill(annual, mortyr(annual))))
+  }
+
+  /** expand + interpolate: the group pass without variants. */
+  def expandInterpolate(spark: SparkSession, dataTidy: DataFrame): DataFrame =
+    withTpa(spark, groupPass(dataTidy, variants = false))
+
+  /** `adjust_mortality(use_mortyr)` over annual rows: the same per-tree
+    * rewrite in its own group pass, then the masking. The rows are dense
+    * per tree (one per year, as [[expandInterpolate]] emits them), so a
+    * grid with nothing to interpolate passes them through unchanged. */
+  def adjustMortality(dataInterpolated: DataFrame, useMortyr: Boolean = true): DataFrame =
+    mask(if (!useMortyr) dataInterpolated else {
+      val cfg = Annualize.Config(keyCols, "YEAR", flagCol = "__regrid")
+      val grid = dataInterpolated.schema.add(cfg.flagCol, BooleanType, nullable = false)
+      val adjust = mortality(grid)
+      val (out, copyFill) = withPreFill(grid)
+      val adjusted = Annualize.withFinish(dataInterpolated, cfg, out) { rows =>
+        val copies = rows.map(copyFill)
+        adjust(copies)
+        copies.iterator
+      }
+      chooseFill(adjusted, anyMortyr(adjusted)).drop(cfg.flagCol)
+    })
 
   /** `fia_annualize()` (`R/fia_annualize.R:29-34`). */
   def annualize(spark: SparkSession, dataTidy: DataFrame, useMortyr: Boolean = true): DataFrame =

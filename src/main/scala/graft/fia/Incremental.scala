@@ -1,6 +1,6 @@
 package graft.fia
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental (CDC-style) pipeline maintenance: merge a new raw batch
@@ -61,13 +61,17 @@ object Incremental {
         .join(dirtyCns, fullRaw("PLOTGEOM")("CN") === dirtyCns("CN"), "left_semi"))
   }
 
-  /** Both mortality variants of [[Pipeline.run]] unioned with the
-    * `variant` discriminator — the shape [[Pipeline.writeParquet]]
-    * persists and this module maintains. */
-  def bothVariants(spark: SparkSession, raw: Map[String, DataFrame]): DataFrame = {
-    val results = Pipeline.run(spark, raw)
-    results("midpt").withColumn("variant", lit("midpt"))
-      .unionByName(results("mortyr").withColumn("variant", lit("mortyr")))
+  /** The composed pipeline over `raw`, both mortality variants with a
+    * `variant` column: one hash shuffle past tidy's, the group pass of
+    * [[FiaAnnualize.bothVariants]] (which takes `mortyr`). A row's
+    * maintenance key is `(coalesce(tree_ID, plot_ID), YEAR, variant)`:
+    * treeless rows have a NULL `tree_ID`, one row per plot and year. */
+  def bothVariants(
+      spark: SparkSession, raw: Map[String, DataFrame],
+      mortyr: DataFrame => Column = FiaAnnualize.anyMortyr): DataFrame = {
+    val out = Ids.splitCompositeIds(EstimateCarbon.fiaEstimate(spark,
+      FiaAnnualize.bothVariants(spark, Tidy.fiaTidy(raw), mortyr)))
+    out.select((out.columns.filterNot(_ == "variant") :+ "variant").map(col): _*)
   }
 
   /** The incremental merge: keep old output for untouched plots, drop
@@ -87,7 +91,9 @@ object Incremental {
       dirty: DataFrame): DataFrame = {
     val d = broadcast(dirty)
     val keep = oldOutput.join(d, oldOutput("plot_ID") === d("plot_ID"), "left_anti")
-    val recomputed = bothVariants(spark, restrictToDirty(fullRaw, dirty))
+    // use_mortyr as a full run decides it: the old output has the rest
+    val recomputed = bothVariants(spark, restrictToDirty(fullRaw, dirty),
+      annual => FiaAnnualize.anyMortyr(oldOutput) || FiaAnnualize.anyMortyr(annual))
     keep.unionByName(recomputed)
   }
 

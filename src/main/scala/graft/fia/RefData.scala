@@ -122,6 +122,11 @@ object RefData {
       "WOOD_SPGR_GREENVOL_DRYWT" -> DoubleType),
       rename = Map("WOOD_SPGR_GREENVOL_DRYWT" -> "WDSG"))
 
+  /** SPCD -> JENKINS_SPGRPCD, parsed driver-side for per-row lookups. */
+  def jenkinsBySpcd: Map[Int, Int] =
+    loadLocal(s"$base/REF_SPECIES.csv", Seq("SPCD" -> IntegerType, "JENKINS_SPGRPCD" -> IntegerType))
+      ._2.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) => r.getInt(0) -> r.getInt(1) }.toMap
+
   /** Decay proportions by (SFTWD_HRDWD, DECAYCD) (10 rows). */
   def decayProp(spark: SparkSession): DataFrame =
     load(spark, s"$base/REF_TREE_DECAY_PROP.csv", Seq(

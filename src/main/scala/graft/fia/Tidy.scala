@@ -60,9 +60,10 @@ object Tidy {
       .drop("plot_ID_c", "PLT_CN_c", "INVYR_c", "CONDID_c")
 
     // per-tree normalization: MORTYR fill updown; SPCD := last recorded
-    // (ordered by INVYR — NEWS.md:30 intent, SURVEY §7.4.5)
-    val filled = Fills.fillDownUp(j3, Seq("tree_ID"), Seq(col("INVYR")), Seq("MORTYR"))
-    val wAll = Window.partitionBy(col("tree_ID")).orderBy(col("INVYR"))
+    // (ordered by INVYR — NEWS.md:30 intent, SURVEY §7.4.5); keyed with
+    // plot_ID so treeless rows do not share one null-key partition
+    val filled = Fills.fillDownUp(j3, Seq("plot_ID", "tree_ID"), Seq(col("INVYR")), Seq("MORTYR"))
+    val wAll = Window.partitionBy(col("plot_ID"), col("tree_ID")).orderBy(col("INVYR"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val data0 = filled.withColumn("SPCD", last(col("SPCD"), ignoreNulls = false).over(wAll))
 

@@ -50,7 +50,14 @@ object Annualize {
       extrapolate: Boolean = true,
       flagCol: String = "interpolated")
 
-  def apply(df: DataFrame, cfg: Config): DataFrame = {
+  def apply(df: DataFrame, cfg: Config): DataFrame =
+    withFinish(df, cfg, df.schema.add(cfg.flagCol, BooleanType, nullable = false))(_.iterator)
+
+  /** [[apply]]'s group pass with a per-group `finish`: it gets the
+    * group's grid rows in ascending year order (value arrays of the input
+    * columns plus the flag) and emits rows of `out`. */
+  def withFinish(df: DataFrame, cfg: Config, out: StructType)(
+      finish: Array[Array[Any]] => Iterator[Array[Any]]): DataFrame = {
     val schema = df.schema
     val fields = schema.fields
     val nIn = fields.length
@@ -67,7 +74,6 @@ object Annualize {
     val linIdx = cfg.linearCols.map(schema.fieldIndex).toArray
     val stepIdx = cfg.stepCols.map(schema.fieldIndex).toArray
     val fillIdx = cfg.fillDownUpCols.map(schema.fieldIndex).toArray
-    val outSchema = schema.add(cfg.flagCol, BooleanType, nullable = false)
     val range = cfg.range
     val extrapolate = cfg.extrapolate
 
@@ -92,7 +98,7 @@ object Annualize {
     val keyOf = (r: Row) =>
       keyIdx.map(i => if (r.isNullAt(i)) "\u0000" else r.get(i).toString).mkString("\u0001")
 
-    implicit val rowEnc = Encoders.row(outSchema)
+    implicit val rowEnc = Encoders.row(out)
     implicit val strEnc = Encoders.STRING
 
     df.groupByKey(keyOf)
@@ -118,18 +124,13 @@ object Annualize {
           }
           Interp.interExtraPolate(years, ys, extrapolate)
         }
-        val stepOut: Array[Array[AnyRef]] = stepIdx.map { ci =>
-          val vs = Array.tabulate[AnyRef](nYears) { j =>
-            val r = obs(j)
-            if (r == null || r.isNullAt(ci)) null else r.get(ci).asInstanceOf[AnyRef]
-          }
-          Interp.stepInterp[AnyRef](years, vs)
+        def observed(ci: Int): Array[AnyRef] = Array.tabulate[AnyRef](nYears) { j =>
+          val r = obs(j)
+          if (r == null || r.isNullAt(ci)) null else r.get(ci).asInstanceOf[AnyRef]
         }
-        val fillOut: Array[Array[AnyRef]] = fillIdx.map { ci =>
-          val vs = Array.tabulate[AnyRef](nYears) { j =>
-            val r = obs(j)
-            if (r == null || r.isNullAt(ci)) null else r.get(ci).asInstanceOf[AnyRef]
-          }
+        val stepOut = stepIdx.map(ci => Interp.stepInterp[AnyRef](years, observed(ci)))
+        val fillOut = fillIdx.map { ci =>
+          val vs = observed(ci)
           // down then up
           var last: AnyRef = null
           var j = 0
@@ -140,7 +141,7 @@ object Annualize {
           vs
         }
 
-        Iterator.tabulate(nYears) { j =>
+        finish(Array.tabulate(nYears) { j =>
           val src = obs(j)
           val vals = new Array[Any](nIn + 1)
           var ci = 0
@@ -158,8 +159,8 @@ object Annualize {
             ci += 1
           }
           vals(nIn) = java.lang.Boolean.valueOf(src == null)
-          new GenericRowWithSchema(vals, outSchema): Row
-        }
+          vals
+        }).map(new GenericRowWithSchema(_, out): Row)
       }
   }
 }

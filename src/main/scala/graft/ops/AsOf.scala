@@ -111,7 +111,7 @@ object AsOf {
     * unbounded-preceding frame over the reversed order is O(n) per
     * partition, where the direct unbounded-following frame re-scans to
     * partition end per row — O(n²) on a hot key (see
-    * [[graft.ops.Fills.fillUp]]). Requires orderCols unique per
+    * [[graft.ops.Fills.fillDownUp]]). Requires orderCols unique per
     * partition row (an event-time axis, as in every as-of use). */
   def attachNextMarker(
       df: DataFrame,

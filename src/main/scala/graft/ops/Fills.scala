@@ -9,33 +9,10 @@ import org.apache.spark.sql.functions._
   * columns so Catalyst plans a single Window node (one shuffle+sort). */
 object Fills {
 
-  def fillDown(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column], cols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cols.foldLeft(df)((d, c) => d.withColumn(c, last(col(c), ignoreNulls = true).over(w)))
-  }
-
-  /** "first non-null at-or-AFTER current in ascending order" is
-    * expressed as "last non-null at-or-before current with the order
-    * REVERSED": a RUNNING (unbounded-preceding) frame, which Spark
-    * evaluates incrementally in O(n) per partition. The direct
-    * unbounded-FOLLOWING frame re-scans from each row to partition end
-    * — O(n²) — which turned the FIA pipeline's mortyr variant
-    * super-linear at 30× scale: the empty-plot rows share one
-    * null-key window partition that grows with the data (47k rows at
-    * 30× ⇒ ~2·10⁹ frame visits; PLANS.md round-9). Requires the order
-    * columns to be unique per partition row (they are a time axis
-    * everywhere this engine fills). */
-  def fillUp(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column], cols: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(orderCols.map(_.desc): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cols.foldLeft(df)((d, c) => d.withColumn(c, last(col(c), ignoreNulls = true).over(w)))
-  }
-
-  /** down-then-up ("downup"): trailing nulls take the last value,
-    * leading nulls take the first. Both directions are running frames
-    * (see [[fillUp]] — no quadratic unbounded-following evaluation). */
+  /** down-then-up ("downup"). The up side is a running frame over the
+    * REVERSED order, O(n) per partition; an unbounded-FOLLOWING frame
+    * re-scans to the partition end per row, O(n²) (PLANS.md round-9).
+    * Requires the order columns to be unique per partition row. */
   def fillDownUp(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column], cols: Seq[String]): DataFrame = {
     val wDown = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

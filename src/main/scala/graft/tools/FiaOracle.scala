@@ -1,8 +1,6 @@
 package graft
 package tools
 
-import org.apache.spark.sql.functions._
-
 /** Dev-only: dump each stage of the composed FIA pipeline over the
   * materialized synthetic state, so the DuckDB oracle SQL for
   * `q_fia_pipeline_oracle` can be validated stage by stage. Prints the
@@ -22,22 +20,13 @@ object FiaOracle {
 
     val tidy = Tidy.fiaTidy(ts)
     tidy.write.mode("overwrite").parquet(s"$out/tidy")
-    val interp = FiaAnnualize.expandInterpolate(spark, tidy).persist()
+    val interp = FiaAnnualize.expandInterpolate(spark, tidy)
     interp.write.mode("overwrite").parquet(s"$out/interp")
-    val midpt = FiaAnnualize.adjustMortality(interp, useMortyr = false)
-    val mortyr = FiaAnnualize.adjustMortality(interp, useMortyr = true)
-    val ann = midpt.withColumn("variant", lit("midpt"))
-      .unionByName(mortyr.withColumn("variant", lit("mortyr")))
+    val ann = FiaAnnualize.bothVariants(spark, tidy)
     ann.write.mode("overwrite").parquet(s"$out/ann")
     val prep = EstimateCarbon.prepCarbon(spark, ann)
     prep.write.mode("overwrite").parquet(s"$out/prep")
-    // estimate runs PER VARIANT (as Pipeline.run does) — estimating over
-    // the union would cross-match variants at the re-attach join
-    val est = Seq("midpt", "mortyr").map { v =>
-      EstimateCarbon.estimateCarbon(spark,
-        EstimateCarbon.prepCarbon(spark,
-          (if (v == "midpt") midpt else mortyr).withColumn("variant", lit(v))))
-    }.reduce(_ unionByName _)
+    val est = EstimateCarbon.estimateCarbon(spark, prep)
     Ids.splitCompositeIds(est).write.mode("overwrite").parquet(s"$out/final")
     println(s"[dev] stages written to $out (tidy=${tidy.count()}, interp=${interp.count()}, ann=${ann.count()})")
     spark.stop()

@@ -88,34 +88,4 @@ class BucketingSpec extends AnyFunSuite {
       col("o_custkey") === col("c_custkey")).count()
     assert(joined.count() == expect)
   }
-
-  test("bucketing by tree_ID feeds the mortyr window chain with NO Exchange") {
-    // the production lever for the 30x super-linear tier (PLANS.md):
-    // the mortyr variant's whole-partition aggregates + ordered fill-up
-    // require hashpartitioning(tree_ID); a tree_ID-bucketed layout
-    // satisfies that distribution from disk, so the wide annual table
-    // never re-shuffles for the window chain
-    import spark.implicits._
-    val annual = spark.range(2000).select(
-      concat(lit("1_1_1_"), ($"id" % 50).cast("string")).as("tree_ID"),
-      (lit(2005) + ($"id" % 8)).cast("int").as("YEAR"),
-      when($"id" % 7 === 0, lit(2008)).cast("int").as("MORTYR"),
-      when($"id" % 3 === 0, 2).otherwise(1).as("STATUSCD"),
-      when($"id" % 5 === 0, 2).cast("int").as("DECAYCD"),
-      when($"id" % 3 === 0, 1).otherwise(0).as("STANDING_DEAD_CD"),
-      ($"id" % 30 + 5.0).as("DIA"), ($"id" % 60 + 20.0).as("HT"),
-      ($"id" % 60 + 18.0).as("ACTUALHT"), lit(0.0).as("CULL"),
-      lit(40.0).as("CR"), lit(null).cast("int").as("RECONCILECD"),
-      lit(1).as("COND_STATUS_CD"))
-    graft.ops.Layout.writeBucketed(
-      annual, "bspec_annual", "/tmp/graft_bktspec/annual",
-      "tree_ID", 4, Some("YEAR"))
-    val out = graft.fia.FiaAnnualize.adjustMortality(
-      spark.table("bspec_annual"), useMortyr = true)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("Window"), s"expected the window chain:\n$plan")
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed layout must feed the windows without a shuffle:\n$plan")
-    assert(out.count() == 2000)
-  }
 }

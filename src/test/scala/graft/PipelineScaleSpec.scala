@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,26 +54,55 @@ class PipelineScaleSpec extends AnyFunSuite {
     assert(pins("midpt")._3 != pins("mortyr")._3)
   }
 
-  test("bucketed-stage path (runBucketed) is value-identical to the in-memory path") {
-    // same pins as the in-memory test above (graft.tools.EntryPin): the
-    // layout must be value-invisible — only the PLAN changes
-    val results = graft.fia.Pipeline.runBucketed(spark,
-      graft.fia.SyntheticState.tables(spark, 6000),
-      "/tmp/graft_pipeline_stage_spec", buckets = 8)
-    val pins = Map(
-      "midpt" -> (261619L, 52670L, -8551959680462182238L),
-      "mortyr" -> (261619L, 52670L, -2999349178173450929L))
-    for ((variant, (rows, nullCarbon, checksum)) <- pins) {
-      val vdf = results(variant).cache()
-      try {
-        assert(vdf.count() == rows, s"$variant rows (bucketed)")
-        assert(vdf.filter(col("CARBON_AG").isNull).count() == nullCarbon,
-          s"$variant null split (bucketed)")
-        val got = vdf.select(xxhash64(
-            col("tree_ID"), col("YEAR"), round(col("CARBON_AG"), 6)).as("h"))
-          .agg(expr("bit_xor(h)")).collect()(0).getLong(0)
-        assert(got == checksum, s"$variant bucketed checksum drifted: $got")
-      } finally vdf.unpersist()
+  test("both variants plan one hash Exchange past tidy's and no Window above it") {
+    // the main plan only: Spark's `collect` does not descend into the
+    // mortyr flag's scalar subquery
+    def main(df: org.apache.spark.sql.DataFrame): SparkPlan =
+      df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    def hashExchanges(df: org.apache.spark.sql.DataFrame): Int = main(df).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }.size
+    def windows(df: org.apache.spark.sql.DataFrame): Int =
+      main(df).collect { case w: WindowExec => w }.size
+    val tabs = graft.fia.SyntheticState.tables(spark, 6000)
+    val tidy = graft.fia.Tidy.fiaTidy(tabs)
+    val both = graft.fia.Incremental.bothVariants(spark, tabs)
+    // the per-tree group pass is the one shuffle; TPA, masking, NSVB and
+    // the id split stay row-local or broadcast
+    assert(hashExchanges(both) == hashExchanges(tidy) + 1,
+      s"both ${hashExchanges(both)} vs tidy ${hashExchanges(tidy)} — expected exactly one more")
+    assert(windows(both) == windows(tidy),
+      s"a Window above tidy: both ${windows(both)} vs tidy ${windows(tidy)}")
+  }
+
+  test("building the pipeline frames runs no Spark job") {
+    val tabs = graft.fia.SyntheticState.tables(spark, 6000)
+    val phase = "graft.spec.phase"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty(phase))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(phase, "construct")
+      graft.fia.Pipeline.run(spark, tabs)
+      graft.fia.Incremental.bothVariants(spark, tabs)
+      sc.setLocalProperty(phase, "marker")
+      spark.range(1).count()
+      // the listener bus delivers in order: every construction job
+      // arrives before the marker job
+      val before = Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(p => p != null && p != "marker").toList
+      assert(before.count(_ == "construct") == 0,
+        s"construction ran ${before.count(_ == "construct")} jobs")
+    } finally {
+      sc.setLocalProperty(phase, null)
+      sc.removeSparkListener(l)
     }
   }
 
