@@ -56,7 +56,8 @@ object QueriesFiaPipeline {
   /** The [[materialize]]d raw tables, read back. */
   def stagedRaw(spark: SparkSession, sfDir: String): Map[String, DataFrame] = {
     val base = materialize(spark, sfDir)
-    rawNames.map(t => t -> spark.read.parquet(s"$base/$t")).toMap
+    // footer schemas: no inference job per table on every call
+    rawNames.map(t => t -> graft.ops.Layout.readParquet(spark, Seq(s"$base/$t"))).toMap
   }
 
   /** The OLD OUTPUT for `sfDir`'s tier — `bothVariants` over the old
@@ -95,7 +96,7 @@ object QueriesFiaPipeline {
     * nothing and staleness is fully evicted. */
   def fiaIncremental(s: SparkSession, dir: String): DataFrame = {
     val full = stagedRaw(s, dir)
-    val oldOut = s.read.parquet(materializeOldOutput(s, dir))
+    val oldOut = graft.ops.Layout.readParquet(s, Seq(materializeOldOutput(s, dir)))
     val (_, batch) = Incremental.splitDelivery(full)
     val merged = Incremental.merge(s, oldOut, full, Incremental.dirtyPlotIds(batch))
     merged

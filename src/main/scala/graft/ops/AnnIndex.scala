@@ -488,7 +488,7 @@ object AnnIndex {
     if (dirs.nonEmpty) {
       // ONE read over every verifiable gap version's change images
       // (delivery-sized), not a Spark job per version
-      val changes = spark.read.parquet(dirs: _*)
+      val changes = Layout.readParquet(spark, dirs)
       // an update materializes as delete+insert in the feed — either
       // half is something append cannot express
       if (!changes.filter(col("_change_type") === "delete").isEmpty)
@@ -647,7 +647,7 @@ object AnnIndex {
     // the range write's boundary sampling.
     val tagged =
       if (candidates.isEmpty) None
-      else Some(spark.read.parquet(candidates: _*)
+      else Some(Layout.readParquet(spark, candidates)
         .select(col("id"), col("cell"), col("codes"),
           col("_metadata.file_path").as("__f"))
         .join(touchedChk.select(col("id")).withColumn("__t", lit(1)),
@@ -826,22 +826,23 @@ object AnnIndex {
           "has no diff base and is unprovable. Remedy: rebuild with " +
           "AnnIndex.write")
     val idx = load(spark, path, marker)
-    // delivery-sized; localCheckpoint so the file-diff excepts run
-    // once, not once per downstream use
+    // delivery-sized; localCheckpoint so the feed (a one-commit
+    // interval's materialized `_cdf` dir, else the file diff) is read
+    // once, not once per downstream use. Both integrity refusals ride
+    // the checkpoint as observed metrics — no separate agg job.
+    val chk = new org.apache.spark.sql.Observation()
     val feed = Upsert.changeDataFeed(spark, tbl, stamped, cur)
       .select(col(idCol).as("id"), col(embCol).as("embedding"),
         col("_change_type"))
+      .observe(chk, count(when(col("id").isNull, 1)).as("null_ids"),
+        count(when(col("_change_type") === "insert" && col("embedding").isNull, 1))
+          .as("null_emb"))
       .localCheckpoint()
-    // both integrity refusals from ONE pass over the (checkpointed,
-    // delivery-sized) feed — previously two separate isEmpty jobs
-    val bad = feed.agg(
-      count(when(col("id").isNull, 1)).as("null_ids"),
-      count(when(col("_change_type") === "insert" && col("embedding").isNull, 1))
-        .as("null_emb")).head()
-    require(bad.getLong(0) == 0,
+    val bad = chk.get
+    require(bad("null_ids") == 0L,
       s"AnnIndex.applyCdf: change images of '$tbl' carry a NULL $idCol " +
         "— the index cannot address them; fix the key, then rebuild")
-    require(bad.getLong(1) == 0,
+    require(bad("null_emb") == 0L,
       s"AnnIndex.applyCdf: insert images of '$tbl' carry a NULL " +
         s"$embCol (schema-evolution backfill?) — encoding needs the " +
         "vector; rebuild with AnnIndex.write once the column is " +
@@ -925,7 +926,7 @@ object AnnIndex {
     val before = Layout.listDataFiles(spark, codesDir)
     // explicit file paths: appending the re-clustered rows into the
     // same directory is safe while the sources still exist
-    val clustered = spark.read.parquet(before: _*)
+    val clustered = Layout.readParquet(spark, before)
       .select(col("id"), col("cell"), col("codes"))
       .repartitionByRange(numRangePartitions, col("cell"), col("id"))
       .sortWithinPartitions(col("cell"), col("id"))
@@ -947,7 +948,8 @@ object AnnIndex {
     load(spark, path, requireMarker(path, "AnnIndex"))
 
   private def load(spark: SparkSession, path: String, marker: Marker): Index = {
-    val cbRows = spark.read.parquet(s"$path/codebook.parquet")
+    // footer schemas: the codebook collect is the load's only job
+    val cbRows = Layout.readParquet(spark, Seq(s"$path/codebook.parquet"))
       .select("subspace", "code", "vec")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
@@ -956,9 +958,9 @@ object AnnIndex {
       cbRows.filter(_._1 == mi).sortBy(_._2).map(_._3)
     }
     Index(
-      spark.read.parquet(s"$path/centroids.parquet"),
+      Layout.readParquet(spark, Seq(s"$path/centroids.parquet")),
       cb,
-      spark.read.parquet(s"$path/codes.parquet"),
+      Layout.readParquet(spark, Seq(s"$path/codes.parquet")),
       marker.stamp)
   }
 

@@ -23,6 +23,11 @@ object Bloom {
 
   private def codesSidecar(indexPath: String) = s"$indexPath/codes_bloom.parquet"
 
+  /** The sidecar row every writer lands ([[rows]]): every read passes
+    * it, so none pays a schema-inference job. */
+  private[graft] val Shape = org.apache.spark.sql.types.StructType.fromDDL(
+    "file string, key string, bits int, hashes int, bloom array<bigint>")
+
   /** Table default m, sized for the expected keys/file and the target
     * false-positive rate (m ≈ 1.44 · n · log2(1/p)). */
   val TableBits = 1 << 14
@@ -66,7 +71,7 @@ object Bloom {
     val positions = transform(
       sequence(lit(0), lit(numHashes - 1)).cast("array<long>"),
       i => pmod(col("h1") + i * pmod(col("h2"), m), m))
-    probeHashes(spark.read.parquet(files: _*), key)
+    probeHashes(Layout.readParquet(spark, files), key)
       .select(input_file_name().as("file"), explode(positions).as("p"))
       .select(col("file"), shiftright(col("p"), 6).cast("int").as("w"),
         expr("shiftleft(1L, cast(p % 64 AS INT))").as("bit"))
@@ -113,7 +118,7 @@ object Bloom {
       spark: SparkSession, snapshotDir: String): Map[String, (Int, Int)] = {
     val dir = tableSidecar(snapshotDir)
     if (!Fs.of(dir, spark).exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"))) Map.empty
-    else spark.read.parquet(dir).select("key", "bits", "hashes").collect()
+    else Layout.readParquet(spark, Seq(dir), Some(Shape)).select("key", "bits", "hashes").collect()
       .groupMap(_.getString(0))(r => (r.getInt(1), r.getInt(2)))
       .collect { case (k, ps) if ps.distinct.length == 1 => k -> ps.head }
   }
@@ -127,9 +132,8 @@ object Bloom {
       keys: Map[String, (Int, Int)], dropped: Set[String], fresh: Seq[String],
       builtIn: Option[String] = None): Unit =
     if (keys.nonEmpty) {
-      def of(dir: String, names: Seq[String], in: Boolean) = // known shape: no inference job
-        spark.read.schema("file string, key string, bits int, hashes int, bloom array<bigint>")
-          .parquet(tableSidecar(dir))
+      def of(dir: String, names: Seq[String], in: Boolean) =
+        Layout.readParquet(spark, Seq(tableSidecar(dir)), Some(Shape))
           .filter(col("key").isin(keys.keys.toSeq: _*) && col("file").isin(names: _*) === in)
       val added = builtIn match {
         case Some(dir) => Seq(of(dir, fresh.map(basename), in = true))
@@ -145,12 +149,11 @@ object Bloom {
     * hold a key of `probe`? DISTRIBUTED over the rows for `key` with the
     * probe hashes broadcast: the driver never holds filter words (GBs
     * at a production file count), only verdicts, OR-ed per basename.
-    * None when the sidecar is absent or unreadable. */
+    * None when the sidecar is absent or unreadable: with the known
+    * [[Shape]] an absent dir refuses at analysis but a corrupt file
+    * only at the collect, so the guard covers both. */
   private def verdicts(spark: SparkSession, dir: String, key: String,
       probe: Array[(Long, Long)]): Option[Map[String, Boolean]] = {
-    val sidecar = // an absent/corrupt sidecar refuses HERE (eager analysis), not mid-job
-      try spark.read.parquet(dir).filter(col("key") === key)
-      catch { case NonFatal(_) => return None }
     val bc = spark.sparkContext.broadcast(probe)
     val mayContain = udf { (bloom: Seq[Long], bits: Int, hashes: Int) =>
       val m = bits.toLong
@@ -161,11 +164,12 @@ object Bloom {
         }
       }
     }
-    val rows =
-      try sidecar.select(col("file"),
-          mayContain(col("bloom"), col("bits"), col("hashes"))).collect()
-      finally bc.unpersist(false)
-    Some(rows.groupMapReduce(_.getString(0))(_.getBoolean(1))(_ || _))
+    try Some(Layout.readParquet(spark, Seq(dir), Some(Shape))
+        .filter(col("key") === key)
+        .select(col("file"), mayContain(col("bloom"), col("bits"), col("hashes")))
+        .collect().groupMapReduce(_.getString(0))(_.getBoolean(1))(_ || _))
+    catch { case NonFatal(_) => None }
+    finally bc.unpersist(false)
   }
 
   private def basename(f: String) = f.substring(f.lastIndexOf('/') + 1)
@@ -193,8 +197,8 @@ object Bloom {
         s"${may.keySet.diff(byName.keySet).take(3)} — rebuild the sidecar")
     val hit = byName.collect { case (n, f) if may(n) => f }.toSeq.sorted
     val data =
-      if (hit.isEmpty) spark.read.parquet(byName.values.head).limit(0) // empty, correct schema
-      else spark.read.parquet(hit: _*)
+      if (hit.isEmpty) Layout.readParquet(spark, Seq(byName.values.head)).limit(0) // empty, correct schema
+      else Layout.readParquet(spark, hit)
     (data.filter(col(keyCol).isin(keys: _*)), byName.size, hit.size)
   }
 

@@ -362,10 +362,53 @@ object Layout {
       "min_value", "max_value", "num_values", "null_count")
   }
 
+  /** The one read of engine-written parquet: the schema resolves
+    * without a Spark job. Spark's own inference opens a footer inside a
+    * one-task job per read — a fixed cost every index load, Bloom probe,
+    * `_dv` read and change-feed leg used to pay. The schema, in order:
+    *
+    *   1. `schema`, when the caller knows it — a snapshot's
+    *      `_schema.json` (`Upsert.readSchemaSidecar`) or a fixed
+    *      artifact shape (the Bloom sidecar row);
+    *   2. with `mergeSchema`, Spark's merged inference over every file
+    *      (a sidecar-less snapshot whose files may predate an
+    *      evolution — `Upsert.readSnapshotData`'s fallback);
+    *   3. the Spark schema Spark wrote into the first data file's
+    *      footer ([[SparkSchemaKey]]), read on the driver;
+    *   4. Spark's own inference (a foreign writer: no such key).
+    *
+    * Partition directories are still discovered and appended, as on
+    * an inferred read. `basePath` keeps them on a direct file read. */
+  private[graft] def readParquet(
+      spark: SparkSession, paths: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      basePath: Option[String] = None,
+      mergeSchema: Boolean = false): DataFrame = {
+    val r = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    schema.orElse(if (mergeSchema) None else paths.headOption.flatMap(footerSchema(spark, _))) match {
+      case Some(s) => r.schema(s).parquet(paths: _*)
+      case None => (if (mergeSchema) r.option("mergeSchema", "true") else r).parquet(paths: _*)
+    }
+  }
+
+  /** Footer key under which Spark's writer stores the row schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark schema in the footer of the first data file under
+    * `path` (a file or a directory); None without a data file, without
+    * the key, or when it does not parse. */
+  private def footerSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    scala.util.Try(listDataFiles(spark, path)).toOption.flatMap(_.headOption)
+      .flatMap(f => Option(readFooter(spark.sparkContext.hadoopConfiguration, f)
+        .getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)))
+      .flatMap(json => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(json)).toOption)
+      .collect { case s: org.apache.spark.sql.types.StructType => s }
+
   /** One parquet file's footer (row-group metadata and column stats;
     * no data pages) — the single footer reader behind
-    * [[parquetFileStatsFor]] and the commit engine's bounds fold
-    * (`Upsert.footerBounds`). */
+    * [[parquetFileStatsFor]], the commit engine's bounds fold
+    * (`Upsert.footerBounds`) and [[readParquet]]'s schema. */
   private[graft] def readFooter(
       conf: org.apache.hadoop.conf.Configuration, file: String)
       : org.apache.parquet.hadoop.metadata.ParquetMetadata = {

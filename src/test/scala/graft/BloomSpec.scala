@@ -36,6 +36,28 @@ class BloomSpec extends AnyFunSuite {
     }
   }
 
+  test("an unreadable sidecar: the ANN prune keeps every file, the table read refuses") {
+    import spark.implicits._
+    val idx = java.nio.file.Files.createTempDirectory("bloom_truncated").toString
+    val dir = s"$idx/codes.parquet"
+    spark.range(2000).select($"id").repartition(4).write.parquet(dir)
+    val files = Layout.listDataFiles(spark, dir)
+    Bloom.writeCodes(spark, idx, since = None)
+    Bloom.writeSidecar(spark, dir, "id")
+    // truncate every sidecar part file: the known row shape lets the
+    // read analyse, so the failure only surfaces when the filters load
+    for (sidecar <- Seq(s"$idx/codes_bloom.parquet", s"$dir/_bloom");
+         f <- Layout.listDataFiles(spark, sidecar)) {
+      val p = java.nio.file.Paths.get(new java.net.URI(f).getPath)
+      java.nio.file.Files.write(p, java.nio.file.Files.readAllBytes(p).take(64))
+      java.nio.file.Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
+    val probe = Bloom.collectProbe(Seq(7L, 999999L).toDF("id"), "id")
+    assert(Bloom.pruneCodes(spark, idx, files, probe) == files)
+    val e = intercept[IllegalArgumentException](Bloom.readPruned(spark, dir, "id", Seq(7L)))
+    assert(e.getMessage.contains("no Bloom sidecar rows"), e.getMessage)
+  }
+
   test("source gate: the hash, the bit-position formula and the _bloom dir name live in ops/Bloom.scala only") {
     import scala.jdk.CollectionConverters._
     val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))

@@ -219,4 +219,49 @@ class LayoutSpec extends AnyFunSuite {
     assert(missHit <= 2, s"absent key should prune nearly everything, read $missHit")
     assert(miss.count() == 0)
   }
+
+  test("readParquet: engine-written artifacts get the schema Spark's inference gives") {
+    import spark.implicits._
+    import graft.ops.{AnnIndex, Bloom, Fs, Similarity, Upsert}
+    val base = java.nio.file.Files.createTempDirectory("layout_read").toString
+    val tbl = s"$base/t"; val idx = s"$base/index"
+    spark.range(300).select($"id", ($"id" % 3).as("p"),
+        array(($"id" % 7 + 1).cast("float"), ($"id" % 5 + 1).cast("float")).as("embedding"),
+        map(lit("k"), $"id").as("m"), struct($"id".as("x"), lit("y").as("y")).as("st"))
+      .repartition(3).write.parquet(s"$tbl/v0")
+    Fs.writeTextAtomic(Fs.of(tbl, spark), new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
+    spark.range(10).select($"id", ($"id" % 3).as("p")).write.partitionBy("p").parquet(s"$base/part")
+    Bloom.writeSidecar(spark, s"$tbl/v0", "id")
+    Upsert.deleteByKeyDV(spark, s"$tbl/v0", s"$tbl/v1", Seq(3L, 4L).toDF("id"), "id")
+    Fs.writeTextAtomic(Fs.of(tbl, spark), new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v1")
+    Upsert.materializeCdf(spark, tbl, 1L)
+    val corpus = Upsert.readSnapshot(spark, tbl, 0L).select($"id", $"embedding")
+    val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 2, codes = 4)
+    AnnIndex.write(corpus, corpus.filter($"id" < 4).select($"id".as("cid"), $"embedding"), cb, idx)
+    val cases = Seq(
+      s"$tbl/v0" -> None, s"$base/part" -> None, s"$tbl/v1/_dv" -> None,
+      s"$tbl/_cdf/v1" -> None, s"$tbl/v0/_bloom" -> Some(Bloom.Shape),
+      s"$idx/codes_bloom.parquet" -> Some(Bloom.Shape), s"$idx/codebook.parquet" -> None,
+      s"$idx/centroids.parquet" -> None, s"$idx/codes.parquet" -> None)
+    for ((p, schema) <- cases)
+      assert(Layout.readParquet(spark, Seq(p), schema).schema == spark.read.parquet(p).schema, p)
+    val index = AnnIndex.read(spark, idx)
+    assert(index.centroids.schema == spark.read.parquet(s"$idx/centroids.parquet").schema)
+    assert(index.encoded.schema == spark.read.parquet(s"$idx/codes.parquet").schema)
+  }
+
+  test("source gate: AnnIndex, Bloom and Upsert read parquet only through Layout.readParquet") {
+    import scala.jdk.CollectionConverters._
+    def lines(n: String) = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(s"src/main/scala/graft/ops/$n.scala")).asScala.zipWithIndex
+    val patterns = Seq("read.parquet(", "\"mergeSchema\"")
+    assert(lines("Layout").exists(_._1.contains("def readParquet(")),
+      "the gate found no Layout.readParquet")
+    val bad = for {
+      n <- Seq("AnnIndex", "Bloom", "Upsert")
+      (l, i) <- lines(n)
+      p <- patterns if l.contains(p)
+    } yield s"ops/$n.scala:${i + 1}: ${l.trim}"
+    assert(bad.isEmpty, s"parquet reads outside Layout.readParquet:\n${bad.mkString("\n")}")
+  }
 }
