@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 import graft.fia.{Nsvb, RefData}
 
 /** Gate query for the NSVB coefficient machinery (SURVEY §2.7): the
-  * 3-level fallback join + closed-form equation dispatch evaluated over
+  * kernel's 3-level coefficient fallback + closed-form equation dispatch
+  * (`Nsvb.kernel`, target VTOTIB_GROSS) evaluated over
   * synthetic trees derived from `part`, with a DuckDB oracle that reads
   * the SAME bundled coefficient CSVs and re-implements the dispatch
   * independently. JVM Math.pow/exp and DuckDB's libm agree bitwise on
@@ -27,17 +28,15 @@ object QueriesFia {
       element_at(array(spcds.map(lit): _*), ($"p_partkey" % 8).cast(IntegerType) + 1).as("SPCD"),
       element_at(array(lit("230"), lit("220")), ($"p_partkey" % 2).cast(IntegerType) + 1).as("DIVISION"))
       .withColumn("SPCD_DIVISION", concat($"SPCD", lit(" "), $"DIVISION"))
-      .withColumn("k",
-        when($"SPCD".cast(IntegerType) < 300, lit(9.0)).otherwise(lit(11.0)))
-      .withColumn("WDSG", lit(null).cast(DoubleType)) // eq 3.1 unused here
-    val refSp = RefData.refSpecies(s).select($"SPCD", $"JENKINS_SPGRPCD")
-    val withJk = trees.join(broadcast(refSp), Seq("SPCD"), "left")
-    Nsvb.levelFallbackTarget(
-      withJk, Seq(RefData.coefs(s, "volib")), "VTOTIB_GROSS", Nsvb.closedFormDispatch)
-      // JVM and libm pow may differ in the last ulp on some inputs, so
-      // the hashed output is quantized to micro-units
-      .select($"id", $"SPCD_DIVISION",
-        floor($"VTOTIB_GROSS" * 1e6).cast(LongType).as("vtotib_micro"))
+    val vtotib = Nsvb.kernel(Map(
+      "DBH" -> $"DBH", "THT" -> $"THT", "SPCD" -> $"SPCD", "SPCD_DIVISION" -> $"SPCD_DIVISION",
+      "SPCD_NUMERIC" -> $"SPCD".cast(DoubleType),
+      "JENKINS_SPGRPCD" -> RefData.speciesField(_.jenkins)($"SPCD".cast(IntegerType))),
+      Seq("VTOTIB_GROSS")).getField("VTOTIB_GROSS")
+    // JVM and libm pow may differ in the last ulp on some inputs, so
+    // the hashed output is quantized to micro-units
+    trees.select($"id", $"SPCD_DIVISION",
+      floor(vtotib * 1e6).cast(LongType).as("vtotib_micro"))
   }
 
   private def eqSql(x: String): String =

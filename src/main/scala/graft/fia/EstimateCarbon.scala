@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** `fia_estimate()` = `prep_carbon()` + `estimate_carbon()`
-  * (`R/prep_carbon.R:11-95`, `R/estimate_carbon.R:2-107`): reference
-  * joins, NSVB prerequisites, the predictCRM2 DAG, and the re-attach of
-  * DRYBIO_AG/CARBON_AG onto the full annualized table. All reference
-  * tables broadcast; the fact table shuffles only at the final re-attach
-  * join (and that one co-partitions with downstream per-tree use).
+  * (`R/prep_carbon.R:11-95`, `R/estimate_carbon.R:2-107`), row-local:
+  * every reference table is a driver-held map looked up per row
+  * ([[RefData]]), and the NSVB prediction is one [[Nsvb.kernel]] call, so
+  * the estimate adds no join, no shuffle and no job to the plan.
   */
 object EstimateCarbon {
 
@@ -18,106 +17,73 @@ object EstimateCarbon {
   private def ifElse(cond: Column, yes: Column, no: Column): Column =
     when(cond, yes).when(!cond, no)
 
-  /** `prep_carbon()` — reference joins + Walker-code prerequisites. */
+  /** `prep_carbon()` — reference lookups + Walker-code prerequisites.
+    * The columns keep the order the reference's joins gave them: the join
+    * keys DECAYCD, SFTWD_HRDWD and SPCD lead, the looked-up fields follow
+    * the input's columns, then the derived ones. */
   def prepCarbon(spark: SparkSession, dataMortyr: DataFrame): DataFrame = {
-    val refSp = RefData.refSpecies(spark)
-      .select(col("SPCD").cast(IntegerType).as("SPCD"), col("JENKINS_SPGRPCD"),
-        col("SFTWD_HRDWD"), col("CARBON_RATIO_LIVE"), col("WDSG"))
-    val decay = RefData.decayProp(spark)
-    val cullRatio = decay.filter(col("DECAYCD") === 3)
-      .select(col("SFTWD_HRDWD"), col("DENSITY_PROP").as("CULL_DECAY_RATIO"))
-    val deadRatio = RefData.carbonRatioDead(spark)
-
-    // ONE withColumns wave: every derivation reads only join outputs /
-    // unmodified inputs (no column reads another wave member), and each
-    // withColumn call re-analyzes the whole post-kernel plan — batched,
-    // the analyzer walks it once instead of ten times per variant
-    dataMortyr
-      .join(broadcast(refSp), Seq("SPCD"), "left")
-      .join(broadcast(cullRatio), Seq("SFTWD_HRDWD"), "left")
-      .join(broadcast(decay), Seq("DECAYCD", "SFTWD_HRDWD"), "left")
-      .join(broadcast(deadRatio), Seq("DECAYCD", "SFTWD_HRDWD"), "left")
-      .withColumns(Map(
-        "CULL_DECAY_RATIO" ->
-          ifElse(col("STATUSCD") === 1, col("CULL_DECAY_RATIO"), lit(1.0)),
-        "STANDING_DEAD_CD" ->
-          ifElse(col("STATUSCD") === 1, lit(0), col("STANDING_DEAD_CD")),
-        "DECAYCD" -> ifElse(col("STATUSCD") === 1, lit(0), col("DECAYCD")),
-        "DECAY_WD" -> ifElse(col("STATUSCD") === 1, lit(1.0), col("DENSITY_PROP")),
-        "DECAY_BK" -> ifElse(col("STATUSCD") === 1, lit(1.0), col("BARK_LOSS_PROP")),
-        "DECAY_BR" -> ifElse(col("STATUSCD") === 1, lit(1.0), col("BRANCH_LOSS_PROP")),
-        "C_FRAC" -> ifElse(col("STATUSCD") === 1,
-          col("CARBON_RATIO_LIVE") * 100, col("CARBON_RATIO") * 100),
-        "PROVINCE" -> Division.province(col("ECOSUBCD")),
-        "DIVISION" -> Division.division(col("ECOSUBCD")),
-        "CULL" -> when(col("CULL").isNull, lit(0.0)).otherwise(col("CULL"))))
+    val species = dataMortyr.withColumns(Map(
+      "JENKINS_SPGRPCD" -> RefData.speciesField(_.jenkins)(col("SPCD")),
+      "SFTWD_HRDWD" -> RefData.speciesField(_.sftwdHrdwd)(col("SPCD")),
+      "CARBON_RATIO_LIVE" -> RefData.speciesField(_.carbonRatioLive)(col("SPCD")),
+      "WDSG" -> RefData.speciesField(_.wdsg)(col("SPCD"))))
+    def decay(i: Int, decaycd: Column = col("DECAYCD")): Column =
+      RefData.lookup(RefData.decayProp.map { case (k, v) => k -> v(i) })(col("SFTWD_HRDWD"), decaycd)
+    val live = col("STATUSCD") === 1
+    val lead = Seq("DECAYCD", "SFTWD_HRDWD", "SPCD")
+    species.select(
+      Seq(ifElse(live, lit(0), col("DECAYCD")).as("DECAYCD"), col("SFTWD_HRDWD"), col("SPCD")) ++
+        dataMortyr.columns.filterNot(lead.contains).map {
+          case "STANDING_DEAD_CD" => ifElse(live, lit(0), col("STANDING_DEAD_CD")).as("STANDING_DEAD_CD")
+          case "CULL" => when(col("CULL").isNull, lit(0.0)).otherwise(col("CULL")).as("CULL")
+          case c0 => col(c0)
+        } ++ Seq(
+        col("JENKINS_SPGRPCD"), col("CARBON_RATIO_LIVE"), col("WDSG"),
+        ifElse(live, decay(0, lit(3)), lit(1.0)).as("CULL_DECAY_RATIO"),
+        decay(0).as("DENSITY_PROP"), decay(1).as("BARK_LOSS_PROP"), decay(2).as("BRANCH_LOSS_PROP"),
+        RefData.lookup(RefData.carbonRatioDead)(col("SFTWD_HRDWD"), col("DECAYCD")).as("CARBON_RATIO"),
+        ifElse(live, lit(1.0), decay(0)).as("DECAY_WD"),
+        Division.division(col("ECOSUBCD")).as("DIVISION"),
+        Division.province(col("ECOSUBCD")).as("PROVINCE"),
+        ifElse(live, lit(1.0), decay(1)).as("DECAY_BK"),
+        ifElse(live, col("CARBON_RATIO_LIVE") * 100,
+          RefData.lookup(RefData.carbonRatioDead)(col("SFTWD_HRDWD"), col("DECAYCD")) * 100).as("C_FRAC"),
+        ifElse(live, lit(1.0), decay(2)).as("DECAY_BR")): _*)
   }
 
-  /** `estimate_carbon()` — crown-ratio join + prerequisites +
-    * predictCRM2, evaluated IN PLACE with the model-domain guard
-    * masking the outputs. The reference (and rounds 1–9a here) FILTERED
-    * to the model domain, ran predictCRM2, and LEFT-JOINED the
-    * predictions back (J13) — a corpus-sized self-join that was the
-    * estimate stage's only shuffle-bearing operator. Every predictCRM2
-    * expression null-propagates and the Brent UDF is boxed-null-safe,
-    * so out-of-domain rows (woodland JENKINS ≥ 10, missing height,
-    * empty plots) flow through the DAG harmlessly and
-    * `when(guard, …)` nulls their outputs — exactly the rows the join
-    * path left unmatched. Same values (composed DuckDB oracle + pinned
-    * checksums); the estimate stage is pure projections + broadcast
-    * joins, with zero Exchange (PLANS.md round-9). */
+  /** `estimate_carbon()`: DRYBIO_AG and CARBON_AG of every row, from one
+    * [[Nsvb.kernel]] call whose inputs carry the model prerequisites
+    * (median crown ratio, CR/CULL/STDORGCD fills, the planted-pine SPCD
+    * label), so the returned rows keep their own values. Rows outside the
+    * model domain (woodland JENKINS >= 10, missing height) get null, as
+    * the reference's filter-then-left-join gave them. */
   def estimateCarbon(spark: SparkSession, dataPrepped: DataFrame): DataFrame = {
-    val medCr = RefData.medianCrProp(spark)
-      .withColumn("SFTWD_HRDWD", when(col("hwd_yn") === "N", lit("S")).otherwise(lit("H")))
-      .select(col("Province").as("PROVINCE"), col("SFTWD_HRDWD"), col("CRmn"))
     val (missSft, missHwd) = RefData.crPropDefaults
-
-    val guard = col("JENKINS_SPGRPCD") < 10 && col("HT").isNotNull
-
-    // The model-PREREQUISITE rewrites below (species relabeling,
-    // CR/CULL/STDORGCD fills) are model-internal and must not leak
-    // into the returned rows — the join path never touched them.
-    // Stash the originals, restore on output.
-    val stash = Seq("SPCD", "CR", "STDORGCD", "CULL")
-    // one withColumns wave (the stashes are independent) — each
-    // withColumn call re-analyzes the whole post-kernel plan
-    val stashed = dataPrepped.withColumns(
-      Map(stash.map(c0 => s"__orig_$c0" -> col(c0)): _*))
-
-    // three dependency WAVES (not one): SPCD reads the wave-1 STDORGCD
-    // rewrite, and SPCD_DIVISION reads the wave-2 SPCD string — within
-    // a wave every expression evaluates against the wave's INPUT
-    val fiadb0 = stashed
-      .join(broadcast(medCr), Seq("SFTWD_HRDWD", "PROVINCE"), "left")
-      .withColumns(Map(
-        "CRmn" -> when(col("CRmn").isNull && col("SFTWD_HRDWD") === "S", lit(missSft))
-          .when(col("CRmn").isNull && col("SFTWD_HRDWD") === "H", lit(missHwd))
-          .otherwise(col("CRmn")),
-        "BROKEN_TOP" -> !(col("HT") === col("ACTUALHT")),
-        "CR" -> when(col("CR").isNull && col("STATUSCD") === 1, lit(0.0))
-          .otherwise(col("CR")),
-        "STDORGCD" -> when(col("STDORGCD").isNull, lit(0)).otherwise(col("STDORGCD")),
-        "CULL" -> when(col("CULL").isNull, lit(0.0)).otherwise(col("CULL")),
-        "DBH" -> col("DIA"),
-        "THT" -> col("HT")))
-      // planted loblolly/slash -> separate coefficient rows ("1_131");
-      // SPCD becomes a string from here on (SURVEY §7.4.9)
-      .withColumn("SPCD",
-        when(col("SPCD").isin(111, 131) && col("STDORGCD") === 1,
-          concat(lit("1_"), col("SPCD").cast(StringType)))
-          .otherwise(col("SPCD").cast(StringType)))
+    val sft = col("SFTWD_HRDWD")
+    val crmn = RefData.lookup(RefData.medianCrProp)(sft, col("PROVINCE"))
+    val stdorgcd = when(col("STDORGCD").isNull, lit(0)).otherwise(col("STDORGCD"))
+    // planted loblolly/slash have their own coefficient rows ("1_131")
+    val spcd = when(col("SPCD").isin(111, 131) && stdorgcd === 1,
+      concat(lit("1_"), col("SPCD").cast(StringType)))
+      .otherwise(col("SPCD").cast(StringType))
+    val inputs = Map(
+      "DBH" -> col("DIA"), "THT" -> col("HT"),
+      "CR" -> when(col("CR").isNull && col("STATUSCD") === 1, lit(0.0)).otherwise(col("CR")),
+      "CRmn" -> when(crmn.isNull && sft === "S", lit(missSft))
+        .when(crmn.isNull && sft === "H", lit(missHwd)).otherwise(crmn),
+      "CULL" -> when(col("CULL").isNull, lit(0.0)).otherwise(col("CULL")),
+      "BROKEN_TOP" -> !(col("HT") === col("ACTUALHT")),
+      "SPCD" -> spcd,
       // R paste() renders NA as the string "NA"
-      .withColumn("SPCD_DIVISION",
-        concat(col("SPCD"), lit(" "), coalesce(col("DIVISION"), lit("NA"))))
-
-    val predicted = Nsvb.predict(spark, fiadb0)
-    val restored = dataPrepped.columns.toSeq.map {
-      case c0 if stash.contains(c0) => col(s"__orig_$c0").as(c0)
-      case c0 => col(c0)
-    }
-    predicted.select(restored ++ Seq(
-      when(guard, col("BIOMASS")).as("DRYBIO_AG"),
-      when(guard, col("CARBON")).as("CARBON_AG")): _*)
+      "SPCD_DIVISION" -> concat(spcd, lit(" "), coalesce(col("DIVISION"), lit("NA"))),
+      "SPCD_NUMERIC" -> regexp_replace(spcd, "1_", "").cast(DoubleType)) ++
+      Seq("ACTUALHT", "WDSG", "JENKINS_SPGRPCD", "SFTWD_HRDWD", "STANDING_DEAD_CD",
+        "CULL_DECAY_RATIO", "DECAY_WD", "DECAY_BK", "DECAY_BR", "C_FRAC").map(c0 => c0 -> col(c0))
+    val guard = col("JENKINS_SPGRPCD") < 10 && col("HT").isNotNull
+    dataPrepped.select(col("*"), Nsvb.kernel(inputs, Seq("BIOMASS", "CARBON")).as("__nsvb"))
+      .select(dataPrepped.columns.map(col) ++ Seq(
+        when(guard, col("__nsvb.BIOMASS")).as("DRYBIO_AG"),
+        when(guard, col("__nsvb.CARBON")).as("CARBON_AG")): _*)
   }
 
   /** `fia_estimate()` (`R/fia_estimate.R:20-24`). */

@@ -123,17 +123,18 @@ object FiaAnnualize {
     }
   }
 
-  /** TPA range join (30-row broadcast, equi on DESIGNCD + [min_DIA,
-    * max_DIA) residual); SPCD leads, as after the reference's species join. */
-  private def withTpa(spark: SparkSession, annual: DataFrame): DataFrame = {
-    val rules = RefData.tpaRules(spark)
-    val joined = annual.join(
-      broadcast(rules),
-      annual("DESIGNCD") === rules("DESIGNCD") &&
-        annual("DIA") >= rules("min_DIA") && annual("DIA") < rules("max_DIA"),
-      "left")
-      .drop(rules("DESIGNCD")).drop("min_DIA", "max_DIA")
-    joined.select((col("SPCD") +: joined.columns.filterNot(_ == "SPCD").map(col)): _*)
+  /** TPA_UNADJ by the DESIGNCD rules, first rule with DIA in [min_DIA,
+    * max_DIA) (the rules do not overlap, so this is the reference's range
+    * join); SPCD leads, as after the reference's species join. */
+  private def withTpa(annual: DataFrame): DataFrame = {
+    def rule(r: (Int, Double, Double, Double)) =
+      (col("DESIGNCD") === r._1 && col("DIA") >= r._2 && col("DIA") < r._3, lit(r._4))
+    val first = rule(RefData.tpaRules.head)
+    val tpa = RefData.tpaRules.tail.map(rule).foldLeft(when(first._1, first._2)) {
+      case (chain, (cond, value)) => chain.when(cond, value)
+    }
+    annual.select((col("SPCD") +: annual.columns.filterNot(_ == "SPCD").map(col)) :+
+      tpa.as("TPA_UNADJ"): _*)
   }
 
   /** `adjust_mortality`'s masking, row-local. */
@@ -171,12 +172,12 @@ object FiaAnnualize {
       spark: SparkSession, dataTidy: DataFrame,
       mortyr: DataFrame => Column = anyMortyr): DataFrame = {
     val annual = groupPass(dataTidy, variants = true)
-    mask(withTpa(spark, chooseFill(annual, mortyr(annual))))
+    mask(withTpa(chooseFill(annual, mortyr(annual))))
   }
 
   /** expand + interpolate: the group pass without variants. */
   def expandInterpolate(spark: SparkSession, dataTidy: DataFrame): DataFrame =
-    withTpa(spark, groupPass(dataTidy, variants = false))
+    withTpa(groupPass(dataTidy, variants = false))
 
   /** `adjust_mortality(use_mortyr)` over annual rows: the same per-tree
     * rewrite in its own group pass, then the masking. The rows are dense

@@ -1,14 +1,17 @@
 package graft.fia
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types._
 import scala.io.Source
+import scala.reflect.runtime.universe.TypeTag
 
 /** Bundled NSVB reference tables (mirrors `data-raw/prep_internal_data.R:
   * 1-50`): TPA rules, REF_SPECIES, decay/carbon-ratio props, median crown
-  * proportions, and the 9 coefficient tables. All are tiny (≤2,697 rows)
-  * — they load from classpath resources into DataFrames that every join
-  * broadcasts.
+  * proportions, and the 9 coefficient tables. All are tiny (≤2,697 rows):
+  * each is parsed once per JVM from its classpath resource into a map
+  * that expressions look rows up in, so no plan joins them and no job
+  * broadcasts them.
   *
   * CSVs are parsed with a minimal RFC-4180 reader (quoted fields, BOM,
   * "NA"/"Inf" tokens) — no external dependencies.
@@ -70,17 +73,14 @@ object RefData {
     * `fields` (name -> target type); values parsed per type with
     * NA -> null. */
   private[fia] def loadLocal(
-      resource: String, fields: Seq[(String, DataType)],
-      rename: Map[String, String] = Map.empty): (StructType, Seq[Row]) = {
+      resource: String, fields: Seq[(String, DataType)]): (StructType, Seq[Row]) = {
     val (header, rows) = readCsv(resource)
     val idx = fields.map { case (n, _) =>
       val i = header.indexOf(n)
       require(i >= 0, s"$resource missing column $n (has ${header.mkString(",")})")
       i
     }
-    val schema = StructType(fields.map { case (n, t) =>
-      StructField(rename.getOrElse(n, n), t, nullable = true)
-    })
+    val schema = StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) })
     val data = rows.map { r =>
       Row.fromSeq(fields.zip(idx).map { case ((_, t), i) =>
         val raw = if (i < r.length) r(i) else ""
@@ -95,57 +95,71 @@ object RefData {
     (schema, data)
   }
 
-  /** Build a DataFrame from a classpath CSV — a LocalRelation, so every
-    * downstream broadcast is computed driver-side without a job. */
-  private def load(
-      spark: SparkSession, resource: String, fields: Seq[(String, DataType)],
-      rename: Map[String, String] = Map.empty): DataFrame = {
-    val (schema, data) = loadLocal(resource, fields, rename)
-    spark.createDataFrame(java.util.Arrays.asList(data: _*), schema)
-  }
-
   private val base = "/graft/refdata"
 
-  /** DESIGNCD TPA assignment rules (30 rows; `data-raw/DESIGNCD_TPA.csv`). */
-  def tpaRules(spark: SparkSession): DataFrame =
-    load(spark, s"$base/DESIGNCD_TPA.csv", Seq(
+  private def typed[T](r: Row, i: Int): Option[T] = if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+
+  /** DESIGNCD TPA assignment rules (30 rows; `data-raw/DESIGNCD_TPA.csv`),
+    * in CSV order: (DESIGNCD, min_DIA, max_DIA, TPA_UNADJ). */
+  lazy val tpaRules: Seq[(Int, Double, Double, Double)] =
+    loadLocal(s"$base/DESIGNCD_TPA.csv", Seq(
       "DESIGNCD" -> IntegerType, "min_DIA" -> DoubleType,
-      "max_DIA" -> DoubleType, "TPA_UNADJ" -> DoubleType))
+      "max_DIA" -> DoubleType, "TPA_UNADJ" -> DoubleType))._2
+      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
 
-  /** Species reference, columns used by prep_carbon (R/prep_carbon.R:14-21)
-    * + the interpolation woodland check. SPCD kept as string to match the
-    * type it has from prep_carbon onward. */
-  def refSpecies(spark: SparkSession): DataFrame =
-    load(spark, s"$base/REF_SPECIES.csv", Seq(
-      "SPCD" -> StringType, "JENKINS_SPGRPCD" -> IntegerType,
+  /** The REF_SPECIES fields prep_carbon reads (R/prep_carbon.R:14-21), NA
+    * as None; `wdsg` is WOOD_SPGR_GREENVOL_DRYWT. */
+  final case class Species(jenkins: Option[Int], sftwdHrdwd: Option[String],
+      carbonRatioLive: Option[Double], wdsg: Option[Double])
+
+  /** REF_SPECIES by SPCD. */
+  lazy val species: Map[Int, Species] =
+    loadLocal(s"$base/REF_SPECIES.csv", Seq(
+      "SPCD" -> IntegerType, "JENKINS_SPGRPCD" -> IntegerType,
       "SFTWD_HRDWD" -> StringType, "CARBON_RATIO_LIVE" -> DoubleType,
-      "WOOD_SPGR_GREENVOL_DRYWT" -> DoubleType),
-      rename = Map("WOOD_SPGR_GREENVOL_DRYWT" -> "WDSG"))
+      "WOOD_SPGR_GREENVOL_DRYWT" -> DoubleType))._2
+      .collect { case r if !r.isNullAt(0) =>
+        r.getInt(0) -> Species(typed(r, 1), typed(r, 2), typed(r, 3), typed(r, 4))
+      }.toMap
 
-  /** SPCD -> JENKINS_SPGRPCD, parsed driver-side for per-row lookups. */
+  /** SPCD -> JENKINS_SPGRPCD. */
   def jenkinsBySpcd: Map[Int, Int] =
-    loadLocal(s"$base/REF_SPECIES.csv", Seq("SPCD" -> IntegerType, "JENKINS_SPGRPCD" -> IntegerType))
-      ._2.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) => r.getInt(0) -> r.getInt(1) }.toMap
+    species.collect { case (spcd, Species(Some(j), _, _, _)) => spcd -> j }
 
-  /** Decay proportions by (SFTWD_HRDWD, DECAYCD) (10 rows). */
-  def decayProp(spark: SparkSession): DataFrame =
-    load(spark, s"$base/REF_TREE_DECAY_PROP.csv", Seq(
+  /** A REF_SPECIES field at the row's SPCD, as the species join gave it:
+    * null for a null or unknown SPCD. */
+  def speciesField[T: TypeTag](f: Species => Option[T])(spcd: Column): Column =
+    udf((s: Int) => species.get(s).flatMap(f)).apply(spcd)
+
+  /** Decay proportions by (SFTWD_HRDWD, DECAYCD) (10 rows): DENSITY_PROP,
+    * BARK_LOSS_PROP, BRANCH_LOSS_PROP. */
+  lazy val decayProp: Map[(String, Int), Seq[Option[Double]]] =
+    loadLocal(s"$base/REF_TREE_DECAY_PROP.csv", Seq(
       "SFTWD_HRDWD" -> StringType, "DECAYCD" -> IntegerType,
       "DENSITY_PROP" -> DoubleType, "BARK_LOSS_PROP" -> DoubleType,
-      "BRANCH_LOSS_PROP" -> DoubleType))
+      "BRANCH_LOSS_PROP" -> DoubleType))._2
+      .map(r => (r.getString(0), r.getInt(1)) -> (2 to 4).map(typed[Double](r, _))).toMap
 
-  /** Dead-tree carbon ratio by (SFTWD_HRDWD, DECAYCD) (10 rows). */
-  def carbonRatioDead(spark: SparkSession): DataFrame =
-    load(spark, s"$base/REF_TREE_CARBON_RATIO_DEAD.csv", Seq(
+  /** Dead-tree CARBON_RATIO by (SFTWD_HRDWD, DECAYCD) (10 rows). */
+  lazy val carbonRatioDead: Map[(String, Int), Option[Double]] =
+    loadLocal(s"$base/REF_TREE_CARBON_RATIO_DEAD.csv", Seq(
       "SFTWD_HRDWD" -> StringType, "DECAYCD" -> IntegerType,
-      "CARBON_RATIO" -> DoubleType))
+      "CARBON_RATIO" -> DoubleType))._2
+      .map(r => (r.getString(0), r.getInt(1)) -> typed[Double](r, 2)).toMap
 
-  /** Median crown proportion by (Province, SFTWD_HRDWD); hwd_yn N->S,
-    * Y->H (R/estimate_carbon.R:11-13). Keeps CSV order so the UNDEFINED
-    * fallback rows can be read positionally. */
-  def medianCrProp(spark: SparkSession): DataFrame =
-    load(spark, s"$base/median_crprop.csv", Seq(
-      "Province" -> StringType, "hwd_yn" -> StringType, "CRmn" -> DoubleType))
+  /** Median crown proportion CRmn by (SFTWD_HRDWD, Province); hwd_yn N is
+    * S, else H (R/estimate_carbon.R:11-13). */
+  lazy val medianCrProp: Map[(String, String), Option[Double]] =
+    loadLocal(s"$base/median_crprop.csv", Seq(
+      "Province" -> StringType, "hwd_yn" -> StringType, "CRmn" -> DoubleType))._2
+      .map(r => (if (r.getString(1) == "N") "S" else "H", r.getString(0)) -> typed[Double](r, 2))
+      .toMap
+
+  /** A two-part-keyed table's value at the row's key, as a left join gave
+    * it: null when a key part is null or the key is absent. */
+  def lookup[K: TypeTag](table: Map[(String, K), Option[Double]])(
+      a: Column, b: Column): Column =
+    udf((x: String, y: K) => table.get((x, y)).flatten).apply(a, b)
 
   /** The UNDEFINED-province fallbacks (miss_sft, miss_hwd):
     * first/second UNDEFINED row in CSV order (R/estimate_carbon.R:24-36). */
@@ -169,13 +183,8 @@ object RefData {
         "JENKINS_SPGRPCD" -> IntegerType)
   }
 
-  /** One coefficient table (183-424 rows). All coefficient columns the
-    * equations reference exist in the output (missing ones as null
-    * literals are added by the caller when needed). */
-  def coefs(spark: SparkSession, name: String): DataFrame =
-    load(spark, s"$base/coefs/${name}_coefs.csv", coefFields(name))
-
-  /** Same, parsed driver-side (for pre-merging dims without jobs). */
+  /** One coefficient table (183-424 rows): the coefficient columns it
+    * has, then the three fallback-level keys. */
   def coefsLocal(name: String): (StructType, Seq[Row]) =
     loadLocal(s"$base/coefs/${name}_coefs.csv", coefFields(name))
 }

@@ -2197,6 +2197,20 @@ object Upsert {
   def commitTimestamp(tableDir: String, version: Long): Long =
     commitStamp(tableDir, version)._2
 
+  /** Completeness of the versions in `stamped` (version -> holds a
+    * `_commitinfo`): a version is complete when it is stamped or
+    * `logged`, OR it is the CURRENT version (publish follows the build),
+    * OR it predates the table's oldest stamp and holds data files (a
+    * hand-staged base or pre-audit-trail chain). Anything else is an
+    * in-flight or crash-abandoned OCC claim. */
+  private def isComplete(tableDir: String, stamped: Map[Long, Boolean],
+      logged: Long => Boolean): Long => Boolean = {
+    val oldestStamp = stamped.collect { case (v, true) => v }.minOption
+    val current = currentVersion(tableDir)
+    v => stamped(v) || logged(v) || current.contains(v) ||
+      (oldestStamp.forall(v < _) && dataFileExists(s"$tableDir/v$v"))
+  }
+
   /** TIMESTAMP AS OF resolution: the newest COMPLETE version whose
     * commit timestamp is <= `tsMillis`.
     *
@@ -2222,15 +2236,11 @@ object Upsert {
     // version is by construction complete (the entry is written after
     // the build, at publish)
     val logTs = versions.map(v => v -> readCommitLogEntry(tableDir, v).map(_.ts)).toMap
-    val oldestStamp = info.collect { case (v, Some(_)) => v }
-      .minOption
-    val current = currentVersion(tableDir)
     def ts(v: Long): Long = info(v).map(_._2)
       .orElse(logTs(v))
       .getOrElse(dirMtime(s"$tableDir/v$v"))
-    def complete(v: Long): Boolean =
-      info(v).isDefined || logTs(v).isDefined || current.contains(v) ||
-        (oldestStamp.forall(v < _) && dataFileExists(s"$tableDir/v$v"))
+    val complete = isComplete(tableDir, info.map { case (v, i) => v -> i.isDefined },
+      v => logTs(v).isDefined)
     versions.sorted.reverseIterator
       .find(v => ts(v) <= tsMillis && complete(v))
       .getOrElse(throw new IllegalArgumentException(
@@ -2557,8 +2567,9 @@ object Upsert {
     * the versioned COW table becomes a streamable input with zero
     * custom source code. Cost ∝ changed files ([[changeDataFeed]]'s
     * property); the first snapshot's feed is the full snapshot as
-    * inserts. The `from` side is the latest EXISTING version below
-    * `toVersion` (vacuum/replay-safe). A replayed commit rewrites its
+    * inserts. The `from` side is the latest COMPLETE version below
+    * `toVersion` (vacuum/replay-safe; a crashed writer's empty claim dir
+    * is not complete, see [[isComplete]]). A replayed commit rewrites its
     * feed dir (new file names) — downstream delivery is therefore
     * at-least-once; consumers key idempotence off `_commit_version`.
     * It always runs the diff (never reads a feed back, its own
@@ -2579,11 +2590,14 @@ object Upsert {
       feedFilesPerVersion: Int = 0): String = {
     val out = s"$tableDir/_cdf/v$toVersion"
     val prior = snapshotVersions(tableDir).filter(_ < toVersion)
-    val feed =
-      if (prior.isEmpty)
-        readSnapshot(spark, tableDir, toVersion)
-          .withColumn("_change_type", lit("insert"))
-      else diffFeed(spark, tableDir, prior.max, toVersion)
+    val logged = commitLogVersions(tableDir)
+    val base = prior.reverseIterator.find(isComplete(tableDir,
+      prior.map(v => v -> readCommitInfo(s"$tableDir/v$v").isDefined).toMap, logged))
+    val feed = base match {
+      case None =>
+        readSnapshot(spark, tableDir, toVersion).withColumn("_change_type", lit("insert"))
+      case Some(from) => diffFeed(spark, tableDir, from, toVersion)
+    }
     val sized =
       if (feedFilesPerVersion > 0) feed.coalesce(feedFilesPerVersion) else feed
     sized.withColumn("_commit_version", lit(toVersion))

@@ -8,4 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** ANSI division's DIVIDE_BY_ZERO error, as `Divide` raises it. */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -89,4 +89,23 @@ class FeedReadBackSpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(s"$tbl/_cdf/v3/_SUCCESS"), false)
     check(tbl, 2, 3, readBack = false)
   }
+
+  test("a crashed writer's lingering claim is not the base of the next commit's feed") {
+    import spark.implicits._
+    val tbl = java.nio.file.Files.createTempDirectory("feed_claim").toString + "/t"
+    spark.range(50).select($"id", ($"id" * 10).as("v"), concat(lit("s"), $"id").as("s"))
+      .write.parquet(s"$tbl/v0")
+    Fs.writeTextAtomic(Fs.of(tbl, spark), new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
+    Upsert.materializeCdf(spark, tbl, 0L)
+    // v1 claimed and never built; the MERGE publishes v2 past it
+    assert(graft.plans.LakehouseSql.claimNextVersion(tbl) == 1L)
+    Seq((5L, -1L, "m"), (70L, 7L, "m")).toDF("id", "v", "s").createOrReplaceTempView("claim_v2")
+    merge(tbl, "claim_v2")
+    assert(Upsert.currentVersion(tbl).contains(2L))
+    Upsert.materializeCdf(spark, tbl, 2L)
+    val feed = graft.ops.Layout.readParquet(spark, Seq(s"$tbl/_cdf/v2")).drop("_commit_version")
+    val want = Upsert.changeDataFeed(spark, tbl, 0L, 2L)
+    assert(sorted(want).nonEmpty)
+    assert(sorted(feed) == sorted(want))
+  }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -8,6 +10,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.fia.{EstimateCarbon, FiaAnnualize, NsvbKernel, SyntheticState, Tidy}
 
 /** Composed-pipeline gate at bench scale: the XX fixture (EntrySpec)
   * proves the pipeline's semantics on 66 rows; this pins the SAME
@@ -118,5 +121,44 @@ class PipelineScaleSpec extends AnyFunSuite {
     // Exchange on (plot_ID, tree_ID); the TPA range join and the
     // species-threshold join stay broadcast (no extra shuffle)
     assert(k == t + 1, s"kernel shuffles $k vs tidy $t — expected exactly one more")
+  }
+
+  test("the FIA plans hold no Join above tidy's") {
+    def joins(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+    val tabs = SyntheticState.tables(spark, 6000)
+    val tidy = Tidy.fiaTidy(tabs)
+    for (df <- Seq(graft.fia.Incremental.bothVariants(spark, tabs),
+        FiaAnnualize.annualize(spark, tidy)))
+      assert(joins(df) == joins(tidy), s"${joins(df)} joins vs tidy's ${joins(tidy)}")
+  }
+
+  test("the estimate is one kernel call and its field extraction; prep and estimate keep their schemas") {
+    val tabs = SyntheticState.tables(spark, 6000)
+    val prepped = EstimateCarbon.prepCarbon(spark,
+      FiaAnnualize.bothVariants(spark, Tidy.fiaTidy(tabs)))
+    // the schemas the reference's joins gave (key columns first)
+    def render(df: org.apache.spark.sql.DataFrame): String = df.schema.fields
+      .map(f => s"${f.name}:${f.dataType.typeName}${if (f.nullable) "" else "!"}").mkString(", ")
+    val prepSchema = "DECAYCD:integer, SFTWD_HRDWD:string, SPCD:integer, plot_ID:string, " +
+      "tree_ID:string, YEAR:integer, PLT_CN:string, DESIGNCD:integer, INTENSITY:integer, " +
+      "CONDID:integer, MORTYR:integer, STATUSCD:integer, RECONCILECD:integer, " +
+      "STANDING_DEAD_CD:integer, DIA:double, CR:double, HT:double, ACTUALHT:double, " +
+      "CULL:double, ECOSUBCD:string, CONDPROP_UNADJ:double, PROP_BASIS:string, " +
+      "COND_STATUS_CD:integer, STDORGCD:integer, interpolated:boolean!, variant:string!, " +
+      "TPA_UNADJ:double, JENKINS_SPGRPCD:integer, CARBON_RATIO_LIVE:double, WDSG:double, " +
+      "CULL_DECAY_RATIO:double, DENSITY_PROP:double, BARK_LOSS_PROP:double, " +
+      "BRANCH_LOSS_PROP:double, CARBON_RATIO:double, DECAY_WD:double, DIVISION:string, " +
+      "PROVINCE:string, DECAY_BK:double, C_FRAC:double, DECAY_BR:double"
+    assert(render(prepped) == prepSchema)
+    // over an opaque leaf, so only the estimate's own operators remain
+    val leaf = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], prepped.schema)
+    val est = EstimateCarbon.estimateCarbon(spark, leaf)
+    assert(render(est) == prepSchema + ", DRYBIO_AG:double, CARBON_AG:double")
+    val plan: LogicalPlan = est.queryExecution.optimizedPlan
+    assert(plan.collect { case p => p.nodeName } == Seq("Project", "Project", "LogicalRDD"),
+      plan.treeString)
+    val kernels = plan.collect { case p => p.expressions.flatMap(_.collect { case k: NsvbKernel => k }) }
+    assert(kernels.map(_.size) == Seq(0, 1, 0), plan.treeString)
   }
 }
