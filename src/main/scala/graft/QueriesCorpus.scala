@@ -1280,20 +1280,23 @@ object QueriesCorpus {
         Queries.dsum(col("o_totalprice"), 2).as("sum_price"))
   }
 
-  // --- bloom point-lookup pruning (ops.Bloom.writeSidecar /
-  //     readPruned): the staged copy is UNCLUSTERED (round-robin),
-  //     so min/max stats prune nothing — the per-file bloom still skips
+  // --- bloom point-lookup pruning (ops.Bloom.write / readPruned):
+  //     the gate's own UNCLUSTERED (round-robin) copy of orders, written
+  //     with a Parquet Bloom filter on o_orderkey in every file, so
+  //     min/max stats prune nothing — the per-file filter still skips
   //     most files for a point-key set. Probe keys are every 1009th
   //     orderkey (deterministic, oracle-expressible); the gate returns
   //     the looked-up rows, which must equal the plain SQL point lookup
   //     regardless of which files the bloom read (false positives read
   //     bytes, never change answers).
   private def bloomPrune(s: SparkSession, dir: String): DataFrame = {
-    val tbl = ordersClone(s, dir, "bloom", clustered = false) + "/table"
+    val tbl = Fixtures.once(s, dir, "bloom") { p =>
+      graft.ops.Bloom.write(Tables.orders(s, dir).repartition(16).write, Seq("o_orderkey"))
+        .parquet(p)
+    }
     val keys = Tables.orders(s, dir)
       .filter(col("o_orderkey") % 1009 === 0)
       .select(col("o_orderkey")).collect().map(_.getLong(0)).toSeq
-    graft.ops.Bloom.writeSidecar(s, tbl, "o_orderkey")
     val (data, nFiles, nHit) = graft.ops.Bloom.readPruned(s, tbl, "o_orderkey", keys)
     require(nFiles == 16 && nHit <= nFiles,
       s"bloom prune shape unexpected: $nHit of $nFiles files")
@@ -1399,19 +1402,19 @@ object QueriesCorpus {
       |  FROM c)
       |WHERE rn = 1""".stripMargin
 
-  // --- incremental Bloom maintenance (Bloom.writeSidecar +
-  //     Upsert commit carry): build the point-lookup index ONCE on v0,
-  //     commit a delivery, probe the v1 snapshot through the CARRIED
-  //     sidecar — linked files kept their filter words, only the files
-  //     the commit wrote got an aggregation pass (poison-pill-proven in
-  //     UpsertSpec; this gate pins that the carried index still answers
-  //     point lookups exactly, across untouched, rewritten, and
-  //     appended files).
+  // --- incremental Bloom maintenance (Bloom.write + the commit's
+  //     fresh write): v0 is written ONCE with a Parquet Bloom filter on
+  //     o_orderkey, a delivery is committed, and the v1 snapshot is
+  //     probed — linked files keep the filter inside their bytes, and
+  //     the files the commit wrote filter what their source filtered
+  //     (UpsertSpec proves every fresh file carries one; this gate pins
+  //     that the lookup still answers exactly, across untouched,
+  //     rewritten, and appended files).
   private def bloomCarry(s: SparkSession, dir: String): DataFrame = {
-    val seed = ordersSeed(s, dir)
     val base = Fixtures.once(s, dir, "bloomcarry") { b =>
-      graft.ops.Upsert.cloneSnapshot(s, seed, s"$b/chain/v0")
-      graft.ops.Bloom.writeSidecar(s, s"$b/chain/v0", "o_orderkey")
+      graft.ops.Bloom.write(Tables.orders(s, dir).repartitionByRange(16, col("o_orderkey"))
+        .sortWithinPartitions(col("o_orderkey")).write, Seq("o_orderkey"))
+        .parquet(s"$b/chain/v0")
     }
     val v0 = s"$base/chain/v0"
     val orders = s.read.parquet(v0)

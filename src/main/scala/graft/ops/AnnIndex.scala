@@ -113,13 +113,14 @@ object AnnIndex {
     // per file) instead of capping at the cell count, which is what
     // makes the maintenance layer's file-granular rewrite
     // delta-proportional at any scale
-    enc.repartitionByRange(numRangePartitions, col("cell"), col("id"))
-      .sortWithinPartitions(col("cell"), col("id"))
-      .write.mode("overwrite").parquet(s"$path/codes.parquet")
+    // every codes file carries an `id` Bloom filter: what makes the
+    // maintenance layer's candidate selection metadata-only (see
+    // [[candidateCodes]])
+    Bloom.write(enc.repartitionByRange(numRangePartitions, col("cell"), col("id"))
+        .sortWithinPartitions(col("cell"), col("id"))
+        .write.mode("overwrite"), Seq("id"))
+      .parquet(s"$path/codes.parquet")
     enc.unpersist(false)
-    // per-file id Bloom sidecar: what makes the maintenance layer's
-    // candidate selection metadata-only (see [[rewriteCodesDelta]])
-    Bloom.writeCodes(spark, path, since = None)
     val qerr = Option(obs.get.getOrElse("qerr_mean", null)) // null on an empty corpus
       .map(_.asInstanceOf[Double])
     writeMarker(path, Marker(cb.length, cb(0).length, qerrBase = qerr)
@@ -421,17 +422,15 @@ object AnnIndex {
         (tbl, cur, idCol, mode)
       }
     if (!retryOfLanded) {
-      val codesDir = s"$path/codes.parquet"
-      val before = Layout.listDataFiles(spark, codesDir).toSet
-      Similarity.pqEncode(
+      Bloom.write(Similarity.pqEncode(
           Similarity.nearestCell(
             delta.select(col("id"), col("embedding")), idx.centroids),
           "embedding", idx.codebook)
         .select(col("id"), col("cell"), col("codes"))
         .repartitionByRange(numRangePartitions, col("cell"), col("id"))
         .sortWithinPartitions(col("cell"), col("id"))
-        .write.mode("append").parquet(codesDir)
-      Bloom.writeCodes(spark, path, Some(before))
+        .write.mode("append"), Seq("id"))
+        .parquet(s"$path/codes.parquet")
     }
     advance.foreach { case (tbl, v, idCol, mode) =>
       writeMarker(path, marker.stampedAt(Some((tbl, v, idCol)), Some(mode)))
@@ -531,11 +530,47 @@ object AnnIndex {
     if (allVerified) "verified" else "assumed"
   }
 
-  /** The Bloom prune behind [[rewriteCodesDelta]], the touched ids'
-    * probe collected under `cap`; package-private for the spec. */
-  private[graft] def bloomPruneCodes(spark: SparkSession, path: String,
-      files: Seq[String], touched: DataFrame, cap: Int = Bloom.MaxProbe): Seq[String] =
-    Bloom.pruneCodes(spark, path, files, Bloom.collectProbe(touched, "id", cap))
+  /** ANN probe-size cap: a wave of at most this many touched ids
+    * rides to the driver for the Bloom leg of [[candidateCodes]]; a
+    * larger wave would hit most files anyway and skips it. */
+  private[graft] val MaxProbe = 100000
+
+  /** The codes `files` that may hold an id of `touched`, from ONE
+    * per-file footer pass ([[Upsert.footerFacts]]; on the driver for a
+    * few files, distributed past Upsert's bound) that answers both
+    * legs: the file's `id` Bloom filter probed with the wave's ids
+    * (collected in one capped job) and, for an integral id, the file's
+    * id bounds against the wave's range. Conservative: a file without
+    * a filter, with an unreadable one or with unknown bounds is a
+    * candidate, and a wave past `cap` ids skips the Bloom leg (its
+    * range then costs one agg job). */
+  private[graft] def candidateCodes(spark: SparkSession, codesDir: String,
+      files: Seq[String], touched: DataFrame, cap: Int = MaxProbe): Seq[String] = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val integralId = touched.schema("id").dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    val ids = Some(touched.select(col("id")).limit(cap + 1).collect().map(_.get(0)))
+      .filter(_.length <= cap).map(_.filter(_ != null))
+    val range: Option[(Long, Long)] =
+      if (!integralId) None
+      else ids match {
+        case Some(a) =>
+          val l = a.map(_.asInstanceOf[Number].longValue)
+          if (l.isEmpty) None else Some((l.min, l.max))
+        case None =>
+          val r = touched.agg(min(col("id")).cast("long"), max(col("id")).cast("long")).head()
+          if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+      }
+    if (integralId && range.isEmpty) Seq.empty // no non-null touched id
+    else Upsert.footerFacts(spark, files, if (integralId) Seq("id" -> LongType) else Nil,
+        codesDir, ids.map(Bloom.Probe("id", _)))
+      .collect { case f if !f.mayHold.contains(false) && range.forall { case (lo, hi) =>
+          // no row: the file holds no non-null id
+          f.bounds.exists { case (_, _, mn, mx) =>
+            mn == null || (mx.toLong >= lo && mn.toLong <= hi) } } => f.file }
+  }
 
   /** FILE-GRANULAR codes rewrite — the maintenance kernel behind
     * [[reconcile]] and [[applyCdf]]: drop every `touched` id's old
@@ -548,23 +583,19 @@ object AnnIndex {
     * files the delta touches, not the corpus.
     *
     * Cost shape, leg by leg:
-    *   - Bloom prune: ONE read of the `codes_bloom.parquet` sidecar
-    *     (per-file id Bloom filters, maintained by every codes
-    *     writer) excludes files that definitely hold no touched id —
-    *     metadata-only, works for ANY id type, and for a small wave
-    *     cuts both later legs to the true hit set. Conservative
-    *     everywhere: a file without a filter row, an unreadable
-    *     sidecar, or a wave past [[Bloom.MaxProbe]] ids just skips the
-    *     prune (pre-sidecar indexes behave exactly as before);
-    *   - bounds prune: one parallel FOOTER pass over the surviving
-    *     files (KB per file) keeps only files whose typed id bounds
-    *     can hold a touched id — exact only for integral ids, so
-    *     other id types skip this leg, never the membership scan;
+    *   - candidates ([[candidateCodes]]): ONE footer pass per codes
+    *     file (KB each) answers both bounds and membership: the `id`
+    *     Bloom filter every codes writer puts in each file excludes
+    *     files that definitely hold no touched id (any id type), and
+    *     for an integral id the file's id bounds must reach the wave's
+    *     range. Conservative: a file without a filter, an unreadable
+    *     filter or a wave past [[MaxProbe]] ids just skips the Bloom
+    *     leg;
     *   - membership: one column-pruned scan of the candidates' `id`
     *     column against the (delivery-sized) touched set — the only
     *     potentially corpus-proportional leg, now bounded by the
-    *     Bloom hit set (plus ~2% false positives) instead of the
-    *     corpus;
+    *     candidate set (the hit files plus the filters' false
+    *     positives) instead of the corpus;
     *   - rewrite: full-row read of ONLY the hit files, anti-join,
     *     union the new codes, land as fresh (cell,id)-clustered files
     *     beside the survivors, then delete the hit files.
@@ -586,57 +617,16 @@ object AnnIndex {
       newCodes: Option[DataFrame], numRangePartitions: Int,
       marker: Marker): Long = {
     import org.apache.hadoop.fs.{Path => HPath}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val codesDir = s"$path/codes.parquet"
     val allFiles = Layout.listDataFiles(spark, codesDir)
-    val integralId = touched.schema("id").dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
     // Materialize the touched set ONCE: it feeds the capped driver
-    // collect below, the membership join, and (through the tagged
-    // frame) the survivor anti-join — for reconcile the set is an
-    // index-wide anti-join whose subtree previously re-executed per
-    // consumer (membership, then twice under the range write's
+    // collect of the candidate pass, the membership join, and (through
+    // the tagged frame) the survivor anti-join — for reconcile the set
+    // is an index-wide anti-join whose subtree previously re-executed
+    // per consumer (membership, then twice under the range write's
     // boundary sampling; guide §1.2).
     val touchedChk = touched.localCheckpoint()
-    // ONE capped job collects (id, h1, h2): the Bloom probe hashes AND
-    // the id bounds ride the same delivery-sized collect — previously
-    // three separate jobs (cap probe, hash collect, min/max agg)
-    val probeRows = Bloom.collectProbe(touchedChk, "id")
-    // Bloom first: one sidecar read can exclude most files before the
-    // per-file footer pass even starts — on an object store that is
-    // the difference between one RPC and one per file
-    val files = Bloom.pruneCodes(spark, path, allFiles, probeRows)
-    val candidates: Seq[String] =
-      if (!integralId) files
-      else {
-        // typed id bounds of the wave: driver-side off the capped
-        // collect when it fit, one agg job past the cap (min/max over
-        // non-null ids — identical to the old agg-with-cast)
-        val bounds0: Option[(Long, Long)] = probeRows match {
-          case Some(rows) =>
-            val ids = rows.iterator.map(_.get(0))
-              .filter(_ != null).map(_.asInstanceOf[Number].longValue).toSeq
-            if (ids.isEmpty) None else Some((ids.min, ids.max))
-          case None =>
-            val r = touchedChk.agg(
-              min(col("id")).cast("long"), max(col("id")).cast("long")).head()
-            if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-        }
-        bounds0 match {
-          case None => Seq.empty
-          case Some((tmin, tmax)) =>
-            // (file, id-min, id-max) per candidate file from the commit
-            // engine's footer fold (driver-side for a few-files wave,
-            // distributed past Upsert's bound); a file without a non-null
-            // id has no row, one with unknown id stats NULL bounds (kept)
-            val byRel = files.map(f => Upsert.relPath(codesDir, f) -> f).toMap
-            Upsert.footerBounds(spark, files, Seq("id" -> LongType), codesDir)
-              .collect { case (rel, _, mn, mx)
-                  if mn == null || (mx.toLong >= tmin && mn.toLong <= tmax) => byRel(rel) }
-        }
-      }
+    val candidates = candidateCodes(spark, codesDir, allFiles, touchedChk)
     // ONE column-pruned read of the candidate files serves BOTH the
     // exact membership test and the survivor rows: each candidate row
     // is tagged with its file and whether the wave touched it, then
@@ -662,7 +652,7 @@ object AnnIndex {
     def canon(s: String): String = new HPath(s).toUri.getPath
     val hitFilesRaw = hitCounts.map(_.getString(0)).toSeq
     val hitKeys = hitFilesRaw.map(canon).toSet
-    val toRewrite = files.filter(f => hitKeys.contains(canon(f)))
+    val toRewrite = candidates.filter(f => hitKeys.contains(canon(f)))
     val kept =
       if (toRewrite.isEmpty) None
       else tagged.map(_.filter(col("__t").isNull &&
@@ -675,14 +665,10 @@ object AnnIndex {
     // land the replacement BESIDE the survivors (the read above is by
     // explicit file path, so appending into the same directory is
     // safe), then drop the hit files
-    pieces.reduceOption(_ unionByName _).foreach(
-      _.repartitionByRange(numRangePartitions, col("cell"), col("id"))
+    pieces.reduceOption(_ unionByName _).foreach(p =>
+      Bloom.write(p.repartitionByRange(numRangePartitions, col("cell"), col("id"))
         .sortWithinPartitions(col("cell"), col("id"))
-        .write.mode("append").parquet(codesDir))
-    // Bloom rows for the files just landed (∝ the delta, like the
-    // rewrite itself); the deleted files' rows stay behind harmlessly
-    // until optimize's sidecar rebuild
-    Bloom.writeCodes(spark, path, Some(allFiles.toSet))
+        .write.mode("append"), Seq("id")).parquet(codesDir))
     toRewrite.foreach(f => fs.delete(new HPath(f), false))
     writeMarker(path, marker)
     tagged.foreach(_.unpersist(false))
@@ -931,13 +917,9 @@ object AnnIndex {
       .repartitionByRange(numRangePartitions, col("cell"), col("id"))
       .sortWithinPartitions(col("cell"), col("id"))
     fs.delete(markerPath(path), false) // unreadable during the swap — loud, not stale
-    clustered.write.mode("append").parquet(codesDir)
+    Bloom.write(clustered.write.mode("append"), Seq("id")).parquet(codesDir)
     before.foreach(f => fs.delete(new HPath(f), false))
     val after = Layout.listDataFiles(spark, codesDir)
-    // sidecar compaction point: maintenance passes append Bloom rows
-    // and leave deleted files' rows behind; the rebuild here drops
-    // them along with the files
-    Bloom.writeCodes(spark, path, since = None)
     writeMarker(path, marker)
     (before.size, after.size)
   }

@@ -102,6 +102,11 @@ object Layout {
       .saveAsTable(table)
   }
 
+  /** The Bloom-filtered columns of a rewrite's source `files` (one
+    * footer): compaction and OPTIMIZE filter what their source filters. */
+  private def filtered(spark: SparkSession, files: Seq[String]): Seq[String] =
+    Bloom.columnsOf(readFooter(spark.sparkContext.hadoopConfiguration, files.head))
+
   /** Compact a directory of small parquet files into ≈`targetBytes`
     * outputs — the other half of layout hygiene at scale: a 100 TB
     * table accreted from streaming micro-batches or incremental
@@ -128,7 +133,8 @@ object Layout {
     // the returned count is what actually landed on disk.
     val nReq = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val df = Upsert.readSnapshotData(spark, inPath) // sidecar, else mergeSchema (evolved-column safety)
-    df.coalesce(nReq).write.mode("overwrite").parquet(outPath)
+    Bloom.write(df.coalesce(nReq).write.mode("overwrite"), filtered(spark, files))
+      .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
     (nIn, listDataFiles(spark, outPath).size, total)
   }
@@ -154,9 +160,9 @@ object Layout {
     val total = totalBytes(spark, files)
     val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val df = Upsert.readSnapshotData(spark, inPath) // sidecar, else mergeSchema (evolved-column safety)
-    df.repartitionByRange(nOut, col(sortCol))
-      .sortWithinPartitions(col(sortCol))
-      .write.mode("overwrite").parquet(outPath)
+    Bloom.write(df.repartitionByRange(nOut, col(sortCol))
+        .sortWithinPartitions(col(sortCol)).write.mode("overwrite"), filtered(spark, files))
+      .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
     var written = 0
     val it = fs.listFiles(new HPath(outPath), true)
@@ -192,11 +198,12 @@ object Layout {
     val total = totalBytes(spark, files)
     val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val df = Upsert.readSnapshotData(spark, inPath) // sidecar, else mergeSchema (evolved-column safety)
-    df.withColumn("__z", zOrderValue(col(colA), col(colB), bits))
-      .repartitionByRange(nOut, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(outPath)
+    Bloom.write(df.withColumn("__z", zOrderValue(col(colA), col(colB), bits))
+        .repartitionByRange(nOut, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop("__z")
+        .write.mode("overwrite"), filtered(spark, files))
+      .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
     var written = 0
     val it = fs.listFiles(new HPath(outPath), true)
@@ -364,12 +371,11 @@ object Layout {
 
   /** The one read of engine-written parquet: the schema resolves
     * without a Spark job. Spark's own inference opens a footer inside a
-    * one-task job per read — a fixed cost every index load, Bloom probe,
-    * `_dv` read and change-feed leg used to pay. The schema, in order:
+    * one-task job per read — a fixed cost every index load, `_dv`
+    * read and change-feed leg used to pay. The schema, in order:
     *
     *   1. `schema`, when the caller knows it — a snapshot's
-    *      `_schema.json` (`Upsert.readSchemaSidecar`) or a fixed
-    *      artifact shape (the Bloom sidecar row);
+    *      `_schema.json` (`Upsert.readSchemaSidecar`);
     *   2. with `mergeSchema`, Spark's merged inference over every file
     *      (a sidecar-less snapshot whose files may predate an
     *      evolution — `Upsert.readSnapshotData`'s fallback);
@@ -406,15 +412,23 @@ object Layout {
       .collect { case s: org.apache.spark.sql.types.StructType => s }
 
   /** One parquet file's footer (row-group metadata and column stats;
-    * no data pages) — the single footer reader behind
-    * [[parquetFileStatsFor]], the commit engine's bounds fold
-    * (`Upsert.footerBounds`) and [[readParquet]]'s schema. */
+    * no data pages) — behind [[parquetFileStatsFor]], [[readParquet]]'s
+    * schema and `Bloom.columnsOf`. */
   private[graft] def readFooter(
       conf: org.apache.hadoop.conf.Configuration, file: String)
-      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    withFooter(conf, file)(_.getFooter)
+
+  /** `use` over one parquet file opened for its footer — the single
+    * footer open: [[readFooter]], and the commit engine's per-file
+    * pass (`Upsert.footerFacts`), which reads the bounds and probes
+    * the Bloom filters in the same open. */
+  private[graft] def withFooter[T](
+      conf: org.apache.hadoop.conf.Configuration, file: String)(
+      use: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(file), conf))
-    try reader.getFooter finally reader.close()
+    try use(reader) finally reader.close()
   }
 }

@@ -152,34 +152,54 @@ object Upsert {
       keys: Seq[(String, DataType)], root: String,
       maxDriverFiles: Int = DriverFooterMaxFiles)
       : Seq[(String, String, String, String)] = {
-    val rels = files.map(f => (f, relPath(root, f)))
+    val rels = files.map(f => relPath(root, f))
     val (pKeys, dKeys) = keys.partition { case (k, _) =>
-      rels.nonEmpty &&
-        rels.forall { case (_, rel) => partitionValueOf(rel, k).isDefined }
+      rels.nonEmpty && rels.forall(rel => partitionValueOf(rel, k).isDefined)
     }
-    val pRows = for ((k, _) <- pKeys; (_, rel) <- rels) yield {
+    val pRows = for ((k, _) <- pKeys; rel <- rels) yield {
       val v = partitionValueOf(rel, k).get
       (rel, k, v, v)
     }
-    val dRows =
-      if (dKeys.isEmpty) Nil
-      else if (rels.size <= maxDriverFiles) {
-        val conf = spark.sparkContext.hadoopConfiguration
-        rels.flatMap { case (f, rel) => foldFooter(conf, f, rel, dKeys) }
-      } else {
-        // the session's hadoopConfiguration travels to the executors:
-        // a bare `new Configuration()` would drop fs.s3a/hdfs settings
-        val serConf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sparkContext.hadoopConfiguration)
-        val par = math.min(rels.size, spark.sparkContext.defaultParallelism)
-        spark.sparkContext.parallelize(rels, math.max(1, par))
-          .mapPartitions { it =>
-            val conf = serConf.value
-            it.flatMap { case (f, rel) => foldFooter(conf, f, rel, dKeys) }
-          }
-          .collect().toSeq
-      }
-    pRows ++ dRows
+    pRows ++ footerFacts(spark, files, dKeys, root, None, maxDriverFiles).flatMap(_.bounds)
+  }
+
+  /** One file's footer pass: its bounds rows for the data-column keys
+    * ([[foldFooter]]) and, under a probe, whether its Bloom filters say
+    * it may hold a probed key (`Bloom.mayHold`; None = no filter or an
+    * unreadable one, a candidate). */
+  private[graft] final case class FooterFacts(
+      file: String, bounds: Seq[(String, String, String, String)],
+      mayHold: Option[Boolean])
+
+  /** The ONE per-file footer pass behind [[footerBounds]], the Bloom
+    * point lookup (`Bloom.readPruned`) and the ANN index's candidate
+    * files: each footer is opened ONCE for every data-column key and
+    * the probe. No keys and no probe read nothing. Placement: on the
+    * driver at or below `maxDriverFiles` files (metadata calls, no
+    * Spark job), else one `mapPartitions` over the file list,
+    * collected; both run the same per-file code. */
+  private[graft] def footerFacts(
+      spark: SparkSession, files: Seq[String],
+      keys: Seq[(String, DataType)], root: String, probe: Option[Bloom.Probe],
+      maxDriverFiles: Int = DriverFooterMaxFiles): Seq[FooterFacts] = {
+    val rels = files.map(f => (f, relPath(root, f)))
+    if (keys.isEmpty && probe.isEmpty) files.map(FooterFacts(_, Nil, None))
+    else if (rels.size <= maxDriverFiles) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      rels.map { case (f, rel) => foldFooter(conf, f, rel, keys, probe) }
+    } else {
+      // the session's hadoopConfiguration travels to the executors:
+      // a bare `new Configuration()` would drop fs.s3a/hdfs settings
+      val serConf = new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      val par = math.min(rels.size, spark.sparkContext.defaultParallelism)
+      spark.sparkContext.parallelize(rels, math.max(1, par))
+        .mapPartitions { it =>
+          val conf = serConf.value
+          it.map { case (f, rel) => foldFooter(conf, f, rel, keys, probe) }
+        }
+        .collect().toSeq
+    }
   }
 
   /** ONE file's footer folded for every data-column key: per key, the
@@ -192,16 +212,18 @@ object Upsert {
     * file as untouched (an evict key never equals NULL) and a
     * comparison-predicate pruned read skips it (a comparison never
     * matches NULL) — both correct. Stats that are missing or do not
-    * cast make the bounds UNKNOWN: a (NULL, NULL) row, never pruned. */
+    * cast make the bounds UNKNOWN: a (NULL, NULL) row, never pruned.
+    * The probe runs in the same open. */
   private def foldFooter(
       conf: org.apache.hadoop.conf.Configuration, file: String, rel: String,
-      keys: Seq[(String, DataType)]): Seq[(String, String, String, String)] = {
+      keys: Seq[(String, DataType)], probe: Option[Bloom.Probe])
+      : FooterFacts = Layout.withFooter(conf, file) { reader =>
     import scala.jdk.CollectionConverters._
     val typeOf = keys.toMap
     val lo = scala.collection.mutable.Map.empty[String, Comparable[Any]]
     val hi = scala.collection.mutable.Map.empty[String, Comparable[Any]]
     val unknown = scala.collection.mutable.Set.empty[String]
-    for (bg <- Layout.readFooter(conf, file).getBlocks.asScala;
+    for (bg <- reader.getFooter.getBlocks.asScala;
          cc <- bg.getColumns.asScala;
          k = cc.getPath.toDotString;
          t <- typeOf.get(k)) {
@@ -217,10 +239,10 @@ object Upsert {
         }
       }
     }
-    keys.collect {
+    FooterFacts(file, keys.collect {
       case (k, _) if unknown(k) => (rel, k, null, null)
       case (k, _) if lo.contains(k) => (rel, k, lo(k).toString, hi(k).toString)
-    }
+    }, probe.flatMap(Bloom.mayHold(reader, _)))
   }
 
   /** `k` inside a manifest row's `[mn, mx]` as `t`; NULL is unbounded. */
@@ -751,9 +773,10 @@ object Upsert {
 
   /** SHALLOW CLONE (Delta `CLONE` semantics): a new, independent table
     * whose data files are hard links into the source snapshot — O(1)
-    * metadata per file, zero data bytes moved — with the `_manifest`
-    * and `_bloom` sidecars carried verbatim (the files they describe
-    * are byte-identical by construction). The clone diverges freely
+    * metadata per file, zero data bytes moved, each file's Bloom
+    * filters with it — with the `_manifest` and `_dv` sidecars carried
+    * verbatim (the files they describe are byte-identical by
+    * construction). The clone diverges freely
     * from the source afterwards: COW commits on either side never
     * mutate shared bytes, so neither table can corrupt the other.
     *
@@ -772,7 +795,7 @@ object Upsert {
     // and let a concurrent claimer grab the same number)
     clearLeftovers(ofs, out)
     linkOrCopyAll(spark, all, tablePath, outPath)
-    for (sc <- Seq("_manifest", Bloom.TableDir, "_dv")) {
+    for (sc <- Seq("_manifest", "_dv")) {
       val fs = sidecarFiles(spark, tablePath, sc)
       if (fs.nonEmpty) linkOrCopyAll(spark, fs, s"$tablePath/$sc", s"$outPath/$sc")
     }
@@ -920,10 +943,8 @@ object Upsert {
     val ofs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     clearLeftovers(ofs, out)
     linkOrCopyAll(spark, all, tablePath, outPath)
-    for (sc <- Seq("_manifest", Bloom.TableDir)) {
-      val fs = sidecarFiles(spark, tablePath, sc)
-      if (fs.nonEmpty) linkOrCopyAll(spark, fs, s"$tablePath/$sc", s"$outPath/$sc")
-    }
+    val mf = sidecarFiles(spark, tablePath, "_manifest")
+    if (mf.nonEmpty) linkOrCopyAll(spark, mf, s"$tablePath/_manifest", s"$outPath/_manifest")
     // a DV commit never changes the logical schema — carry the sidecar
     readSchemaSidecar(tablePath).foreach(writeSchemaSidecar(outPath, _))
     val prevDv = new HPath(dvDir(tablePath))
@@ -1339,10 +1360,13 @@ object Upsert {
     // a Hive layout keeps its directory scheme: fresh files land under
     // the same partition dirs (partitionBy), so linked and rewritten
     // files read back as ONE consistent partitioned table
+    // fresh files filter the columns the source files filter (one
+    // footer read): the data decides, no opt-in record
     rewritten.foreach { rw =>
-      val sized = rw.coalesce(math.max(1, touched.size))
-      if (partCols.isEmpty) sized.write.mode("append").parquet(outPath)
-      else sized.write.mode("append").partitionBy(partCols: _*).parquet(outPath)
+      val w = Bloom.write(rw.coalesce(math.max(1, touched.size)).write.mode("append"),
+        Bloom.columnsOf(Layout.readFooter(spark.sparkContext.hadoopConfiguration, all.head)))
+      if (partCols.isEmpty) w.parquet(outPath)
+      else w.partitionBy(partCols: _*).parquet(outPath)
     }
 
     // Commit the NEW snapshot's manifest sidecar: bounds for the linked
@@ -1402,11 +1426,6 @@ object Upsert {
       touched = touched,
       fresh = freshFiles.map(f => relPath(outPath, f)),
       freshBounds = freshLead))
-
-    // Bloom carry, flat layouts only (basename-keyed), and only this
-    // commit's keys: another key's filters would miss the fresh files
-    if (partCols.isEmpty) Bloom.carry(spark, tablePath, outPath,
-      Bloom.params(spark, tablePath).filter { case (k, _) => keyCols.contains(k) }, touched, freshFiles)
 
     // Schema sidecar: output logical schema = input's plus any new
     // columns the append carried (allowSchemaEvolution unions them;
@@ -2163,13 +2182,6 @@ object Upsert {
           .write.mode("overwrite").parquet(manifestDir(outDir))
         writeManifestKeys(spark, outDir, shared, atomic = false) // pre-publish
       case _ => ()
-    }
-    // Bloom: keys both sides filter with equal params; fresh rows from the loser
-    if ((touchedL ++ freshL).forall(!_.contains('/'))) {
-      val cp = Bloom.params(spark, currentDir)
-      val lp = if (cp.isEmpty) cp else Bloom.params(spark, loserDir)
-      Bloom.carry(spark, currentDir, outDir, cp.filter { case (k, p) => lp.get(k).contains(p) },
-        touchedL, freshL.toSeq, builtIn = Some(loserDir))
     }
     readSchemaSidecar(loserDir).foreach(writeSchemaSidecar(outDir, _))
     readCommitInfo(loserDir).foreach { case (op, _, stats) =>

@@ -961,9 +961,10 @@ case class GraftHistoryCommand(tableDirRef: String) extends LeafRunnableCommand 
 /** `DESCRIBE DETAIL '<dir>'` — one-row table-level summary (Delta's
   * everyday introspection verb next to DESCRIBE HISTORY): resolves a
   * versioned dir through CURRENT (a plain snapshot dir describes
-  * itself), and reports file/byte counts plus which sidecars ride the
-  * resolved snapshot and who owns the table. Metadata-only — file
-  * listings and size sums, no Spark job over data. */
+  * itself), and reports file/byte counts, which sidecars ride the
+  * resolved snapshot, whether its files carry Bloom filters (one
+  * footer) and who owns the table. Metadata-only — file listings,
+  * size sums and one footer, no Spark job over data. */
 case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("location", StringType, nullable = false)(),
@@ -1010,7 +1011,9 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
         .orNull,
       if (versioned) Upsert.snapshotVersions(tableDir).size.toLong else 0L,
       files.size.toLong, bytes,
-      sidecar("_manifest"), sidecar(graft.ops.Bloom.TableDir),
+      sidecar("_manifest"),
+      files.headOption.exists(f => graft.ops.Bloom.columnsOf(
+        Layout.readFooter(spark.sparkContext.hadoopConfiguration, f)).nonEmpty),
       Upsert.readSchemaSidecar(snapshot).isDefined,
       dvBytes,
       writer.orNull,

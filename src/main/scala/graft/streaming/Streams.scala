@@ -616,8 +616,8 @@ object Streams {
     // replay those and then silently starve. A correctly configured
     // producer materializes every commit's feed, and vacuum never
     // reclaims CURRENT's, so CURRENT without a feed dir = cdf is off.
-    graft.ops.Upsert.currentVersion(tableDir)
-      .map(v => s"v$v").foreach { v =>
+    val current = graft.ops.Upsert.currentVersion(tableDir).map(v => s"v$v")
+    current.foreach { v =>
       require(cdfFs.exists(new org.apache.hadoop.fs.Path(cdfRoot, v)),
         s"cdfStream: $tableDir's CURRENT ($v) has no materialized feed " +
           s"under _cdf — the producer stopped materializing the change " +
@@ -626,9 +626,14 @@ object Streams {
           "missing commits")
     }
     val glob = s"$tableDir/_cdf/v*"
-    // file streams need an explicit schema; at least one materialized
-    // feed version must exist (the table's first commit writes it)
-    val schema = spark.read.parquet(glob).schema
+    // file streams need an explicit schema: the footer of the newest
+    // feed version (CURRENT's), read on the driver with no job. Schema
+    // evolution only adds columns, so the newest feed is the widest,
+    // and an older version's rows read an added column as NULL.
+    val newest = current.getOrElse(cdfFs.listStatus(cdfRoot).map(_.getPath.getName)
+      .filter(_.matches("v\\d+")).maxByOption(_.drop(1).toLong).getOrElse(
+        throw new IllegalArgumentException(s"cdfStream: $tableDir/_cdf holds no feed version")))
+    val schema = graft.ops.Layout.readParquet(spark, Seq(s"$cdfRoot/$newest")).schema
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger
       .foreach { k =>

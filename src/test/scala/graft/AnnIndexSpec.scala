@@ -577,23 +577,27 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(got == want && got.nonEmpty)
   }
 
-  test("codes Bloom sidecar: sound prune, maintained by every writer, conservative fallbacks") {
+  test("codes Bloom filters: sound prune, in every file a writer lands, safe fallbacks") {
     import spark.implicits._
     val (corpus, cents, _) = fixture
     val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 8, codes = 8)
     val base = java.nio.file.Files.createTempDirectory("ann_bloom").toString
     val tbl = s"$base/table"; val idxDir = s"$base/index"
+    val codesDir = s"$idxDir/codes.parquet"
     corpus.write.parquet(s"$tbl/v0")
     graft.ops.Fs.writeTextAtomic(graft.ops.Fs.of(tbl, spark),
       new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
     AnnIndex.write(corpus, cents, cb, idxDir,
       numRangePartitions = 8, source = Some((tbl, "id")))
-    def codesFiles = graft.ops.Layout.listDataFiles(spark, s"$idxDir/codes.parquet")
-    def sidecarBasenames = spark.read.parquet(s"$idxDir/codes_bloom.parquet")
-      .select("file").collect().map(_.getString(0)).toSet
+    def codesFiles = graft.ops.Layout.listDataFiles(spark, codesDir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def allFiltered = codesFiles.forall(f =>
+      graft.ops.Bloom.columnsOf(graft.ops.Layout.readFooter(conf, f)) == Seq("id"))
+    def prune(ids: Seq[Long], cap: Int = AnnIndex.MaxProbe) =
+      AnnIndex.candidateCodes(spark, codesDir, codesFiles, ids.toDF("id"), cap)
     def basenames(fs: Seq[String]) = fs.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-    // build covers every codes file
-    assert(basenames(codesFiles).subsetOf(sidecarBasenames))
+    // the build filters every codes file
+    assert(allFiltered)
 
     // SOUND: every file that truly holds a touched id survives the prune
     val touched = Seq(41L, 53L, 97L).toDF("id")
@@ -602,16 +606,15 @@ class AnnIndexSpec extends AnyFunSuite {
       .join(touched, Seq("id")).select("f").distinct()
       .collect().map(_.getString(0)).toSet
     assert(holders.nonEmpty)
-    val kept = AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, touched)
+    val kept = prune(Seq(41L, 53L, 97L))
     assert(basenames(holders.toSeq).subsetOf(basenames(kept)),
       "the Bloom prune dropped a file that holds a touched id")
 
-    // EFFECTIVE: ids absent from the corpus prune every covered file
-    // (at ~25 rows/file against a 2 KB filter the fp rate is ~0)
-    val absent = Seq(10000001L, 10000002L, 10000003L).toDF("id")
-    assert(AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, absent).isEmpty)
+    // EFFECTIVE: ids absent from the corpus prune every file
+    val absent = Seq(10000001L, 10000002L, 10000003L)
+    assert(prune(absent).isEmpty)
 
-    // append maintains the sidecar for the fresh files
+    // append filters the fresh files
     val fresh = corpus.filter($"id" < 5)
       .select(($"id" + 1000000L).as("id"), $"embedding")
     fresh.createOrReplaceTempView("ann_bloom_ins")
@@ -621,29 +624,37 @@ class AnnIndexSpec extends AnyFunSuite {
          |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
     graft.ops.Upsert.materializeCdf(spark, tbl, 1L)
     AnnIndex.append(fresh, idxDir)
-    assert(basenames(codesFiles).subsetOf(sidecarBasenames))
-    val keptFresh = AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles,
-      fresh.select("id").limit(1))
+    assert(allFiltered)
+    val keptFresh = prune(Seq(1000000L))
     assert(keptFresh.nonEmpty && keptFresh.size < codesFiles.size,
       s"appended-id prune kept ${keptFresh.size} of ${codesFiles.size}")
 
-    // maintenance (applyCdf) keeps the sidecar covering + sound
+    // maintenance (applyCdf) and optimize keep every file filtered + the prune sound
     spark.sql(s"UPDATE '$tbl' ON id SET embedding = " +
       "transform(embedding, x -> -x) WHERE id = 41").collect()
     AnnIndex.applyCdf(spark, idxDir)
-    assert(basenames(codesFiles).subsetOf(sidecarBasenames))
-    val kept41 = AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, Seq(41L).toDF("id"))
+    assert(allFiltered)
+    AnnIndex.optimize(spark, idxDir)
+    assert(allFiltered)
+    val kept41 = prune(Seq(41L))
     val holds41 = spark.read.parquet(codesFiles: _*)
       .select(col("id"), col("_metadata.file_path").as("f"))
       .filter($"id" === 41L).select("f").collect().map(_.getString(0)).toSet
     assert(basenames(holds41.toSeq).subsetOf(basenames(kept41)))
 
-    // conservative fallbacks: oversized wave and missing sidecar prune nothing
-    assert(AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, absent, cap = 1) == codesFiles)
-    graft.ops.Fs.of(idxDir, spark).delete(
-      new org.apache.hadoop.fs.Path(s"$idxDir/codes_bloom.parquet"), true)
-    assert(AnnIndex.bloomPruneCodes(spark, idxDir, codesFiles, absent) == codesFiles)
-    // and a sidecar-less index still maintains correctly (pre-sidecar compat)
+    // conservative fallbacks: a wave past the cap skips the Bloom leg
+    // (the range [41, 10000001] spans every file's id bounds)
+    val wide = Seq(41L, 10000001L)
+    assert(prune(wide).size < codesFiles.size)
+    assert(prune(wide, cap = 1) == codesFiles)
+    // and files written without a filter are candidates
+    val rows = spark.read.parquet(codesFiles: _*).localCheckpoint()
+    val old = codesFiles
+    rows.write.mode("append").parquet(codesDir)
+    old.foreach(f => graft.ops.Fs.of(idxDir, spark).delete(new org.apache.hadoop.fs.Path(f), false))
+    assert(codesFiles.forall(f => graft.ops.Bloom.columnsOf(graft.ops.Layout.readFooter(conf, f)).isEmpty))
+    assert(prune(wide) == codesFiles)
+    // and an index without filters still maintains correctly
     spark.sql(s"UPDATE '$tbl' ON id SET embedding = " +
       "transform(embedding, x -> -x) WHERE id = 53").collect()
     val (d2, a2) = AnnIndex.applyCdf(spark, idxDir)

@@ -47,7 +47,7 @@ class JobBudgetSpec extends AnyFunSuite {
       ((pmod(xxhash64(col("id"), lit(i), lit(salt)), lit(2001L)) - 1000) / 1000.0)
         .cast("float")): _*).as("embedding"))
 
-  test("maintenance budget: index load 1 job, one-commit feed 0, applyCdf <= 18") {
+  test("maintenance budget: build <= 7, load 1 job, one-commit feed 0, applyCdf <= 14") {
     val base = java.nio.file.Files.createTempDirectory("job_budget").toString
     val tbl = s"$base/table"; val idx = s"$base/index"
     vectors(spark.range(3000).toDF("id"), 1L)
@@ -58,7 +58,8 @@ class JobBudgetSpec extends AnyFunSuite {
     val corpus = Upsert.readWithDeletes(spark, s"$tbl/v0")
     val cents = corpus.filter(col("id") < 8).select(col("id").as("cid"), col("embedding"))
     val cb = Similarity.pqCodebook(corpus, "id", "embedding", numSub = 4, codes = 8)
-    AnnIndex.write(corpus, cents, cb, idx, numRangePartitions = 8, source = Some((tbl, "id")))
+    val (_, build) = jobs(AnnIndex.write(corpus, cents, cb, idx,
+      numRangePartitions = 8, source = Some((tbl, "id"))))
     // one SQL MERGE: 20 updated ids and 20 new ones
     vectors(spark.range(20).select((col("id") * 150 + 7).as("id"))
         .union(spark.range(3000, 3020).toDF("id")), 2L)
@@ -70,10 +71,12 @@ class JobBudgetSpec extends AnyFunSuite {
     val (_, read) = jobs(AnnIndex.read(spark, idx))
     val (_, feed) = jobs(Upsert.changeDataFeed(spark, tbl, 0L, 1L))
     val ((dropped, appended), apply) = jobs(AnnIndex.applyCdf(spark, idx))
-    info(s"jobs: AnnIndex.read $read, changeDataFeed(0, 1) $feed, applyCdf $apply")
+    info(s"jobs: AnnIndex.write $build, AnnIndex.read $read, " +
+      s"changeDataFeed(0, 1) $feed, applyCdf $apply")
     assert(read == 1, s"AnnIndex.read ran $read jobs (the codebook collect is the one)")
     assert(feed == 0, s"constructing the one-commit feed ran $feed jobs")
     assert(dropped == 20 && appended == 40)
-    assert(apply <= 18, s"AnnIndex.applyCdf ran $apply jobs")
+    assert(build <= 7, s"AnnIndex.write ran $build jobs")
+    assert(apply <= 14, s"AnnIndex.applyCdf ran $apply jobs")
   }
 }

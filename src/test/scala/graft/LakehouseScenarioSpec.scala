@@ -21,8 +21,8 @@ class LakehouseScenarioSpec extends AnyFunSuite {
     val raw = s"$base/raw"; val tbl = s"$base/table"
 
     // 1. micro-batch ingest left 32 small files
-    spark.range(50000).select($"id".as("k"), ($"id" % 1000).as("v"))
-      .repartition(32).write.mode("overwrite").parquet(raw)
+    Bloom.write(spark.range(50000).select($"id".as("k"), ($"id" % 1000).as("v"))
+      .repartition(32).write.mode("overwrite"), Seq("k")).parquet(raw)
 
     // 2. compaction: shuffle-free, row-preserving, into the v0 snapshot
     val (nIn, nOut, _) = Layout.compactSmallFiles(
@@ -49,7 +49,6 @@ class LakehouseScenarioSpec extends AnyFunSuite {
       .filter($"k" === 200L).select("v").as[Long].head() == 200L % 1000)
 
     // 6. bloom point lookup on the live snapshot prunes and answers exactly
-    Bloom.writeSidecar(spark, s"$tbl/v2", "k")
     val (hitData, nFiles, nHit) = Bloom.readPruned(
       spark, s"$tbl/v2", "k", Seq(90050L))
     assert(nHit < nFiles, s"bloom must prune: read $nHit of $nFiles")

@@ -1039,17 +1039,16 @@ class LakehouseSqlSpec extends AnyFunSuite {
     assert(cur.filter($"v" === -4L).count() == 10)
   }
 
-  test("rebase carries the _bloom sidecar: the rebased snapshot probes without a rebuild") {
+  test("rebase keeps the Bloom filters: every rebased file probes without a rebuild") {
     import spark.implicits._
     import graft.plans.LakehouseSql
     val root = s"$base/rebase_bloom"
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
     val seed = s"$root/seed"; val tbl = s"$root/tbl"
-    spark.range(200).select($"id".as("k"), lit(0L).as("v"))
+    graft.ops.Bloom.write(spark.range(200).select($"id".as("k"), lit(0L).as("v"))
       .repartitionByRange(2, $"k").sortWithinPartitions($"k")
-      .write.mode("overwrite").parquet(seed)
+      .write.mode("overwrite"), Seq("k")).parquet(seed)
     spark.sql(s"CONVERT '$seed' TO VERSIONED '$tbl'").collect()
-    graft.ops.Bloom.writeSidecar(spark, s"$tbl/v0", "k")
     // two writers on DISJOINT key ranges; B loses and rebases
     val a = LakehouseSql.claimNextVersion(tbl)
     val b = LakehouseSql.claimNextVersion(tbl)
@@ -1061,16 +1060,17 @@ class LakehouseSqlSpec extends AnyFunSuite {
     LakehouseSql.publishOrAbort(tbl, "v0", b, "MERGE")
     val cur = graft.streaming.Streams.currentSnapshot(tbl).get
     assert(cur.endsWith("/v3"), s"expected a rebased publish: $cur")
-    assert(new java.io.File(s"$cur/_bloom").isDirectory,
-      "the rebased snapshot must carry the bloom sidecar")
-    // the probe's own completeness require passes (every live file has
-    // a filter row) and point lookups answer correctly on both the
-    // winner's and the rebased loser's keys — no rebuild paid
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(graft.ops.Layout.listDataFiles(spark, cur).forall(f =>
+      graft.ops.Bloom.columnsOf(graft.ops.Layout.readFooter(conf, f)) == Seq("k")),
+      "every file of the rebased snapshot must carry its filter")
+    // point lookups answer correctly on both the winner's and the
+    // rebased loser's keys — no rebuild paid
     val (hits, nFiles, nHit) = graft.ops.Bloom.readPruned(
       spark, cur, "k", Seq(305L, 405L, 55L))
     assert(hits.count() == 3, "bloom-pruned lookup lost rows after rebase")
     assert(nHit < nFiles, s"filter must prune some files ($nHit/$nFiles)")
-    // a key that exists nowhere probes empty through the carried filter
+    // a key that exists nowhere probes empty through the filters
     assert(graft.ops.Bloom.readPruned(
       spark, cur, "k", Seq(999999L))._1.count() == 0)
   }

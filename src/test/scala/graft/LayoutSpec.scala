@@ -186,12 +186,9 @@ class LayoutSpec extends AnyFunSuite {
     val dir = "/tmp/graft_bloomspec"
     // UNCLUSTERED layout: round-robin keys — every file spans the whole
     // key domain, so min/max bounds prune nothing for any point key
-    spark.range(64000).select($"id".as("k"), ($"id" * 7).as("v"))
+    graft.ops.Bloom.write(spark.range(64000).select($"id".as("k"), ($"id" * 7).as("v"))
       .repartition(16) // round-robin
-      .write.mode("overwrite").parquet(dir)
-
-    graft.ops.Bloom.writeSidecar(spark, dir, "k")
-    assert(spark.read.parquet(s"$dir/_bloom").count() == 16)
+      .write.mode("overwrite"), Seq("k")).parquet(dir)
 
     // min/max CANNOT skip: every file's [mn, mx] contains the probe key
     val bounds = graft.ops.Layout.parquetFileStats(spark, dir)
@@ -222,7 +219,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("readParquet: engine-written artifacts get the schema Spark's inference gives") {
     import spark.implicits._
-    import graft.ops.{AnnIndex, Bloom, Fs, Similarity, Upsert}
+    import graft.ops.{AnnIndex, Fs, Similarity, Upsert}
     val base = java.nio.file.Files.createTempDirectory("layout_read").toString
     val tbl = s"$base/t"; val idx = s"$base/index"
     spark.range(300).select($"id", ($"id" % 3).as("p"),
@@ -231,7 +228,6 @@ class LayoutSpec extends AnyFunSuite {
       .repartition(3).write.parquet(s"$tbl/v0")
     Fs.writeTextAtomic(Fs.of(tbl, spark), new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v0")
     spark.range(10).select($"id", ($"id" % 3).as("p")).write.partitionBy("p").parquet(s"$base/part")
-    Bloom.writeSidecar(spark, s"$tbl/v0", "id")
     Upsert.deleteByKeyDV(spark, s"$tbl/v0", s"$tbl/v1", Seq(3L, 4L).toDF("id"), "id")
     Fs.writeTextAtomic(Fs.of(tbl, spark), new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v1")
     Upsert.materializeCdf(spark, tbl, 1L)
@@ -240,8 +236,7 @@ class LayoutSpec extends AnyFunSuite {
     AnnIndex.write(corpus, corpus.filter($"id" < 4).select($"id".as("cid"), $"embedding"), cb, idx)
     val cases = Seq(
       s"$tbl/v0" -> None, s"$base/part" -> None, s"$tbl/v1/_dv" -> None,
-      s"$tbl/_cdf/v1" -> None, s"$tbl/v0/_bloom" -> Some(Bloom.Shape),
-      s"$idx/codes_bloom.parquet" -> Some(Bloom.Shape), s"$idx/codebook.parquet" -> None,
+      s"$tbl/_cdf/v1" -> None, s"$idx/codebook.parquet" -> None,
       s"$idx/centroids.parquet" -> None, s"$idx/codes.parquet" -> None)
     for ((p, schema) <- cases)
       assert(Layout.readParquet(spark, Seq(p), schema).schema == spark.read.parquet(p).schema, p)

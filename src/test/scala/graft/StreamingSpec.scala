@@ -901,6 +901,38 @@ class StreamingSpec extends AnyFunSuite {
       .select("_commit_version").distinct().count() == 3)
   }
 
+  test("CDF stream schema: a column added in v2 reaches subscribers; v0 rows read NULL") {
+    import spark.implicits._
+    val tbl = java.nio.file.Files.createTempDirectory("cdfevolve").toString + "/tbl"
+    spark.range(4).select($"id".as("k"), functions.lit(0L).as("v"))
+      .coalesce(1).write.parquet(s"$tbl/v0")
+    graft.ops.Upsert.writeCommitInfo(s"$tbl/v0", "STREAM_INIT")
+    graft.ops.Upsert.materializeCdf(spark, tbl, 0)
+    graft.ops.Upsert.upsertByKey(spark, s"$tbl/v0", s"$tbl/v1",
+      spark.range(4, 6).select($"id".as("k"), functions.lit(1L).as("v")), "k")
+    graft.ops.Upsert.materializeCdf(spark, tbl, 1)
+    graft.ops.Upsert.upsertByKey(spark, s"$tbl/v1", s"$tbl/v2",
+      spark.range(6, 8).select($"id".as("k"), functions.lit(2L).as("v"),
+        functions.lit("y").as("tag")), "k", allowSchemaEvolution = true)
+    graft.ops.Upsert.materializeCdf(spark, tbl, 2)
+    graft.ops.Fs.writeTextAtomic(graft.ops.Fs.of(tbl),
+      new org.apache.hadoop.fs.Path(tbl, "CURRENT"), "v2")
+
+    val feed = Streams.cdfStream(spark, tbl)
+    assert(feed.schema.fieldNames.contains("tag"), feed.schema.simpleString)
+    val sink = java.nio.file.Files.createTempDirectory("cdfevolvesink").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("cdfevolveckpt").toString
+    val q = feed.writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (b: Dataset[Row], _: Long) => b.write.mode("append").parquet(sink); () }
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.read.parquet(sink)
+      .select($"k", $"_commit_version", $"tag").as[(Long, Long, String)].collect().sorted.toSeq
+    assert(got == (0L until 4L).map(k => (k, 0L, null: String)) ++
+      (4L until 6L).map(k => (k, 1L, null: String)) ++ (6L until 8L).map(k => (k, 2L, "y")))
+  }
+
   test("rate-limited CDF catch-up: N backlogged versions drain in bounded micro-batches") {
     import spark.implicits._
     val tbl = java.nio.file.Files.createTempDirectory("cdfrate").toString + "/tbl"

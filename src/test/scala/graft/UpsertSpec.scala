@@ -414,55 +414,38 @@ class UpsertSpec extends AnyFunSuite {
       "partition value must survive the rewrite")
   }
 
-  test("Bloom sidecar carries across commits: linked files keep filter words VERBATIM") {
+  test("Bloom filters ride inside the files: every fresh file filters what its source did") {
     import spark.implicits._
-    import graft.ops.Bloom
+    import graft.ops.{Bloom, Layout}
     val tbl = s"$base/bloom0"; val out = s"$base/bloom1"
-    spark.range(4000).select($"id".as("k"), $"id".as("v"))
+    Bloom.write(spark.range(4000).select($"id".as("k"), $"id".as("v"))
       .repartitionByRange(4, $"k").sortWithinPartitions($"k")
-      .write.mode("overwrite").parquet(tbl)
-    Bloom.writeSidecar(spark, tbl, "k", bitsPerFile = 1 << 12)
+      .write.mode("overwrite"), Seq("k")).parquet(tbl)
+    def bytes(f: String) = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(new java.net.URI(f).getPath)).toSeq
+    def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    val before = Layout.listDataFiles(spark, tbl).map(f => name(f) -> bytes(f)).toMap
 
-    // POISON PILL: flip one filter word of a file the commit will NOT
-    // touch. If the carry recomputed filters instead of carrying bytes,
-    // the sentinel would be healed — its survival PROVES no data pass
-    // over untouched files.
-    val sc0 = spark.read.parquet(s"$tbl/_bloom")
-    val files0 = sc0.select("file").as[String].collect().sorted
-    val poisonFile = files0.last // keys 100..199 land in the FIRST file
-    // all-ones only ADDS bits (a strict superset of the real filter),
-    // so the damaged filter can widen reads but never false-negative
-    val poisoned = sc0.withColumn("bloom",
-      when($"file" === poisonFile,
-        concat(array(lit(-1L)), slice($"bloom", 2, 63)))
-        .otherwise($"bloom"))
-    poisoned.coalesce(1).write.mode("overwrite").parquet(s"$tbl/_bloom_tmp")
-    // swap in the poisoned sidecar
-    val d = new java.io.File(s"$tbl/_bloom")
-    org.apache.hadoop.fs.FileUtil.fullyDelete(d)
-    new java.io.File(s"$tbl/_bloom_tmp").renameTo(d)
-
+    // keys 100..199 rewrite the first file; 5000.. append a fresh one
     val up = spark.range(100, 200).select($"id".as("k"), lit(-1L).as("v"))
+      .union(spark.range(5000, 5010).select($"id".as("k"), lit(-2L).as("v")))
     val (nCopied, nRewritten, _) = Upsert.upsertByKey(spark, tbl, out, up, "k")
     assert(nRewritten >= 1 && nCopied >= 2)
 
-    val sc1 = spark.read.parquet(s"$out/_bloom")
-    // completeness: every data file of the new snapshot has a filter
-    val dataFiles = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    assert(sc1.select("file").as[String].collect().toSet == dataFiles)
-    // the poison survived the carry bit-for-bit
-    assert(sc1.filter($"file" === poisonFile)
-      .select(element_at($"bloom", 1)).as[Long].head() == -1L,
-      "carry must preserve untouched files' filter words verbatim")
+    val files = Layout.listDataFiles(spark, out)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // every file of the new snapshot carries a `k` filter: untouched
+    // files byte-for-byte (the link), fresh ones from the commit's write
+    assert(files.forall(f => Bloom.columnsOf(Layout.readFooter(conf, f)) == Seq("k")))
+    val fresh = files.filterNot(f => before.get(name(f)).contains(bytes(f)))
+    assert(fresh.nonEmpty && fresh.size < files.size)
 
-    // and the carried sidecar still answers point lookups correctly
-    // (probe keys in fresh AND linked files)
+    // the lookup is exact across untouched, rewritten and appended files
     val (rows, nFiles, nHit) =
-      Bloom.readPruned(spark, out, "k", Seq(150L, 3500L))
-    assert(nFiles == dataFiles.size && nHit <= nFiles)
+      Bloom.readPruned(spark, out, "k", Seq(150L, 3500L, 5005L, 4500L))
+    assert(nFiles == files.size && nHit < nFiles)
     val got = rows.orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.toSeq == Seq((150L, -1L), (3500L, 3500L)))
+    assert(got.toSeq == Seq((150L, -1L), (3500L, 3500L), (5005L, -2L)))
   }
 
   test("deletion vectors: soft delete rewrites NOTHING; read subtracts; compaction folds") {
