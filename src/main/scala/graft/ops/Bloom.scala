@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.parquet.column.values.bloomfilter.BloomFilter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, SparkSession}
@@ -50,13 +49,14 @@ object Bloom {
         .option(s"parquet.bloom.filter.fpp#$c", Fpp)
     }
 
-  /** The columns `footer` holds a filter for, in any row group. */
-  def columnsOf(footer: ParquetMetadata): Seq[String] =
-    footer.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+  /** The columns `file`'s footer holds a filter for, in any row group. */
+  def columnsOf(spark: SparkSession, file: String): Seq[String] =
+    Layout.readFooter(spark.sparkContext.hadoopConfiguration, file)
+      .getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
       .collect { case c if c.getBloomFilterOffset >= 0 => c.getPath.toDotString }
       .distinct
 
-  /** Keys to probe `column` for (NULL never matches, so none rides). */
+  /** Keys to probe `column` for; a NULL key keeps every file. */
   final case class Probe(column: String, keys: Array[Any])
 
   /** May the open file hold a key of `p`? Some(false) only when every

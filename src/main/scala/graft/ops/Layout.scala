@@ -102,11 +102,6 @@ object Layout {
       .saveAsTable(table)
   }
 
-  /** The Bloom-filtered columns of a rewrite's source `files` (one
-    * footer): compaction and OPTIMIZE filter what their source filters. */
-  private def filtered(spark: SparkSession, files: Seq[String]): Seq[String] =
-    Bloom.columnsOf(readFooter(spark.sparkContext.hadoopConfiguration, files.head))
-
   /** Compact a directory of small parquet files into ≈`targetBytes`
     * outputs — the other half of layout hygiene at scale: a 100 TB
     * table accreted from streaming micro-batches or incremental
@@ -133,7 +128,8 @@ object Layout {
     // the returned count is what actually landed on disk.
     val nReq = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val df = Upsert.readSnapshotData(spark, inPath) // sidecar, else mergeSchema (evolved-column safety)
-    Bloom.write(df.coalesce(nReq).write.mode("overwrite"), filtered(spark, files))
+    // the output filters the columns its source files filter
+    Bloom.write(df.coalesce(nReq).write.mode("overwrite"), Bloom.columnsOf(spark, files.head))
       .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
     (nIn, listDataFiles(spark, outPath).size, total)
@@ -161,7 +157,8 @@ object Layout {
     val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val df = Upsert.readSnapshotData(spark, inPath) // sidecar, else mergeSchema (evolved-column safety)
     Bloom.write(df.repartitionByRange(nOut, col(sortCol))
-        .sortWithinPartitions(col(sortCol)).write.mode("overwrite"), filtered(spark, files))
+        .sortWithinPartitions(col(sortCol)).write.mode("overwrite"),
+      Bloom.columnsOf(spark, files.head))
       .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
     var written = 0
@@ -202,7 +199,7 @@ object Layout {
         .repartitionByRange(nOut, col("__z"))
         .sortWithinPartitions(col("__z"))
         .drop("__z")
-        .write.mode("overwrite"), filtered(spark, files))
+        .write.mode("overwrite"), Bloom.columnsOf(spark, files.head))
       .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
     var written = 0

@@ -1364,7 +1364,7 @@ object Upsert {
     // footer read): the data decides, no opt-in record
     rewritten.foreach { rw =>
       val w = Bloom.write(rw.coalesce(math.max(1, touched.size)).write.mode("append"),
-        Bloom.columnsOf(Layout.readFooter(spark.sparkContext.hadoopConfiguration, all.head)))
+        Bloom.columnsOf(spark, all.head))
       if (partCols.isEmpty) w.parquet(outPath)
       else w.partitionBy(partCols: _*).parquet(outPath)
     }

@@ -1012,8 +1012,7 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
       if (versioned) Upsert.snapshotVersions(tableDir).size.toLong else 0L,
       files.size.toLong, bytes,
       sidecar("_manifest"),
-      files.headOption.exists(f => graft.ops.Bloom.columnsOf(
-        Layout.readFooter(spark.sparkContext.hadoopConfiguration, f)).nonEmpty),
+      files.headOption.exists(graft.ops.Bloom.columnsOf(spark, _).nonEmpty),
       Upsert.readSchemaSidecar(snapshot).isDefined,
       dvBytes,
       writer.orNull,

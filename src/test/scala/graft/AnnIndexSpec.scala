@@ -590,9 +590,8 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.write(corpus, cents, cb, idxDir,
       numRangePartitions = 8, source = Some((tbl, "id")))
     def codesFiles = graft.ops.Layout.listDataFiles(spark, codesDir)
-    val conf = spark.sparkContext.hadoopConfiguration
     def allFiltered = codesFiles.forall(f =>
-      graft.ops.Bloom.columnsOf(graft.ops.Layout.readFooter(conf, f)) == Seq("id"))
+      graft.ops.Bloom.columnsOf(spark, f) == Seq("id"))
     def prune(ids: Seq[Long], cap: Int = AnnIndex.MaxProbe) =
       AnnIndex.candidateCodes(spark, codesDir, codesFiles, ids.toDF("id"), cap)
     def basenames(fs: Seq[String]) = fs.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
@@ -652,7 +651,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val old = codesFiles
     rows.write.mode("append").parquet(codesDir)
     old.foreach(f => graft.ops.Fs.of(idxDir, spark).delete(new org.apache.hadoop.fs.Path(f), false))
-    assert(codesFiles.forall(f => graft.ops.Bloom.columnsOf(graft.ops.Layout.readFooter(conf, f)).isEmpty))
+    assert(codesFiles.forall(f => graft.ops.Bloom.columnsOf(spark, f).isEmpty))
     assert(prune(wide) == codesFiles)
     // and an index without filters still maintains correctly
     spark.sql(s"UPDATE '$tbl' ON id SET embedding = " +

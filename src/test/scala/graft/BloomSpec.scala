@@ -58,8 +58,7 @@ class BloomSpec extends AnyFunSuite {
     spark.range(0, 4000, 40).select(($"id" + 1).as("id")).coalesce(1)
       .write.mode("append").parquet(dir)
     val files = Layout.listDataFiles(spark, dir)
-    val bare = files.filter(f => !Bloom.columnsOf(
-      Layout.readFooter(spark.sparkContext.hadoopConfiguration, f)).contains("id"))
+    val bare = files.filter(f => !Bloom.columnsOf(spark, f).contains("id"))
     assert(bare.size == 1 && files.size == 4)
     // 1500 is held by a filtered file, 41 only by the bare one, 1501 by none
     for ((keys, want) <- Seq(Seq(1500L) -> Seq(1500L), Seq(41L) -> Seq(41L), Seq(1501L) -> Nil)) {

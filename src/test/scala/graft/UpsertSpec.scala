@@ -433,10 +433,9 @@ class UpsertSpec extends AnyFunSuite {
     assert(nRewritten >= 1 && nCopied >= 2)
 
     val files = Layout.listDataFiles(spark, out)
-    val conf = spark.sparkContext.hadoopConfiguration
     // every file of the new snapshot carries a `k` filter: untouched
     // files byte-for-byte (the link), fresh ones from the commit's write
-    assert(files.forall(f => Bloom.columnsOf(Layout.readFooter(conf, f)) == Seq("k")))
+    assert(files.forall(f => Bloom.columnsOf(spark, f) == Seq("k")))
     val fresh = files.filterNot(f => before.get(name(f)).contains(bytes(f)))
     assert(fresh.nonEmpty && fresh.size < files.size)
 
