@@ -1,9 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.AnnEncode
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -13,8 +15,11 @@ import org.apache.spark.sql.types._
   * the corpus by random-hyperplane sign bits so each query only probes
   * its own bucket — the 100 TB scale path (candidates shrink by ~2^bits).
   *
-  * Dot products use `aggregate(zip_with(...))` — codegen'd sequential
-  * double accumulation, no UDF.
+  * Dot products are [[graft.functions.FloatVectorDot]]: sequential
+  * double accumulation compiled into whole-stage codegen, no UDF. The
+  * ANN encode ([[nearestCell]], [[pqEncode]]) is two compiled kernels of
+  * the same arithmetic over the collected centroids and the codebook
+  * ([[graft.functions.AnnEncode]]).
   */
 object Similarity {
 
@@ -211,30 +216,32 @@ object Similarity {
       .select(col("i"), col("j"), col("cos_q"))
   }
 
-  /** Scan-side nearest-centroid assignment: adds a `cell` column holding
-    * the `cid` of the centroid with the highest cosine to `embedding`
-    * (ties broken by smallest cid, matching `ORDER BY cos DESC, cid ASC`).
-    *
-    * The centroid table is collected to the driver (it is broadcast-sized
-    * by contract — a coarse quantizer is at most a few thousand vectors,
-    * the same data movement a broadcast join would ship) and folded over
-    * as a constant array with a sequential `aggregate`, so the argmax
-    * happens INSIDE the scan projection: no crossJoin row explosion, no
-    * per-id window, and critically no Exchange of the corpus — at 100 TB
-    * with C=1024 cells the previous window formulation shuffled
-    * corpus×C rows just to pick each row's nearest centroid.
-    *
-    * Cosines use the same codegen'd [[graft.functions.FloatVectorDot]]
-    * accumulation as the windowed form (centroid norms are precomputed
-    * on the driver with the identical sequential double fold), so cell
-    * assignments are bit-for-bit unchanged. Zero-norm centroids
-    * (NaN cosine) are unsupported. */
   /** Hard cap on driver-collected centroid/"small table" rows. A coarse
     * quantizer is ≤ a few thousand cells; 64 Ki is far above any sane C
     * while still bounding the collect at ~tens of MB — a caller passing a
     * corpus-sized frame gets an actionable error instead of a driver OOM. */
   val MaxCollectedCentroids = 65536
 
+  /** Scan-side nearest-centroid assignment: adds a `cell` column holding
+    * the `cid` of the centroid with the highest cosine to `embedding`
+    * (ties broken by smallest cid, matching `ORDER BY cos DESC, cid ASC`;
+    * NULL for a NULL embedding).
+    *
+    * The centroid table is collected to the driver (it is broadcast-sized
+    * by contract — a coarse quantizer is at most a few thousand vectors,
+    * the same data movement a broadcast join would ship) and handed to
+    * the compiled [[graft.functions.NearestCentroid]] kernel, so the
+    * argmax happens INSIDE the scan projection and its whole-stage
+    * codegen: no crossJoin row explosion, no per-id window, and
+    * critically no Exchange of the corpus — at 100 TB with C=1024 cells
+    * a window formulation shuffles corpus×C rows just to pick each row's
+    * nearest centroid.
+    *
+    * Cosines use [[graft.functions.FloatVectorDot]]'s sequential double
+    * accumulation (centroid norms are computed once on the driver by the
+    * same fold), so cell assignments are bit-for-bit those of the
+    * windowed form. A zero-norm centroid or embedding raises ANSI
+    * DIVIDE_BY_ZERO. */
   def nearestCell(df: DataFrame, centroids: DataFrame): DataFrame = {
     // ONE capped job: orderBy+limit plans as TakeOrdered, so at most
     // cap+1 rows ever reach the driver — the same over-sized-frame
@@ -249,27 +256,10 @@ object Similarity {
       s"got > $MaxCollectedCentroids rows — that is a corpus, not a coarse " +
       s"quantizer. Pass a k-means/sampled centroid table (C <= a few thousand).")
     require(rows.nonEmpty, "centroids must be non-empty")
-    val cidType = centroids.schema("cid").dataType
-    val ctArr = array(rows.map { r =>
-      val e = r.getSeq[Float](1).toArray
-      var acc = 0.0
-      e.foreach(f => acc += f.toDouble * f.toDouble) // same fold as FloatVectorDot
-      struct(
-        lit(r.get(0)).cast(cidType).as("cid"),
-        array(e.map(lit(_)): _*).as("ct"),
-        lit(math.sqrt(acc)).as("nrm"))
-    }: _*)
-    val nrm = norm(col("embedding"))
-    val best = aggregate(
-      ctArr,
-      struct(lit(null).cast(cidType).as("cid"), lit(Double.NegativeInfinity).as("cos")),
-      (acc, c) => {
-        val cos = dot(col("embedding"), c.getField("ct")) / (nrm * c.getField("nrm"))
-        // strict > over cid-ascending centroids keeps the smallest cid on ties
-        when(cos > acc.getField("cos"),
-          struct(c.getField("cid").as("cid"), cos.as("cos"))).otherwise(acc)
-      })
-    df.withColumn("cell", best.getField("cid"))
+    df.withColumn("cell", AnnEncode.nearestCentroid(col("embedding"),
+      rows.map(r => CatalystTypeConverters.convertToCatalyst(r.get(0))),
+      centroids.schema("cid").dataType,
+      rows.map(_.getSeq[Float](1).toArray)))
   }
 
   /** IVF (inverted-file) ANN: corpus vectors are assigned to their
@@ -351,41 +341,17 @@ object Similarity {
 
   /** PQ encode: adds a `codes` array<int> column — per subspace, the
     * code of the nearest codebook entry by squared L2 (smallest code on
-    * ties). Like [[nearestCell]], the codebook folds through the scan
-    * projection as a literal array: the argmin is scan-side, no join,
-    * no shuffle, no UDF. Squared L2 is expanded to
-    * `(x·x − 2·x·c) + c·c` with the code norms precomputed on the
-    * driver by the same sequential fold as [[graft.functions.FloatVectorDot]],
+    * ties; -1 for a NULL embedding or where every distance is NaN or
+    * +Infinity). Like [[nearestCell]], the codebook goes to a compiled
+    * kernel ([[graft.functions.PqArgmin]]) in the scan projection: the
+    * argmin is scan-side, no join, no shuffle, no UDF. Squared L2 is
+    * expanded to `(x·x − 2·x·c) + c·c` with the code norms computed on
+    * the driver by [[graft.functions.FloatVectorDot]]'s sequential fold,
     * so an oracle replaying `list_dot_product` arithmetic reproduces
     * the distances bit-for-bit. */
   def pqEncode(df: DataFrame, embCol: String,
-      cb: Array[Array[Array[Float]]]): DataFrame = {
-    val numSub = cb.length
-    val sub = cb(0)(0).length
-    val codeCols = (0 until numSub).map { mi =>
-      val sv = slice(col(embCol), mi * sub + 1, sub)
-      val codesArr = array(cb(mi).zipWithIndex.map { case (cv, c) =>
-        var n2 = 0.0
-        cv.foreach(f => n2 += f.toDouble * f.toDouble) // FloatVectorDot's fold
-        struct(
-          lit(c).as("code"),
-          array(cv.map(lit(_)): _*).as("cv"),
-          lit(n2).as("n2"))
-      }: _*)
-      val best = aggregate(
-        codesArr,
-        struct(lit(-1).as("code"), lit(Double.PositiveInfinity).as("dist")),
-        (acc, cc) => {
-          val d = (dot(sv, sv) - lit(2.0) * dot(sv, cc.getField("cv"))) +
-            cc.getField("n2")
-          // strict < over code-ascending entries keeps the smallest code
-          when(d < acc.getField("dist"),
-            struct(cc.getField("code").as("code"), d.as("dist"))).otherwise(acc)
-        })
-      best.getField("code")
-    }
-    df.withColumn("codes", array(codeCols: _*))
-  }
+      cb: Array[Array[Array[Float]]]): DataFrame =
+    df.withColumn("codes", AnnEncode.pqArgmin(col(embCol), cb))
 
   /** Asymmetric PQ distance: sum over subspaces of the exact squared
     * L2 between the query's subvector and the candidate's reconstructed
@@ -438,8 +404,8 @@ object Similarity {
     * join), and within those cells candidates are ranked by PQ/ADC
     * distance over the encoded corpus — the candidate scan reads codes,
     * not raw vectors. Both the cell assignment and the PQ encode are
-    * scan-side folds over broadcast-sized literal arrays, so the corpus
-    * sees no Exchange until the candidate join itself.
+    * scan-side kernels over the collected centroids and the codebook, so
+    * the corpus sees no Exchange until the candidate join itself.
     *
     * @return (qid, id, rank) — rank 1..k by ADC distance asc, id asc */
   def ivfPqTopK(
@@ -613,10 +579,11 @@ object Similarity {
     * scale (project 768-dim embeddings to 64 before IVF/PQ and the
     * distance ranking survives within (1±ε)).
     *
-    * Plan shape: the matrix rows are literal arrays folded into the
-    * scan projection ([[dotHof]] per output dim) — a pure narrow
-    * projection, zero Exchange, scan-speed at 100 TB; same shape as
-    * [[nearestCell]]'s scan-side argmax. The conventional 1/sqrt(k)
+    * Plan shape: the matrix rows are literal arrays dotted in the scan
+    * projection ([[dotHof]] per output dim, an interpreted
+    * `aggregate` fold) — a pure narrow projection with zero Exchange,
+    * like [[nearestCell]]'s scan-side argmax, though not compiled as
+    * that kernel is. The conventional 1/sqrt(k)
     * scale factor is omitted (it is rank-irrelevant downstream and
     * keeping integer-valued inputs integer-valued keeps sums exact). */
   def randomProject(df: DataFrame, embCol: String,

@@ -171,4 +171,28 @@ class FiaPipelineSpec extends AnyFunSuite {
     val r = one(est, "tree_ID = '99_1_1_1_1_5' AND YEAR = 2005")
     assert(!r.isNullAt(r.fieldIndex("DRYBIO_AG")))
   }
+
+  // --- write ---
+
+  test("writeParquet writes run's variants as one frame: one group pass, the union's rows") {
+    val results = Pipeline.run(spark, tables)
+    def groupPasses(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case m: org.apache.spark.sql.catalyst.plans.logical.MapGroups => m
+    }.size
+    val union = results.map { case (v, df) => df.withColumn("variant", lit(v)) }
+      .reduce(_ unionByName _)
+    val written = Pipeline.written(results)
+    assert(groupPasses(union) == 2 && groupPasses(written) == 1)
+    assert(written.schema == union.schema.map(f =>
+      if (f.name == "variant") written.schema("variant") else f).foldLeft(
+        new org.apache.spark.sql.types.StructType)(_ add _))
+    assert(written.exceptAll(union).isEmpty && union.exceptAll(written).isEmpty)
+    // frames of another shape (perfbench's traced build writes per-stage
+    // ones) keep the union
+    val other = results.map { case (v, df) => v -> df.filter(col("YEAR") > 0) }
+    assert(groupPasses(Pipeline.written(other)) == 2)
+    // a subset of run's variants writes only those
+    val midptOnly = Pipeline.written(results - "mortyr")
+    assert(groupPasses(midptOnly) == 1 && midptOnly.filter(col("variant") =!= "midpt").isEmpty)
+  }
 }

@@ -1,13 +1,19 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, QueryExecution, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Similarity
 
 /** IVF cell assignment: scan-side argmax semantics and — the 100 TB
   * property — no Exchange of the corpus to pick each row's nearest
   * centroid. */
-class SimilaritySpec extends AnyFunSuite {
+class SimilaritySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = GraftSession.local(4)
 
@@ -37,6 +43,64 @@ class SimilaritySpec extends AnyFunSuite {
     val plan = Similarity.nearestCell(corpus, centroids)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
+
+    // the encode compiles: no lambda fold and no codegen fallback in the
+    // projections of nearestCell, pqEncode and AnnIndex.write's encode,
+    // and each kernel runs inside a whole-stage codegen stage (over a
+    // scanned corpus: a local one is projected while optimizing)
+    val scanned = spark.range(10, 14).select($"id",
+      array($"id".cast("float"), lit(1f), ($"id" % 3).cast("float")).as("embedding"))
+    val cents3 = Seq((0L, vec(1, 0, 0)), (1L, vec(0, 1, 1))).toDF("cid", "embedding")
+    val cb = Similarity.pqCodebook(scanned, "id", "embedding", numSub = 3, codes = 2)
+    assertCompiled(Seq(Similarity.nearestCell(scanned, cents3)
+      .queryExecution.executedPlan), kernels = 1)
+    assertCompiled(Seq(Similarity.pqEncode(scanned, "embedding", cb)
+      .queryExecution.executedPlan), kernels = 1)
+    val dir = java.nio.file.Files.createTempDirectory("ann_compiled").toString
+    assertCompiled(executedPlans(graft.ops.AnnIndex.write(scanned, cents3, cb, s"$dir/idx")),
+      kernels = 2)
+  }
+
+  /** The physical plans of the actions `f` runs: a listener, and a
+    * marker action that drains the listener bus. */
+  private def executedPlans(f: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Option[SparkPlan]]()
+    val marker = "graft.spec.compiledMarker"
+    val l = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put(if (qe.logical.toString.contains(marker)) None else Some(qe.executedPlan))
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      f
+      spark.range(1).select(lit(marker)).collect()
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(p => p != null && p.isDefined).map(_.get).toList
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  /** No projection of `plans` holds a higher-order function or a
+    * `CodegenFallback` expression, and at least `kernels` ANN encode
+    * kernels sit in projections inside whole-stage codegen stages. */
+  private def assertCompiled(plans: Seq[SparkPlan], kernels: Int): Unit = {
+    val projects = plans.flatMap(collectWithSubqueries(_) { case p: ProjectExec => p })
+    val interpreted = projects.flatMap(_.projectList.flatMap(_.collect {
+      case e: HigherOrderFunction => e
+      case e: CodegenFallback => e
+    }))
+    assert(interpreted.isEmpty, s"interpreted expressions in the encode: $interpreted")
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case o => o +: o.children.flatMap(stage)
+    }
+    val compiled = plans.flatMap(collectWithSubqueries(_) { case w: WholeStageCodegenExec => w })
+      .flatMap(w => stage(w.child)).collect { case p: ProjectExec => p }
+      .flatMap(_.projectList.flatMap(_.collect {
+        case k: graft.functions.NearestCentroid => k
+        case k: graft.functions.PqArgmin => k
+      }))
+    assert(compiled.size >= kernels, s"kernels outside whole-stage codegen in:\n${plans.mkString("\n")}")
   }
 
   test("nearestCell refuses a corpus-sized centroid frame instead of OOMing the driver") {
