@@ -783,8 +783,8 @@ object QueriesCorpus {
       |FROM lineitem GROUP BY l_returnflag""".stripMargin
 
   // --- copy-on-write upsert (ops.Upsert): MERGE INTO over a
-  //     key-clustered parquet table, file-granular — the footer-stats
-  //     manifest prunes the rewrite to files whose key range intersects
+  //     key-clustered parquet table, file-granular — the footer stats
+  //     prune the rewrite to files whose key range intersects
   //     the update batch; everything else is byte-copied. The table is
   //     a clone of the range-clustered orders seed; the update batch
   //     (upsertDelivery) is a contiguous key slice plus 500 brand-new
@@ -805,27 +805,17 @@ object QueriesCorpus {
         Queries.dsum(col("o_totalprice"), 2).as("sum_price"))
   }
 
-  // --- GENERAL DATA SKIPPING (ops.Upsert.writeStatsSidecar +
-  //     readWhere): per-file bounds for a column that is NOT the
-  //     commit key, stamped into the `_manifest` and consulted at
-  //     read time — files whose bounds can't satisfy the predicate
-  //     are never opened (no footer read, no scan task). The staged
-  //     table is orders range-clustered by o_custkey, manifest-KEYED
-  //     on o_orderkey (the commit key, whose per-file bounds are
-  //     useless for this filter), with o_custkey stamped as a stats
-  //     column; the gate REQUIRES the pruning to bite (files read <
-  //     total) and aggregates the pruned read, so it passes only if
-  //     skipping never drops a matching row. The commit carry of the
-  //     stamp is pinned in UpsertSpec.
+  // --- GENERAL DATA SKIPPING (ops.Upsert.statsPrunedFiles +
+  //     readWhere): per-file bounds for a column that is NOT a commit
+  //     key, folded from the footers at read time — files whose bounds
+  //     can't satisfy the predicate are never scanned. The staged
+  //     table is orders clustered by o_custkey ([[statsPruneLayout]]);
+  //     the gate REQUIRES the pruning to bite (files read < total) and
+  //     aggregates the pruned read, so it passes only if skipping never
+  //     drops a matching row.
   private def statsPrune(s: SparkSession, dir: String): DataFrame = {
-    val tbl = Fixtures.once(s, dir, "statsprune") { t =>
-      Tables.orders(s, dir)
-        .repartitionByRange(16, col("o_custkey"))
-        .sortWithinPartitions(col("o_custkey"))
-        .write.parquet(t)
-      graft.ops.Upsert.writeManifestSidecar(s, t, "o_orderkey")
-      graft.ops.Upsert.writeStatsSidecar(s, t, Seq("o_custkey"))
-    }
+    val tbl = Fixtures.once(s, dir, "statsprune")(
+      statsPruneLayout(Tables.orders(s, dir), _))
     val pred = col("o_custkey").between(lit(100L), lit(400L))
     val (cands, total) = graft.ops.Upsert.statsPrunedFiles(s, tbl, pred)
     require(cands.nonEmpty && cands.size < total,
@@ -834,6 +824,23 @@ object QueriesCorpus {
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_rows"),
         Queries.dsum(col("o_totalprice"), 2).as("sum_price"))
+  }
+
+  /** q_stats_prune's fixture: `orders` written to `path` in up to 16
+    * files clustered by o_custkey, with file boundaries that depend on
+    * the data alone — one min/max aggregate, a computed range id, a
+    * hash repartition on it and a sort within each file. (A
+    * `repartitionByRange` samples with a seed taken from the RDD id,
+    * so its boundaries depend on what ran earlier in the JVM.) */
+  private[graft] def statsPruneLayout(orders: DataFrame, path: String): Unit = {
+    val n = 16
+    val r = orders.agg(min(col("o_custkey")), max(col("o_custkey"))).head()
+    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val width = (hi - lo) / n + 1
+    orders
+      .repartition(n, floor((col("o_custkey") - lo) / width))
+      .sortWithinPartitions(col("o_custkey"), col("o_orderkey"))
+      .write.parquet(path)
   }
 
   private val statsPruneSql =
@@ -944,10 +951,10 @@ object QueriesCorpus {
 
   // --- PARTITIONED-layout upsert (ops.Upsert.upsertByKeys over a Hive
   //     partitionBy output — the engine's own production sink shape,
-  //     fia.Pipeline S4): the manifest keys files by snapshot-RELATIVE
+  //     fia.Pipeline S4): bounds rows key files by snapshot-RELATIVE
   //     path, the leading key is the PARTITION column (whose bounds
   //     come from the directory names — partition pruning expressed as
-  //     manifest rows, zero footer reads), and fresh files land back
+  //     bounds rows, zero footer reads), and fresh files land back
   //     under partitionBy so the output reads as one consistent
   //     partitioned table. The update batch doubles one partition's
   //     low-key slice and appends 300 rows into a brand-new partition;

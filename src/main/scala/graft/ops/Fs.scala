@@ -12,8 +12,8 @@ import org.json4s.jackson.JsonMethods
   * Hadoop [[FileSystem]] abstraction so the commit substrate works on
   * any scheme Hadoop can mount (`file:`, `hdfs:`, `s3a:`…), not just
   * the local filesystem `java.io.File` reaches. Every sidecar the
-  * commit engine stamps (`_schema.json`, `_commitinfo`, `CURRENT`,
-  * `_manifest/_keys.json`) goes through here — a raw `java.io` call in
+  * commit engine stamps (`_schema.json`, `_commitinfo`, `_txn.json`,
+  * `CURRENT`) goes through here — a raw `java.io` call in
   * the lakehouse layer is a bug (it silently resolves against the
   * LOCAL working directory on a remote-scheme table; FsSubstrateSpec
   * guards the invariant).
@@ -37,7 +37,6 @@ import org.json4s.jackson.JsonMethods
   *
   * {{{
   * path (under the table or index dir)  fields                         writer / reader
-  * v<n>/_manifest/_keys.json            ["<key column>", ...]          Upsert.writeManifestKeys / readManifestKeys
   * v<n>/_commitinfo                     operation, ts, <stat>: Long... Upsert.writeCommitInfo / readCommitInfo
   * v<n>/_txn.json                       keys, kind, mn?, mx?, touched, Upsert.writeTxnInfo / readTxnInfo
   *                                      fresh, fbFile, fbMn, fbMx
@@ -89,7 +88,6 @@ object Fs {
       val parent = Option(p.getParent).map(_.getName).getOrElse("")
       if (parent == "_commitlog" || n == "_commitlog") "_commitlog"
       else if (parent == "_cdf" || n == "_cdf") "_cdf"
-      else if (parent == "_manifest" && n != "_manifest") s"_manifest/$n"
       else if (n.startsWith(".") && n.endsWith(".tmp"))
         cls(new Path(p.getParent, n.stripPrefix(".").stripSuffix(".tmp")))
       else n
@@ -180,9 +178,9 @@ object Fs {
 
   /** Single-round-trip overwrite create — for metadata files in a
     * snapshot directory NO READER CAN RESOLVE YET (pre-publish build
-    * outputs: `_txn.json`, `_commitinfo`, `_schema.json`, a fresh
-    * commit's `_manifest/_keys.json`): the publish itself (commit-log
-    * append + pointer swap) is the atomic visibility point, so the
+    * outputs: `_txn.json`, `_commitinfo`, `_schema.json`): the publish
+    * itself (commit-log append + pointer swap) is the atomic visibility
+    * point, so the
     * tmp+rename dance buys nothing there and costs two extra FS
     * round-trips per file — on an object store, two extra RPCs per
     * commit per sidecar (docs/PLANS.md, round 13: 34 -> 16 ops per

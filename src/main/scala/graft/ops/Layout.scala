@@ -139,20 +139,20 @@ object Layout {
     * `OPTIMIZE … ZORDER BY` shape. [[compactSmallFiles]] merges files
     * but preserves whatever row order accretion left behind; a table
     * built by many upsert/append commits ends up with OVERLAPPING
-    * per-file key ranges, so min/max pruning (and the upsert manifest)
-    * degrades to reading everything. This pass re-range-partitions and
-    * sorts, landing ≈`targetBytes` files with DISJOINT key ranges —
-    * pruning restored. One shuffle, by design: re-clustering IS a
+    * per-file key ranges, so min/max pruning (and the commit engine's
+    * footer-bounds pruning) degrades to reading everything. This pass
+    * re-range-partitions and sorts, landing ≈`targetBytes` files with
+    * DISJOINT key ranges — pruning restored, read from the new files'
+    * footers by the next commit or `Upsert.readWhere` (nothing to
+    * re-stamp). One shuffle, by design: re-clustering IS a
     * data movement; run it at maintenance cadence, not per commit.
     *
     * @return (input files, output files, total input bytes) */
   def optimizeTable(
       spark: SparkSession, inPath: String, outPath: String,
       sortCol: String, targetBytes: Long): (Int, Int, Long) = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val files = listDataFiles(spark, inPath)
     require(files.nonEmpty, s"optimizeTable: no .parquet files under $inPath")
-    val fs = new HPath(inPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val total = totalBytes(spark, files)
     val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val df = Upsert.readSnapshotData(spark, inPath) // sidecar, else mergeSchema (evolved-column safety)
@@ -161,37 +161,23 @@ object Layout {
       Bloom.columnsOf(spark, files.head))
       .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
-    var written = 0
-    val it = fs.listFiles(new HPath(outPath), true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet")) written += 1
-    }
-    // carry the source's stamped manifest keys (plus the cluster
-    // column) through the rewrite — OPTIMIZE exists to RESTORE pruning,
-    // so it must not silently drop the zero-footer-read stamp. AFTER
-    // the output count: the manifest's own parquet must not count as a
-    // data file.
-    Upsert.restampAfterRewrite(spark, inPath, outPath, Seq(sortCol))
-    (files.size, written, total)
+    (files.size, listDataFiles(spark, outPath).size, total)
   }
 
   /** [[optimizeTable]] with TWO cluster columns — the full Delta
     * `OPTIMIZE … ZORDER BY (a, b)` shape: re-range-partition + sort on
     * the Morton interleave ([[zOrderValue]]), so filters on EITHER
-    * column prune via row-group min/max without electing a primary
-    * sort key. Same single-shuffle maintenance-cadence contract as
-    * [[optimizeTable]].
+    * column prune via row-group and footer min/max without electing a
+    * primary sort key. Same single-shuffle maintenance-cadence contract
+    * as [[optimizeTable]].
     *
     * @return (input files, output files, total input bytes) */
   def optimizeTableZOrder(
       spark: SparkSession, inPath: String, outPath: String,
       colA: String, colB: String, targetBytes: Long,
       bits: Int = 16): (Int, Int, Long) = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val files = listDataFiles(spark, inPath)
     require(files.nonEmpty, s"optimizeTableZOrder: no .parquet files under $inPath")
-    val fs = new HPath(inPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val total = totalBytes(spark, files)
     val nOut = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val df = Upsert.readSnapshotData(spark, inPath) // sidecar, else mergeSchema (evolved-column safety)
@@ -202,38 +188,12 @@ object Layout {
         .write.mode("overwrite"), Bloom.columnsOf(spark, files.head))
       .parquet(outPath)
     Upsert.writeSchemaSidecar(outPath, df.schema)
-    var written = 0
-    val it = fs.listFiles(new HPath(outPath), true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet")) written += 1
-    }
-    // same stamp carry as optimizeTable: both Z-order columns prune
-    // via the manifest after the rewrite, plus whatever was stamped
-    // (after the count — the manifest parquet is not a data file)
-    Upsert.restampAfterRewrite(spark, inPath, outPath, Seq(colA, colB))
-    (files.size, written, total)
+    (files.size, listDataFiles(spark, outPath).size, total)
   }
 
-  /** Per-row-group, per-column footer statistics as a DataFrame — the
-    * data-skipping MANIFEST for a parquet table: (file, row_group,
-    * column, min_value, max_value, num_values, null_count). This is the
-    * primitive behind lakehouse pruning — a planner (or an ad-hoc
-    * `WHERE`) consults the manifest to decide which row groups a
-    * predicate can skip, the explicit form of what
-    * [[writeRangeLayout]]/[[writeZOrderLayout]] arrange for the engine
-    * to do implicitly. min/max surface as Statistics#minAsString /
-    * maxAsString (type-faithful text; cast numerics back as needed).
-    *
-    * Scale shape: only FOOTERS are read — a few KB per file regardless
-    * of data size — and files are processed in parallel via
-    * mapPartitions over the path list (a 100 TB table's manifest is a
-    * footer read per file, not a data scan). The path LIST (not the
-    * data) is collected driver-side: one string per file, the same
-    * order of driver memory any planner's file index already holds. */
   /** Leaf `.parquet` files under `path`, honoring the Spark/Hive
     * hidden convention: any path SEGMENT starting with `_` or `.`
-    * (e.g. a `_manifest` sidecar dir) is metadata, not data. */
+    * (e.g. a `_dv` sidecar dir) is metadata, not data. */
   private[graft] def listDataFiles(
       spark: SparkSession, path: String): Seq[String] = {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -331,17 +291,26 @@ object Layout {
           .getFileStatus(p).getLen
     }.sum
 
+  /** Per-row-group, per-column footer statistics as a DataFrame — the
+    * data-skipping MANIFEST for a parquet table: (file, row_group,
+    * column, min_value, max_value, num_values, null_count). This is the
+    * primitive behind lakehouse pruning — a planner (or an ad-hoc
+    * `WHERE`) consults the manifest to decide which row groups a
+    * predicate can skip, the explicit form of what
+    * [[writeRangeLayout]]/[[writeZOrderLayout]] arrange for the engine
+    * to do implicitly. min/max surface as Statistics#minAsString /
+    * maxAsString (type-faithful text; cast numerics back as needed).
+    *
+    * Scale shape: only FOOTERS are read — a few KB per file regardless
+    * of data size — and files are processed in parallel via
+    * mapPartitions over the path list (a 100 TB table's manifest is a
+    * footer read per file, not a data scan). The path LIST (not the
+    * data) is collected driver-side: one string per file, the same
+    * order of driver memory any planner's file index already holds. */
   def parquetFileStats(spark: SparkSession, path: String): DataFrame = {
     val files = listDataFiles(spark, path)
     require(files.nonEmpty,
       s"parquetFileStats: no .parquet files under $path — wrong path or non-parquet table")
-    parquetFileStatsFor(spark, files)
-  }
-
-  /** [[parquetFileStats]] over an explicit file list — the incremental
-    * path: a caller holding a cached manifest only needs footer reads
-    * for the files it just wrote. */
-  def parquetFileStatsFor(spark: SparkSession, files: Seq[String]): DataFrame = {
     import spark.implicits._
     // The session's hadoopConfiguration must travel to the executors:
     // a bare `new Configuration()` would drop fs.s3a/hdfs settings and
@@ -409,7 +378,7 @@ object Layout {
       .collect { case s: org.apache.spark.sql.types.StructType => s }
 
   /** One parquet file's footer (row-group metadata and column stats;
-    * no data pages) — behind [[parquetFileStatsFor]], [[readParquet]]'s
+    * no data pages) — behind [[parquetFileStats]], [[readParquet]]'s
     * schema and `Bloom.columnsOf`. */
   private[graft] def readFooter(
       conf: org.apache.hadoop.conf.Configuration, file: String)

@@ -9,8 +9,8 @@ import org.json4s.JsonDSL._
 /** Copy-on-write MERGE verbs at FILE granularity — the core
   * maintenance loop of a lakehouse table (Delta/Iceberg `MERGE INTO` /
   * `DELETE`), built from this engine's own primitives:
-  * [[footerBounds]] folds the per-file key min/max manifest out of
-  * parquet footers, and only files whose key range intersects the
+  * [[footerBounds]] folds the per-file key min/max out of parquet
+  * footers, and only files whose key range intersects the
   * update/delete key set are decoded and rewritten; every other file
   * is HARD-LINKED (local fs; an O(1) metadata op — the stand-in for a
   * production format's manifest reference) or byte-copied (no decode,
@@ -19,7 +19,7 @@ import org.json4s.JsonDSL._
   * At 100 TB the difference is the whole point: a MERGE that touches
   * 0.1% of keys on a key-clustered table ([[Layout.writeRangeLayout]])
   * rewrites a handful of files instead of the table. The pruning is
-  * the manifest consultation made explicit — the same footer stats the
+  * the footer consultation made explicit — the same footer stats the
   * engine's scans use for row-group skipping, driving a write-side
   * decision.
   *
@@ -33,26 +33,22 @@ object Upsert {
 
   private implicit val jsonFormats: Formats = DefaultFormats
 
-  /** Sidecar dir holding the cached per-file key-bounds manifest of a
-    * snapshot. Underscore-prefixed, so Spark's data reads skip it. */
-  private def manifestDir(snapshot: String) = s"$snapshot/_manifest"
-
-  /** Snapshot-RELATIVE path of `file` under `root` — the manifest key.
-    * Equal to the basename on a flat layout (so legacy basename-keyed
-    * sidecars stay valid verbatim), and carries the partition
+  /** Snapshot-RELATIVE path of `file` under `root` — the key of every
+    * per-file bounds row. Equal to the basename on a flat layout, and
+    * carries the partition
     * directories on a Hive-partitioned layout
     * (`STATECD=10/part-*.parquet`), which is what lets the commit
     * verbs operate on the engine's own `partitionBy` output instead of
     * refusing it. Scheme-proof: compares URI paths, not raw strings —
-    * `file:`-prefix drift between a cached manifest and a live listing
-    * must not mis-classify files. */
+    * `file:`-prefix drift between two listings must not mis-classify
+    * files. */
   private[graft] def relPath(root: String, file: String): String = {
     import org.apache.hadoop.fs.{Path => HPath}
     val r = new HPath(root).toUri.getPath.stripSuffix("/")
     val f = new HPath(file).toUri.getPath
     // a single-FILE parquet table lists itself (Layout.listDataFiles
     // returns the file when tablePath IS a regular file) — its
-    // manifest key is its basename, same as the flat-dir convention
+    // key is its basename, same as the flat-dir convention
     if (f == r) new HPath(f).getName
     else {
       require(f.startsWith(r + "/"),
@@ -64,17 +60,13 @@ object Upsert {
   /** Hive partition-directory value of `colName` in a relative path
     * (`STATECD=10/part-x.parquet` → "10"), unescaping the `%xx` codes
     * Spark's writer applies to special characters. None when the path
-    * carries no such segment. A `__HIVE_DEFAULT_PARTITION__` (null)
-    * value refuses loudly — a NULL key can never be addressed by the
-    * key-pruned engine. */
+    * carries no such segment; Some(null) for the null partition
+    * (`__HIVE_DEFAULT_PARTITION__`). */
   private def partitionValueOf(rel: String, colName: String): Option[String] =
     rel.split('/').dropRight(1).collectFirst {
       case seg if seg.startsWith(colName + "=") =>
         val raw = seg.substring(colName.length + 1)
-        require(raw != "__HIVE_DEFAULT_PARTITION__",
-          s"partition column '$colName' has a null partition — the " +
-            "key-pruned engine cannot address NULL keys; fill the key")
-        unescapePathName(raw)
+        if (raw == "__HIVE_DEFAULT_PARTITION__") null else unescapePathName(raw)
     }
 
   /** Inverse of Spark's `escapePathName` (%xx URI-style codes). */
@@ -133,10 +125,9 @@ object Upsert {
     * link/copy into the next snapshot unchanged, and is scheme-proof)
     * and stored as text that readers cast back to the key's native
     * type (a text min of "9" vs "10" would invert numeric bounds) — the
-    * ONE footer fold behind every manifest row (the commit engine's
-    * source and fresh-file bounds, [[writeManifestSidecar]],
-    * [[writeStatsSidecar]], the change feed's DV leg) and
-    * [[AnnIndex]]'s id pruning. Each file's footer is read ONCE for
+    * ONE source of per-file bounds (the commit engine's source and
+    * fresh-file bounds, [[statsPrunedFiles]], the change feed's DV leg)
+    * and [[AnnIndex]]'s id pruning. Each file's footer is read ONCE for
     * all `keys` ([[foldFooter]]); the fold picks where the reads run
     * ([[DriverFooterMaxFiles]]; `maxDriverFiles` lets a spec pin one
     * placement against the other), and both placements run the same
@@ -145,8 +136,9 @@ object Upsert {
     * A PARTITION column's value lives in the directory name, not in
     * any footer, so when every file carries a `key=` segment the
     * bounds come from the path (mn = mx = the partition value; no
-    * footer read) — exactly partition pruning expressed as manifest
-    * rows. */
+    * footer read) — exactly partition pruning expressed as bounds
+    * rows. A file in the null partition gets no row: it holds no
+    * non-null value of the column. */
   private[graft] def footerBounds(
       spark: SparkSession, files: Seq[String],
       keys: Seq[(String, DataType)], root: String,
@@ -156,10 +148,9 @@ object Upsert {
     val (pKeys, dKeys) = keys.partition { case (k, _) =>
       rels.nonEmpty && rels.forall(rel => partitionValueOf(rel, k).isDefined)
     }
-    val pRows = for ((k, _) <- pKeys; rel <- rels) yield {
-      val v = partitionValueOf(rel, k).get
-      (rel, k, v, v)
-    }
+    val pRows = for ((k, _) <- pKeys; rel <- rels;
+                  v <- partitionValueOf(rel, k) if v != null)
+      yield (rel, k, v, v)
     pRows ++ footerFacts(spark, files, dKeys, root, None, maxDriverFiles).flatMap(_.bounds)
   }
 
@@ -245,7 +236,7 @@ object Upsert {
     }, probe.flatMap(Bloom.mayHold(reader, _)))
   }
 
-  /** `k` inside a manifest row's `[mn, mx]` as `t`; NULL is unbounded. */
+  /** `k` inside a bounds row's `[mn, mx]` as `t`; NULL is unbounded. */
   private def inBounds(k: Column, t: DataType): Column =
     (col("mn").isNull || k >= col("mn").cast(t)) &&
       (col("mx").isNull || k <= col("mx").cast(t))
@@ -274,98 +265,15 @@ object Upsert {
     v.asInstanceOf[Comparable[Any]]
   }
 
-  /** [[footerBounds]] rows as the manifest's (file, key, mn, mx)
-    * frame — a driver-local relation, no job to build. */
+  /** [[footerBounds]] rows as a (file, key, mn, mx) frame — a
+    * driver-local relation, no job to build. */
   private def boundsFrame(
       spark: SparkSession, rows: Seq[(String, String, String, String)]): DataFrame = {
     import spark.implicits._
     rows.toDF("file", "key", "mn", "mx")
   }
 
-  /** `_manifest/_keys.json`: the key columns the sidecar carries rows
-    * for, stamped by every manifest writer — a METADATA answer to "does
-    * this sidecar cover key X", so the presence check below never runs
-    * a Spark job. A JSON array of key-column names. */
-  private[graft] def writeManifestKeys(
-      spark: SparkSession, snapshotDir: String, keys: Seq[String],
-      atomic: Boolean = true): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(s"${manifestDir(snapshotDir)}/_keys.json")
-    val write = if (atomic) Fs.writeTextAtomic _ else Fs.createText _
-    write(Fs.of(snapshotDir, spark), p, Fs.json(keys.distinct))
-  }
-
-  private[graft] def readManifestKeys(
-      spark: SparkSession, snapshotDir: String): Option[Set[String]] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(s"${manifestDir(snapshotDir)}/_keys.json")
-    Fs.readJson(Fs.of(snapshotDir, spark), p).map(_.extract[Set[String]])
-  }
-
-  /** The cached `_manifest` bounds rows for `keyCol`, when the sidecar
-    * exists AND carries this key (a sidecar for a different key must
-    * not shadow the footer fallback). Key membership comes from the
-    * `_keys.json` stamp when present — a metadata read, NO Spark job
-    * (the old `limit(1).count()` probe ran one empty-stage job per
-    * commit just to test presence).
-    *
-    * A LEGACY sidecar (no `_keys.json` stamp) is only trusted after
-    * its file keys prove a SUBSET of the live listing's relative
-    * paths: the pre-r11 writer stamped BASENAME keys without refusing
-    * Hive-partitioned layouts, and on such a table the basenames never
-    * match the relative-path classification — `touched` comes back
-    * empty and a MERGE appends duplicate keys / a DELETE removes
-    * nothing, silently. A mismatched legacy sidecar falls back to
-    * footers (correct, one sweep) instead. The subset probe is one
-    * small job over the sidecar (replacing the old one-row probe);
-    * `liveRels` lets callers that already listed the snapshot share
-    * the listing (null → list here, lazily — only the legacy path
-    * pays it). */
-  private[graft] def cachedBounds(
-      spark: SparkSession, tablePath: String, keyCol: String,
-      liveRels: () => Set[String] = null,
-      keysStamp: () => Option[Set[String]] = null)
-      : Option[DataFrame] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val md = new HPath(manifestDir(tablePath))
-    val fs = md.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(md, "_SUCCESS"))) None
-    // `keysStamp` lets a commit that probes several keys share ONE
-    // `_keys.json` read (null → read here)
-    else Option(keysStamp).map(_.apply())
-        .getOrElse(readManifestKeys(spark, tablePath)) match {
-      case Some(keys) =>
-        if (!keys.contains(keyCol)) None
-        else {
-          // a stamped sidecar was written by the current writers, whose
-          // row shape is fixed (all-text bounds) — the explicit schema
-          // skips parquet schema inference, which launches a Spark job;
-          // with it the whole presence path is metadata-only
-          val shape = org.apache.spark.sql.types.StructType.fromDDL(
-            "file string, key string, mn string, mx string")
-          Some(spark.read.schema(shape).parquet(md.toString)
-            .filter(col("key") === keyCol))
-        }
-      case None =>
-        // legacy sidecar (pre-_keys.json): inference + the subset probe
-        val bounds = Layout.readParquet(spark, Seq(md.toString))
-          .filter(col("key") === keyCol)
-          // pre-r9 sidecars stored long bounds; normalize to text
-          .withColumn("mn", col("mn").cast("string"))
-          .withColumn("mx", col("mx").cast("string"))
-        val sidecarFiles = bounds.select(col("file")).distinct()
-          .collect().map(_.getString(0))
-        if (sidecarFiles.isEmpty) None
-        else {
-          val live = Option(liveRels).map(_.apply()).getOrElse(
-            Layout.listDataFiles(spark, tablePath)
-              .map(f => relPath(tablePath, f)).toSet)
-          if (sidecarFiles.forall(live.contains)) Some(bounds) else None
-        }
-    }
-  }
-
-  /** The key types the manifest can prune on: integral (footer stats
+  /** The key types footer bounds can prune on: integral (footer stats
     * round-trip through text exactly) and string (parquet string stats
     * ARE the values; lexicographic min/max is the string ordering).
     * Anything else — float text round-trips, date/timestamp stat
@@ -374,124 +282,25 @@ object Upsert {
   private val integralTypes: Set[DataType] =
     Set(ByteType, ShortType, IntegerType, LongType)
 
-  /** The manifest can prune on `dt` — see [[requireSupportedKey]]. */
-  private[graft] def isManifestKeyType(dt: DataType): Boolean =
+  /** Footer bounds can prune on `dt` — see [[requireSupportedKey]]. */
+  private def isPrunableType(dt: DataType): Boolean =
     integralTypes.contains(dt) || dt == StringType
 
-  /** Stamp a snapshot's `_manifest` bounds sidecar for `keyCol` from
-    * its parquet footers — footer reads only, no data pass. Layout
-    * maintenance that just re-clustered by the key (OPTIMIZE) calls
-    * this so the NEXT commit prunes immediately instead of paying the
-    * all-files footer fallback once.
-    *
-    * @return number of data files stamped */
-  def writeManifestSidecar(
-      spark: SparkSession, snapshotDir: String, keyCol: String): Int = {
-    val keyType = Layout.readParquet(spark, Seq(snapshotDir),
-      readSchemaSidecar(snapshotDir)).schema(keyCol).dataType
-    requireSupportedKey(keyType, keyCol, "manifest stamp")
-    val rows = footerBounds(spark,
-      Layout.listDataFiles(spark, snapshotDir), Seq(keyCol -> keyType),
-      snapshotDir)
-    boundsFrame(spark, rows)
-      .coalesce(1).write.mode("overwrite").parquet(manifestDir(snapshotDir))
-    writeManifestKeys(spark, snapshotDir, Seq(keyCol))
-    rows.size
-  }
-
-  // -------------------------------------------------------------------
-  // General data skipping: the `_manifest` is not limited to commit
-  // keys — [[writeStatsSidecar]] stamps per-file bounds for ANY
-  // declared column list (Delta's dataSkippingNumIndexedCols shape,
-  // restricted to the types whose footer stats round-trip through
-  // text: integral + string), the commit engine carries those rows
-  // through every commit like key bounds (linked files verbatim,
-  // fresh files in the same footer pass), and [[readWhere]] prunes a
-  // read's file set on any stamped column with ZERO footer reads —
-  // the manifest consultation is the only metadata touched. At 100 TB
-  // this is the difference between "Spark's row-group pruning after
-  // opening every footer" and "never opening the file at all".
-  // -------------------------------------------------------------------
-
-  /** Stamp per-file bounds for `cols` — STATS columns for general
-    * data skipping — into the snapshot's `_manifest`, PRESERVING any
-    * already-stamped keys (their bounds recompute in the same single
-    * footer-stats pass; partition columns resolve from directory
-    * names, no read). Subsequent commits carry the stamped columns
-    * forward automatically.
-    *
-    * @return number of manifest rows written */
-  def writeStatsSidecar(
-      spark: SparkSession, snapshotDir: String, cols: Seq[String]): Int = {
-    require(cols.nonEmpty, "writeStatsSidecar: name at least one column")
-    val schema = logicalSchema(spark, snapshotDir)
-    cols.foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"writeStatsSidecar: no column '$c' in " +
-          schema.fieldNames.mkString(", "))
-      requireSupportedKey(schema(c).dataType, c, "stats stamp")
-    }
-    // a stamped key no longer in the schema (dropped by a rewrite)
-    // falls out here, same as the commit carry
-    val allKeys = (readManifestKeys(spark, snapshotDir).getOrElse(Set.empty)
-        ++ cols).toSeq.sorted
-      .flatMap(k => schema.fields.find(_.name == k).map(f => k -> f.dataType))
-      .filter { case (_, t) => isManifestKeyType(t) }
-    val files = Layout.listDataFiles(spark, snapshotDir)
-    require(files.nonEmpty, s"writeStatsSidecar: no .parquet files under $snapshotDir")
-    val rows = footerBounds(spark, files, allKeys, snapshotDir)
-    boundsFrame(spark, rows)
-      .coalesce(1).write.mode("overwrite").parquet(manifestDir(snapshotDir))
-    writeManifestKeys(spark, snapshotDir, allKeys.map(_._1))
-    // stamp the schema sidecar while we hold the resolved schema: a
-    // stats-stamped table exists to be read through statsPrunedFiles/
-    // readWhere, and without `_schema.json` every such read pays a
-    // mergeSchema footer sweep — the exact cost the stamp eliminates
-    if (readSchemaSidecar(snapshotDir).isEmpty)
-      writeSchemaSidecar(snapshotDir, schema, atomic = true) // live dir
-    rows.size
-  }
-
-  /** Re-stamp a REWRITTEN layout's manifest from its source's stamped
-    * key set plus the rewrite's own cluster columns — the OPTIMIZE/
-    * ZORDER carry. A layout rewrite replaces every file, so the old
-    * manifest rows are useless; without a fresh stamp the maintenance
-    * pass that exists to RESTORE pruning silently downgrades the table
-    * from zero-footer-read skipping back to footer sweeps (commit
-    * pruning pays one sweep and self-heals; `readWhere` never prunes
-    * again until someone re-stamps by hand). One footer pass over the
-    * new files — maintenance-cadence cost, same job the stamp saves
-    * every subsequent read. Columns whose type can't round-trip
-    * through footer-stat text are dropped silently (same rule as the
-    * commit carry); stamps nothing when nothing qualifies.
-    *
-    * @return manifest rows written (0 = nothing stampable) */
-  def restampAfterRewrite(
-      spark: SparkSession, srcPath: String, outPath: String,
-      clusterCols: Seq[String]): Int = {
-    val schema = logicalSchema(spark, outPath)
-    val want = (readManifestKeys(spark, srcPath).getOrElse(Set.empty)
-        ++ clusterCols)
-      .filter(k => schema.fields.find(_.name == k)
-        .exists(f => isManifestKeyType(f.dataType)))
-      .toSeq.sorted
-    if (want.isEmpty) 0
-    else writeStatsSidecar(spark, outPath, want)
-  }
-
-  /** The comparison conjuncts of `predicate` the stamped manifest can
-    * prune on: (column, survives(mn, mx)) per usable conjunct. Handles
-    * `=`, `<`, `<=`, `>`, `>=`, `IN` and `AND` over a stamped column
-    * vs a literal (either side); everything else contributes no
+  /** The comparison conjuncts of `predicate` footer bounds can prune
+    * on: (column, survives(mn, mx)) per usable conjunct. Handles
+    * `=`, `<`, `<=`, `>`, `>=`, `IN` and `AND` over an integral or
+    * string column vs a literal (either side); everything else contributes no
     * pruning (correct — pruning may only ever SHRINK the candidate
     * set for predicates a skipped file provably cannot satisfy, and
     * every handled form is comparison-based, which NULL values never
     * satisfy). */
   private def pruneChecks(
       spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
-      predicate: Column, stamped: Map[String, DataType])
-      : Seq[(String, (String, String) => Boolean)] = {
+      predicate: Column): Seq[(String, (String, String) => Boolean)] = {
     import org.apache.spark.sql.catalyst.expressions._
+    val prunable = schema.fields.collect {
+      case f if isPrunableType(f.dataType) => f.name -> f.dataType
+    }.toMap
     // ANALYZE the predicate against the table's schema (an empty
     // probe frame — no scan, no job) so the condition arrives as
     // resolved catalyst comparisons, not Spark 4's opaque ColumnNode
@@ -548,7 +357,7 @@ object Upsert {
         : Option[(String, (String, String) => Boolean)] =
       for {
         n <- nameOf(attr)
-        t <- stamped.get(n)
+        t <- prunable.get(n)
         lit <- txt(v, t)
       } yield {
         val c = cmp(t)
@@ -585,88 +394,53 @@ object Upsert {
   }
 
   /** The data files of `tablePath` a read under `predicate` must
-    * open, decided from the stamped `_manifest` bounds alone — ZERO
-    * footer reads. Files without a manifest row for a checked column
-    * hold no non-null value of it (the writers' invariant:
-    * [[footerBounds]] drops exactly those rows), which no
-    * comparison predicate matches — skipped. Columns the predicate
-    * constrains but the manifest doesn't stamp simply don't prune.
+    * open, decided from footer bounds of the predicate's columns
+    * ([[footerBounds]]: one pass, footers only, no data page). A file
+    * with no bounds row for a checked column holds no non-null value
+    * of it, which no comparison predicate matches — skipped. A
+    * (NULL, NULL) row means unknown bounds (stats missing or
+    * uncastable) — scanned.
     *
     * @return (candidate files, total file count) */
   def statsPrunedFiles(
       spark: SparkSession, tablePath: String, predicate: Column)
-      : (Seq[String], Int) = {
-    import org.apache.hadoop.fs.{Path => HPath}
+      : (Seq[String], Int) =
+    prunedFiles(spark, tablePath, predicate, logicalSchema(spark, tablePath))
+
+  private def prunedFiles(
+      spark: SparkSession, tablePath: String, predicate: Column,
+      schema: org.apache.spark.sql.types.StructType): (Seq[String], Int) = {
     val all = Layout.listDataFiles(spark, tablePath)
-    val md = new HPath(manifestDir(tablePath))
-    val fs = md.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new HPath(md, "_SUCCESS"))) return (all, all.size)
-    val stampedNames = readManifestKeys(spark, tablePath).getOrElse(Set.empty)
-    if (stampedNames.isEmpty) return (all, all.size)
-    val schema = logicalSchema(spark, tablePath)
-    val stamped = stampedNames.toSeq
-      .flatMap(k => schema.fields.find(_.name == k).map(f => k -> f.dataType))
-      .toMap
-    val checks = pruneChecks(spark, schema, predicate, stamped)
+    val checks = pruneChecks(spark, schema, predicate)
     if (checks.isEmpty) return (all, all.size)
-    val shape = org.apache.spark.sql.types.StructType.fromDDL(
-      "file string, key string, mn string, mx string")
-    // ONE metadata job per pruned read: the checked-key bounds and the
-    // full manifest file set come out of a single collect over a union
-    // (bounds rows for the checked keys + a null-key row per distinct
-    // file), so the driver holds files × (checked + 1) rows — not
-    // files × ALL stamped columns, which a whole-manifest collect
-    // would cost on a wide stamp at 100 TB file counts
-    val mf = spark.read.schema(shape).parquet(md.toString)
-    val rows = mf.filter(col("key").isin(checks.map(_._1).distinct: _*))
-      .unionByName(mf.select(col("file")).distinct()
-        .select(col("file"), lit(null).cast("string").as("key"),
-          lit(null).cast("string").as("mn"), lit(null).cast("string").as("mx")))
-      .collect()
-    val byKey: Map[String, Map[String, (String, String)]] =
-      rows.filter(!_.isNullAt(1))
-        .groupBy(_.getString(1)).map { case (k, rs) =>
-          k -> rs.map(r => r.getString(0) -> (r.getString(2), r.getString(3)))
-            .toMap
-        }
-    // files the manifest has NO row for under ANY key (vs "no row for
-    // this key", which the writers' invariant defines as all-null — see
-    // footerBounds): the stamp pass never saw them, so their
-    // contents are unknown and skipping them would silently drop data.
-    // Unreachable through the commit engine (every fresh file gets its
-    // own footer pass), but a hand-added file degrades to
-    // correct-but-scanned instead of wrong — the same defensive posture
-    // as the legacy-sidecar subset validation on the commit path.
-    val manFiles = rows.filter(_.isNullAt(1)).map(_.getString(0)).toSet
+    val cols = checks.map(_._1).distinct
+    val byKey = footerBounds(spark, all, cols.map(c => c -> schema(c).dataType), tablePath)
+      .groupBy(_._2).map { case (k, rs) => k -> rs.map(r => r._1 -> (r._3, r._4)).toMap }
     val keep = all.filter { f =>
       val rel = relPath(tablePath, f)
-      !manFiles.contains(rel) ||
-        checks.forall { case (k, ok) =>
-          byKey.getOrElse(k, Map.empty).get(rel) match {
-            // a PRESENT row with NULL bounds is unknown, not all-null:
-            // scan the file (only an ABSENT row means all-null)
-            case Some((mn, mx)) => mn == null || mx == null || ok(mn, mx)
-            case None => false
-          }
+      checks.forall { case (k, ok) =>
+        byKey.getOrElse(k, Map.empty).get(rel) match {
+          case Some((mn, mx)) => mn == null || mx == null || ok(mn, mx)
+          case None => false
         }
+      }
     }
     (keep, all.size)
   }
 
-  /** Read a snapshot under `predicate` with manifest-level data
-    * skipping ([[statsPrunedFiles]]): files the stamped bounds prove
-    * irrelevant are never opened — no footer read, no scan task. The
-    * deletion vector is honored exactly as in [[readWithDeletes]],
-    * and the full predicate still applies to the surviving rows (the
-    * pruning is a file-set shrink, never a row filter). Falls back to
-    * the plain filtered read when nothing prunes. */
+  /** Read a snapshot under `predicate` with file-level data skipping
+    * ([[statsPrunedFiles]]): files the footer bounds prove irrelevant
+    * are never scanned. The deletion vector is honored exactly as in
+    * [[readWithDeletes]], and the full predicate still applies to the
+    * surviving rows (the pruning is a file-set shrink, never a row
+    * filter). Falls back to the plain filtered read when nothing
+    * prunes. */
   def readWhere(
       spark: SparkSession, tablePath: String, predicate: Column): DataFrame = {
-    val (cands, total) = statsPrunedFiles(spark, tablePath, predicate)
+    val schema = logicalSchema(spark, tablePath)
+    val (cands, total) = prunedFiles(spark, tablePath, predicate, schema)
     if (cands.size == total)
       return readWithDeletes(spark, tablePath).filter(predicate)
-    val schema = readSchemaSidecar(tablePath).getOrElse(
-      logicalSchema(spark, tablePath))
     val data =
       if (cands.isEmpty)
         spark.createDataFrame(
@@ -674,8 +448,7 @@ object Upsert {
           org.apache.spark.sql.types.StructType(
             schema.fields.map(_.copy(nullable = true))))
       else {
-        val partCols =
-          partitionColsOf(tablePath, Layout.listDataFiles(spark, tablePath))
+        val partCols = partitionColsOf(tablePath, cands)
         val r0 = spark.read.schema(schema)
         val r = if (partCols.isEmpty) r0 else r0.option("basePath", tablePath)
         r.parquet(cands: _*)
@@ -684,9 +457,9 @@ object Upsert {
   }
 
   private def requireSupportedKey(dt: DataType, keyCol: String, side: String): Unit =
-    require(integralTypes.contains(dt) || dt == StringType,
+    require(isPrunableType(dt),
       s"Upsert: key column '$keyCol' ($side) has type ${dt.simpleString}; " +
-        "only integral or string keys are supported — manifest pruning " +
+        "only integral or string keys are supported — footer pruning " +
         "compares footer min/max in the key's native type and other " +
         "types don't round-trip through footer-stat text")
 
@@ -774,11 +547,11 @@ object Upsert {
   /** SHALLOW CLONE (Delta `CLONE` semantics): a new, independent table
     * whose data files are hard links into the source snapshot — O(1)
     * metadata per file, zero data bytes moved, each file's Bloom
-    * filters with it — with the `_manifest` and `_dv` sidecars carried
-    * verbatim (the files they describe are byte-identical by
-    * construction). The clone diverges freely
-    * from the source afterwards: COW commits on either side never
-    * mutate shared bytes, so neither table can corrupt the other.
+    * filters with it — with the `_dv` sidecar carried verbatim (the
+    * files it describes are byte-identical by construction). The clone
+    * diverges freely from the source afterwards: COW commits on either
+    * side never mutate shared bytes, so neither table can corrupt the
+    * other.
     *
     * @return number of data files cloned */
   def cloneSnapshot(
@@ -795,10 +568,8 @@ object Upsert {
     // and let a concurrent claimer grab the same number)
     clearLeftovers(ofs, out)
     linkOrCopyAll(spark, all, tablePath, outPath)
-    for (sc <- Seq("_manifest", "_dv")) {
-      val fs = sidecarFiles(spark, tablePath, sc)
-      if (fs.nonEmpty) linkOrCopyAll(spark, fs, s"$tablePath/$sc", s"$outPath/$sc")
-    }
+    val dv = sidecarFiles(spark, tablePath, "_dv")
+    if (dv.nonEmpty) linkOrCopyAll(spark, dv, dvDir(tablePath), dvDir(outPath))
     readSchemaSidecar(tablePath).foreach(writeSchemaSidecar(outPath, _))
     all.size
   }
@@ -829,23 +600,19 @@ object Upsert {
 
   private def schemaSidecar(snapshot: String) = s"$snapshot/_schema.json"
 
-  /** @param atomic true ONLY when stamping a LIVE (published) snapshot
-    *   a concurrent reader may resolve — [[writeStatsSidecar]]'s
-    *   stamp-CURRENT path; every commit-build call site writes into a
-    *   pre-publish dir where the publish is the visibility point and
-    *   the tmp+rename round-trips are pure overhead (docs/PLANS.md,
-    *   round 13: commit-path metadata cost). */
+  /** Written with one create: every call site writes into a
+    * pre-publish dir where the publish is the visibility point, so a
+    * tmp+rename would be pure overhead (docs/PLANS.md, round 13:
+    * commit-path metadata cost). */
   private[graft] def writeSchemaSidecar(
-      snapshotDir: String, schema: org.apache.spark.sql.types.StructType,
-      atomic: Boolean = false): Unit = {
+      snapshotDir: String, schema: org.apache.spark.sql.types.StructType): Unit = {
     // top-level nullable: linked pre-evolution files surface the new
     // columns as null, so the LOGICAL schema is nullable regardless
     // of what the freshly written files claim
     val nullable = org.apache.spark.sql.types.StructType(
       schema.fields.map(_.copy(nullable = true)))
     import org.apache.hadoop.fs.{Path => HPath}
-    val write = if (atomic) Fs.writeTextAtomic _ else Fs.createText _
-    write(Fs.of(snapshotDir),
+    Fs.createText(Fs.of(snapshotDir),
       new HPath(schemaSidecar(snapshotDir)), nullable.json)
   }
 
@@ -918,7 +685,7 @@ object Upsert {
   val MaxDvKeys: Long = 128L * 1000 * 1000
 
   /** Soft-delete `keys` WITHOUT rewriting any data file: the output
-    * snapshot links every data file and carries the sidecars; the
+    * snapshot links every data file and carries the schema; the
     * union of the previous DV (if any) and this batch's keys lands as
     * `_dv` (one column, named `keyCol`, native type — readers discover
     * the key from the sidecar schema). Commit cost ∝ delete batch, not
@@ -943,8 +710,6 @@ object Upsert {
     val ofs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
     clearLeftovers(ofs, out)
     linkOrCopyAll(spark, all, tablePath, outPath)
-    val mf = sidecarFiles(spark, tablePath, "_manifest")
-    if (mf.nonEmpty) linkOrCopyAll(spark, mf, s"$tablePath/_manifest", s"$outPath/_manifest")
     // a DV commit never changes the logical schema — carry the sidecar
     readSchemaSidecar(tablePath).foreach(writeSchemaSidecar(outPath, _))
     val prevDv = new HPath(dvDir(tablePath))
@@ -1020,7 +785,7 @@ object Upsert {
   /** Fold an accumulated deletion vector back into a clean COW
     * rewrite: the standard maintenance step once merge-on-read cost
     * outweighs write amplification. Exactly [[deleteByKey]] driven by
-    * the DV — manifest-pruned, only key-range-intersecting files
+    * the DV — footer-pruned, only key-range-intersecting files
     * decode — and the output snapshot carries NO `_dv`.
     *
     * @return (filesCopied, filesRewritten, dvKeysFolded) */
@@ -1050,18 +815,16 @@ object Upsert {
   val CommitBroadcastMaxKeys: Long = 4L * 1000 * 1000
 
   /** The shared commit engine behind [[upsertByKey]] and
-    * [[deleteByKey]]: prune by manifest, link/copy untouched files,
-    * rewrite touched files minus `evictKeys`, append `append` (if
-    * any), and commit the new snapshot's manifest sidecar with carried
-    * rows for linked files + fresh footer stats for written ones.
+    * [[deleteByKey]]: prune by the leading key's footer bounds,
+    * link/copy untouched files, rewrite touched files minus
+    * `evictKeys`, and append `append` (if any).
     *
     * COMPOSITE KEYS: `keyCols` may name several columns (the natural
     * grain of most analytic tables — e.g. the annualized FIA table's
     * `(tree_ID, YEAR)`, the key of every reference re-attach,
     * `R/estimate_carbon.R:92-104`). File pruning consults the LEADING
-    * component's bounds (the manifest carries per-file bounds for every
-    * key column, but a tuple range is only meaningfully orderable by
-    * its first component); eviction matches the FULL tuple. A table
+    * component's bounds (a tuple range is only meaningfully orderable
+    * by its first component); eviction matches the FULL tuple. A table
     * clustered by its leading key keeps commit cost ∝ touched files at
     * any key arity.
     *
@@ -1165,47 +928,6 @@ object Upsert {
     val leadCol = keyCols.head
     val leadType = keyTypes.head
 
-    // the live listing's relative paths, shared by every sidecar
-    // validation below (computed at most once, only when a legacy
-    // unstamped sidecar needs the subset probe)
-    lazy val liveRels: Set[String] = all.map(f => relPath(tablePath, f)).toSet
-
-    // the source's `_keys.json` stamp, read ONCE per commit and shared
-    // by every key's sidecar lookup below
-    lazy val srcStamp: Option[Set[String]] = readManifestKeys(spark, tablePath)
-
-    // STATS columns — stamped manifest keys beyond this commit's
-    // keyCols ([[writeStatsSidecar]]) — carry through like key bounds:
-    // linked files' rows ride verbatim, fresh files get their bounds
-    // in the same single footer pass, and the new stamp keeps them, so
-    // general data skipping survives any number of commits. A stamped
-    // column absent from the logical schema (dropped by a rewrite)
-    // falls out of the stamp here.
-    val extraKeys: Seq[(String, DataType)] =
-      srcStamp
-        .map(_ -- keyCols).getOrElse(Set.empty)
-        .toSeq.sorted
-        .flatMap(k => baseLogical.fields.find(_.name == k)
-          .map(f => k -> f.dataType))
-        .filter { case (_, t) => isManifestKeyType(t) }
-    // Per-FILE bounds of every key the new manifest carries (the
-    // commit's keys, leading first, then the stats columns): each
-    // resolves from the cached sidecar when it covers the key
-    // ([[cachedBounds]] — resolved ONCE per key: a legacy unstamped
-    // sidecar runs a probe job per call), and ALL misses share ONE
-    // footer fold over the source files, held on the driver (bootstrap
-    // price, paid once — never once per key). The leading key's rows
-    // drive pruning; all of them carry into the new manifest.
-    val srcKeys = keyCols.zip(keyTypes) ++ extraKeys
-    val cached = srcKeys.map { case (k, _) =>
-      cachedBounds(spark, tablePath, k, () => liveRels, () => srcStamp)
-    }
-    val missing = srcKeys.zip(cached).collect { case (kt, None) => kt }
-    val folded =
-      if (missing.isEmpty) Nil else footerBounds(spark, all, missing, tablePath)
-    val manifest = cached.head.getOrElse(
-      boundsFrame(spark, folded.filter(_._2 == leadCol)))
-
     // distinct key TUPLES, cast to native types, positionally renamed
     // __k0..__kN — pruning consults the leading component, eviction the
     // full tuple. When the caller guarantees distinctness, no DV fold
@@ -1226,28 +948,30 @@ object Upsert {
       isDistinct = evictDistinct && dvKeys.isEmpty && castIdentity)
 
     // a file is TOUCHED iff some evict tuple's LEADING component falls
-    // inside its bounds — manifest is small (one row per file), so it
-    // broadcasts against the distinct keys; bounds compare in the key's
-    // NATIVE type. A single-component key is already lead-distinct
-    // (upKeys is tuple-distinct), so the extra distinct pass is
-    // composite-key-only. An EMPTY evict set with no DV fold touches
-    // nothing — the verbs' no-match commits skip the probe job outright
-    // (nKeysHint == 0 asserts an empty evict set; every caller passes
-    // the set's own count).
+    // inside its bounds — one footer fold of the leading key over the
+    // source files, held on the driver; the rows are small (one per
+    // file), so they broadcast against the distinct keys; bounds
+    // compare in the key's NATIVE type. A single-component key is
+    // already lead-distinct (upKeys is tuple-distinct), so the extra
+    // distinct pass is composite-key-only. An EMPTY evict set with no
+    // DV fold touches nothing — the verbs' no-match commits skip the
+    // fold and the probe job outright (nKeysHint == 0 asserts an empty
+    // evict set; every caller passes the set's own count).
     val touched =
       if (nKeysHint == 0L && dvKeys.isEmpty) Set.empty[String]
       else {
         val leadKeys =
           if (keyCols.size == 1) upKeys.select(col("__k0"))
           else upKeys.select(col("__k0")).distinct()
-        broadcast(manifest)
+        broadcast(boundsFrame(spark,
+            footerBounds(spark, all, Seq(leadCol -> leadType), tablePath)))
           .join(leadKeys,
             inBounds(col("__k0"), leadType),
             "left_semi")
           .select(col("file")).collect().map(_.getString(0)).toSet
       }
-    // classification is by snapshot-RELATIVE path (what the manifest
-    // stores): unique by construction on any layout, including Hive
+    // classification is by snapshot-RELATIVE path (what the bounds
+    // rows carry): unique by construction on any layout, including Hive
     // partition dirs whose part-NNNNN basenames repeat across
     // partitions. The partition COLUMN sequence (empty when flat)
     // drives the rewrite's partitionBy below, so fresh files land in
@@ -1276,7 +1000,7 @@ object Upsert {
 
     // Untouched files: HARD-LINK when both ends are the local
     // filesystem (an O(1) metadata op per file — the local-fs stand-in
-    // for the manifest-reference a production table format uses, which
+    // for the file reference a production table format uses, which
     // is what keeps commit cost ∝ touched files, not table size), else
     // byte-copy. Safe because this layout never mutates a shipped
     // parquet file — snapshots share immutable content.
@@ -1356,7 +1080,7 @@ object Upsert {
     // without the coalesce, the rewrite lands one part file per
     // partition of the update union and every commit SHATTERS the
     // snapshot a little more (4 files became 9 in one commit when this
-    // was missing), growing the manifest and defeating the layout
+    // was missing), defeating the layout
     // a Hive layout keeps its directory scheme: fresh files land under
     // the same partition dirs (partitionBy), so linked and rewritten
     // files read back as ONE consistent partitioned table
@@ -1369,42 +1093,17 @@ object Upsert {
       else w.partitionBy(partCols: _*).parquet(outPath)
     }
 
-    // Commit the NEW snapshot's manifest sidecar: bounds for the linked
-    // files CARRY OVER (their bytes didn't change), and only the
-    // freshly written part files get footer reads. This is the
-    // incremental loop: after the first commit, no footer of an
-    // unchanged file is ever read again.
     val untouchedRels = untouched.map(f => relPath(tablePath, f)).toSet
-    // filter by the TOUCHED set (small by design) rather than the
-    // untouched list, which is table-sized; manifest rows are already
-    // relative paths, so linked files carry over verbatim. The output
-    // manifest carries bounds for EVERY key column (pruning uses the
-    // leading one, but a later commit may lead with another component)
-    // and every stats column — all resolved above.
-    val carriedAll =
-      (cached.flatten :+ boundsFrame(spark, folded)).reduce(_ unionByName _)
-    val carried =
-      if (touched.isEmpty) carriedAll
-      else carriedAll.filter(!col("file").isin(touched.toSeq: _*))
     val freshFiles = Layout.listDataFiles(spark, outPath)
       .filterNot(f => untouchedRels.contains(relPath(outPath, f)))
-    // fresh-file bounds land on the DRIVER (the fold's rows): they feed
-    // the manifest write as a local relation AND the TxnInfo lead
-    // bounds without a second footer pass
-    val freshRows = footerBounds(spark, freshFiles, srcKeys, outPath)
-    carried.unionByName(boundsFrame(spark, freshRows))
-      .coalesce(1).write.mode("overwrite").parquet(manifestDir(outPath))
-    writeManifestKeys(spark, outPath, keyCols ++ extraKeys.map(_._1),
-      atomic = false) // pre-publish dir
 
     // Transaction sidecar for conflict-aware OCC (see [[TxnInfo]]):
     // the touched/fresh file sets fall out of the classification
-    // above; the fresh files' lead bounds ride the driver-held rows
-    // (no extra footer pass, no extra job), and the evict-key range
-    // rides the verbs' own aggregations (hint) or one agg here.
-    val freshLead = freshRows.collect {
-      case (f, k, mn, mx) if k == leadCol => (f, mn, mx)
-    }
+    // above; the fresh files' lead bounds come from their footers
+    // (driver-held rows), and the evict-key range rides the verbs' own
+    // aggregations (hint) or one agg here.
+    val freshLead = footerBounds(spark, freshFiles, Seq(leadCol -> leadType), outPath)
+      .map { case (f, _, mn, mx) => (f, mn, mx) }
     // the verbs pre-compute the range inside an aggregation they run
     // anyway; the engine's own job remains only for DV-widened sets
     // (the TxnInfo range must cover the folded DV keys) and legacy
@@ -1455,7 +1154,7 @@ object Upsert {
   /** [[upsertByKey]] on a COMPOSITE key: a row is replaced when its
     * FULL `keyCols` tuple matches an update row's (the natural-grain
     * MERGE — e.g. `(tree_ID, YEAR)` on the annualized table); file
-    * pruning uses the leading component's manifest bounds, so cluster
+    * pruning uses the leading component's footer bounds, so cluster
     * the table by `keyCols.head` ([[Layout.writeRangeLayout]]) to keep
     * commit cost ∝ touched files.
     *
@@ -1502,7 +1201,7 @@ object Upsert {
   /** Copy-on-write DELETE — the other MERGE verb, same engine: only
     * files whose key range intersects the delete set decode and
     * rewrite (minus the deleted keys); everything else
-    * hard-links/copies, and the manifest sidecar carries over.
+    * hard-links/copies.
     *
     * @return (filesCopied, filesRewritten, keysRequested) */
   def deleteByKey(
@@ -1931,7 +1630,7 @@ object Upsert {
   // enough for a losing committer to prove its change DISJOINT from
   // the winners' and republish by relinking, without re-running the
   // Spark job (Delta's logical conflict detection, derived from this
-  // engine's manifest machinery). The commit log is one
+  // engine's footer bounds). The commit log is one
   // create-exclusive JSON per PUBLISHED version: it makes the
   // published chain walkable (each entry names its base), and its max
   // entry doubles as the CURRENT resolution when the pointer file is
@@ -2131,11 +1830,9 @@ object Upsert {
     * disjoint from every intervening winner. The rebased snapshot is
     * `currentDir`'s file set minus the loser's `touched` rel paths,
     * plus the loser's `fresh` files — all hard links (O(1) metadata
-    * per file; the loser's Spark job is NOT re-run). The manifest
-    * merges the same way (current's rows for its surviving files +
-    * the loser's rows for its fresh files, restricted to the stamp
-    * intersection); schema/audit/txn sidecars carry from the loser
-    * (the conflict check already proved the schemas equal). */
+    * per file; the loser's Spark job is NOT re-run). Schema/audit/txn
+    * sidecars carry from the loser (the conflict check already proved
+    * the schemas equal). */
   private[graft] def rebaseRelink(
       spark: SparkSession, currentDir: String, loserDir: String,
       outDir: String, touchedL: Set[String], freshL: Set[String]): Unit = {
@@ -2156,33 +1853,6 @@ object Upsert {
       Layout.listDataFiles(spark, loserDir)
         .filter(f => freshL.contains(relPath(loserDir, f))),
       loserDir, outDir)
-    // manifest: both sides stamped → merge on the stamp intersection;
-    // anything else → no sidecar (the next commit pays one footer
-    // sweep — correct, never wrong)
-    val curKeys = readManifestKeys(spark, currentDir)
-    val loserKeys = readManifestKeys(spark, loserDir)
-    val curFs = Fs.of(currentDir, spark)
-    val haveBoth =
-      curFs.exists(new HPath(s"${manifestDir(currentDir)}/_SUCCESS")) &&
-        curFs.exists(new HPath(s"${manifestDir(loserDir)}/_SUCCESS"))
-    (curKeys, loserKeys) match {
-      case (Some(ck), Some(lk)) if haveBoth && (ck & lk).nonEmpty =>
-        val shared = (ck & lk).toSeq.sorted
-        val shape = org.apache.spark.sql.types.StructType.fromDDL(
-          "file string, key string, mn string, mx string")
-        val cm = spark.read.schema(shape).parquet(manifestDir(currentDir))
-          .filter(col("key").isin(shared: _*))
-          .filter(if (touchedL.isEmpty) lit(true)
-                  else !col("file").isin(touchedL.toSeq: _*))
-        val lm = spark.read.schema(shape).parquet(manifestDir(loserDir))
-          .filter(col("key").isin(shared: _*))
-          .filter(if (freshL.isEmpty) lit(false)
-                  else col("file").isin(freshL.toSeq: _*))
-        cm.unionByName(lm).coalesce(1)
-          .write.mode("overwrite").parquet(manifestDir(outDir))
-        writeManifestKeys(spark, outDir, shared, atomic = false) // pre-publish
-      case _ => ()
-    }
     readSchemaSidecar(loserDir).foreach(writeSchemaSidecar(outDir, _))
     readCommitInfo(loserDir).foreach { case (op, _, stats) =>
       writeCommitInfo(outDir, op, stats)
@@ -2359,7 +2029,7 @@ object Upsert {
     * Cost ∝ changed files across the interval, not table size — the
     * property that makes incremental downstream consumers (a streaming
     * reader, a derived aggregate) cheap against a 100 TB table. The
-    * DV-delta leg fetches deleted rows' images manifest-pruned (only
+    * DV-delta leg fetches deleted rows' images footer-pruned (only
     * files whose key bounds can hold a deleted key decode), so it too
     * costs ∝ affected files.
     *
@@ -2445,7 +2115,7 @@ object Upsert {
     //    rows as delete images, fetched ONLY from files SHARED by
     //    both snapshots (a rewritten file is the file-diff legs' job
     //    — fetching from shared files is what prevents a COW-delete +
-    //    redundant-DV interval from double-reporting), manifest-
+    //    redundant-DV interval from double-reporting), footer-
     //    pruned within the shared set so the leg costs ∝ affected
     //    files. Net invariants, spec-pinned: each logical delete
     //    surfaces once, at the commit that logically removed it; a
@@ -2469,20 +2139,15 @@ object Upsert {
       }
       val kc = t.schema.fieldNames.head
       val kt = t.schema.head.dataType
-      val sharedNames = from.keySet & to.keySet
-      val sharedPaths = sharedNames.toSeq.sorted.map(to)
+      val sharedPaths = (from.keySet & to.keySet).toSeq.sorted.map(to)
       val toRoot = s"$tableDir/v$toVersion"
       val src =
         if (sharedPaths.isEmpty) rows(Nil, toVersion)
-        else if (!isManifestKeyType(kt)) rows(sharedPaths, toVersion)
+        else if (!isPrunableType(kt)) rows(sharedPaths, toVersion)
         else {
-          // bounds: the cached manifest filtered to the shared set, or
-          // footers of ONLY the shared files — the fallback must not
-          // footer-read the whole snapshot to then discard the rows
-          val bounds = cachedBounds(spark, toRoot, kc, () => to.keySet)
-            .map(_.filter(col("file").isin(sharedNames.toSeq: _*)))
-            .getOrElse(boundsFrame(spark,
-              footerBounds(spark, sharedPaths, Seq(kc -> kt), toRoot)))
+          // footers of ONLY the shared files
+          val bounds = boundsFrame(spark,
+            footerBounds(spark, sharedPaths, Seq(kc -> kt), toRoot))
           val candidates = broadcast(bounds)
             .join(newKeys.select(col(kc).cast(kt).as("__k")).distinct(),
               inBounds(col("__k"), kt),
@@ -2631,8 +2296,8 @@ object Upsert {
     val versions = snapshotVersions(tableDir)
     val current = currentVersion(tableDir)
     val drop = versions.dropRight(keep).filterNot(current.contains)
-    // Snapshots written by `commit` contain a `_manifest/` SUBDIRECTORY,
-    // so the delete must be recursive — a flat file loop silently left
+    // Snapshots hold SUBDIRECTORIES (a `_dv` sidecar, Hive partition
+    // dirs), so the delete must be recursive — a flat file loop silently left
     // the version directory behind (still listed by snapshotVersions,
     // readSnapshot then returned a broken read). Only versions whose
     // directory is verifiably GONE are reported deleted.

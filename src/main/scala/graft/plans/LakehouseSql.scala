@@ -53,7 +53,6 @@ import graft.ops.{Layout, Upsert}
   * CREATE GRAFT TABLE <name> AT '<dir>'
   * DROP GRAFT TABLE <name>
   * SHOW GRAFT TABLES
-  * STAMP STATS ON '<table>' COLUMNS (<a>, <b>, ...)
   * }}}
   * Every quoted `'<table>'` reference above (and the
   * `graft_table`/`graft_cdf` TVF first argument) also accepts a NAME
@@ -68,7 +67,7 @@ import graft.ops.{Layout, Upsert}
   * statement refuses rather than half-applies.
   *
   * `UPDATE` and predicate `DELETE` name the table's pruning key with
-  * `ON <keyCol>` (this engine's snapshots are manifest-pruned by a
+  * `ON <keyCol>` (this engine's snapshots are footer-pruned by a
   * declared key, not a transaction log's per-file row tracking): the
   * matched rows' keys bound the copy-on-write rewrite, and rows
   * sharing a key with a matched row ride along verbatim — see
@@ -137,8 +136,6 @@ object LakehouseSql {
     """(?is)^\s*DROP\s+GRAFT\s+TABLE\s+([A-Za-z_]\w*)\s*;?\s*$""".r
   private val showTbl =
     """(?is)^\s*SHOW\s+GRAFT\s+TABLES\s*;?\s*$""".r
-  private val stampStats =
-    """(?is)^\s*STAMP\s+STATS\s+ON\s+'([^']+)'\s+COLUMNS\s+\(\s*([\w.]+(?:\s*,\s*[\w.]+)*)\s*\)\s*;?\s*$""".r
   // a MERGE/DELETE that LOOKS like ours but doesn't match the grammar
   // must fail loudly, not fall through to Spark's parser (whose error
   // would point users at catalogs this engine doesn't use)
@@ -239,9 +236,6 @@ object LakehouseSql {
     case createTbl(name, dir) => Some(GraftCreateTableCommand(name, dir))
     case dropTbl(name) => Some(GraftDropTableCommand(name))
     case showTbl() => Some(GraftShowTablesCommand())
-    case stampStats(tbl, cols) =>
-      Some(GraftStampStatsCommand(tbl,
-        cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
     case t if mergeish.matches(t) || deleteish.matches(t) ||
         optimizeish.matches(t) || updateish.matches(t) =>
       throw new IllegalArgumentException(
@@ -345,7 +339,7 @@ object LakehouseSql {
     * publishes. Anything unprovable aborts exactly as before, with
     * the reason named. This is Delta's logical conflict resolution
     * (two writers MERGEing disjoint partitions both succeed) built on
-    * this engine's manifest machinery.
+    * this engine's per-file footer bounds.
     *
     * ISOLATION LEVEL: WriteSerializable-equivalent (Delta's default),
     * NOT Serializable. The conflict check tracks what the loser WROTE
@@ -500,7 +494,7 @@ object LakehouseSql {
             s" vs ${W.keys.headOption.getOrElse("?")})")
         // a winner-appended file whose lead bounds intersect the
         // loser's evict range may hold keys the loser should have
-        // evicted — the loser's pruning ran against the OLD manifest
+        // evicted — the loser's pruning ran against the OLD file set
         // and never saw it
         (L.mn, L.mx) match {
           case (Some(lm), Some(lx)) =>
@@ -703,7 +697,7 @@ object GraftCatalog {
   * [[graft.ops.Upsert.upsertByKeys]]: the source query's rows upsert
   * by the `ON` key tuple (`ON a` or `ON a AND b` — the composite form
   * matches on the FULL tuple and prunes on the leading component) into
-  * a new COW snapshot (file-granular manifest pruning; untouched files
+  * a new COW snapshot (file-granular footer pruning; untouched files
   * link). `WITH SCHEMA EVOLUTION` (Delta's clause) lets the source
   * carry NEW columns — rows in byte-copied files surface them as null;
   * without it, schema drift refuses. Returns the commit stats row. */
@@ -802,32 +796,9 @@ case class GraftVacuumAgeCommand(tableDir: String, hours: Long)
       hours * 3600L * 1000L).mkString(",")))
 }
 
-/** `STAMP STATS ON '<table>' COLUMNS (a, b, ...)` lowered onto
-  * [[graft.ops.Upsert.writeStatsSidecar]] — the SQL face of general
-  * data skipping (Delta's ANALYZE-style stats collection): per-file
-  * bounds for the named columns land in the snapshot's `_manifest`,
-  * preserving already-stamped keys, and every subsequent commit
-  * carries them forward. On a versioned table the CURRENT snapshot is
-  * stamped in place — a sidecar enrichment, not a data change, so no
-  * commit is created (re-running after the next commit re-stamps the
-  * new current; fresh files of intermediate commits are stamped
-  * automatically by the carry). */
-case class GraftStampStatsCommand(tableDir: String, cols: Seq[String])
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("manifest_rows", LongType, nullable = false)(),
-    AttributeReference("columns", StringType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val root = LakehouseSql.resolveRef(spark, tableDir)
-    val snap = graft.streaming.Streams.currentSnapshot(root).getOrElse(root)
-    val n = Upsert.writeStatsSidecar(spark, snap, cols)
-    Seq(Row(n.toLong, cols.mkString(",")))
-  }
-}
-
 /** `OPTIMIZE ... BY col [INTO ...]` lowered onto
   * [[graft.ops.Layout.optimizeTable]] (re-cluster into disjoint key
-  * ranges; revives manifest/min-max pruning), or `ZORDER BY (a, b)`
+  * ranges; revives footer min/max pruning), or `ZORDER BY (a, b)`
   * onto [[graft.ops.Layout.optimizeTableZOrder]] (Morton-interleaved
   * clustering — filters on either column prune). On a versioned table
   * the optimized layout commits as the next version (Delta's in-place
@@ -890,13 +861,6 @@ case class GraftOptimizeCommand(
                   "the claimed snapshot is incomplete and was not published")
           }
           fs.delete(tmpP, true)
-          // a single-key layout was JUST range-clustered — stamp its
-          // manifest so the next MERGE prunes with zero footer reads
-          // (skipped for ZORDER — the manifest is single-key — and for
-          // key types it can't compare)
-          if (sortCols.size == 1 && Upsert.isManifestKeyType(
-              spark.read.parquet(out).schema(sortCols.head).dataType))
-            Upsert.writeManifestSidecar(spark, out, sortCols.head)
           Upsert.writeCommitInfo(out, "OPTIMIZE", Seq(
             "files_in" -> r._1.toLong, "files_out" -> r._2.toLong))
           r
@@ -961,9 +925,9 @@ case class GraftHistoryCommand(tableDirRef: String) extends LeafRunnableCommand 
 /** `DESCRIBE DETAIL '<dir>'` — one-row table-level summary (Delta's
   * everyday introspection verb next to DESCRIBE HISTORY): resolves a
   * versioned dir through CURRENT (a plain snapshot dir describes
-  * itself), and reports file/byte counts, which sidecars ride the
-  * resolved snapshot, whether its files carry Bloom filters (one
-  * footer) and who owns the table. Metadata-only — file listings,
+  * itself), and reports file/byte counts, whether its files carry
+  * Bloom filters (one footer), whether it carries a schema sidecar,
+  * its deletion-vector bytes and who owns the table. Metadata-only — file listings,
   * size sums and one footer, no Spark job over data. */
 case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
@@ -974,8 +938,6 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
     AttributeReference("n_snapshots", LongType, nullable = false)(),
     AttributeReference("n_files", LongType, nullable = false)(),
     AttributeReference("bytes", LongType, nullable = false)(),
-    AttributeReference("has_manifest", org.apache.spark.sql.types.BooleanType,
-      nullable = false)(),
     AttributeReference("has_bloom", org.apache.spark.sql.types.BooleanType,
       nullable = false)(),
     AttributeReference("has_schema", org.apache.spark.sql.types.BooleanType,
@@ -998,8 +960,6 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
         s"under '$tableDir' — not a graft table")
     val bytes = Layout.totalBytes(spark, files)
     val sfs = graft.ops.Fs.of(snapshot, spark)
-    def sidecar(name: String): Boolean =
-      sfs.exists(new org.apache.hadoop.fs.Path(s"$snapshot/$name/_SUCCESS"))
     val dvBytes =
       Upsert.dvFiles(spark, snapshot).fold(0L)(_.map(_.getLen).sum)
     val writer = graft.ops.Fs.readTextIfExists(sfs,
@@ -1011,7 +971,6 @@ case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
         .orNull,
       if (versioned) Upsert.snapshotVersions(tableDir).size.toLong else 0L,
       files.size.toLong, bytes,
-      sidecar("_manifest"),
       files.headOption.exists(graft.ops.Bloom.columnsOf(spark, _).nonEmpty),
       Upsert.readSchemaSidecar(snapshot).isDefined,
       dvBytes,

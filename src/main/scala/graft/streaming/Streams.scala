@@ -303,7 +303,7 @@ object Streams {
   /** Streaming CDC sink: each micro-batch MERGEs into a copy-on-write
     * table via [[graft.ops.Upsert.upsertByKey]] — the lakehouse commit
     * loop as a streaming sink. Every batch writes a NEW snapshot
-    * directory `v<id>` (manifest-pruned rewrite + byte-copied
+    * directory `v<id>` (footer-pruned rewrite + byte-copied
     * untouched files against the previous snapshot) and then swaps the
     * `CURRENT` pointer; readers resolve [[currentSnapshot]] and never
     * observe a half-written table. A batch replayed after a failure

@@ -144,6 +144,36 @@ class FixturesSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"staging outside graft.Fixtures:\n${bad.mkString("\n")}")
   }
+
+  test("q_stats_prune's layout: two builds in one JVM, unrelated jobs between, write identical files") {
+    import org.apache.spark.sql.functions._
+    // orders-shaped: unique o_orderkey, o_custkey scattered over 1..1500
+    val orders = spark.range(15000).select(col("id").as("o_orderkey"),
+      (pmod(col("id") * 7919L, lit(1500L)) + 1L).as("o_custkey"),
+      (col("id") % 3).cast("string").as("o_orderstatus"))
+    val root = Files.createTempDirectory("statsprune_layout").toString
+    /** Each data file's partition index and its rows, in file order. */
+    def build(out: String): Seq[(String, Seq[org.apache.spark.sql.Row])] = {
+      QueriesCorpus.statsPruneLayout(orders, out)
+      graft.ops.Layout.listDataFiles(spark, out).map { f =>
+        new org.apache.hadoop.fs.Path(f).getName.take(10) ->
+          spark.read.parquet(f).collect().toSeq
+      }
+    }
+    try {
+      val first = build(s"$root/a")
+      // unrelated jobs advance the RDD ids a range sampler seeds from
+      for (n <- Seq(3, 7, 16))
+        spark.range(5000).repartitionByRange(n, col("id") % 97).count()
+      val second = build(s"$root/b")
+      assert(first.size > 1 && first.map(_._2.size).sum == orders.count())
+      assert(first == second, "the two builds wrote different files")
+      // the gate's predicate prunes on this layout
+      val pred = col("o_custkey").between(lit(100L), lit(400L))
+      val (cands, total) = graft.ops.Upsert.statsPrunedFiles(spark, s"$root/a", pred)
+      assert(cands.nonEmpty && cands.size < total, s"${cands.size}/$total")
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
+  }
 }
 
 /** Child JVM for FixturesSpec: takes sf dir `args(0)`'s fixture lock, says

@@ -90,8 +90,8 @@ class FsSubstrateSpec extends AnyFunSuite {
       .repartitionByRange(4, $"k").sortWithinPartitions($"k")
       .write.parquet(s"$base/s0")
 
-    // MERGE commit: footer manifest, link→copy fallback (non-file
-    // scheme never hard-links), schema/manifest/commitinfo sidecars
+    // MERGE commit: footer bounds, link→copy fallback (non-file
+    // scheme never hard-links), schema/txn/commitinfo sidecars
     val (c, r, n) = Upsert.upsertByKey(spark, s"$base/s0", s"$base/s1",
       spark.range(100, 140).select($"id".as("k"), lit(-1L).as("v")), "k")
     assert(n == 40 && c + r == 4 && r >= 1)
@@ -102,7 +102,7 @@ class FsSubstrateSpec extends AnyFunSuite {
     // the sidecars live where the scheme stores bytes — and NOT in a
     // bogus cwd-relative "graftmock:" directory (the java.io failure
     // mode this spec exists to catch)
-    for (f <- Seq("_schema.json", "_commitinfo", "_manifest/_keys.json"))
+    for (f <- Seq("_schema.json", "_commitinfo", "_txn.json"))
       assert(new java.io.File(s"$local/s1/$f").isFile, s"missing $f")
     assert(!new java.io.File("graftmock:").exists,
       "a raw java.io call resolved the scheme as a relative path")

@@ -431,8 +431,9 @@ class LakehouseSqlSpec extends AnyFunSuite {
     assert(cur.agg(sum($"v")).head.getLong(0) == 1999L * 2000 / 2)
     // no .inprogress residue, no unclaimed dirs
     assert(!new java.io.File(s"$tbl/v1.inprogress").exists)
-    // the re-clustered layout ships a manifest for its cluster key...
-    assert(new java.io.File(s"$tbl/v1/_manifest/_SUCCESS").isFile)
+    // the re-clustered layout ships no bounds sidecar: the next commit
+    // reads its cluster key's bounds from the new footers...
+    assert(!new java.io.File(s"$tbl/v1/_manifest").exists)
     assert(graft.ops.Upsert.readCommitInfo(s"$tbl/v1")
       .map(_._1).contains("OPTIMIZE"))
     // ...and a following MERGE consumes the optimized snapshot cleanly
@@ -851,8 +852,9 @@ class LakehouseSqlSpec extends AnyFunSuite {
       assert(ino(s"$tbl/v1/$f") == ino(s"$tbl/v3/$f"),
         s"$f must be hard-linked into the rebased snapshot")
     }
-    // manifest carried through the rebase: pruning stays metadata-only
-    assert(Upsert.cachedBounds(spark, s"$tbl/v3", "dt").isDefined)
+    // no bounds sidecar rides the rebase: a later commit folds v3's
+    // bounds from its partition dirs and relinked footers
+    assert(!new java.io.File(s"$tbl/v3/_manifest").exists)
     // audit + txn sidecars restamped for the published version: the
     // rebased snapshot carries B's change description (dt=1 only)
     assert(Upsert.readCommitInfo(s"$tbl/v3").map(_._1).contains("MERGE"))
@@ -1169,40 +1171,6 @@ class LakehouseSqlSpec extends AnyFunSuite {
       Upsert.writeCommitLogEntry(tbl, 1L, 0L, "MERGE")
     }
     assert(dup.getMessage.contains("truncated"), dup.getMessage)
-  }
-
-  test("STAMP STATS ON: SQL-declared stats columns prune reads; versioned tables stamp CURRENT") {
-    import spark.implicits._
-    val root = s"$base/stampstats"
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-    val seed = s"$root/seed"; val tbl = s"$root/tbl"
-    // clustered by c so per-file c-bounds are disjoint and pruning can bite
-    spark.range(8000)
-      .select($"id".as("k"), ($"id" / 4).cast("long").as("c"), lit(1L).as("v"))
-      .repartitionByRange(8, $"c").sortWithinPartitions($"c")
-      .write.mode("overwrite").parquet(seed)
-    spark.sql(s"CONVERT '$seed' TO VERSIONED '$tbl'").collect()
-
-    val r = spark.sql(s"STAMP STATS ON '$tbl' COLUMNS (c, k)").collect()(0)
-    assert(r.getLong(0) > 0 && r.getString(1) == "c,k", r.toString)
-    // the stamp landed on the CURRENT snapshot, not the table root
-    val cur = graft.streaming.Streams.currentSnapshot(tbl).get
-    assert(new java.io.File(s"$cur/_manifest/_keys.json").isFile)
-
-    val pred = $"c" >= 100L && $"c" < 200L
-    val (cands, total) = Upsert.statsPrunedFiles(spark, cur, pred)
-    assert(total == 8 && cands.size == 1, s"${cands.size}/$total")
-    assert(Upsert.readWhere(spark, cur, pred).count() == 400)
-
-    // works through a registered catalog name too
-    spark.sql(s"CREATE GRAFT TABLE stamp_stats_t AT '$tbl'").collect()
-    val r2 = spark.sql("STAMP STATS ON 'stamp_stats_t' COLUMNS (v)").collect()(0)
-    assert(r2.getLong(0) > 0)
-    // an unknown column refuses loudly
-    val bad = intercept[IllegalArgumentException] {
-      spark.sql(s"STAMP STATS ON '$tbl' COLUMNS (nope)").collect()
-    }
-    assert(bad.getMessage.contains("no column"), bad.getMessage)
   }
 
   test("NaN and -0.0 keys: UPDATE, DELETE and MERGE refuse; CURRENT stays put") {

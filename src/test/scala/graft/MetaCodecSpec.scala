@@ -29,9 +29,6 @@ class MetaCodecSpec extends AnyFunSuite {
     spark
     val t = tmp("metacodec_golden")
     val snap = s"$t/v2"
-    put(s"$snap/_manifest/_keys.json", """["k","c"]""")
-    assert(Upsert.readManifestKeys(spark, snap).contains(Set("k", "c")))
-
     put(s"$snap/_commitinfo",
       """{"operation":"MERGE","ts":1700000000000,"rows_matched":3,"files_rewritten":-1}""")
     assert(Upsert.readCommitInfo(snap).contains(
@@ -63,8 +60,6 @@ class MetaCodecSpec extends AnyFunSuite {
     spark
     val t = tmp("metacodec_writers")
     val snap = s"$t/v1"
-    Upsert.writeManifestKeys(spark, snap, Seq("k", "c", "k"))
-    assert(text(s"$snap/_manifest/_keys.json") == """["k","c"]""")
     Upsert.writeTxnInfo(snap, Upsert.TxnInfo(Seq("k"), "long", Some("1"), Some("9"),
       Set("b.parquet", "a.parquet"), Seq("x.parquet"), Seq(("x.parquet", "1", "9"))))
     assert(text(s"$snap/_txn.json") ==
@@ -86,9 +81,6 @@ class MetaCodecSpec extends AnyFunSuite {
     import spark.implicits._
     val t = tmp("metacodec_hostile")
     val snap = s"$t/v1"
-    Upsert.writeManifestKeys(spark, snap, Seq(hostile, "k"))
-    assert(Upsert.readManifestKeys(spark, snap).contains(Set(hostile, "k")))
-
     Upsert.writeCommitInfo(snap, hostile, Seq(hostile -> 3L, "n" -> -2L))
     val info = Upsert.readCommitInfo(snap).get
     assert(info._1 == hostile && info._3 == Seq(hostile -> 3L, "n" -> -2L))

@@ -276,11 +276,11 @@ class UpdateWhereSpec extends AnyFunSuite {
     assert(d.getLong(2) == 1L, s"current_version: $d")
     assert(d.getLong(3) == 2L, s"n_snapshots: $d")
     assert(d.getLong(4) >= 2L && d.getLong(5) > 0L, s"files/bytes: $d")
-    assert(d.getBoolean(6), "UPDATE commits a manifest sidecar")
-    assert(d.getBoolean(8), "UPDATE stamps the schema sidecar")
-    assert(d.getLong(9) == 0L, "no DV")
-    assert(d.getString(11) == "UPDATE", s"last_operation: $d")
-    assert(d.getTimestamp(12) != null)
+    assert(d.getAs[Boolean]("has_schema"), "UPDATE stamps the schema sidecar")
+    assert(d.getAs[Long]("dv_bytes") == 0L, "no DV")
+    assert(d.getAs[String]("last_operation") == "UPDATE", s"last_operation: $d")
+    assert(d.getAs[java.sql.Timestamp]("last_commit_ts") != null)
+    assert(!d.schema.fieldNames.contains("has_manifest"))
 
     // plain DV-carrying snapshot: describes itself, reports dv_bytes
     val plain = s"$base/detail_plain"; val dvOut = s"$base/detail_dv"
@@ -290,8 +290,8 @@ class UpdateWhereSpec extends AnyFunSuite {
       spark.range(10).select($"id".as("k")), "k")
     val d2 = spark.sql(s"DESCRIBE DETAIL '$dvOut'").collect()(0)
     assert(!d2.getBoolean(1) && d2.getLong(3) == 0L, s"plain: $d2")
-    assert(d2.getLong(9) > 0L, s"dv_bytes: $d2")
-    assert(d2.getString(11) == "DELETE_DV", s"op: $d2")
+    assert(d2.getAs[Long]("dv_bytes") > 0L, s"dv_bytes: $d2")
+    assert(d2.getAs[String]("last_operation") == "DELETE_DV", s"op: $d2")
 
     val e = intercept[IllegalArgumentException] {
       spark.sql(s"DESCRIBE DETAIL '$base/nowhere'").collect()

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Copy-on-write upsert: file-granular pruning via the footer
-  * manifest, byte-identical copies for untouched files, exact merge
+/** Copy-on-write upsert: file-granular pruning via footer bounds,
+  * byte-identical copies for untouched files, exact merge
   * semantics vs the naive full rewrite. */
 class UpsertSpec extends AnyFunSuite {
 
@@ -91,7 +91,7 @@ class UpsertSpec extends AnyFunSuite {
     assert(Upsert.readSnapshot(spark, tbl, 2L).count() == 10)
   }
 
-  test("manifest sidecar: committed, invisible to data reads, carried across commits") {
+  test("chained commits: footer bounds match each file's data; a second commit prunes") {
     import spark.implicits._
     val tbl = s"$base/m0"; val o1 = s"$base/m1"; val o2 = s"$base/m2"
     spark.range(4000).select($"id".as("k"), $"id".as("v"))
@@ -100,26 +100,23 @@ class UpsertSpec extends AnyFunSuite {
 
     val up1 = spark.range(100, 200).select($"id".as("k"), lit(-1L).as("v"))
     graft.ops.Upsert.upsertByKey(spark, tbl, o1, up1, "k")
-    // sidecar exists and is hidden from data reads
-    assert(new java.io.File(s"$o1/_manifest").isDirectory)
     assert(spark.read.parquet(o1).count() == 4000)
-    // every data file of o1 has a manifest row with correct bounds
-    val m1 = spark.read.parquet(s"$o1/_manifest")
-    // bounds are stored as type-faithful text (native-type comparable)
-    val mRows = m1.collect().map(r =>
-      r.getAs[String]("file").split('/').last ->
-        (r.getAs[String]("mn").toLong, r.getAs[String]("mx").toLong)).toMap
+    // every data file of o1 folds a bounds row equal to its data; the
+    // bounds are type-faithful text (native-type comparable)
+    val mRows = Upsert.footerBounds(spark, graft.ops.Layout.listDataFiles(spark, o1),
+        Seq("k" -> org.apache.spark.sql.types.LongType), o1)
+      .map(r => r._1 -> (r._3.toLong, r._4.toLong)).toMap
     val dataFiles = new java.io.File(o1).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    assert(mRows.keySet == dataFiles, s"manifest/file mismatch: ${mRows.keySet} vs $dataFiles")
+    assert(mRows.keySet == dataFiles, s"bounds/file mismatch: ${mRows.keySet} vs $dataFiles")
     val actual = spark.read.parquet(o1)
       .groupBy(input_file_name().as("f"))
       .agg(min($"k").as("mn"), max($"k").as("mx")).collect()
       .map(r => r.getString(0).split('/').last -> (r.getLong(1), r.getLong(2))).toMap
     mRows.foreach { case (f, b) => assert(actual(f) == b, s"bounds drift for $f") }
 
-    // second commit CHAINED from the first snapshot (reads the cached
-    // manifest, no footer pass over unchanged files) stays exact
+    // second commit CHAINED from the first snapshot prunes from the
+    // footers of its mix of linked and fresh files and stays exact
     val up2 = spark.range(3000, 3100).select($"id".as("k"), lit(-2L).as("v"))
     val (c2, r2, _) = graft.ops.Upsert.upsertByKey(spark, o1, o2, up2, "k")
     assert(c2 + r2 == 4 && r2 <= 2)
@@ -128,12 +125,6 @@ class UpsertSpec extends AnyFunSuite {
       .join(up2.select($"k"), Seq("k"), "left_anti").unionByName(up2)
     val got = spark.read.parquet(o2)
     assert(got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty)
-    // and o2's manifest again covers exactly its data files
-    val m2files = spark.read.parquet(s"$o2/_manifest")
-      .select("file").as[String].collect().map(_.split('/').last).toSet
-    val o2files = new java.io.File(o2).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    assert(m2files == o2files)
   }
 
   test("change data feed: exact before/after images from changed files only") {
@@ -292,8 +283,6 @@ class UpsertSpec extends AnyFunSuite {
     assert(got.count() == 3900)
     assert(got.filter($"k".between(100, 199)).count() == 0)
     assert(got.filter($"k" === 99L).count() == 1 && got.filter($"k" === 200L).count() == 1)
-    // the manifest sidecar committed for the new snapshot too
-    assert(new java.io.File(s"$out/_manifest").isDirectory)
   }
 
   test("schema evolution: new update column lands; old rows surface null; off by default") {
@@ -322,29 +311,30 @@ class UpsertSpec extends AnyFunSuite {
       "byte-copied rows must surface the new column as null")
   }
 
-  test("vacuum on a COMMIT-built chain removes the _manifest subdir too") {
+  test("vacuum on a COMMIT-built chain removes the _dv subdir too") {
     import spark.implicits._
     val tbl = s"$base/vchain"
-    // v0 by plain write; v1/v2 by real commits, so each snapshot
-    // carries a `_manifest/` subdirectory — the shape the old flat
-    // delete loop silently failed on (zombie version dirs)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tbl))
+    // v0 by plain write; v1 by a DV delete, so it carries a `_dv/`
+    // subdirectory — the shape the old flat delete loop silently
+    // failed on (zombie version dirs); v2 by a commit that folds it
     spark.range(2000).select($"id".as("k"), $"id".as("v"))
       .repartitionByRange(4, $"k").sortWithinPartitions($"k")
       .write.mode("overwrite").parquet(s"$tbl/v0")
-    Upsert.upsertByKey(spark, s"$tbl/v0", s"$tbl/v1",
-      spark.range(10, 20).select($"id".as("k"), lit(-1L).as("v")), "k")
+    Upsert.deleteByKeyDV(spark, s"$tbl/v0", s"$tbl/v1",
+      spark.range(10, 20).select($"id".as("k")), "k")
     Upsert.upsertByKey(spark, s"$tbl/v1", s"$tbl/v2",
       spark.range(30, 40).select($"id".as("k"), lit(-2L).as("v")), "k")
     val w = new java.io.PrintWriter(s"$tbl/CURRENT", "UTF-8")
     try w.print("v2") finally w.close()
-    assert(new java.io.File(s"$tbl/v1/_manifest").isDirectory)
+    assert(new java.io.File(s"$tbl/v1/_dv").isDirectory)
 
     assert(Upsert.vacuum(tbl, keep = 1) == Seq(0L, 1L))
-    // the version dirs are GONE — not zombies holding _manifest
+    // the version dirs are GONE — not zombies holding _dv
     assert(!new java.io.File(s"$tbl/v0").exists)
     assert(!new java.io.File(s"$tbl/v1").exists)
     assert(Upsert.snapshotVersions(tbl) == Seq(2L))
-    assert(Upsert.readSnapshot(spark, tbl, 2L).count() == 2000)
+    assert(Upsert.readSnapshot(spark, tbl, 2L).count() == 1990)
   }
 
   test("string-keyed upsert prunes and merges exactly") {
@@ -779,14 +769,15 @@ class UpsertSpec extends AnyFunSuite {
     spark.range(2000).select($"id".as("k"), $"id".as("v"))
       .repartitionByRange(4, $"k").sortWithinPartitions($"k")
       .write.mode("overwrite").parquet(tbl)
-    // give the source a manifest sidecar via a commit
+    // give the source a `_dv` sidecar via a DV delete
     val staged = s"$base/clone0m"
-    Upsert.upsertByKey(spark, tbl, staged,
-      spark.range(1).select($"id".as("k"), lit(7L).as("v")), "k")
+    Upsert.deleteByKeyDV(spark, tbl, staged,
+      spark.range(1999, 2000).select($"id".as("k")), "k")
 
     val n = Upsert.cloneSnapshot(spark, staged, cl)
     assert(n == 4)
-    assert(new java.io.File(s"$cl/_manifest").isDirectory, "sidecar must carry")
+    assert(new java.io.File(s"$cl/_dv/_SUCCESS").isFile, "sidecar must carry")
+    assert(Upsert.readWithDeletes(spark, cl).count() == 1999)
     val a = spark.read.parquet(staged); val b = spark.read.parquet(cl)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
 
@@ -906,7 +897,7 @@ class UpsertSpec extends AnyFunSuite {
     val (nCopied, nRewritten, _) = Upsert.upsertByKeys(
       spark, tbl, out, updates, Seq("p", "k"))
     // leading key = the partition column → only p=1 files rewrite
-    // (partition pruning expressed as manifest rows)
+    // (partition pruning expressed as bounds rows)
     val p1Files = relFiles.count(_.startsWith("p=1/"))
     assert(nRewritten == p1Files,
       s"only p=1's $p1Files files may rewrite, got $nRewritten")
@@ -931,8 +922,8 @@ class UpsertSpec extends AnyFunSuite {
       plan.contains("PartitionFilters: [(p"),
       s"expected partition filters in the scan:\n$plan")
 
-    // SECOND commit rides the stamped relative-path manifest
-    // (cachedBounds, no footer fallback) and still prunes
+    // SECOND commit folds its bounds from the partition dirs again
+    // (linked and fresh files alike) and still prunes
     val out2 = s"$base/part_out2"
     val upd2 = Seq((2, 2L, -9L)).toDF("p", "k", "v")
     val (c2, r2, _) = Upsert.upsertByKeys(spark, out, out2, upd2, Seq("p", "k"))
@@ -1001,111 +992,96 @@ class UpsertSpec extends AnyFunSuite {
     assert(spark.read.parquet(cl).count() == 200)
   }
 
-  test("sidecar key-presence check is metadata-only: no Spark job") {
-    import spark.implicits._
-    val tbl = s"$base/keysmeta"
-    spark.range(100).select($"id".as("k"), ($"id" * 2).as("v"))
-      .write.mode("overwrite").parquet(tbl)
-    Upsert.writeManifestSidecar(spark, tbl, "k")
-    assert(new java.io.File(s"$tbl/_manifest/_keys.json").isFile,
-      "manifest writers must stamp _keys.json")
-
-    // Job IDs are assigned synchronously and monotonically by the
-    // DAGScheduler, so two sentinel jobs with CONSECUTIVE ids prove no
-    // job ran between them — no async-listener races. The status store
-    // is fed asynchronously, hence the polling reads.
-    val tracker = spark.sparkContext.statusTracker
-    def jobIdsFor(group: String): Seq[Int] = {
-      val deadline = System.currentTimeMillis() + 30000
-      var ids = tracker.getJobIdsForGroup(group)
-      while (ids.isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(20); ids = tracker.getJobIdsForGroup(group)
-      }
-      ids.toSeq
-    }
-    try {
-      spark.sparkContext.setJobGroup("keysmeta_pre", "sentinel")
-      spark.range(1).count()
-      spark.sparkContext.clearJobGroup()
-      // stamped sidecar: presence answers from _keys.json — zero jobs
-      // (the old limit(1).count() probe ran one per commit)
-      assert(Upsert.cachedBounds(spark, tbl, "k").isDefined)
-      assert(Upsert.cachedBounds(spark, tbl, "no_such_key").isEmpty)
-      spark.sparkContext.setJobGroup("keysmeta_post", "sentinel")
-      spark.range(1).count()
-      val pre = jobIdsFor("keysmeta_pre").max
-      val post = jobIdsFor("keysmeta_post").min
-      assert(post == pre + 1,
-        s"presence check ran ${post - pre - 1} Spark job(s) between the sentinels")
-    } finally spark.sparkContext.clearJobGroup()
-
-    // legacy sidecar (no _keys.json stamp): the probe path still answers
-    new java.io.File(s"$tbl/_manifest/_keys.json").delete()
-    assert(Upsert.cachedBounds(spark, tbl, "k").isDefined)
-    assert(Upsert.cachedBounds(spark, tbl, "no_such_key").isEmpty)
-  }
-
-  test("stats columns: zero-footer-read pruning; stamp carries through commits") {
-    import spark.implicits._
-    val tbl = s"$base/stats0"; val out = s"$base/stats1"
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tbl))
-    // clustered by c (the stats column); commit-keyed by k
-    spark.range(8000)
-      .select($"id".as("k"), ($"id" / 4).cast("long").as("c"), lit(1L).as("v"))
-      .repartitionByRange(8, $"c").sortWithinPartitions($"c")
-      .write.mode("overwrite").parquet(tbl)
-    Upsert.writeManifestSidecar(spark, tbl, "k")
-    Upsert.writeStatsSidecar(spark, tbl, Seq("c"))
-
-    // pruning on the NON-key column: 8 files span c=0..1999 in ~250
-    // slices; [100, 200) lives in one file
-    val pred = $"c" >= 100L && $"c" < 200L
+  /** `statsPrunedFiles` must shrink the candidate set below the
+    * table's file count, and `readWhere` must equal the unpruned
+    * filtered read of the live table. */
+  private def assertPrunes(tbl: String, pred: org.apache.spark.sql.Column): Int = {
     val (cands, total) = Upsert.statsPrunedFiles(spark, tbl, pred)
-    assert(total == 8 && cands.size == 1, s"${cands.size}/$total")
+    assert(cands.nonEmpty && cands.size < total, s"must prune: ${cands.size}/$total")
     val got = Upsert.readWhere(spark, tbl, pred)
-    val want = spark.read.parquet(tbl).filter(pred)
-    assert(got.count() == 400 && got.exceptAll(want).isEmpty
-      && want.exceptAll(got).isEmpty)
-    // IN-list and equality prune too; an unstamped column doesn't
-    assert(Upsert.statsPrunedFiles(spark, tbl, $"c".isin(5L, 1900L))._1.size == 2)
-    assert(Upsert.statsPrunedFiles(spark, tbl, $"v" === 1L)._1.size == total)
-    // a predicate no file can satisfy reads empty without opening one
-    val (none, _) = Upsert.statsPrunedFiles(spark, tbl, $"c" === 123456L)
-    assert(none.isEmpty)
-    assert(Upsert.readWhere(spark, tbl, $"c" === 123456L).count() == 0)
-
-    // carry-through: a MERGE keyed on k keeps the c stamp; fresh files
-    // get c bounds in the same footer pass
-    val up = spark.range(10)
-      .select(($"id" + 4000L).as("k"), lit(9999L).as("c"), lit(-1L).as("v"))
-    Upsert.upsertByKey(spark, tbl, out, up, "k")
-    assert(Upsert.cachedBounds(spark, out, "c").isDefined,
-      "stats stamp must survive the commit")
-    val (c3, t3) = Upsert.statsPrunedFiles(spark, out, $"c" === 9999L)
-    assert(c3.size == 1 && t3 == total, s"${c3.size}/$t3") // 7 linked + 1 fresh
-    assert(Upsert.readWhere(spark, out, $"c" === 9999L).count() == 10)
-    assert(Upsert.readWhere(spark, out, $"c" === 150L).count() ==
-      spark.read.parquet(out).filter($"c" === 150L).count())
-
-    // a file the manifest has NO row for AT ALL (hand-added after the
-    // stamp — never seen by any footer pass) must be KEPT, not skipped:
-    // per-column absence means "all-null in that column" by the
-    // writers' invariant, but whole-file absence means "contents
-    // unknown", and pruning it away would silently drop its rows
-    val freshFile = graft.ops.Layout.listDataFiles(spark, out)
-      .find(f => spark.read.parquet(f).filter($"c" === 9999L).count() == 10).get
-    val foreign = new org.apache.hadoop.fs.Path(s"$out/part-foreign.parquet")
-    val ffs = foreign.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    org.apache.hadoop.fs.FileUtil.copy(ffs, new org.apache.hadoop.fs.Path(freshFile),
-      ffs, foreign, false, spark.sparkContext.hadoopConfiguration)
-    val (c4, t4) = Upsert.statsPrunedFiles(spark, out, $"c" === 9999L)
-    assert(t4 == total + 1 && c4.size == 2,
-      s"unstamped foreign file must stay in the candidate set: ${c4.size}/$t4")
-    assert(Upsert.readWhere(spark, out, $"c" === 9999L).count() == 20,
-      "foreign-file rows must surface (correct-but-scanned, never dropped)")
+    val want = Upsert.readWithDeletes(spark, tbl).filter(pred)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"pruned read differs from the unpruned one under $pred")
+    cands.size
   }
 
-  test("stats pruning: analysis-cast literals prune; a partial-bound manifest row degrades to scan") {
+  test("footer pruning needs no stamp: non-key, string and partition columns, wide tables") {
+    import spark.implicits._
+    import graft.ops.Layout
+    val root = s"$base/fprune"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
+    val seed = s"$root/seed"; val tbl = s"$root/tbl"
+    // clustered by c (a non-key long) and s (a string in c's order);
+    // commit-keyed by k
+    def rows(ids: org.apache.spark.sql.Dataset[_]) = ids.select($"id".as("k"),
+      ($"id" / 4).cast("long").as("c"),
+      format_string("s%05d", ($"id" / 4).cast("long")).as("s"), lit(1L).as("v"))
+    rows(spark.range(8000)).repartitionByRange(8, $"c").sortWithinPartitions($"c")
+      .write.parquet(seed)
+    spark.sql(s"CONVERT '$seed' TO VERSIONED '$tbl'").collect()
+    rows(spark.range(10)).select(($"k" + 100000L).as("k"), lit(9999L).as("c"),
+      lit("s09999").as("s"), lit(-1L).as("v")).createOrReplaceTempView("fprune_u1")
+    rows(spark.range(150, 160)).withColumn("v", lit(-2L))
+      .createOrReplaceTempView("fprune_u2")
+    for (u <- Seq("fprune_u1", "fprune_u2"))
+      spark.sql(s"MERGE INTO '$tbl' USING (SELECT * FROM $u) ON k " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *").collect()
+    val cur = graft.streaming.Streams.currentSnapshot(tbl).get
+    assert(cur.endsWith("/v2"), cur)
+    assert(!new java.io.File(s"$tbl/v1/_manifest").exists &&
+      !new java.io.File(s"$cur/_manifest").exists)
+    // [100, 200) of c lives in one source file
+    assert(assertPrunes(cur, $"c" >= 100L && $"c" < 200L) == 1)
+    assert(assertPrunes(cur, $"s" >= "s00100" && $"s" < "s00200") == 1)
+    // the fresh file of the first commit holds c = 9999 alone
+    assert(assertPrunes(cur, $"c" === 9999L) == 1)
+    assert(Upsert.readWhere(spark, cur, $"c" === 9999L).count() == 10)
+    // IN-lists prune; a predicate no file can satisfy reads empty
+    assert(assertPrunes(cur, $"c".isin(5L, 1900L)) == 2)
+    assert(Upsert.statsPrunedFiles(spark, cur, $"c" === 123456L)._1.isEmpty)
+    assert(Upsert.readWhere(spark, cur, $"c" === 123456L).count() == 0)
+    // a predicate every file's bounds admit prunes nothing
+    val all = Layout.listDataFiles(spark, cur).size
+    assert(Upsert.statsPrunedFiles(spark, cur, $"v" <= 1L)._1.size == all)
+
+    // a partition column of a Hive-partitioned snapshot: bounds come
+    // from the directory names; the null partition holds no value a
+    // comparison matches
+    val part = s"$base/fprune_part"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(part))
+    spark.range(3000)
+      .select(when(pmod($"id", lit(4L)) =!= 3L, pmod($"id", lit(4L)).cast("int")).as("p"),
+        $"id".as("k"), $"id".as("v"))
+      .repartitionByRange(2, $"k").write.partitionBy("p").parquet(part)
+    val pFiles = Layout.listDataFiles(spark, part)
+    assert(pFiles.exists(_.contains("/p=__HIVE_DEFAULT_PARTITION__/")))
+    assert(assertPrunes(part, $"p" === 1) == pFiles.count(_.contains("/p=1/")))
+    assert(assertPrunes(part, $"p" >= 1) == pFiles.count(f =>
+      f.contains("/p=1/") || f.contains("/p=2/")))
+
+    // past DriverFooterMaxFiles files the fold runs as one mapPartitions
+    val wide = s"$base/fprune_wide"
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(wide))
+    val nWide = Upsert.DriverFooterMaxFiles + 8
+    spark.range(nWide * 50L).select($"id".as("k"), ($"id" * 2).as("v"))
+      .repartitionByRange(nWide, $"k").sortWithinPartitions($"k")
+      .write.parquet(wide)
+    assert(Layout.listDataFiles(spark, wide).size > Upsert.DriverFooterMaxFiles)
+    assert(assertPrunes(wide, $"k".between(100L, 149L)) <= 2)
+
+    // a file written without footer statistics stays a candidate:
+    // unknown bounds are scanned, never skipped
+    val blind = spark.range(1).select(lit(100000L).as("k"), lit(150L).as("c"),
+      lit("s00150").as("s"), lit(-3L).as("v"))
+    blind.coalesce(1).write.mode("append")
+      .option("parquet.column.statistics.enabled", "false").parquet(cur)
+    val (cands, total) = Upsert.statsPrunedFiles(spark, cur, $"c" === 150L)
+    assert(total == all + 1 && cands.size == 2, s"${cands.size}/$total")
+    assert(Upsert.readWhere(spark, cur, $"c" === 150L).filter($"v" === -3L).count() == 1,
+      "the stats-less file's rows must surface")
+  }
+
+  test("stats pruning: analysis-cast literals prune; a stats-less file is scanned") {
     import spark.implicits._
     val tbl = s"$base/statscast"
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tbl))
@@ -1113,8 +1089,6 @@ class UpsertSpec extends AnyFunSuite {
       .select($"id".as("k"), ($"id" / 4).cast("long").as("c"), lit(1L).as("v"))
       .repartitionByRange(8, $"c").sortWithinPartitions($"c")
       .write.mode("overwrite").parquet(tbl)
-    Upsert.writeManifestSidecar(spark, tbl, "k")
-    Upsert.writeStatsSidecar(spark, tbl, Seq("c"))
     // an INT literal against the LONG column arrives from analysis as
     // `c >= CAST(100 AS BIGINT)` — the widening cast must fold and
     // prune exactly like the explicit long literal (the most common
@@ -1133,59 +1107,40 @@ class UpsertSpec extends AnyFunSuite {
     assert(Upsert.statsPrunedFiles(
       spark, tbl, $"c" > lit("100").cast("long"))._1.size == 8)
 
-    // a manifest row with ONE null bound (foreign/hand-written stamp —
-    // the writers admit `mn.isNotNull || mx.isNotNull`): unknown
-    // bounds must degrade to SCANNING the file, never to skipping it
-    val mdir = s"$tbl/_manifest"
-    val man = spark.read.parquet(mdir).collect()
-    val hit = Upsert.statsPrunedFiles(spark, tbl, predLong)._1
-      .map(f => f.split('/').takeRight(1).head)
-    val edited = spark.createDataFrame(
-      spark.sparkContext.parallelize(man.toSeq.map { r =>
-        if (r.getString(1) == "c" && hit.exists(r.getString(0).endsWith))
-          org.apache.spark.sql.Row(r.getString(0), r.getString(1), null, r.getString(3))
-        else r
-      }), spark.read.parquet(mdir).schema)
-    val tmp = s"$base/statscast_man_tmp"
-    edited.write.mode("overwrite").parquet(tmp)
-    val keysJson = graft.ops.Fs.readTextIfExists(graft.ops.Fs.of(tbl),
-      new org.apache.hadoop.fs.Path(s"$mdir/_keys.json"))
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(mdir))
-    org.apache.hadoop.fs.FileUtil.copy(new java.io.File(tmp),
-      graft.ops.Fs.of(tbl), new org.apache.hadoop.fs.Path(mdir), false,
-      spark.sparkContext.hadoopConfiguration)
-    keysJson.foreach(t => graft.ops.Fs.writeTextAtomic(graft.ops.Fs.of(tbl),
-      new org.apache.hadoop.fs.Path(s"$mdir/_keys.json"), t))
-    val (cands, _) = Upsert.statsPrunedFiles(spark, tbl, predLong)
-    assert(cands.exists(f => hit.exists(f.endsWith)),
-      "the null-bound file must stay in the candidate set")
+    // the file holding [100, 200) rewritten without statistics: its
+    // bounds are unknown, so it must be scanned, never skipped
+    val hit = Upsert.statsPrunedFiles(spark, tbl, predLong)._1.head
+    val rows = spark.read.parquet(hit).collect()
+    new java.io.File(new java.net.URI(hit)).delete()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), spark.read.parquet(tbl).schema)
+      .coalesce(1).write.mode("append")
+      .option("parquet.column.statistics.enabled", "false").parquet(tbl)
+    val (cands, total) = Upsert.statsPrunedFiles(spark, tbl, predLong)
+    assert(total == 8 && cands.size == 1 && cands.head != hit,
+      s"the stats-less file must stay in the candidate set: $cands")
     assert(Upsert.readWhere(spark, tbl, predLong).count() == 400,
-      "rows behind a partial-bound stamp must surface, not silently drop")
+      "rows behind unknown bounds must surface, not silently drop")
   }
 
-  test("OPTIMIZE carries the stats stamp: zero-footer-read pruning survives the rewrite") {
+  test("OPTIMIZE output prunes on its cluster column from the footers alone") {
     import spark.implicits._
     val tbl = s"$base/optstamp0"; val out = s"$base/optstamp1"
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tbl))
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
     // fragmented layout (round-robin: every file spans the whole c
-    // domain), stamped for commit key k and stats column c
+    // domain)
     spark.range(8000)
       .select($"id".as("k"), ($"id" / 4).cast("long").as("c"), lit(1L).as("v"))
       .repartition(8)
       .write.mode("overwrite").parquet(tbl)
-    Upsert.writeManifestSidecar(spark, tbl, "k")
-    Upsert.writeStatsSidecar(spark, tbl, Seq("c"))
-    // pre-rewrite the stamp exists but prunes nothing (overlapping files)
+    // pre-rewrite nothing prunes (overlapping files)
     val pred = $"c" >= 100L && $"c" < 200L
     assert(Upsert.statsPrunedFiles(spark, tbl, pred)._1.size == 8)
 
-    // the rewrite that exists to restore pruning must not drop the stamp
     val (_, nOut, _) = graft.ops.Layout.optimizeTable(
       spark, tbl, out, "c", targetBytes = 64L << 10)
     assert(nOut > 1, s"need a multi-file optimized layout, got $nOut")
-    assert(Upsert.cachedBounds(spark, out, "k").isDefined,
-      "the commit-key stamp must carry through OPTIMIZE")
+    assert(!new java.io.File(s"$out/_manifest").exists, "OPTIMIZE writes no bounds sidecar")
     val (cands, totalF) = Upsert.statsPrunedFiles(spark, out, pred)
     assert(totalF == nOut && cands.size < totalF,
       s"post-OPTIMIZE pruning must bite on the cluster column: ${cands.size}/$totalF")
@@ -1203,24 +1158,20 @@ class UpsertSpec extends AnyFunSuite {
       .select(($"id" % 2).as("dt"), $"id".as("k"), $"id".as("v"))
       .repartition(1)
       .write.mode("overwrite").partitionBy("dt").parquet(tbl)
-    // forge the pre-r11 failure mode: a basename-keyed manifest with NO
-    // _keys.json stamp (the old writeManifestSidecar's output on a
-    // partitioned table it should have refused). Its basename keys can
-    // never match the live relative-path listing (dt=0/part-...), so
-    // trusting it classifies ZERO files as touched and a MERGE would
-    // silently append duplicate keys.
+    // forge the pre-r11 failure mode: a basename-keyed `_manifest`
+    // sidecar with NO _keys.json stamp, as older writers left on disk.
+    // Its basename keys never match the relative-path listing
+    // (dt=0/part-...), so trusting it would classify ZERO files as
+    // touched and a MERGE would silently append duplicate keys.
     val dataFiles = graft.ops.Layout.listDataFiles(spark, tbl)
     dataFiles.map(f => new org.apache.hadoop.fs.Path(f).getName)
       .map(b => (b, "k", "0", "99")).toDF("file", "key", "mn", "mx")
       .coalesce(1).write.mode("overwrite").parquet(s"$tbl/_manifest")
     new java.io.File(s"$tbl/_manifest/_keys.json").delete()
 
-    // the subset probe must reject the sidecar outright...
-    assert(Upsert.cachedBounds(spark, tbl, "k").isEmpty,
-      "a legacy sidecar whose file keys don't match the live listing " +
-        "must not be trusted")
-    // ...and the commit must fall back to footers: the update REPLACES
-    // its keys (no duplicates) instead of appending alongside them
+    // the commit reads bounds from the footers only: the update
+    // REPLACES its keys (no duplicates) instead of appending alongside
+    // them
     val up = spark.range(5)
       .select(($"id" % 2).as("dt"), $"id".as("k"), lit(-1L).as("v"))
     val (_, r, n) = Upsert.upsertByKey(spark, tbl, out, up, "k")
