@@ -98,6 +98,11 @@ object Bench {
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+@[0-9a-f]+", "Lambda@X")
       .replaceAll("@[0-9a-f]{6,}", "@X")
       .replaceAll("#\\d+", "")
+      // a data file's name carries its write job's random UUID
+      // (part-00003-<uuid>-c000), so a scan over an explicit file list
+      // would hash differently on every rebuild of the same fixture;
+      // the plan string may cut the name short inside the UUID
+      .replaceAll("(part-\\d+)-[0-9a-f-]+", "$1-UUID")
       // absolute stage numbers (codegen `*(7)`, `ShuffleQueryStage 7`)
       // are session-history offsets inside cached/AQE subtrees; the
       // SPAN STRUCTURE survives as the markers themselves

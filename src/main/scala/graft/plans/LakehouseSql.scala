@@ -927,8 +927,8 @@ case class GraftHistoryCommand(tableDirRef: String) extends LeafRunnableCommand 
   * versioned dir through CURRENT (a plain snapshot dir describes
   * itself), and reports file/byte counts, whether its files carry
   * Bloom filters (one footer), whether it carries a schema sidecar,
-  * its deletion-vector bytes and who owns the table. Metadata-only — file listings,
-  * size sums and one footer, no Spark job over data. */
+  * its deletion-vector bytes and who owns the table. Metadata-only —
+  * file listings, size sums and one footer, no Spark job over data. */
 case class GraftDetailCommand(tableDirRef: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("location", StringType, nullable = false)(),

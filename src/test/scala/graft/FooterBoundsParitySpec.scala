@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AnnIndex, Similarity, Upsert}
 
 /** Pins the two placements of [[graft.ops.Upsert.footerBounds]] — the
-  * one footer fold behind every manifest row and AnnIndex's id pruning
+  * one footer fold behind every per-file bound and AnnIndex's id pruning
   * — row-for-row equal: in-process on the driver (at or below
   * `DriverFooterMaxFiles` files) and inside a `mapPartitions` past it.
   * The fixtures exercise every fold subtlety: multiple row groups per
