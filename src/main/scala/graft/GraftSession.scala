@@ -30,6 +30,8 @@ object GraftSession {
       // LongType nanos with this flag instead of failing the scan.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // sets file modes without forking `chmod` per created file
+      .config("spark.hadoop.fs.file.impl", classOf[graft.ops.NioLocalFileSystem].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = builder(cores).getOrCreate()

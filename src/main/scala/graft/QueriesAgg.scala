@@ -193,8 +193,12 @@ object QueriesAgg {
 
   // --- The population-scaling flagship (vignettes/pop_scaling.qmd:98-166):
   //     domain indicators P14 -> per-year EXPNS A2 -> plot-level tree and
-  //     area totals A3/A4 (distinct cond rows) -> inner join J14 -> yearly
-  //     rollup A5 with ratio.
+  //     area totals A3/A4 (distinct cond rows) -> yearly rollup A5 with
+  //     ratio, in one pass over a single exchange on yr (fia.PopScale's
+  //     plan): every grain below contains yr, so the yr partitioning
+  //     satisfies all three aggregates and the oracle's join J14 needs no
+  //     join here. The (id, yr, aDI) groups are the distinct area rows,
+  //     and the (id, yr) groups of a year are its n_plots.
   private def popScale(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val dom = Tables.orders(s, dir).select(
@@ -204,22 +208,21 @@ object QueriesAgg {
       (when($"o_orderpriority".like("1%"), 1).otherwise(0) *
         when($"o_orderstatus" === "O", 1).otherwise(0)).as("tDI"),
       $"o_totalprice")
-    val n = dom.groupBy($"yr").agg(countDistinct($"id").as("n_plots"))
     // expns (= 1000/n_plots) is constant within a year, so it is factored
     // out of the per-plot sums: the sums stay exact (decimal / integer)
-    // across both aggregation levels and the irrational factor is applied
+    // across every aggregation level and the irrational factor is applied
     // once per year at the end — identical double ops in both engines.
-    val tree = dom.groupBy($"id", $"yr")
+    dom.filter($"id".isNotNull && $"yr".isNotNull)
+      .repartition($"yr")
+      .groupBy($"id", $"yr", $"aDI")
       .agg(sum(($"o_totalprice" * $"tDI").cast(DecimalType(28, 2))).as("carb_dec"))
-    val area = dom.select($"id", $"yr", $"aDI").distinct()
       .groupBy($"id", $"yr")
-      .agg(sum($"aDI").as("area_units"))
-    tree.join(area, Seq("id", "yr"))
+      .agg(sum($"carb_dec").as("carb_dec"), sum($"aDI").as("area_units"))
       .groupBy($"yr")
       .agg(
         sum($"carb_dec").cast(DoubleType).as("carb_t"),
-        sum($"area_units").as("area_t"))
-      .join(broadcast(n), Seq("yr"))
+        sum($"area_units").as("area_t"),
+        count(lit(1)).as("n_plots"))
       .withColumn("expns", lit(1000.0) / $"n_plots")
       .select(
         $"yr",

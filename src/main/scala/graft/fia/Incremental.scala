@@ -24,8 +24,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: the dirty-plot key set is tiny (plots in the delivery),
   * so both the anti-join (drop stale outputs) and the semi-joins
   * (select dirty raw rows) BROADCAST it — no shuffle of the old output
-  * or the raw tables; the recompute cost is proportional to the batch,
-  * not the corpus. The old output is read from its parquet layout
+  * or the raw tables, and the rows recomputed are the batch's, not the
+  * corpus's. A small delivery is bound by Spark jobs, not rows: at 600
+  * plots (4-core host) the 24-plot restricted recompute ran 17 jobs in
+  * 2.3–3.4 s, the whole-state pipeline 13 jobs in 3.1–3.6 s (each
+  * `persist` + `count`). The old output is read from its parquet layout
   * (partitioned by STATECD in production, [[Pipeline.writeParquet]]),
   * so partition pruning applies before the anti-join even scans.
   */

@@ -356,7 +356,15 @@ object Similarity {
   /** Asymmetric PQ distance: sum over subspaces of the exact squared
     * L2 between the query's subvector and the candidate's reconstructed
     * code vector, as a left-assoc expression chain (oracle-replayable
-    * addition order). The codebook rides along as literal arrays. */
+    * addition order). The codebook rides along as literal arrays.
+    *
+    * A -1 code (what [[pqEncode]] gives a subspace with a NaN or ±Inf
+    * component) is not skipped: `element_at(codebook, -1 + 1)` raises
+    * Spark's `INVALID_INDEX_OF_ZERO`, so a probe that scores such a row
+    * fails. Such a row's cosines are all NaN, which [[nearestCell]]
+    * orders above every double, so it sits in the first centroid's cell
+    * and [[ivfPqTopK]] fails exactly when that cell is probed
+    * (SimilaritySpec pins both). */
   def adcDistance(qEmb: Column, codes: Column,
       cb: Array[Array[Array[Float]]]): Column = {
     val numSub = cb.length

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{AnnIndex, Fs, Similarity, Upsert}
 
-/** Spark-job budgets of the index maintenance path. At a small delta
-  * the path is bound by per-job fixed cost, so the job count is the
-  * figure to hold: a budget here fails the change that adds a job.
+/** Spark-job budgets of the index maintenance path and of the
+  * population-scaling read. At a small delta the path is bound by
+  * per-job fixed cost, so the job count is the figure to hold: a budget
+  * here fails the change that adds a job.
   * Before engine-written parquet resolved its schema without a job and
   * a one-commit feed was read back from `_cdf`, the same fixture ran
   * 4 jobs to load the index, 2 to build the feed and 29 in applyCdf. */
@@ -78,5 +79,20 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(dropped == 20 && appended == 40)
     assert(build <= 7, s"AnnIndex.write ran $build jobs")
     assert(apply <= 14, s"AnnIndex.applyCdf ran $apply jobs")
+  }
+
+  test("population scaling budget: carbonPerAcre collect <= 2 jobs") {
+    // the fixture pipeline output, read back from parquet as the table
+    // reads give it; the three-leg plan this replaced ran 9 jobs here
+    val dir = java.nio.file.Files.createTempDirectory("job_budget_pop").toString + "/est"
+    val tidy = graft.fia.Tidy.fiaTidy(
+      graft.fia.Ingest.load(spark, "src/test/resources/fixture", Seq("XX")))
+    graft.fia.EstimateCarbon.fiaEstimate(spark,
+      graft.fia.FiaAnnualize.annualize(spark, tidy, useMortyr = false)).write.parquet(dir)
+    val pop = graft.fia.PopScale.carbonPerAcre(spark.read.parquet(dir), stateArea = 1000.0)
+    val (rows, n) = jobs(pop.collect())
+    info(s"jobs: PopScale.carbonPerAcre collect $n")
+    assert(rows.length == 11)
+    assert(n <= 2, s"PopScale.carbonPerAcre collect ran $n jobs")
   }
 }

@@ -207,6 +207,36 @@ class SimilaritySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "queries should broadcast against the encoded corpus scan")
   }
 
+  test("a -1 PQ code reaching the ADC probe raises INVALID_INDEX_OF_ZERO") {
+    import spark.implicits._
+    val clean = Seq(
+      (0L, vec(1, 0, 0, 1)),
+      (1L, vec(0, 1, 1, 0)),
+      (10L, vec(0.95, 0.05, 0.05, 0.95)),
+      (11L, vec(0.05, 0.95, 0.95, 0.05))
+    ).toDF("id", "embedding")
+    // a NaN in subspace 0 only: code -1 there, a real code in subspace 1
+    val corpus = clean.union(Seq((20L, vec(Double.NaN, 0, 0, 1))).toDF("id", "embedding"))
+    val cb = Similarity.pqCodebook(clean, "id", "embedding", numSub = 2, codes = 2)
+    assert(Similarity.pqEncode(corpus, "embedding", cb).filter($"id" === 20L)
+      .select($"codes").head().getSeq[Int](0) == Seq(-1, 0))
+    val centroids = clean.filter($"id" < 2).select($"id".as("cid"), $"embedding")
+    // every cosine of the row is NaN, and NaN orders above any double:
+    // the first centroid by cid wins, so the row lands in cell 0
+    assert(Similarity.nearestCell(corpus, centroids).filter($"id" === 20L)
+      .select($"cell").head().getLong(0) == 0L)
+    def probe(q: Array[Float], probes: Int) = Similarity.ivfPqTopK(
+      Seq((100L, q)).toDF("qid", "embedding"), corpus, centroids, cb, k = 5, probes = probes)
+    // adcDistance reads element_at(codebook, -1 + 1): Spark's index-zero error
+    for (df <- Seq(probe(vec(1, 0, 0, 1), 1), probe(vec(0, 1, 1, 0), 2),
+        Similarity.pqTopK(Seq((100L, vec(1, 0, 0, 1))).toDF("qid", "embedding"), corpus, cb, k = 5))) {
+      val err = intercept[org.apache.spark.SparkThrowable](df.collect())
+      assert(err.getCondition == "INVALID_INDEX_OF_ZERO", err.getCondition)
+    }
+    // a probe that skips cell 0 never scores the row
+    assert(probe(vec(0, 1, 1, 0), 1).collect().map(_.getLong(1)).toSet == Set(1L, 11L))
+  }
+
   test("ivfPqTopK equals full-PQ ranking restricted to the probed cells; salt is inert") {
     import spark.implicits._
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
